@@ -269,17 +269,10 @@ object ExtensionQueries {
     * ScaleProbe. See the c25 registry comment.
     */
   private[graft] def noveltyOf(corpus: DataFrame): DataFrame = {
-    // r19, two established devices: (1) pre-fan-out sizing — the
-    // interpreted-HOF tokenize+shingle explode otherwise runs on the
-    // corpus scan's 2 partitions (profiled: a 2-task 2.5 s stage at
-    // sf0.1 — the c18/d10/a48 rule); (2) materialize the index ONCE —
-    // it feeds the df aggregate AND the join-back side, and without the
-    // checkpoint the whole derivation re-executes per consumer (the
-    // Dedup.scoredCandidates contract: a corpus build persists its
-    // inverted index anyway).
-    val sh = Dedup.shingleIndex(
-      graft.PartitionOps.repartitionBeforeFanout(corpus, col("doc_id")),
-      n = 7).localCheckpoint()
+    // the materialized per-doc fingerprint index feeds the df aggregate
+    // AND the join-back side (Dedup.fingerprintIndex: spread before the
+    // interpreted tokenize+shingle pass, checkpointed once)
+    val sh = Dedup.fingerprints(Dedup.fingerprintIndex(corpus, n = 7))
     val df = sh.groupBy("sh").agg(count(lit(1)).as("df"))
     sh.join(df, "sh")
       .groupBy("doc_id")
@@ -422,6 +415,24 @@ object ExtensionQueries {
     d.unionAll(d.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000).as("doc_id"), col("text")))
   }
+
+  /** c6/c6b/c23's split of a corpus document: c2's md5 bucketing of
+    * doc_id.
+    */
+  private def decontamSplit: Column =
+    when(substring(md5(col("doc_id").cast("string")), 1, 2) <= "28", "train")
+      .when(substring(md5(col("doc_id").cast("string")), 1, 2) <= "3c", "valid")
+      .otherwise("test")
+
+  /** c6/c6b/c23's split-tagged 7-gram index, (doc_id, split, sh: bigint),
+    * read by both the eval- and the train-side consumers. The split is a
+    * function of doc_id, so it is tagged onto the shared fingerprint
+    * index row by row; a null doc_id belongs to no split.
+    */
+  private[graft] def decontamIndex(d: DataFrame): DataFrame =
+    Dedup.fingerprints(Dedup.fingerprintIndex(d, 7))
+      .filter(col("doc_id").isNotNull)
+      .withColumn("split", decontamSplit)
 
   /** documents ∪ near-copies (first word dropped) of every 10th doc, ∪
     * two sub-shingle-width docs (graft.ext.DocFixtures.shortDocs — the
@@ -1698,14 +1709,7 @@ object ExtensionQueries {
     //   the leak this operator exists to catch. —
     "c6_decontaminate" -> ((s, dir) => {
       val d = docsDup(s, dir)
-      val split = when(substring(md5(col("doc_id").cast("string")), 1, 2)
-          <= "28", "train")
-        .when(substring(md5(col("doc_id").cast("string")), 1, 2)
-          <= "3c", "valid")
-        .otherwise("test")
-      val sided = Dedup.shingleIndex(d, 7)
-        .join(d.select(col("doc_id"), split.as("split")), "doc_id")
-        .localCheckpoint() // read for the train shingle set AND the test probe
+      val sided = decontamIndex(d)
       val trainSh = sided.filter(col("split") === "train")
         .select("sh").distinct()
       sided.filter(col("split") === "test")
@@ -1724,14 +1728,7 @@ object ExtensionQueries {
     //   exact-count division. —
     "c6b_contamination_rate" -> ((s, dir) => {
       val d = docsDup(s, dir)
-      val split = when(substring(md5(col("doc_id").cast("string")), 1, 2)
-          <= "28", "train")
-        .when(substring(md5(col("doc_id").cast("string")), 1, 2)
-          <= "3c", "valid")
-        .otherwise("test")
-      val sided = Dedup.shingleIndex(d, 7)
-        .join(d.select(col("doc_id"), split.as("split")), "doc_id")
-        .localCheckpoint() // read for the train shingle set AND the test probe
+      val sided = decontamIndex(d)
       val trainSh = sided.filter(col("split") === "train")
         .select("sh").distinct().withColumn("hit", lit(1L))
       sided.filter(col("split") === "test")
@@ -1756,20 +1753,13 @@ object ExtensionQueries {
     //   key-only. —
     "c23_decontaminated_train" -> ((s, dir) => {
       val d = docsDup(s, dir)
-      val split = when(substring(md5(col("doc_id").cast("string")), 1, 2)
-          <= "28", "train")
-        .when(substring(md5(col("doc_id").cast("string")), 1, 2)
-          <= "3c", "valid")
-        .otherwise("test")
-      val sided = Dedup.shingleIndex(d, 7)
-        .join(d.select(col("doc_id"), split.as("split")), "doc_id")
-        .localCheckpoint() // eval shingle set AND the train probe
+      val sided = decontamIndex(d)
       val evalSh = sided.filter(col("split") =!= "train")
         .select("sh").distinct()
       val contaminated = sided.filter(col("split") === "train")
         .join(evalSh, "sh")
         .select("doc_id").distinct()
-      d.select(col("doc_id"), split.as("split"))
+      d.select(col("doc_id"), decontamSplit.as("split"))
         .filter(col("split") === "train")
         .join(contaminated, Seq("doc_id"), "left_anti")
         .select("doc_id")

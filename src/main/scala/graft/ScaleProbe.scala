@@ -296,15 +296,8 @@ object ScaleProbe {
       // sets disjoint, so shared-shingle candidates must grow ~linearly
       locally {
         val d = docsRep(near, k)
-        val split = when(substring(md5(col("doc_id").cast("string")), 1, 2)
-            <= "28", "train")
-          .when(substring(md5(col("doc_id").cast("string")), 1, 2)
-            <= "3c", "valid")
-          .otherwise("test")
         time("c6_decontaminate", k) {
-          val sided = Dedup.shingleIndex(d, 7)
-            .join(d.select(col("doc_id"), split.as("split")), "doc_id")
-            .localCheckpoint()
+          val sided = ExtensionQueries.decontamIndex(d)
           val trainSh = sided.filter(col("split") === "train")
             .select("sh").distinct()
           sided.filter(col("split") === "test")
@@ -321,15 +314,8 @@ object ScaleProbe {
       // ~linearly in the corpus like c6's did
       locally {
         val d = docsRep(near, k)
-        val split = when(substring(md5(col("doc_id").cast("string")), 1, 2)
-            <= "28", "train")
-          .when(substring(md5(col("doc_id").cast("string")), 1, 2)
-            <= "3c", "valid")
-          .otherwise("test")
         time("c6b_contamination_rate", k) {
-          val sided = Dedup.shingleIndex(d, 7)
-            .join(d.select(col("doc_id"), split.as("split")), "doc_id")
-            .localCheckpoint()
+          val sided = ExtensionQueries.decontamIndex(d)
           val trainSh = sided.filter(col("split") === "train")
             .select("sh").distinct().withColumn("hit", lit(1L))
           sided.filter(col("split") === "test")

@@ -71,9 +71,11 @@ object Clusters {
       // half-round a pair may run past convergence cannot change labels.
       val next = prop(prop(labels, Nil, "own0"), Seq("own0"), "own1")
         .localCheckpoint()
+      // coalesce: with no edges both sums are null, and no node means
+      // no change
       val cnt = next.agg(
-        sum(when(col("label") < col("own1"), 1L).otherwise(0L)).as("c2"),
-        sum(when(col("own1") < col("own0"), 1L).otherwise(0L)).as("c1"))
+        coalesce(sum(when(col("label") < col("own1"), 1L).otherwise(0L)), lit(0L)).as("c2"),
+        coalesce(sum(when(col("own1") < col("own0"), 1L).otherwise(0L)), lit(0L)).as("c1"))
         .head()
       val c1 = cnt.getLong(1)
       val c2 = cnt.getLong(0)

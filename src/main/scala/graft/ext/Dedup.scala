@@ -13,7 +13,10 @@ import org.apache.spark.sql.functions._
   *  - near-dup candidate generation goes through an inverted shingle index
   *    (explode→join), never an O(n²) cross join; the MinHash-LSH variant
   *    ([[MinHashLSH]]) replaces the full index with banded signatures when
-  *    even the shingle join is too large.
+  *    even the shingle join is too large;
+  *  - the index that is materialized holds one row per document of 64-bit
+  *    shingle fingerprints ([[fingerprintIndex]]), not one row per shingle
+  *    string.
   */
 object Dedup {
 
@@ -59,6 +62,45 @@ object Dedup {
       .select(col("doc_id"),
         explode(array_distinct(shingles(col("toks"), n))).as("sh"))
 
+  /** Per-document shingle fingerprint index: (doc_id, hs) where `hs` is
+    * the set of distinct `xxhash64` fingerprints of the document's word
+    * n-gram shingles ([[shingles]]), spread by doc_id before the
+    * (interpreted, HOF-based) tokenize+shingle pass and materialized once.
+    * Consumers read (doc_id, sh: bigint) rows from [[fingerprints]], a
+    * narrow explode; set sizes are `size(hs)`.
+    *
+    * Why the materialized index has this shape: the string index
+    * ([[shingleIndex]]) is one JVM row per (doc, shingle) — ~120 bytes
+    * for a 7-word shingle, ~16× the corpus text — and its persisted bytes
+    * set the executor size of a corpus build. One row per document with
+    * a bigint array holds 8 bytes per shingle.
+    *
+    * Collisions: a 64-bit collision can only MERGE two distinct shingles
+    * (a pair's intersection may gain one, a set may lose one); it never
+    * splits one. The expected number of merged shingle pairs is about
+    * m²/2⁶⁵ for m distinct shingles — ~10⁻⁸ on the fixture corpora,
+    * ~10⁶ among the ~10¹³ shingles of a 100 TB corpus, each moving one
+    * count of one pair by one. `xxhash64` is fine here although the
+    * sketches ([[MinHashLSH]], [[SimHash]]) must not use it: here no hash
+    * value reaches an output — outputs are counts and ratios of counts,
+    * which the oracle recomputes over the shingle strings — whereas a
+    * sketch's output IS a function of its hash values, so the oracle must
+    * be able to evaluate the hash (the seeded family in [[HashCoeffs]]).
+    * A null shingle (null text) stays a null fingerprint: it counts
+    * towards its document's set size and never joins, as in the string
+    * index (`xxhash64(null)` would be the seed, a joinable value).
+    */
+  private[graft] def fingerprintIndex(docs: DataFrame, n: Int): DataFrame =
+    graft.PartitionOps.repartitionBeforeFanout(docs, col("doc_id"))
+      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
+      .select(col("doc_id"), array_distinct(transform(shingles(col("toks"), n),
+        s => when(s.isNotNull, xxhash64(s)))).as("hs"))
+      .localCheckpoint()
+
+  /** (doc_id, sh: bigint) edge list of a [[fingerprintIndex]]. */
+  private[graft] def fingerprints(idx: DataFrame): DataFrame =
+    idx.select(col("doc_id"), explode(col("hs")).as("sh"))
+
   /** Shared candidate-pair pipeline: (id1 < id2, inter, n1, n2) for every
     * document pair sharing ≥1 indexed shingle — the building block both
     * Jaccard ([[ngramJaccardPairs]]) and containment
@@ -66,23 +108,23 @@ object Dedup {
     */
   private def scoredCandidates(docs: DataFrame, n: Int,
       dfMax: Option[Int]): DataFrame = {
-    // Materialize the index once: it feeds the df-cap filter, the per-doc
-    // sizes and BOTH self-join sides — without this the (interpreted,
-    // HOF-based) shingle derivation re-runs per reference. The in-job
-    // analog of persisting the inverted index as a table, which is what a
-    // 100 TB corpus build does anyway (build once, reuse across rounds).
-    // Pre-fan-out sizing (r19, the c18/d10/c25 rule): the interpreted
-    // tokenize+shingle explode otherwise runs on the corpus frame's 2–4
-    // partitions — profiled in d9 as a 2-task ~0.8 s checkpoint stage at
-    // sf0.1; the explicit-count exchange sizes it for per-row cost.
-    val idx0 = shingleIndex(
-      graft.PartitionOps.repartitionBeforeFanout(docs, col("doc_id")), n)
-      .localCheckpoint()
-    val idx = dfMax.fold(idx0) { m =>
-      val keep = idx0.groupBy("sh").count().filter(col("count") <= m).select("sh")
-      idx0.join(keep, "sh").localCheckpoint()
+    // The fingerprint index is materialized once: it feeds the per-doc
+    // sizes and BOTH self-join sides (and the df cap) — the in-job analog
+    // of persisting the inverted index as a table, which is what a 100 TB
+    // corpus build does anyway (build once, reuse across rounds).
+    val idx0 = fingerprintIndex(docs, n)
+    val (idx, sizes) = dfMax match {
+      case None =>
+        (fingerprints(idx0),
+          idx0.select(col("doc_id"), size(col("hs")).cast("long").as("n_sh")))
+      case Some(m) =>
+        // the cap drops shingles from the sets, so sizes are counted
+        // over the capped edge list
+        val sh = fingerprints(idx0)
+        val keep = sh.groupBy("sh").count().filter(col("count") <= m).select("sh")
+        val capped = sh.join(keep, "sh").localCheckpoint()
+        (capped, capped.groupBy("doc_id").agg(count(lit(1)).as("n_sh")))
     }
-    val sizes = idx.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val a = idx.as("a")
     val b = idx.as("b")
     a.join(b, col("a.sh") === col("b.sh") &&

@@ -15,6 +15,17 @@ class ClusterAndObserveSpec extends SparkSpec {
     assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("connected components: an empty pair list gives an empty (id, cluster) frame in one round") {
+    import org.apache.spark.sql.types.LongType
+    val (cc, rounds) = Clusters.componentsWithRounds(
+      Seq.empty[(Long, Long)].toDF("id1", "id2"))
+    assert(cc.schema.map(f => f.name -> f.dataType) ==
+      Seq("id" -> LongType, "cluster" -> LongType))
+    assert(cc.collect().isEmpty)
+    // one round finds no change
+    assert(rounds == 1)
+  }
+
   test("observe() metrics ride the cleaning job") {
     val dirty = Tables.dirtySales(spark, sf)
     val expectedNullCat = dirty.filter($"category".isNull).count()

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.CacheEntries
+
 import graft.etl.Pipeline
 
 /** One-command pipeline over the reference's own CSV inputs: the four
@@ -59,6 +61,77 @@ class PipelineSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.contains(kept.id),
       "the scope swept a pre-existing caller block")
     kept.unpersist(blocking = true)
+  }
+
+  /** A small sales.csv (with repeated lines for the dedup) and
+    * customers.csv in a fresh directory.
+    */
+  private def writeCsvs(dir: java.io.File): Unit = {
+    val sales = new java.io.PrintWriter(new java.io.File(dir, "sales.csv"))
+    sales.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date,category")
+    val lines = (1 to 40).map { i =>
+      f"$i,C${i % 5},P${i % 7},Item${i % 7},${1 + i % 3},${10 + i % 4}.50,2024-01-${1 + i % 28}%02d,Cat${i % 3}"
+    }
+    (lines ++ lines.take(6)).foreach(sales.println)
+    sales.close()
+    val customers = new java.io.PrintWriter(new java.io.File(dir, "customers.csv"))
+    customers.println("customer_id,customer_name,email,registration_date,region")
+    (0 until 5).foreach(c =>
+      customers.println(s"C$c,Name $c,c$c@example.com,2023-0${1 + c}-15,R${c % 2}"))
+    customers.close()
+  }
+
+  /** Shuffle map stages run and shuffle bytes written while `body` runs. */
+  private def shuffleWork(body: => Unit): (Int, Long) = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    import org.apache.spark.scheduler._
+    val stages = new AtomicInteger
+    val bytes = new AtomicLong
+    val settle = "pipeline-spec-settle"
+    val settleJob = new AtomicInteger(-1)
+    val settled = new CountDownLatch(1)
+    val l = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten)
+          .filter(_ > 0).foreach { w => stages.incrementAndGet(); bytes.addAndGet(w) }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(
+            _.getProperty("spark.job.description") == settle)) settleJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == settleJob.get) settled.countDown()
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      // one listener queue delivers in order: once the settle job's end
+      // arrives, every event of `body` has arrived
+      spark.sparkContext.setJobDescription(settle)
+      try spark.sparkContext.parallelize(Seq(1), 1).count()
+      finally spark.sparkContext.setJobDescription(null)
+      assert(settled.await(60, TimeUnit.SECONDS), "listener events never settled")
+    } finally spark.sparkContext.removeSparkListener(l)
+    (stages.get, bytes.get)
+  }
+
+  test("Pipeline.run leaves no CacheManager entry; a second run redoes the dedup shuffle") {
+    // the cleaned-sales cache: a registered entry whose blocks the scope
+    // dropped would be planned into the next run as a stale relation,
+    // which skips the dedup shuffle (its old map outputs still exist)
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data)
+    val entries = CacheEntries.count(spark)
+    def run(): (Int, Long) = shuffleWork {
+      val out = Files.createTempDirectory("graft_pipeline_").toString
+      assert(Pipeline.run(spark, data.getPath, out)("clean_sales") == 40)
+      assert(CacheEntries.count(spark) == entries,
+        "a CacheManager entry outlived Pipeline.run")
+    }
+    val first = run()
+    val second = run()
+    assert(first._1 > 0)
+    assert(second == first,
+      s"second run (shuffle stages, bytes) $second vs first $first")
   }
 
   test("pipeline jdbc branch loads four tables into an embedded DB") {
