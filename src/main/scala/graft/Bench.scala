@@ -43,7 +43,7 @@ object Bench {
       catch { case _: Throwable => () }
     }
     // Per-query isolation + median-of-3 (round-8 fix): the registry has
-    // ~17 cache/localCheckpoint sites and the queries never unpersist —
+    // ~50 cache/localCheckpoint sites and the queries never unpersist —
     // by design, a caller owns its session's cache lifecycle, not the
     // library. One shared JVM running 106 queries alphabetically let
     // checkpointed blocks accumulate all run long, and block-manager/heap
@@ -60,8 +60,8 @@ object Bench {
     }
     // Isolation is BETWEEN queries, not between a query's reps: rep 1 of
     // a sales query rebuilds + re-registers the shared cleaned-fact cache
-    // (Pipelines.ensureCached), reps 2–3 measure the architecture's
-    // steady state ("cache the shared fact once, run many queries") —
+    // (graft.Shared rebuilds a dropped entry), reps 2–3 measure the
+    // architecture's steady state ("cache the shared fact once, run many queries") —
     // the median reports the warm number and the cold rebuild shows only
     // in rep 1. Clearing inside the rep loop instead would de-register
     // the pipeline cache permanently and bill every sales query the full

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** Scoped lifecycle for the engine's internal caches — the loan pattern
   * complement to the "caller owns the block" contract documented at the
-  * ~17 `persist`/`localCheckpoint` sites (the shingle indexes, k-means
-  * assignments, label-propagation frontiers, …). Those sites cannot
+  * 54 `persist`/`cache`/`localCheckpoint` call sites in `src/main` (the
+  * shingle indexes, k-means assignments, label-propagation frontiers,
+  * …). Those sites cannot
   * unpersist eagerly — their blocks back the DataFrames they return —
   * so a caller COMPOSING operators in one session (clean → fuzzy-dedup →
   * survivorship → …) accumulates every intermediate block unless it
@@ -29,7 +30,7 @@ import org.apache.spark.sql.SparkSession
   *  - '''The scope's result must be fully materialized (or written out)
   *    INSIDE the scope.''' For a plain `persist` block, a lazy DataFrame
   *    escaping the scope merely recomputes the dropped block (correct
-  *    but slow). For a `localCheckpoint` block — which MOST of the ~17
+  *    but slow). For a `localCheckpoint` block — which MOST of those
   *    engine sites use — the lineage is TRUNCATED at the checkpoint:
   *    after the sweep an escaped lazy DataFrame cannot recompute and
   *    fails with `SparkException: Checkpoint block ... not found`. So

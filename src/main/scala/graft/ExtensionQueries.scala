@@ -234,7 +234,8 @@ object ExtensionQueries {
           col("n3").as("n_users")))).as("r"), col("n1"))
       .select(col("r.stage_idx").as("stage_idx"), col("r.stage").as("stage"),
         col("r.n_users").as("n_users"),
-        (col("r.n_users").cast("double") / col("n1").cast("double"))
+        // try_divide: an empty funnel (n1 = 0) gives NULL, not an error
+        try_divide(col("r.n_users").cast("double"), col("n1").cast("double"))
           .as("pct_of_first"))
       .orderBy("stage_idx")
   }
@@ -447,45 +448,23 @@ object ExtensionQueries {
       .unionAll(graft.ext.DocFixtures.shortDocs(s, dir))
   }
 
-  /** The near-dup family's shared lineages, cached per (session, dir) —
-    * the GraphQueries.adjacency/pairCounts contract applied to the dedup
-    * pipeline (r19). SEVEN queries re-derived the same candidate
-    * machinery per rep: d2/c19/d11/d11b/d12 all score the one df-capped
-    * 7-gram candidate-pair table (their thresholds are post-filters on
-    * the identical jaccard column), d11/d11b/d12 additionally attach the
-    * identical pair texts, and d6/d14 share the uncapped τ=0.5 pair
-    * list. A real corpus build materializes the candidate table once and
-    * runs every verify/score policy over it; in-session that is a cached
-    * shared lineage — rep 1 of each query rebuilds it after the bench's
-    * between-query cache drop, warm reps measure the steady state.
-    * Profiled at sf0.1: the candidate build was ~1.9 s of d12's 2.3 s
-    * warm rep.
-    */
-  private val famCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def fcached(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val df = famCache.getOrElseUpdate((s, key), build.cache())
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      // Rebuild a FRESH lineage instead of re-caching the dropped frame:
-      // nearCands' build contains localCheckpoint RDDs (the shingle
-      // index), and once a bench/test cache drop unpersists those
-      // blocks the old DataFrame can never be recomputed ("lineage has
-      // been truncated"). Re-invoking the builder issues new
-      // checkpoints — the bench's rep-1 rebuild contract.
-      val fresh = build.cache()
-      famCache.update((s, key), fresh)
-      fresh
-    } else df
-  }
+  // The near-dup family's shared lineages, held in graft.Shared per
+  // (session, dir) like GraphQueries' adjacency/pairCounts (r19). SEVEN
+  // queries re-derived the same candidate machinery per rep:
+  // d2/c19/d11/d11b/d12 all score the one df-capped 7-gram candidate-pair
+  // table (their thresholds are post-filters on the identical jaccard
+  // column), d11/d11b/d12 additionally attach the identical pair texts,
+  // and d6/d14 share the uncapped τ=0.5 pair list. A real corpus build
+  // materializes the candidate table once and runs every verify/score
+  // policy over it. Profiled at sf0.1: the candidate build was ~1.9 s of
+  // d12's 2.3 s warm rep.
 
   /** [[docsNear]], cached — replaces the per-query localCheckpoints of
     * the derived fixture (one materialization either way; the cache is
     * shared across the family instead of rebuilt per query).
     */
   private def docsNearC(s: SparkSession, dir: String): DataFrame =
-    fcached(s, s"dnear:$dir")(docsNear(s, dir))
+    Shared.frame(s, "dnear", dir)(docsNear(s, dir))
 
   /** The df-capped τ=0 scored candidate pairs (id1, id2, jaccard) —
     * d2/c19 filter it by their thresholds (ngramJaccardPairs applies the
@@ -493,7 +472,7 @@ object ExtensionQueries {
     * bit-identical), d11/d11b/d12 consume it through [[nearPairTexts]].
     */
   private def nearCands(s: SparkSession, dir: String): DataFrame =
-    fcached(s, s"ncands:$dir")(
+    Shared.frame(s, "ncands", dir)(
       Dedup.ngramJaccardPairs(docsNearC(s, dir), n = 7, threshold = 0.0,
         dfMax = Some(1000)))
 
@@ -505,7 +484,7 @@ object ExtensionQueries {
     * parallelism.
     */
   private def nearPairTexts(s: SparkSession, dir: String): DataFrame =
-    fcached(s, s"nptexts:$dir")(
+    Shared.frame(s, "nptexts", dir)(
       Dedup.attachPairTexts(nearCands(s, dir),
         docsNearC(s, dir).select("doc_id", "text")))
 
@@ -513,7 +492,7 @@ object ExtensionQueries {
     * the cap stays a d2-family statement).
     */
   private def nearCands05(s: SparkSession, dir: String): DataFrame =
-    fcached(s, s"ncands05:$dir")(
+    Shared.frame(s, "ncands05", dir)(
       Dedup.ngramJaccardPairs(docsNearC(s, dir), n = 7, threshold = 0.5))
 
   /** documents ∪ leading-16-token snippets of every 10th doc
@@ -1816,7 +1795,7 @@ object ExtensionQueries {
             |  'orphan_customer_id', orphan_customer_id
             |) AS (rule, n_violations)""".stripMargin))
         .select(col("rule"), col("n_violations"), col("n_rows"),
-          (col("n_violations").cast("double") / col("n_rows").cast("double"))
+          try_divide(col("n_violations").cast("double"), col("n_rows").cast("double"))
             .as("violation_rate"))
         .orderBy("rule")
     }),

@@ -59,43 +59,21 @@ object GraphQueries {
         .isin("0", "1", "2", "3"))
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
 
-  /** The g* family's shared lineages, cached per (session, dir) — the
-    * Pipelines.cleanSales device applied to the graph family (the r12
-    * perf note: g2/g3/g6/g7/g9 each re-paid the basket self-join ~2–3 s
-    * per run, and a single plan references the edge list up to three
-    * times — wedge source, degree source, anti-join probe). `.cache()`
-    * is re-registered whenever a bench sweep dropped it (the
-    * cached-while-shared contract, see Pipelines.ensureCached).
+  /** The g* family's shared lineages, held in [[Shared]] per (session,
+    * dir) like Pipelines.cleanSales (the r12 perf note: g2/g3/g6/g7/g9
+    * each re-paid the basket self-join ~2–3 s per run, and a single plan
+    * references the edge list up to three times — wedge source, degree
+    * source, anti-join probe).
     */
-  private val cache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
-  private def cached(s: SparkSession, key: String)(
-      build: => DataFrame): DataFrame = {
-    val df = cache.getOrElseUpdate((s, key), build.cache())
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-      // Rebuild a FRESH lineage instead of re-caching the dropped frame
-      // (r19): a cached build may contain localCheckpoint RDDs (tri's
-      // oriented edges), and once a bench/test cache drop unpersists
-      // those blocks the old DataFrame can never be recomputed
-      // ("lineage has been truncated"). Re-invoking the builder issues
-      // new checkpoints, which is exactly the bench's rep-1 rebuild
-      // contract.
-      val fresh = build.cache()
-      cache.update((s, key), fresh)
-      fresh
-    } else df
-  }
-
   private def edges(s: SparkSession, dir: String): DataFrame =
-    cached(s, s"edges:$dir")(edgesOf(basketItems(s, dir)))
+    Shared.frame(s, "edges", dir)(edgesOf(basketItems(s, dir)))
 
   /** g3/g6's shared candidate table: wedge-pair common-neighbor counts
     * over the undirected adjacency (g7 keeps its own enumeration — it
     * needs the center carried through the rollup).
     */
   private def pairCounts(s: SparkSession, dir: String): DataFrame =
-    cached(s, s"pairs:$dir")(
+    Shared.frame(s, "pairs", dir)(
       wedgePairs(adjacency(s, dir))
         .groupBy("id1", "id2")
         .agg(count(lit(1)).as("n_common")))
@@ -103,14 +81,10 @@ object GraphQueries {
   /** g2/g12's shared per-node triangle table (r19): the oriented
     * Suri–Vassilvitskii closure is the family's single most expensive
     * enumeration after the wedge space, and TWO queries consume its
-    * exact output — g2 reports it, g12 joins degree onto it. Same
-    * cached-shared-lineage contract as [[pairCounts]]: rep 1 of either
-    * query rebuilds it after the bench's between-query cache drop, warm
-    * reps measure the steady state a triangle TABLE materialized once
-    * per corpus build gives every downstream consumer.
+    * exact output — g2 reports it, g12 joins degree onto it.
     */
   private def tri(s: SparkSession, dir: String): DataFrame =
-    cached(s, s"tri:$dir")(
+    Shared.frame(s, "tri", dir)(
       triangleCountsRaw(edges(s, dir).select("u", "v")))
 
   /** The undirected adjacency, cached ALREADY HASH-PARTITIONED by `u`
@@ -130,7 +104,7 @@ object GraphQueries {
     // carries w since r19 so g9's item-item scoring rides the same
     // cached layout (columnar pruning drops w from the wedge consumers'
     // scans, so their shuffles stay as narrow as before)
-    cached(s, s"adj:$dir")(PartitionOps.repartitionBeforeFanout(
+    Shared.frame(s, "adj", dir)(PartitionOps.repartitionBeforeFanout(
       edges(s, dir).select("u", "v", "w").unionAll(
         edges(s, dir).select(col("v").as("u"), col("u").as("v"), col("w"))),
       col("u")))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Tables, TransformCustomers, TransformSales}
+import graft.etl.Pipelines.cleanSales
 
 /** One oracle-checked query per operator row of SURVEY.md §2, so the
   * inventory is individually verifiable. Naming follows §2 ids
@@ -15,9 +16,6 @@ import graft.etl.{Tables, TransformCustomers, TransformSales}
   * F2/F6/O3 → inside q5/q3, K* sinks → [[graft.etl.Load]].
   */
 object OperatorQueries {
-
-  private def cleanSales(s: SparkSession, dir: String): DataFrame =
-    graft.etl.Pipelines.cleanSales(s, dir)
 
   private val emailRe = TransformCustomers.emailPattern
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Aggregates, Tables, TransformCustomers, TransformSales}
+import graft.etl.Pipelines.{cleanCustomers, cleanSales}
 
 /** The reference's end-to-end derived tables (`main.py:71-76`), as driver
   * queries with DuckDB oracles. Every query ends in a total ORDER BY so both
@@ -12,12 +13,6 @@ import graft.etl.{Aggregates, Tables, TransformCustomers, TransformSales}
   * EliminateSorts removes a sort under an order-insensitive aggregate).
   */
 object ReferenceQueries {
-
-  private def cleanSales(s: SparkSession, dir: String): DataFrame =
-    graft.etl.Pipelines.cleanSales(s, dir)
-
-  private def cleanCustomers(s: SparkSession, dir: String): DataFrame =
-    graft.etl.Pipelines.cleanCustomers(s, dir)
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q1_sales_summary" -> ((s, dir) =>

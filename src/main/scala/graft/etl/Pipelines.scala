@@ -1,10 +1,11 @@
 package graft.etl
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Shared cleaned-table pipelines, cached per (session, dir).
+import graft.Shared
+
+/** Shared cleaned-table pipelines, cached per (session, dir) in
+  * [[graft.Shared]].
   *
   * The reference materializes the cleaned sales frame once and feeds three
   * derived tables from it (`main.py:71-75`); SURVEY §3 keeps exactly this
@@ -15,26 +16,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Pipelines {
 
-  private val cache = TrieMap.empty[(SparkSession, String), DataFrame]
-
-  /** `.cache()` registers the plan with the session's CacheManager ONCE;
-    * a caller that later calls `spark.catalog.clearCache()` (the bench
-    * does, between timed queries) silently de-registers it, after which
-    * every consumer would recompute the dedup-shuffle pipeline with no
-    * caching at all — the contract here is "cached while shared", so
-    * re-register whenever the level has been dropped to NONE.
-    */
-  private def ensureCached(df: DataFrame): DataFrame = {
-    if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      df.cache()
-    df
-  }
-
   def cleanSales(s: SparkSession, dir: String): DataFrame =
-    ensureCached(cache.getOrElseUpdate((s, s"sales:$dir"),
-      TransformSales.clean(Tables.dirtySales(s, dir)).cache()))
+    Shared.frame(s, "sales", dir)(TransformSales.clean(Tables.dirtySales(s, dir)))
 
   def cleanCustomers(s: SparkSession, dir: String): DataFrame =
-    ensureCached(cache.getOrElseUpdate((s, s"customers:$dir"),
-      TransformCustomers.clean(Tables.dirtyCustomers(s, dir)).cache()))
+    Shared.frame(s, "customers", dir)(
+      TransformCustomers.clean(Tables.dirtyCustomers(s, dir)))
 }

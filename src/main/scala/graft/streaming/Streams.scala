@@ -1,12 +1,14 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.StructType
 
+import graft.Shared
 import graft.etl.Tables
 
 /** Structured Streaming surface: tumbling/sliding windows, watermarked
@@ -34,13 +36,6 @@ object Streams {
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), (String, StructType)]
-  private val streamSessions =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, SparkSession]
-  private val ckptRoots =
-    scala.collection.concurrent.TrieMap.empty[SparkSession, java.nio.file.Path]
-
   /** State-operator custom metrics of the last completed replay — lets the
     * suite assert the RocksDB provider is genuinely active (its metrics are
     * `rocksdb*`-prefixed), not merely configured.
@@ -65,7 +60,7 @@ object Streams {
     * session-scoped root), so results are batch-deterministic as before.
     */
   def streamingSession(parent: SparkSession): SparkSession =
-    streamSessions.getOrElseUpdate(parent, {
+    Shared.value(parent, "stream.session", "") {
       val s = parent.newSession()
       s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDBProvider)
       // RocksDB commit tuning (r19). Profiled on the stream-stream joins:
@@ -90,18 +85,26 @@ object Streams {
       val parts = math.min(parent.conf.get("spark.sql.shuffle.partitions").toInt, 8)
       s.conf.set("spark.sql.shuffle.partitions", parts.toString)
       s
-    })
+    }
+
+  /** Staged events, sinks and checkpoints of a session's replays; deleted
+    * when its SparkContext stops.
+    */
+  private[graft] def streamRoot(spark: SparkSession): Path =
+    Shared.value(spark, "stream.root", "")(
+      Files.createTempDirectory("graft_stream_root_"),
+      (root: Path) => JavaUtils.deleteRecursively(root.toFile))
 
   /** Stage events (ts normalized to micros) as parquet for readStream —
     * memoized per (session, dir) so the four streaming queries share one
     * staging write.
     */
   def stageEvents(spark: SparkSession, dir: String): (String, StructType) =
-    staged.getOrElseUpdate((spark, dir), {
-      val tmp = Files.createTempDirectory("graft_stream_").toString
+    Shared.value(spark, "stream.events", dir) {
+      val tmp = Files.createTempDirectory(streamRoot(spark), "events_").toString
       Tables.events(spark, dir).write.mode("overwrite").parquet(tmp)
       (tmp, spark.read.parquet(tmp).schema)
-    })
+    }
 
   /** Run `transform` over a file stream of the staged events with
     * AvailableNow and return the result read back from a parquet sink —
@@ -125,7 +128,7 @@ object Streams {
       transform: DataFrame => DataFrame): DataFrame = {
     val (stagedPath, schema) = stageEvents(spark, dir)
     val ss = streamingSession(spark)
-    val root = ckptRoots.getOrElseUpdate(spark, Files.createTempDirectory("graft_stream_root_"))
+    val root = streamRoot(spark)
     val out = Files.createTempDirectory(root, "sink_").toString
     val ckpt = Files.createTempDirectory(root, "ckpt_").toString
     val src = ss.readStream.schema(schema).parquet(stagedPath)

@@ -45,8 +45,8 @@ class PlanSpec extends SparkSpec {
     // while this initializer holds it for `built` is a self-deadlock.
     val (s, dir) = (spark, sf)
     // parallel build, same argument as SortKeySpec's sweep: independent
-    // driver-side construction; TrieMap-cached shared pipelines tolerate
-    // the race (worst case a duplicate cache registration)
+    // driver-side construction; graft.Shared's concurrent registry
+    // tolerates the race (worst case a duplicate cache registration)
     Await.result(Future.traverse((SparkEntry.queries -- skip).toSeq) {
       case (name, fn) => Future(name -> scala.util.Try(fn(s, dir)))
     }, Duration.Inf).toMap

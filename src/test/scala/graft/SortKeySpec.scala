@@ -120,10 +120,10 @@ class SortKeySpec extends SparkSpec {
     // Per-query construction + optimization are independent driver-side
     // work (plus the checkpointing queries' eager jobs), so the sweep
     // builds from a thread pool. The shared pipelines behind the queries
-    // are TrieMap-cached; a construction race at worst double-registers
-    // a cache entry (CacheManager dedupes by canonical plan and logs
-    // "already cached"). The streaming skip stays: building st* IS
-    // running them.
+    // live in graft.Shared's concurrent registry; a construction race at
+    // worst double-registers a cache entry (CacheManager dedupes by
+    // canonical plan and logs "already cached"). The streaming skip
+    // stays: building st* IS running them.
     // spark forced to a local first: a caller that reaches this while
     // holding this instance's lazy-val monitor must not let the futures
     // race it (the PlanSpec `built` self-deadlock class)
