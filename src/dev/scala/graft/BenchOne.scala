@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Time a single registered query in isolation (same session config as
-  * [[Bench]]): `runMain graft.BenchOne <name> [iters] [sfDir]`. Prints one
-  * line per iteration — iteration 1 includes codegen/JIT cold-start, later
-  * ones show the warm cost, so a cold-vs-warm gap localizes compile-time
-  * versus plan-time regressions without a full 92-query sweep.
+  * [[Bench]]): `sbt "Test/runMain graft.BenchOne <name> [iters] [sfDir]"`.
+  * Prints one line per iteration — iteration 1 includes codegen/JIT
+  * cold-start, later ones show the warm cost, so a cold-vs-warm gap
+  * localizes compile-time versus plan-time regressions without a full
+  * registry sweep.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
@@ -16,17 +16,9 @@ object BenchOne {
     // own copy of the literal — the exact drift class behind the
     // local[4] phantom)
     val cpus = Bench.resolvedCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
     System.err.println(s"[bench-one] master=local[$cpus] box_cores=" +
       Runtime.getRuntime.availableProcessors)
-    GraftExtensions.install(spark)
     val fn = SparkEntry.queries(name)
     (1 to iters).foreach { i =>
       val t0 = System.nanoTime()

@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the pinned BPE merge-table artifact
-  * (`ext/BpeMerges.scala`) — run `runMain graft.BpePinGen` and replace
-  * that file with the printed source whenever the training recipe or the
-  * sf0.01 documents fixture changes. The artifact is
+  * (`ext/BpeMerges.scala`) — run `sbt "Test/runMain graft.BpePinGen"` and
+  * replace that file with the printed source whenever the training recipe
+  * or the sf0.01 documents fixture changes. The artifact is
   * [[graft.ext.BpeTrainer.trainOnCounts]]'s exact output on the sf0.01
   * documents table (20 merges — the t21/c8b/c9b registry parameter):
   * training is deterministic (pinned argmax tiebreak, layout-independent
@@ -17,13 +15,7 @@ import org.apache.spark.sql.SparkSession
 object BpePinGen {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     val docs = graft.etl.Tables.table(spark, dir, "documents").select("text")
     val merges = graft.ext.BpeTrainer
       .trainOnCounts(graft.ext.BpeTrainer.collectWordCounts(docs), 20)
@@ -34,7 +26,7 @@ object BpePinGen {
     } + "\""
     val sb = new StringBuilder
     sb ++= "package graft.ext\n\n"
-    sb ++= "/** GENERATED by `runMain graft.BpePinGen` -- do not hand-edit.\n"
+    sb ++= "/** GENERATED by `Test/runMain graft.BpePinGen` -- do not hand-edit.\n"
     sb ++= "  * See BpePinGen's scaladoc for the training provenance.\n"
     sb ++= "  */\n"
     sb ++= "object BpeMerges {\n"

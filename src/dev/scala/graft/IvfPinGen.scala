@@ -1,11 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates the pinned IVF centroid artifacts (`ext/IvfCentroids.scala`)
-  * — run `runMain graft.IvfPinGen` and replace that file with the printed
-  * source whenever the training recipe or the sf0.01 embeddings fixture
-  * changes. The PqPinGen device applied to the coarse quantizer:
+  * — run `sbt "Test/runMain graft.IvfPinGen"` and replace that file with
+  * the printed source whenever the training recipe or the sf0.01
+  * embeddings fixture changes. The PqPinGen device applied to the coarse
+  * quantizer:
   *
   *  - `Default` is [[graft.ext.IVFIndex.build]]'s exact trained centroids
   *    on the sf0.01 embeddings table with the s4 registry parameters
@@ -26,13 +25,7 @@ import org.apache.spark.sql.SparkSession
 object IvfPinGen {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(8)
     val emb = graft.etl.Tables.table(spark, dir, "embeddings")
       .select("vec_id", "embedding")
     val s4 = graft.ext.IVFIndex.build(emb)
@@ -51,7 +44,7 @@ object IvfPinGen {
     }
     val sb = new StringBuilder
     sb ++= "package graft.ext\n\n"
-    sb ++= "/** GENERATED by `runMain graft.IvfPinGen` -- do not hand-edit.\n"
+    sb ++= "/** GENERATED by `Test/runMain graft.IvfPinGen` -- do not hand-edit.\n"
     sb ++= "  * See IvfPinGen's scaladoc for the training provenance.\n"
     sb ++= "  */\n"
     sb ++= "object IvfCentroids {\n"

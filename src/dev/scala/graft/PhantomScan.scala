@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Dev diagnostic (r15): for every registry query, compare the
   * optimized plan of the query itself against the optimized plan of
@@ -13,24 +12,19 @@ import org.apache.spark.sql.SparkSession
   * timed 1.01 s), which is why Bench/BenchOne/ScaleProbe execute
   * `queryExecution.toRdd` instead (protocol v2). Re-run after adding
   * operators if any timing path ever counts again:
-  * `sbt "runMain graft.PhantomScan /root/testdata/sf0.001"`.
+  * `sbt "Test/runMain graft.PhantomScan /root/testdata/sf0.001"`.
+  * Exits 1 if any query failed to build or plan (each printed as `ERR`).
   */
 object PhantomScan {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = LocalSession(8)
     spark.sparkContext.setLogLevel("ERROR")
-    GraftExtensions.install(spark)
     def nodes(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
         kind: String): Int =
       p.collect { case n if n.nodeName.toLowerCase.contains(kind) => n }.size
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot(_._1.startsWith("st")).foreach { case (name, fn) =>
+    val errored = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filterNot(_._1.startsWith("st")).filterNot { case (name, fn) =>
       try {
         val df = fn(spark, dir)
         val full = df.queryExecution.optimizedPlan
@@ -40,9 +34,14 @@ object PhantomScan {
         val dGen = nodes(full, "generate") - nodes(cnt, "generate")
         if (dJoin > 0 || dWin > 0 || dGen > 0)
           println(s"PHANTOM? $name: count() drops joins=$dJoin windows=$dWin generates=$dGen")
-      } catch { case e: Throwable => println(s"ERR $name ${e.getMessage.take(60)}") }
+        true
+      } catch { case e: Throwable =>
+        println(s"ERR $name ${String.valueOf(e.getMessage).take(60)}")
+        false
+      }
     }
-    println("SCAN DONE")
+    println(s"SCAN DONE (${errored.size} errored)")
     spark.stop()
+    if (errored.nonEmpty) sys.exit(1)
   }
 }

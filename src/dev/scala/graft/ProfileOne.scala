@@ -1,13 +1,13 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Dev tool (not part of the driver contract): run ONE registry query with
   * a listener that prints every job's wall time and every stage's task-time
   * sum — localizes whether a slow query is paying compute, shuffle, or
   * job-count overhead (guide §1: decide WHERE the time goes before
-  * changing anything). `runMain graft.ProfileOne <query> [iters] [sfDir]`.
+  * changing anything).
+  * `sbt "Test/runMain graft.ProfileOne <query> [iters] [sfDir]"`.
   */
 object ProfileOne {
   def main(args: Array[String]): Unit = {
@@ -15,21 +15,13 @@ object ProfileOne {
     val iters = if (args.length > 1) args(1).toInt else 2
     val sfDir = if (args.length > 2) args(2) else "/root/testdata/sf0.1"
     val cpus = Bench.resolvedCpus
-    val b0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // A/B knobs: GRAFT_CONF="k1=v1;k2=v2" applies extra session confs so a
-    // hypothesis (codegen cost, AQE stage, broadcast threshold) is testable
-    // without recompiling.
-    val spark = sys.env.get("GRAFT_CONF").toSeq
+    val spark = LocalSession(cpus.toInt)
+    // A/B knobs: GRAFT_CONF="k1=v1;k2=v2" sets extra runtime session confs
+    // so a hypothesis (codegen cost, AQE stage, broadcast threshold) is
+    // testable without recompiling.
+    sys.env.get("GRAFT_CONF").toSeq
       .flatMap(_.split(';')).map(_.split('=')).filter(_.length == 2)
-      .foldLeft(b0)((b, kv) => b.config(kv(0).trim, kv(1).trim))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+      .foreach(kv => spark.conf.set(kv(0).trim, kv(1).trim))
     val jobStart = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {

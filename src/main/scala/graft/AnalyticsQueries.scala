@@ -23,9 +23,8 @@ object AnalyticsQueries {
   def skewedKey(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     when(pmod(c, lit(13L)) === 0L, pmod(c, lit(7L))).otherwise(c)
 
-  /** a27 core over arbitrary orders + (c_custkey, nation) frames — shared
-    * with ScaleProbe (replicated orders/customers). See the a27 registry
-    * comment for the closed-form and exactness argument.
+  /** a27 core over arbitrary orders + (c_custkey, nation) frames. See the
+    * a27 registry comment for the closed-form and exactness argument.
     */
   private[graft] def giniOf(orders: DataFrame, cust: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -56,8 +55,7 @@ object AnalyticsQueries {
   val CmsEps: Double = graft.ext.PinnedCms.Eps
   val CmsConfidence: Double = graft.ext.PinnedCms.Confidence
 
-  /** a14's full pipeline over a prepared single-column (key: long) frame
-    * — shared with ScaleProbe so the probe times the registered shape.
+  /** a14's full pipeline over a prepared single-column (key: long) frame.
     * Build the pinned-hash CMS counter table with one exploded
     * partial-agg pass (bounded ≤ depth·width cells — collected like the
     * sketch object it replaced), then generate candidates per
@@ -85,8 +83,8 @@ object AnalyticsQueries {
     // 32-way md5 parallelism: counters 4.6 → ~0.4 s.
     // Cache lifecycle: the checkpointed blocks stay until the CALLER
     // clears them — the library-wide contract (see Bench's
-    // dropPersistedState comment). Bench clears between queries and
-    // ScaleProbe between measurements; a bespoke driver looping this
+    // dropPersistedState comment). Bench and the dev timing mains clear
+    // between queries; a bespoke driver looping this
     // call must do the same or the pinned partitions accumulate.
     val keysPar = PartitionOps.repartitionBeforeFanout(keys)
       .localCheckpoint()
@@ -316,9 +314,8 @@ object AnalyticsQueries {
       .orderBy("event_type", "event_id")
   }
 
-  /** a28 core over an arbitrary (product_id, rev_cents) part-grain frame —
-    * shared with ScaleProbe (replicated parts). See the a28 registry
-    * comment for the cutoff-device derivation.
+  /** a28 core over an arbitrary (product_id, rev_cents) part-grain frame.
+    * See the a28 registry comment for the cutoff-device derivation.
     */
   private[graft] def paretoOf(rev0: DataFrame): DataFrame = {
     val nCuts = 15
@@ -376,8 +373,8 @@ object AnalyticsQueries {
       .orderBy(col("rev_cents").desc, col("product_id"))
   }
 
-  /** a30 core over an arbitrary (category, unit_price, qty) frame —
-    * shared with ScaleProbe. See the a30 registry comment.
+  /** a30 core over an arbitrary (category, unit_price, qty) frame. See
+    * the a30 registry comment.
     */
   private[graft] def weightedMedianOf(cs: DataFrame): DataFrame = {
     val bin = floor(col("unit_price") / lit(5000.0)).cast("long")
@@ -428,14 +425,14 @@ object AnalyticsQueries {
       .agg(sum((col("o_totalprice").cast(Tables.Money) * 100)
         .cast("long")).as("x_cents"))
 
-  /** w18 core over an arbitrary (nation, ym, x_cents) spine — shared
-    * with ScaleProbe. See the w18 registry comment.
+  /** w18 core over an arbitrary (nation, ym, x_cents) spine. See the w18
+    * registry comment.
     */
   private[graft] def mannKendallOf(spine0: DataFrame): DataFrame = {
     // four consumers (both pair-join sides, n_months, ties) read this
     // |nations|·|months|-row spine; without truncation each re-derives
     // the full fact-scan rollup — four fact scans at 100 TB instead of
-    // one (caught by PlanDump; the a36/s7 shared-lineage device)
+    // one (caught in a PlanOne dump; the a36/s7 shared-lineage device)
     val spine = spine0.localCheckpoint()
     val pairs = spine.as("a").join(spine.as("b"),
         col("a.nation") === col("b.nation") && col("a.ym") < col("b.ym"))
@@ -467,8 +464,8 @@ object AnalyticsQueries {
       .orderBy("nation")
   }
 
-  /** a41 core over an arbitrary (category, ym, y_cents) monthly frame —
-    * shared with ScaleProbe. See the a41 registry comment.
+  /** a41 core over an arbitrary (category, ym, y_cents) monthly frame.
+    * See the a41 registry comment.
     */
   private[graft] def theilSenOf(monthly0: DataFrame): DataFrame = {
     // three consumers (both slope-join sides, the intercept join-back)
@@ -502,8 +499,8 @@ object AnalyticsQueries {
       .orderBy("category")
   }
 
-  /** a42/a43 core over an arbitrary (segment, priority) pair frame —
-    * shared with ScaleProbe. See [[contingencyCells]].
+  /** a42/a43 core over an arbitrary (segment, priority) pair frame. See
+    * [[contingencyCells]].
     */
   private[graft] def contingencyOf(base: DataFrame): DataFrame = {
     // the r·c-row cell table feeds four consumers (both marginals, the
@@ -543,8 +540,8 @@ object AnalyticsQueries {
         col("o_orderpriority").as("priority")))
 
   /** a31 core over an arbitrary (category, cents, rk) frame — rk must be
-    * a unique row key (the draw seed). Shared with ScaleProbe. See the
-    * a31 registry comment for the derivation.
+    * a unique row key (the draw seed). See the a31 registry comment for
+    * the derivation.
     */
   private[graft] def poissonBootstrapOf(cs0: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -627,8 +624,8 @@ object AnalyticsQueries {
     * statistics (`two_u`, `tie_t`) left on DECIMAL(38,0) — full 10³⁸
     * headroom (n ≈ 4.6·10¹² rows per type-pair). Consumers needing the
     * full range (a47's margin/delta) read THIS frame; the registry
-    * output narrows through [[loudLong]] in [[mannWhitneyOf]]. Shared
-    * with ScaleProbe. See the a32 registry comment.
+    * output narrows through [[loudLong]] in [[mannWhitneyOf]]. See the
+    * a32 registry comment.
     */
   private[graft] def mannWhitneyCore(ev: DataFrame,
       base: String = "view"): DataFrame = {
@@ -700,8 +697,8 @@ object AnalyticsQueries {
     * order-statistic CI ranks. A rep where either side has n_eff = 0
     * drops from the diff set (inner join, mirrored in the oracle);
     * b_reps records the surviving count. `excludes_zero` is the
-    * decision bit — the 95% CI strictly one side of 0. Shared with
-    * ScaleProbe. See the a48 registry comment.
+    * decision bit — the 95% CI strictly one side of 0. See the a48
+    * registry comment.
     */
   private[graft] def bootstrapDiffOf(ev0: DataFrame,
       base: String = "view"): DataFrame = {
@@ -781,8 +778,7 @@ object AnalyticsQueries {
     * Reads [[mannWhitneyCore]]'s PRE-cast DECIMAL(38,0) `two_u` so the
     * margin/delta/effect path keeps the full 10³⁸ headroom (the r15
     * audit: the old read of the post-cast long re-imposed the 2⁶³
-    * bound one hop downstream); the `margin` OUTPUT narrows loudly.
-    * Shared with ScaleProbe so the probe times the shipped plan. See
+    * bound one hop downstream); the `margin` OUTPUT narrows loudly. See
     * the a47 registry comment.
     */
   private[graft] def cliffsDeltaOf(ev: DataFrame): DataFrame = {
@@ -812,8 +808,8 @@ object AnalyticsQueries {
     * one ulp — a real cross-engine class this query now documents.
     * Past n³ > 2⁶³ the sums themselves stay EXACT on DECIMAL(38)/
     * HUGEINT; only the final conversions may differ in the last ulp
-    * between engines (the value is still 1-ulp-correct). Shared with
-    * ScaleProbe. See the a45 registry comment.
+    * between engines (the value is still 1-ulp-correct). See the a45
+    * registry comment.
     */
   private[graft] def spearmanOf(rows: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)

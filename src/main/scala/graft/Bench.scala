@@ -4,14 +4,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = resolvedCpus
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession(cpus.toInt)
     // Resolved master vs the physical box, visible at startup AND in the
     // detail record below: an env-less run on a <32-core box silently
     // oversubscribes local[32] — the mirror image of the r14 local[4]
@@ -19,7 +12,6 @@ object Bench {
     // difference from contention.
     System.err.println(s"[bench] master=local[$cpus] box_cores=" +
       Runtime.getRuntime.availableProcessors)
-    GraftExtensions.install(spark)
     // Fail-fast BEFORE the timed pass: a short-id collision discovered only
     // inside renderJson (after ~70 s of queries) would waste the whole run,
     // skip the stdout contract line, and leave spark.stop() uncalled.
@@ -312,13 +304,14 @@ object Bench {
     catch { case _: Throwable => -1.0 }
 
   /** Harness-contract core count (local[32]): the ONE default shared by
-    * Bench and BenchOne — r14's silent local[4] phantom came from a
-    * stale per-file copy of this value, and the r14 ADVICE flagged the
-    * literal being duplicated again in BenchOne. Both mains resolve
-    * through [[resolvedCpus]]; the resolved master and the PHYSICAL
-    * core count are stamped into bench_detail.json so an
-    * oversubscribed local[32] on a smaller box (the mirror-image
-    * failure) is visible in the bench record, not silent.
+    * Bench and the dev timing mains (BenchOne, ProfileOne, PlanOne,
+    * ScaleProbe) — r14's silent local[4] phantom came from a stale
+    * per-file copy of this value. They all resolve through
+    * [[resolvedCpus]] and open their session with [[LocalSession]]; the
+    * resolved master and the PHYSICAL core count are stamped into
+    * bench_detail.json so an oversubscribed local[32] on a smaller box
+    * (the mirror-image failure) is visible in the bench record, not
+    * silent.
     */
   val DefaultCpus = "32"
   def resolvedCpus: String =

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * unpersist eagerly — their blocks back the DataFrames they return —
   * so a caller COMPOSING operators in one session (clean → fuzzy-dedup →
   * survivorship → …) accumulates every intermediate block unless it
-  * drops them itself. `Bench`/`ScaleProbe` do that with a blanket sweep
-  * between measurements; this helper is the targeted version for
+  * drops them itself. `Bench` and the dev timing mains do that with a
+  * blanket sweep between measurements; this helper is the targeted version for
   * library users and [[graft.etl.Pipeline]]:
   *
   * {{{

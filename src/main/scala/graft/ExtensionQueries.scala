@@ -41,8 +41,8 @@ object ExtensionQueries {
     1152921469713251200L, 1152921491770210432L, 1152921499884512256L,
     1152921502869597184L)
 
-  /** m7 core over an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe. See the m7 registry comment for the stub-energy story.
+  /** m7 core over an arbitrary (doc_id, text) frame. See the m7 registry
+    * comment for the stub-energy story.
     */
   private[graft] def vadSegmentsOf(d: DataFrame): DataFrame = {
     val fLen = 32
@@ -76,8 +76,8 @@ object ExtensionQueries {
       .orderBy("doc_id", "seg_start")
   }
 
-  /** t22 core over an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe. See the t22 registry comment for the backoff ladder.
+  /** t22 core over an arbitrary (doc_id, text) frame. See the t22
+    * registry comment for the backoff ladder.
     */
   private[graft] def trigramCoverageOf(d: DataFrame): DataFrame = {
     // spread + localCheckpoint (r19): toks feeds FOUR consumers (the
@@ -138,7 +138,7 @@ object ExtensionQueries {
       .orderBy("doc_id")
   }
 
-  /** x7 core, shared with the scale probe: layout-independent
+  /** x7 core: layout-independent
     * pseudorandom permutation into training shards. Enumeration is
     * two-level — ranks from a window over (shard = 1st md5 hex digit,
     * sub = next `subWidth` hex digits) so every window group is a fixed
@@ -240,9 +240,8 @@ object ExtensionQueries {
       .orderBy("stage_idx")
   }
 
-  /** w11 core over an arbitrary orders frame — shared with ScaleProbe
-    * (replicated orders). See the w11 registry comment for the
-    * no-sqrt/no-float inequality argument.
+  /** w11 core over an arbitrary orders frame. See the w11 registry
+    * comment for the no-sqrt/no-float inequality argument.
     */
   private[graft] def rollingAnomalyOf(orders: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -266,8 +265,8 @@ object ExtensionQueries {
       .orderBy("day")
   }
 
-  /** c25 core over an arbitrary (doc_id, text) corpus — shared with
-    * ScaleProbe. See the c25 registry comment.
+  /** c25 core over an arbitrary (doc_id, text) corpus. See the c25
+    * registry comment.
     */
   private[graft] def noveltyOf(corpus: DataFrame): DataFrame = {
     // the materialized per-doc fingerprint index feeds the df aggregate
@@ -292,8 +291,7 @@ object ExtensionQueries {
   private[graft] def scd2History(s: SparkSession, dir: String): DataFrame =
     scd2HistoryOf(Tables.table(s, dir, "orders"))
 
-  /** The same version derivation over an arbitrary orders frame (shared
-    * with ScaleProbe, which feeds replicated orders).
+  /** The same version derivation over an arbitrary orders frame.
     */
   private[graft] def scd2HistoryOf(orders: DataFrame): DataFrame = {
     val w = Window.partitionBy("o_custkey").orderBy("d", "o_orderkey")
@@ -338,7 +336,7 @@ object ExtensionQueries {
   /** t16b's registry form: the hot/cold threshold max(2, nDocs/100)
     * derives from corpus size IN-PLAN (a one-row agg crossed in via
     * broadcast — the x9 device), so merely CONSTRUCTING the query runs
-    * no Spark job (PlanDump/PlanSpec walk plans lazily).
+    * no Spark job (PlanOne/PlanSpec walk plans lazily).
     */
   private[graft] def bigramCommonnessHotSplitAuto(d: DataFrame): DataFrame =
     hotSplitCore(d, cf => cf.crossJoin(broadcast(
@@ -389,8 +387,8 @@ object ExtensionQueries {
     */
   private def learnedMerges(d: DataFrame) = graft.ext.BpeMerges.Default
 
-  /** w9 core on an arbitrary events frame (user_id, event_id, ts, value)
-    * — split out so the scale probe can feed replicated volume.
+  /** w9 core on an arbitrary events frame (user_id, event_id, ts,
+    * value).
     */
   private[graft] def mergeIntervals(events: DataFrame): DataFrame = {
     val us = unix_micros(col("ts"))
@@ -536,10 +534,7 @@ object ExtensionQueries {
     */
   private def docsGopher(s: SparkSession, dir: String): DataFrame =
     gopherInject(docs(s, dir))
-  /** The injection over an arbitrary (doc_id, text) frame — exposed so
-    * ScaleProbe can replicate-then-inject (docsRep's token suffixes
-    * keep 'line_i'/'batch_i' substring-matchable, so every replica
-    * carries its own structure).
+  /** The injection over an arbitrary (doc_id, text) frame.
     */
   private[graft] def gopherInject(d: DataFrame): DataFrame =
     d.select(col("doc_id"),
@@ -569,8 +564,7 @@ object ExtensionQueries {
     "list_filter(list_transform(string_split(text, chr(10)), " +
       "l -> trim(l)), l -> l <> '')"
 
-  /** t27 core over an INJECTED (doc_id, text) frame — shared with
-    * ScaleProbe so the probe times the shipped plan. See the t27
+  /** t27 core over an INJECTED (doc_id, text) frame. See the t27
     * registry comment.
     */
   private[graft] def gopherRulesOf(d: DataFrame): DataFrame = {
@@ -605,8 +599,8 @@ object ExtensionQueries {
       .orderBy("doc_id")
   }
 
-  /** c33 core over an INJECTED (doc_id, text) frame — shared with
-    * ScaleProbe. See the c33 registry comment.
+  /** c33 core over an INJECTED (doc_id, text) frame. See the c33
+    * registry comment.
     */
   private[graft] def repetitionSignalsOf(d: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -3435,7 +3429,7 @@ object ExtensionQueries {
         .orderBy("bin")
     }))
 
-  /** c20 core, shared with the scale probe: per-source total-variation
+  /** c20 core: per-source total-variation
     * distance from the corpus token distribution — see the registry
     * entry's comment for the exact-arithmetic derivation.
     */
@@ -3463,10 +3457,8 @@ object ExtensionQueries {
             * col("n_tot").cast("double"))).as("tv_dist"))
   }
 
-  /** t25 core over an arbitrary (doc_id, text) corpus — shared with
-    * ScaleProbe so the probe times the exact shipped expression tree
-    * (the r14 probe re-derived a narrower projection — an ADVICE item).
-    * See the t25 registry comment for the two-signal derivation.
+  /** t25 core over an arbitrary (doc_id, text) corpus. See the t25
+    * registry comment for the two-signal derivation.
     */
   private[graft] def codeDetectOf(d: DataFrame): DataFrame = {
     val kw = Seq("def", "return", "import", "struct", "int", "elif",
@@ -3553,9 +3545,8 @@ object ExtensionQueries {
     (v, rounds)
   }
 
-  /** b10 core over an arbitrary events frame — shared with ScaleProbe
-    * (replicated users). See the b10 registry comment for the
-    * product-limit derivation. Conversion = first BIG-TICKET purchase
+  /** b10 core over an arbitrary events frame. See the b10 registry
+    * comment for the product-limit derivation. Conversion = first BIG-TICKET purchase
     * (value ≥ 180): the fixture converts ~1/3 of users at every scale,
     * so right-censoring — the statistic's whole point — is genuinely
     * exercised (plain "first purchase" converts 100% of users and KM
@@ -3599,9 +3590,8 @@ object ExtensionQueries {
       .orderBy("dur_day")
   }
 
-  /** c26 core over arbitrary positives + one-row part-count frames —
-    * shared with ScaleProbe (replicated customers). See the c26 registry
-    * comment.
+  /** c26 core over arbitrary positives + one-row part-count frames. See
+    * the c26 registry comment.
     */
   /** t23's body as a core (r17): the fixed three-term BM25 scorer's
     * top-20, shared with s9's hybrid fusion so both legs rank the SAME
@@ -3610,8 +3600,7 @@ object ExtensionQueries {
   private[graft] def bm25Top20(s: SparkSession, dir: String): DataFrame =
     bm25Top20Of(docs(s, dir))
 
-  /** t23/s9 core over an INJECTED (doc_id, text) frame — shared with
-    * the ScaleProbe s9 leg (replicated docs).
+  /** t23/s9 core over an INJECTED (doc_id, text) frame.
     */
   private[graft] def bm25Top20Of(d: DataFrame): DataFrame = {
     val qTerms = Seq("scan", "join", "window")
@@ -3685,8 +3674,8 @@ object ExtensionQueries {
       .orderBy("customer_id", "draw_j")
   }
 
-  /** j11 core over an arbitrary part frame — shared with ScaleProbe
-    * (replicated parts, fixed name domain). See the j11 registry comment.
+  /** j11 core over an arbitrary part frame. See the j11 registry
+    * comment.
     */
   private[graft] def fuzzyNameMatchOf(part: DataFrame): DataFrame = {
     val names = part
@@ -3889,8 +3878,8 @@ object ExtensionQueries {
   private[graft] val lnE12: Array[Long] =
     (1 to LnCap).map(i => math.round(math.log(i) * 1e12)).toArray
 
-  /** t26 core over an arbitrary (doc_id, text) frame — shared with
-    * ScaleProbe. See the t26 registry comment.
+  /** t26 core over an arbitrary (doc_id, text) frame. See the t26
+    * registry comment.
     */
   private[graft] def tokenEntropyOf(s: SparkSession, d: DataFrame): DataFrame = {
     import s.implicits._
@@ -3922,8 +3911,8 @@ object ExtensionQueries {
   private def lnValuesSql: String =
     (1 to LnCap).map(i => s"(${i}, ${lnE12(i - 1)})").mkString(", ")
 
-  /** c34 core over an INJECTED documents frame (doc_id, lang, text) —
-    * shared with ScaleProbe. See the c34 registry comment for the
+  /** c34 core over an INJECTED documents frame (doc_id, lang, text).
+    * See the c34 registry comment for the
     * model/quantization derivation; bucket log-ratios ride t26's
     * pinned-ln table so the whole statistic is integer-exact.
     */

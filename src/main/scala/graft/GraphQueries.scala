@@ -174,28 +174,8 @@ object GraphQueries {
         .filter(col("n_common") >= 3),
       col("id1"))
 
-  /** Probe register for the g2-family wedge bound (r16 verdict task 4):
-    * ONE row of (|E|, Σ out-deg² = the oriented wedge space — the
-    * family's only super-linear term, max out-degree — the √|E| claim).
-    * k disjoint replica graphs must grow |E| and wedges ×k with
-    * max_outdeg FLAT; a super-linear wedge curve is the early warning
-    * the timing alone can hide behind constant factors.
-    */
-  private[graft] def wedgeStats(e: DataFrame): DataFrame = {
-    val d = degrees(e.withColumn("w", lit(1L))).select("node", "degree")
-    e.join(d.select(col("node").as("u"), col("degree").as("du")), "u")
-      .join(d.select(col("node").as("v"), col("degree").as("dv")), "v")
-      .select(when(col("du") < col("dv") ||
-          (col("du") === col("dv") && col("u") < col("v")),
-        col("u")).otherwise(col("v")).as("s"))
-      .groupBy("s").agg(count(lit(1)).as("od"))
-      .agg(sum(col("od")).as("n_edges"),
-        sum(col("od") * col("od")).as("wedges"),
-        max(col("od")).as("max_outdeg"))
-  }
-
   /** g9 core on arbitrary (cust, pk) purchases and a (u, v, w) item
-    * graph — split out for the scale probe's replica-disjoint legs.
+    * graph.
     */
   private[graft] def coPurchaseRecsOf(bought: DataFrame,
       e: DataFrame): DataFrame =

@@ -101,8 +101,8 @@ object SimilarityQueries {
       .orderBy("rank")
   }
 
-  /** s9 core over INJECTED documents + embeddings frames — shared with
-    * the ScaleProbe leg (replicated corpora). The fusion stage itself
+  /** s9 core over INJECTED documents + embeddings frames. The fusion
+    * stage itself
     * is two ≤20-row bounded windows + a full-outer on doc id; all
     * corpus-sized work lives in the two legs (t23's BM25 scan family,
     * s1's brute cosine).
@@ -726,9 +726,9 @@ object SimilarityQueries {
         p => p.getField(f1) * p.getField(f2)),
       lit(0.0), (a, x) => a + x)
 
-  /** v10 core over an arbitrary (vec_id, embedding) frame — shared with
-    * ScaleProbe. See the v10 registry comment for the per-tensor
-    * quantization / integer-Gram derivation.
+  /** v10 core over an arbitrary (vec_id, embedding) frame. See the v10
+    * registry comment for the per-tensor quantization / integer-Gram
+    * derivation.
     */
   private[graft] def gramInt8Of(emb: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
@@ -773,7 +773,7 @@ object SimilarityQueries {
 
   /** v11 core: v10's integer Gram, collected (≤ dim² cells — the b15
     * reduced-model carve-out), then driver-side e6 fixed-point power
-    * iteration. Shared with ScaleProbe. See the v11 registry comment.
+    * iteration. See the v11 registry comment.
     */
   private[graft] def pcaPowerOf(s: SparkSession, emb: DataFrame): DataFrame = {
     import s.implicits._
@@ -821,9 +821,8 @@ object SimilarityQueries {
     (v, lambdaE6, rounds)
   }
 
-  /** v9 core over an arbitrary (vec_id, embedding) frame — shared with
-    * ScaleProbe. See the v9 registry comment for the pack/popcount/
-    * re-rank derivation.
+  /** v9 core over an arbitrary (vec_id, embedding) frame. See the v9
+    * registry comment for the pack/popcount/re-rank derivation.
     */
   private[graft] def binaryHammingOf(emb: DataFrame,
       queryId: Long): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.ext
 
-/** GENERATED by `runMain graft.BpePinGen` -- do not hand-edit.
+/** GENERATED by `Test/runMain graft.BpePinGen` -- do not hand-edit.
   * See BpePinGen's scaladoc for the training provenance.
   */
 object BpeMerges {

@@ -30,9 +30,9 @@ object Clusters {
     componentsWithRounds(pairs, maxIters)._1
 
   /** [[connectedComponents]] plus the number of propagation rounds run —
-    * the quantity the scale probe tracks: rounds = graph diameter (+1 for
-    * the fixpoint check), so a corpus growing with fresh content must hold
-    * it flat; a rising round count means dup chains are lengthening and
+    * the quantity to watch as a corpus grows: rounds = graph diameter
+    * (+1 for the fixpoint check), so a corpus growing with fresh content
+    * must hold it flat; a rising round count means dup chains are lengthening and
     * it's time for the large-star/small-star swap documented above.
     */
   def componentsWithRounds(pairs: DataFrame, maxIters: Int = 20): (DataFrame, Int) = {

@@ -32,14 +32,13 @@ object IVFIndex {
     def unpersist(): Unit = release()
   }
 
-  /** Constant-occupancy sizing rule, executable (the scale story the
-    * ScaleProbe curve documents): cells hold ~`targetCellRows` vectors
-    * REGARDLESS of corpus size, so nLists grows ∝ corpus and the probe
-    * scan n·nProbe/nLists stays ~nProbe·targetCellRows — holding nLists
-    * fixed would instead grow every cell linearly and the probe with
-    * it. The default target of 32 resolves the gate-scale embeddings
-    * table (500 rows at sf0.01) to the historical 16 and IS ScaleProbe's
-    * `16·k for a ×k corpus` curve, now executable; a production corpus
+  /** Constant-occupancy sizing rule, executable: cells hold
+    * ~`targetCellRows` vectors REGARDLESS of corpus size, so nLists grows
+    * ∝ corpus and the probe scan n·nProbe/nLists stays
+    * ~nProbe·targetCellRows — holding nLists fixed would instead grow
+    * every cell linearly and the probe with it. The default target of 32
+    * resolves the gate-scale embeddings table (500 rows at sf0.01) to
+    * the historical 16, and a ×k corpus to 16·k; a production corpus
     * passes its own target (typically 10³–10⁴ vectors/cell). Clamped
     * below at 2 (k-means needs ≥ 2 clusters) and above at 2^16 (the
     * centroid broadcast stays a few MB of doubles; past the cap,

@@ -220,7 +220,7 @@ object TextAnalysis {
     * was O(distinct·n) per document (~10⁴ interpreted array-lambda
     * steps at 100 tokens; measured as most of c15's honest cost).
     * NULL on an empty array, matching `list_max` over an empty list in
-    * the oracle. Shared by c15 and its ScaleProbe leg.
+    * the oracle.
     */
   def maxTokenFreq(toks: Column): Column = {
     val run = (acc: Column, t: Column) =>

@@ -254,7 +254,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("IVF nLists sizing: constant-occupancy rule, gate scale resolves " +
       "to the historical 16") {
-    // the executable form of the ScaleProbe 16·k rule: cells hold ~32
+    // the executable form of the 16·k-lists-for-a-×k-corpus rule: cells hold ~32
     // vectors regardless of corpus size, so nLists grows ∝ corpus
     assert(IVFIndex.defaultNLists(500L) == 16)
     assert(IVFIndex.defaultNLists(5000L) == 157) // ×10 corpus ≈ ×10 lists

@@ -30,12 +30,12 @@ class BpeSpec extends SparkSpec {
     // the registry's t21/c8b/c9b encode against ext/BpeMerges.scala; this
     // pins the checked-in literals to their stated provenance so a fixture
     // or recipe change fails loudly here instead of silently drifting the
-    // artifact (regenerate via `runMain graft.BpePinGen`)
+    // artifact (regenerate via `Test/runMain graft.BpePinGen`)
     val trained = BpeTrainer
       .trainOnCounts(wordCounts("/root/testdata/sf0.01"), 20)
       .map(m => (m._2, m._3, m._4))
     assert(graft.ext.BpeMerges.Default == trained,
-      "ext/BpeMerges.scala is stale — regenerate via `runMain graft.BpePinGen`")
+      "ext/BpeMerges.scala is stale — regenerate via `Test/runMain graft.BpePinGen`")
   }
 
   test("t20: driver trainer equals the distributed trainer at sf0.001 AND sf0.01") {

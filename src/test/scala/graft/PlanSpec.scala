@@ -327,9 +327,9 @@ class PlanSpec extends SparkSpec {
     * computation was planned away. A registry-wide scan then found ~50
     * queries whose counted plan dropped SOME expensive node (w-family
     * windows, g11/g12 joins, aggregate-input window columns), which is
-    * why Bench/BenchOne/ScaleProbe moved to executing
-    * queryExecution.toRdd (protocol v2 — the query's own plan, nothing
-    * prunable). This test keeps the lesson executable: a46's INNER C/D
+    * why Bench and the dev timing mains (BenchOne, ProfileOne,
+    * ScaleProbe) execute queryExecution.toRdd (protocol v2 — the
+    * query's own plan, nothing prunable). This test keeps the lesson executable: a46's INNER C/D
     * join must keep at least the cumulative spine in even a counted
     * plan, so any future count-based measurement path degrades loudly
     * here instead of silently re-growing phantoms.

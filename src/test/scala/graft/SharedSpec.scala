@@ -5,7 +5,7 @@ import java.util.concurrent.TimeUnit
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
 import graft.streaming.Streams
@@ -90,16 +90,7 @@ class SharedSpec extends SparkSpec {
 object SharedStopCheck {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-shared-stop")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    GraftExtensions.install(spark)
+    val spark = LocalSession(2)
     Seq("q3_avg_check_by_region", "d11_edit_verify", "d6_dedup_clusters",
       "g2_triangle_count", "g4_pagerank", "st1_stream_tumbling")
       .foreach(q => SparkEntry.queries(q)(spark, dir).collect())

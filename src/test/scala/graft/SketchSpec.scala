@@ -243,7 +243,7 @@ class SketchSpec extends SparkSpec {
   test("pinned PqCodebook artifact is the trainer's exact sf0.01 output (provenance)") {
     // the registry's v5/s6 encode against ext/PqCodebook.scala; this pins
     // the checked-in literals to their stated provenance (regenerate via
-    // `runMain graft.PqPinGen`)
+    // `Test/runMain graft.PqPinGen`)
     import graft.ext.{PqCodebook, ProductQuantizer}
     val emb = graft.etl.Tables
       .table(spark, "/root/testdata/sf0.01", "embeddings")
@@ -252,7 +252,26 @@ class SketchSpec extends SparkSpec {
     def canon(p: ProductQuantizer.PQ) =
       p.codebooks.map(_.map { case (j, c) => (j, c.toSeq) }.toSeq).toSeq
     assert(canon(PqCodebook.Default) == canon(trained),
-      "ext/PqCodebook.scala is stale — regenerate via `runMain graft.PqPinGen`")
+      "ext/PqCodebook.scala is stale — regenerate via `Test/runMain graft.PqPinGen`")
+  }
+
+  test("pinned IvfCentroids artifacts are the trainer's exact sf0.01 output (provenance)") {
+    // s4/s8 probe against IvfCentroids.Default and d8 keeps against
+    // IvfCentroids.EmbDup; this pins both literal tables to their stated
+    // training runs (regenerate via `Test/runMain graft.IvfPinGen`)
+    import graft.ext.{DocFixtures, IVFIndex, IvfCentroids}
+    val dir = "/root/testdata/sf0.01"
+    val emb = graft.etl.Tables.table(spark, dir, "embeddings")
+      .select("vec_id", "embedding")
+    def canon(cs: Array[(Int, Array[Double])]) =
+      cs.map { case (i, c) => (i, c.toSeq) }.toSeq
+    for ((pinned, idx) <- Seq(
+        IvfCentroids.Default -> IVFIndex.build(emb),
+        IvfCentroids.EmbDup -> IVFIndex.build(DocFixtures.embDup(spark, dir), nLists = 16))) {
+      try assert(canon(pinned) == canon(idx.centroids),
+        "ext/IvfCentroids.scala is stale — regenerate via `Test/runMain graft.IvfPinGen`")
+      finally idx.unpersist()
+    }
   }
 
   test("v5 PQ codes: deterministic, copy-consistent, and reconstruction-tight") {
