@@ -2,23 +2,32 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
-  * Aggregates the per-module query/oracle maps. Keys are unique by
-  * construction (each module uses its own prefix).
+import graft.queries._
+
+/** Driver contract — see SURVEY.md §7. Both maps derive from one list of
+  * [[Query]] declarations, one family object per name prefix; building
+  * them throws on a repeated name.
   */
 object SparkEntry {
+
+  private val registry: Map[String, Query] = Query.byName(Seq(
+    A1to24Queries.all, A25to36Queries.all, A37to48Queries.all, BQueries.all,
+    C1to15Queries.all, C16to34Queries.all, DQueries.all, EQueries.all,
+    FQueries.all, GQueries.all, HQueries.all, JQueries.all, MQueries.all,
+    OQueries.all, PQueries.all, QQueries.all, SQueries.all, StQueries.all,
+    TQueries.all, VQueries.all, WQueries.all, XQueries.all).flatten)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_sales_summary")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    ReferenceQueries.queries ++ OperatorQueries.queries ++ ExtensionQueries.queries ++ SimilarityQueries.queries ++ StreamQueries.queries ++ AnalyticsQueries.queries ++ GraphQueries.queries
+  /** Every query's body, by name. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, q) => n -> q.body }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables. Omitted for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
-    ReferenceQueries.oracles ++ OperatorQueries.oracles ++ ExtensionQueries.oracles ++ SimilarityQueries.oracles ++ StreamQueries.oracles ++ AnalyticsQueries.oracles ++ GraphQueries.oracles
+  val oracleSql: Map[String, String] =
+    registry.collect { case (n, Query(_, _, Some(sql))) => n -> sql }
 }

@@ -100,8 +100,4 @@ object Extract {
   /** S4 — reference `read_sales_csv` (`etl/extract.py:67-73`). */
   def readSalesCsv(spark: SparkSession, path: String): DataFrame =
     readCsv(spark, path, salesSchema, salesRequired, "sales")
-
-  /** S5 — reference `read_customers_csv` (`etl/extract.py:76-82`). */
-  def readCustomersCsv(spark: SparkSession, path: String): DataFrame =
-    readCsv(spark, path, customersSchema, customersRequired, "customers")
 }

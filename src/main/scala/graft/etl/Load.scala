@@ -42,10 +42,6 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType,
   */
 object Load {
 
-  /** K1 connection factory — reference `etl/load.py:18-26`, `config.py:17-21`. */
-  def jdbcUrl(host: String, port: Int, db: String): String =
-    s"jdbc:postgresql://$host:$port/$db"
-
   /** Sink-side decimal casts (P10) — the reference stores money as
     * DECIMAL(10,2)/DECIMAL(15,2) (`db.sql:9-10,31`) while computing in
     * float; we mirror: compute in double/decimal, cast at the sink

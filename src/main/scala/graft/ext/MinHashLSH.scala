@@ -32,7 +32,7 @@ import org.apache.spark.sql.functions._
 object MinHashLSH {
 
   /** Seed for the permutation-hash coefficients — shared verbatim with the
-    * DuckDB oracle SQL builder ([[graft.SimilarityQueries]]).
+    * DuckDB oracle SQL builder ([[graft.queries.DQueries]]).
     */
   val PermSeed = 7L
 

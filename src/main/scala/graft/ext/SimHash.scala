@@ -25,7 +25,7 @@ object SimHash {
   private val blockBits = bits / blocks
 
   /** Seed for the per-bit projection coefficients — shared verbatim with
-    * the DuckDB oracle SQL builder ([[graft.SimilarityQueries]]).
+    * the DuckDB oracle SQL builder ([[graft.queries.DQueries]]).
     */
   val BitSeed = 11L
 

@@ -272,7 +272,7 @@ object Streams {
   }
 
   /** b2b's streaming twin: the per-user 3-stage funnel with the same
-    * 10-day per-step deadlines ([[graft.ExtensionQueries.FunnelWindowUs]])
+    * 10-day per-step deadlines ([[graft.queries.Common.FunnelWindowUs]])
     * as custom keyed state. The stage values are computed FUNCTIONALLY
     * from the group's history — s = min signup, c = min click in
     * [s, s+W], p = min purchase in [c, c+W], exactly b2b's window-min
@@ -294,7 +294,7 @@ object Streams {
   def funnelStages(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
     import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val w = graft.ExtensionQueries.FunnelWindowUs
+    val w = graft.queries.Common.FunnelWindowUs
     val stateEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
       Encoders.scalaLong)
     val outEnc = Encoders.tuple(Encoders.scalaLong, Encoders.scalaLong,
@@ -345,7 +345,6 @@ object Streams {
   val SketchWidth = 256
   val SketchDepth = 5
   val SketchEps: Double = math.E / SketchWidth
-  val SketchConfidence: Double = 1.0 - math.exp(-SketchDepth.toDouble)
 
   /** Streaming KMV distinct (st17): a35's k-minimum-values sketch as
     * keyed stream state — the distinct-user counter a dashboard keeps

@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Pipelines, Tables}
-import graft.ext.{IVFIndex, Similarity}
+import graft.ext.{IVFIndex, Similarity, Stats}
+import graft.queries.{A1to24Queries, Common}
 
 class AnalyticsSpec extends SparkSpec {
 
@@ -38,14 +39,14 @@ class AnalyticsSpec extends SparkSpec {
     // top-7 slots exactly.
     for (dir <- sweepDirs("/root/testdata/sf0.01")) {
       val keys = Tables.table(spark, dir, "lineitem")
-        .select(AnalyticsQueries.skewedKey(col("l_partkey")).as("key"))
+        .select(A1to24Queries.skewedKey(col("l_partkey")).as("key"))
       val exact = keys.groupBy("key").count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       val n = exact.values.sum
       val got = SparkEntry.queries("a14_heavy_hitters_sketch")(spark, dir)
         .collect().map(r => (r.getLong(0), r.getLong(1)))
       assert(got.length == 20)
-      val slack = (AnalyticsQueries.CmsEps * n).ceil.toLong
+      val slack = (graft.ext.PinnedCms.Eps * n).ceil.toLong
       got.foreach { case (k, est) =>
         val ex = exact(k)
         assert(est >= ex, s"$dir key $k: est $est below exact $ex — CMS can never underestimate")
@@ -92,7 +93,7 @@ class AnalyticsSpec extends SparkSpec {
       .select(col("event_type"), col("event_id"),
         (hash(col("event_id")).cast("double") / lit(1e9)).as("value"))
     val B = 8
-    val out = AnalyticsQueries.bucketedPositions(ev, B).collect()
+    val out = Stats.bucketedPositions(ev, B).collect()
     assert(out.length == ev.count())
     val nTypes = ev.select("event_type").distinct().count()
     val nVals = ev.select("value").distinct().count()
@@ -127,7 +128,7 @@ class AnalyticsSpec extends SparkSpec {
     // data rows at all — every Window in the plan prefix-sums the compact
     // histogram (its input subtree contains the Aggregate)
     import org.apache.spark.sql.catalyst.plans.logical
-    val plan = AnalyticsQueries.bucketedPositions(ev, B)
+    val plan = Stats.bucketedPositions(ev, B)
       .queryExecution.optimizedPlan
     val wins = plan.collect { case win: logical.Window => win }
     assert(wins.nonEmpty, "w4c lost its histogram windows — plan shape changed")
@@ -147,7 +148,7 @@ class AnalyticsSpec extends SparkSpec {
       // the superset argument (ranking is a pure function of the key) says
       // the local-top-m form must produce the identical top-20
       val keys = Tables.table(spark, dir, "lineitem")
-        .select(AnalyticsQueries.skewedKey(col("l_partkey")).as("key"))
+        .select(A1to24Queries.skewedKey(col("l_partkey")).as("key"))
       val old = PinnedCms.estimateAll(keys.distinct(),
           PinnedCms.counters(keys))
         .orderBy(col("est_n").desc, col("key")).limit(20)
@@ -202,7 +203,7 @@ class AnalyticsSpec extends SparkSpec {
     import sess.implicits._
     val xs = Seq(3100000000L, 3100000100L, 3100000200L)
     val ev = xs.map(("t", _)).toDF("event_type", "x")
-    val dec = AnalyticsQueries.decimalMoments(ev).collect().head
+    val dec = Stats.decimalMoments(ev).collect().head
     val sx = xs.map(BigInt(_)).sum
     val sxx = xs.map(x => BigInt(x) * BigInt(x)).sum
     val varTrue = (BigDecimal(BigInt(3) * sxx - sx * sx)
@@ -216,7 +217,7 @@ class AnalyticsSpec extends SparkSpec {
     // arithmetic overflow (non-ANSI would silently wrap) — proving a15b
     // is load-bearing, not a stylistic twin
     val e = intercept[Throwable] {
-      AnalyticsQueries.longMoments(ev).collect()
+      Stats.longMoments(ev).collect()
     }
     def chain(t: Throwable): Seq[Throwable] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
@@ -274,7 +275,7 @@ class AnalyticsSpec extends SparkSpec {
     val expected = rows.groupBy(_._1).map { case (l, vs) =>
       l -> vs.map(_._2).transpose.map(xs => xs.sum / xs.length)
     }
-    val got = SimilarityQueries.queries("v1_label_centroids")(spark, sf)
+    val got = SparkEntry.queries("v1_label_centroids")(spark, sf)
       .collect()
       .map(r => (r.getInt(0), r.getLong(1)) -> r.getDouble(2)).toMap
     expected.foreach { case (l, c) =>
@@ -341,7 +342,7 @@ class AnalyticsSpec extends SparkSpec {
       for ((t, (p50, p90)) <- got; (q, v) <- Seq(0.5 -> p50, 0.9 -> p90)) {
         val xs = byType(t)
         val n = xs.length
-        val slack = n / AnalyticsQueries.PctAccuracy + 1
+        val slack = n / A1to24Queries.PctAccuracy + 1
         val lo = math.max(0, math.ceil(q * n).toInt - 1 - slack)
         val hi = math.min(n - 1, math.ceil(q * n).toInt - 1 + slack)
         assert(xs.indexOf(v) >= 0, s"$dir $t q=$q: $v is not a data value")
@@ -386,12 +387,12 @@ class AnalyticsSpec extends SparkSpec {
       val merged = keyed
         .groupBy("month")
         .agg(hll_sketch_agg(col("o_custkey"),
-          lit(AnalyticsQueries.HllLgK)).as("sk"))
+          lit(Stats.HllLgK)).as("sk"))
         .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est"))
         .head().getLong(0)
       val onePass = keyed
         .agg(hll_sketch_estimate(hll_sketch_agg(col("o_custkey"),
-          lit(AnalyticsQueries.HllLgK))).as("est"))
+          lit(Stats.HllLgK))).as("est"))
         .head().getLong(0)
       val exact = keyed.select("o_custkey").distinct().count()
       // 2×RSE at lgK=12 ≈ 3.2% — the estimator-swap gap must stay inside
@@ -404,7 +405,7 @@ class AnalyticsSpec extends SparkSpec {
         s"$dir: one-pass estimate $onePass vs exact $exact")
       // the library path (registry a19 moved to the oracle-exact KMV
       // form in r17; this keeps the HLL twin's per-month contract live)
-      val lib = AnalyticsQueries.incrementalDistinctHll(spark, dir)
+      val lib = Stats.incrementalDistinctHll(spark, dir)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val exactM = keyed.groupBy("month")
         .agg(countDistinct("o_custkey").as("n"))
@@ -467,7 +468,7 @@ class AnalyticsSpec extends SparkSpec {
     // the data's last month exist only in the reference and are
     // dropped by the join.
     for (dir <- sweepDirs("/root/testdata/sf0.01")) {
-      val got = AnalyticsQueries.slidingDistinctHll(spark, dir)
+      val got = Stats.slidingDistinctHll(spark, dir)
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val exact = Tables.table(spark, dir, "orders")
         .select(explode(array((0 to 2).map(k =>
@@ -685,7 +686,7 @@ class AnalyticsSpec extends SparkSpec {
       cdf += e / fact
       math.floor(cdf * math.pow(2.0, 60)).toLong
     }
-    assert(AnalyticsQueries.PoissonCdf60 == want)
+    assert(Common.PoissonCdf60 == want)
     val dir = "/root/testdata/sf0.001"
     val got = SparkEntry.queries("a31_poisson_bootstrap")(spark, dir)
       .collect()
@@ -693,7 +694,7 @@ class AnalyticsSpec extends SparkSpec {
         r.getLong(4), r.getLong(5)))
     assert(got.nonEmpty)
     got.foreach { case (cat, n, mean, b, lo, hi) =>
-      assert(b == AnalyticsQueries.BootB, cat)
+      assert(b == Common.BootB, cat)
       assert(lo <= hi, cat)
       // the interval must bracket the full-data point estimate (B = 64
       // replicates of a mean over hundreds of rows — a point estimate
@@ -713,7 +714,7 @@ class AnalyticsSpec extends SparkSpec {
         col("rk"))
       .select(conv(substring(md5(concat_ws(":", col("rk"), col("rep"))),
         1, 15), 16, 10).cast("long").as("u"))
-      .select(AnalyticsQueries.PoissonCdf60.map(t =>
+      .select(Common.PoissonCdf60.map(t =>
         when(col("u") >= lit(t), 1L).otherwise(lit(0L))).reduce(_ + _)
         .as("w"))
       .groupBy("w").count().collect()
@@ -746,8 +747,8 @@ class AnalyticsSpec extends SparkSpec {
       java.lang.Long.parseLong(h, 16)
     }
     def w(u: Long): Long =
-      AnalyticsQueries.PoissonCdf60.count(u >= _).toLong
-    val B = AnalyticsQueries.BootB
+      Common.PoissonCdf60.count(u >= _).toLong
+    val B = Common.BootB
     // per (type, rep) fixed-point means over the replayed draws
     val rm = raw.flatMap { case (t, c, rk) =>
       (0 until B).map(rep => ((t, rep), (w(u60(s"$rk:$rep")), c)))
@@ -877,7 +878,7 @@ class AnalyticsSpec extends SparkSpec {
     }
     val twoU = twoR1 - n1 * (n1 + 1)
     assert(tieT > BigInt(Long.MaxValue)) // the fixture DOES cross 2⁶³
-    val core = AnalyticsQueries.mannWhitneyCore(ev).collect().head
+    val core = Stats.mannWhitneyCore(ev).collect().head
     assert(BigInt(core.getDecimal(core.fieldIndex("tie_t")).toBigInteger) ==
       tieT)
     assert(BigInt(core.getDecimal(core.fieldIndex("two_u")).toBigInteger) ==
@@ -887,7 +888,7 @@ class AnalyticsSpec extends SparkSpec {
     // CAST(tie_t AS BIGINT) raises on the same bound (loud, not the
     // silent NULL of Spark's bare non-ANSI cast)
     val e = intercept[Exception] {
-      AnalyticsQueries.mannWhitneyOf(ev).collect()
+      Stats.mannWhitneyOf(ev).collect()
     }
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
@@ -1073,7 +1074,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a37 MAD outliers: census matches an in-memory replay of the rule") {
     val dir = "/root/testdata/sf0.01"
-    val rows = AnalyticsQueries.queries("a37_mad_outliers")(spark, dir)
+    val rows = SparkEntry.queries("a37_mad_outliers")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     // independent replay: sort-based medians + the fixed-point rule over
@@ -1101,7 +1102,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a38 Kendall tau: census matches an in-memory replay, τ ∈ [-1, 1]") {
     val dir = "/root/testdata/sf0.01"
-    val rows = AnalyticsQueries.queries("a38_rank_stability")(spark, dir)
+    val rows = SparkEntry.queries("a38_rank_stability")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     val agg = Pipelines.cleanSales(spark, dir)
@@ -1131,7 +1132,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a39 KS: exact in-memory ECDF replay; D and the scaled statistic cohere") {
     val dir = "/root/testdata/sf0.01"
-    val rows = AnalyticsQueries.queries("a39_ks_test")(spark, dir)
+    val rows = SparkEntry.queries("a39_ks_test")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     assert(rows.nonEmpty)
@@ -1164,7 +1165,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("w17 ACF: exact cleared-denominator replay over the monthly spine") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("w17_acf")(spark, dir)
+    val got = SparkEntry.queries("w17_acf")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getDouble(3))).toMap
     assert(got.nonEmpty)
@@ -1203,7 +1204,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a40 Benford: digit census replay; shares and deviations exact") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("a40_benford")(spark, dir)
+    val got = SparkEntry.queries("a40_benford")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     val cents = Pipelines.cleanSales(spark, dir)
@@ -1216,7 +1217,7 @@ class AnalyticsSpec extends SparkSpec {
     got.foreach { case (d, (nObs, shareE6, benfE6, devE6)) =>
       assert(nObs == census(d), s"digit $d count")
       assert(shareE6 == 1000000L * nObs / n, s"digit $d share")
-      assert(benfE6 == AnalyticsQueries.BenfordE9(d.toInt - 1) / 1000L,
+      assert(benfE6 == Common.BenfordE9(d.toInt - 1) / 1000L,
         s"digit $d expectation")
       assert(devE6 == math.abs(shareE6 - benfE6), s"digit $d deviation")
     }
@@ -1248,7 +1249,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("w18 Mann-Kendall: exact S/tie/variance replay; z and tau bit-equal") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("w18_mann_kendall")(spark, dir)
+    val got = SparkEntry.queries("w18_mann_kendall")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
           r.getDouble(5), r.getDouble(6))).toMap
@@ -1287,7 +1288,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("w19 seasonal: exact 13-tap trend replay; completeness gate drops edge months") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("w19_seasonal")(spark, dir)
+    val got = SparkEntry.queries("w19_seasonal")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3), r.getDouble(4))).toMap
     assert(got.nonEmpty)
@@ -1320,7 +1321,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a44 runs test: median/tie-drop/runs replay; z bit-equal") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("a44_runs_test")(spark, dir)
+    val got = SparkEntry.queries("a44_runs_test")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getDouble(4),
           r.getDouble(5))).toMap
@@ -1351,7 +1352,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a41 Theil-Sen: lower-median slope/intercept replay, bounded by slope extremes") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("a41_theil_sen")(spark, dir)
+    val got = SparkEntry.queries("a41_theil_sen")(spark, dir)
       .collect().map(r => r.getString(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
     val monthly = Pipelines.cleanSales(spark, dir)
@@ -1388,7 +1389,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a45 Spearman: midrank moments replay exactly; rho bit-equal and bounded") {
     val dir = "/root/testdata/sf0.01"
-    val got = AnalyticsQueries.queries("a45_spearman")(spark, dir)
+    val got = SparkEntry.queries("a45_spearman")(spark, dir)
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
       .toMap
     assert(got.nonEmpty)
@@ -1433,7 +1434,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("a42/a43 contingency: full-grid replay; chi2 fold and V bit-equal") {
     val dir = "/root/testdata/sf0.01"
-    val cells = AnalyticsQueries.queries("a42_contingency")(spark, dir)
+    val cells = SparkEntry.queries("a42_contingency")(spark, dir)
       .collect().map(r => (r.getString(0), r.getString(1)) ->
         (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5),
           r.getDouble(6), r.getDouble(7))).toMap
@@ -1458,7 +1459,7 @@ class AnalyticsSpec extends SparkSpec {
       assert(resid == (o.toDouble - expE) / math.sqrt(expE), s"($sg,$pr) resid")
     }
     // a43: fold the same terms in the same (segment, priority) order
-    val row = AnalyticsQueries.queries("a43_cramers_v")(spark, dir).head()
+    val row = SparkEntry.queries("a43_cramers_v")(spark, dir).head()
     val terms = cells.toSeq.sortBy(_._1).map { case (_, (o, _, _, _, e, _)) =>
       (o.toDouble - e) * (o.toDouble - e) / e }
     val chi2 = terms.foldLeft(0.0)(_ + _)
@@ -1520,7 +1521,7 @@ class AnalyticsSpec extends SparkSpec {
     val frame = graft.etl.Pipelines.cleanSales(spark, dir)
       .selectExpr("category", "cast(quantity as long) AS x",
         "cast(cast(unit_price as decimal(12,2)) * 100 as long) AS y")
-    def run(p: Option[Int]) = AnalyticsQueries.kendallTauOf(frame, p)
+    def run(p: Option[Int]) = Stats.kendallTauOf(frame, p)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getDouble(4))).toSeq
     val atFloor = run(None) // session shuffle partitions = 4 → floor 64
@@ -1535,7 +1536,7 @@ class AnalyticsSpec extends SparkSpec {
     // must be asymmetric to match DuckDB's exact accept range.
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     def narrowed(s: String): Long = spark.range(1)
-      .select(AnalyticsQueries.loudLong(
+      .select(Stats.loudLong(
         lit(new java.math.BigDecimal(s)).cast(d38), "t").as("v"))
       .head().getLong(0)
     assert(narrowed("-9223372036854775808") == Long.MinValue)

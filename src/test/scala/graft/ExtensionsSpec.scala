@@ -3,6 +3,9 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, md5, substring, unix_micros}
 
+import graft.ext.{Corpus, Stats}
+import graft.queries.{C16to34Queries, Common, DQueries, TQueries, XQueries}
+
 class ExtensionsSpec extends SparkSpec {
 
   test("GraftExtensions function set is SQL-callable once installed") {
@@ -329,7 +332,7 @@ class ExtensionsSpec extends SparkSpec {
       when(col("id") % 20 < 19, lit("alpha beta"))
         .otherwise(concat(lit("gamma_"), (col("id") % 50).cast("string"),
           lit(" delta"))).as("text"))
-    val out = ExtensionQueries.bigramCommonnessHotSplit(docs, hotMinCf = 1000000L)
+    val out = Corpus.bigramCommonnessHotSplit(docs, hotMinCf = 1000000L)
     val res = out.collect()
     // analytic oracle: every doc has exactly ONE bigram — "alpha beta"
     // (cf 19000) for the hot 95%, "gamma_k delta" (cf 200: 1000 cold
@@ -633,7 +636,7 @@ class ExtensionsSpec extends SparkSpec {
     // and the operator exists because symmetric Jaccard at the SAME tau
     // structurally misses the long-doc snippets (jaccard = n_snip/n_doc)
     val jacSnip = graft.ext.Dedup.ngramJaccardPairs(
-        ExtensionQueries.docsSnippetFixture(spark, sf), n = 7,
+        DQueries.docsSnippetFixture(spark, sf), n = 7,
         threshold = 0.8, dfMax = Some(1000))
       .filter(col("id2") >= 2000000L || col("id1") >= 2000000L)
       .count()
@@ -657,21 +660,21 @@ class ExtensionsSpec extends SparkSpec {
       val n = toks.length
       maxN = math.max(maxN, n)
       val counts = toks.groupBy(identity).map(_._2.length)
-      val hNum = n.toLong * ExtensionQueries.lnE12(n - 1) -
-        counts.map(c => c.toLong * ExtensionQueries.lnE12(c - 1)).sum
+      val hNum = n.toLong * Corpus.lnE12(n - 1) -
+        counts.map(c => c.toLong * Corpus.lnE12(c - 1)).sum
       val e6 = hNum / (n.toLong * 1000000L)
       val (gn, gt, ge) = got(id)
       assert(gn == n && gt == counts.size, s"doc $id counts")
       assert(ge == e6, s"doc $id entropy $ge vs $e6")
       // 0 ≤ H ≤ ln n, and H = 0 iff the doc is one repeated type
-      assert(ge >= 0 && ge <= ExtensionQueries.lnE12(n - 1) / 1000000L, id)
+      assert(ge >= 0 && ge <= Corpus.lnE12(n - 1) / 1000000L, id)
       assert((ge == 0 && counts.size == 1) || (ge > 0 && counts.size > 1) ||
         n == 1, s"doc $id zero-entropy class")
       }
     // every doc replayed; the pinned-table cap carries ≥4× headroom
     assert(got.keySet == raw.map(_._1).toSet, "no doc dropped by the cap")
-    assert(maxN * 4 <= ExtensionQueries.LnCap,
-      s"fixture max $maxN vs cap ${ExtensionQueries.LnCap}")
+    assert(maxN * 4 <= Corpus.LnCap,
+      s"fixture max $maxN vs cap ${Corpus.LnCap}")
     // r15 ADVICE: out-of-cap docs must DROP, never survive with residual
     // totals — a doc with one token past the cap (n > cap via c > cap)
     // and one with many in-cap tokens (n > cap, every c ≤ cap) both
@@ -679,10 +682,10 @@ class ExtensionsSpec extends SparkSpec {
     // first doc survived with silently wrong n_tokens/n_types/entropy.
     import spark.implicits._
     val over = Seq(
-      (1L, Array.fill(ExtensionQueries.LnCap + 5)("hot").mkString(" ")),
-      (2L, (0 until ExtensionQueries.LnCap + 5).map(i => s"w$i").mkString(" ")),
+      (1L, Array.fill(Corpus.LnCap + 5)("hot").mkString(" ")),
+      (2L, (0 until Corpus.LnCap + 5).map(i => s"w$i").mkString(" ")),
       (3L, "a a b")).toDF("doc_id", "text")
-    val kept = ExtensionQueries.tokenEntropyOf(spark, over)
+    val kept = Corpus.tokenEntropyOf(spark, over)
       .collect().map(_.getLong(0)).toSet
     assert(kept == Set(3L),
       s"cap gate wrong: kept $kept (out-of-cap docs must drop, 3 must stay)")
@@ -702,7 +705,7 @@ class ExtensionsSpec extends SparkSpec {
     // the replay must match that, not Scala's all-whitespace .trim
     def trimSp(s: String): String =
       s.dropWhile(_ == ' ').reverse.dropWhile(_ == ' ').reverse
-    val stops = ExtensionQueries.GopherStops.toSet
+    val stops = TQueries.GopherStops.toSet
     var keeps = 0
     raw.foreach { case (id, t0) =>
       val rep = t0.replace("line", "\n- line").replace("batch", "\nbatch")
@@ -774,9 +777,9 @@ class ExtensionsSpec extends SparkSpec {
       .select("doc_id", "lang", "text").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val P = 1000000007L
-    val B = ExtensionQueries.DsirBuckets.toInt
+    val B = C16to34Queries.DsirBuckets.toInt
     val (ha, hb) =
-      graft.ext.HashCoeffs.coeffs(1, ExtensionQueries.DsirSeed).head
+      graft.ext.HashCoeffs.coeffs(1, C16to34Queries.DsirSeed).head
     def rh(t: String): Long = t.getBytes("UTF-8")
       .foldLeft(0L)((h, b) => (h * 131 + (b & 0xff)) % P)
     def bigramsOf(text: String): Seq[String] = {
@@ -794,7 +797,7 @@ class ExtensionsSpec extends SparkSpec {
     }
     val tr = cr.sum
     val tt = ct.sum
-    val ln = ExtensionQueries.lnE12
+    val ln = Corpus.lnE12
     val lr = (0 until B).map { k =>
       val r = ((ct(k) + 1) * (tr + B) * 100) / ((cr(k) + 1) * (tt + B))
       val rc = math.min(math.max(r, 10L), 1000L)
@@ -898,7 +901,7 @@ class ExtensionsSpec extends SparkSpec {
     // row per order (a duplicate here means overlapping versions)
     assert(got.count() == nOrders)
     assert(got.select("o_orderkey").distinct().count() == nOrders)
-    val hist = ExtensionQueries.scd2History(spark, sf)
+    val hist = Common.scd2History(spark, sf)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2),
         r.getDate(3), Option(r.getDate(4))))
@@ -939,11 +942,11 @@ class ExtensionsSpec extends SparkSpec {
     // the sizing rule itself: gate scale resolves to today's width 1;
     // the breakpoint is 256·target (expected occupancy corpus/256
     // crossing the target), then 4096·target, capped at 7
-    assert(ExtensionQueries.subWidthFor(500L) == 1)
-    assert(ExtensionQueries.subWidthFor(256L * (1L << 24)) == 1)
-    assert(ExtensionQueries.subWidthFor(256L * (1L << 24) + 256) == 2)
-    assert(ExtensionQueries.subWidthFor(4096L * (1L << 24) + 4096) == 3)
-    assert(ExtensionQueries.subWidthFor(Long.MaxValue) == 7)
+    assert(Corpus.subWidthFor(500L) == 1)
+    assert(Corpus.subWidthFor(256L * (1L << 24)) == 1)
+    assert(Corpus.subWidthFor(256L * (1L << 24) + 256) == 2)
+    assert(Corpus.subWidthFor(4096L * (1L << 24) + 4096) == 3)
+    assert(Corpus.subWidthFor(Long.MaxValue) == 7)
     // a 10× corpus against a small executor target: the rule widens
     // AUTOMATICALLY (no caller judgment), and the widened run is
     // row-identical to the gate-width run — the oracle-stated per-shard
@@ -955,13 +958,13 @@ class ExtensionsSpec extends SparkSpec {
       .reduce(_ unionAll _)
     val n10 = ids10.count()
     val target = 4L
-    val w10 = ExtensionQueries.subWidthFor(n10, target)
+    val w10 = Corpus.subWidthFor(n10, target)
     assert(w10 == 2, s"10x corpus ($n10 rows, target $target) chose width $w10")
-    assert(ExtensionQueries.subWidthFor(n10 / 10, target) == 1,
+    assert(Corpus.subWidthFor(n10 / 10, target) == 1,
       "gate-size corpus should keep width 1 at this target")
-    val wide = ExtensionQueries.shardShuffle(ids10, w10)
+    val wide = Corpus.shardShuffle(ids10, w10)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-    val narrow = ExtensionQueries.shardShuffle(ids10, 1)
+    val narrow = Corpus.shardShuffle(ids10, 1)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
     assert(wide == narrow, "widened enumeration diverged from width 1")
     // the bound the widening exists to enforce: realized max window-group
@@ -1099,7 +1102,7 @@ class ExtensionsSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
         r.getDouble(4)))
     assert(got.nonEmpty)
-    val ev = ExtensionQueries.eventsThin(spark, dir)
+    val ev = Common.eventsThin(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")), col("event_id"),
         col("value"))
       .collect()
@@ -1555,7 +1558,7 @@ class ExtensionsSpec extends SparkSpec {
         .digest(s"dp13:$region".getBytes("UTF-8"))
         .map("%02x".format(_)).mkString.substring(0, 15)
       val u = java.lang.Long.parseLong(hex, 16)
-      val noise = ExtensionQueries.DpGeomCdf60.count(u >= _).toLong - 20L
+      val noise = XQueries.DpGeomCdf60.count(u >= _).toLong - 20L
       assert(noise >= -20L && noise <= 20L, s"$region noise $noise")
       assert(nNoisy == math.max(truth(region) + noise, 0L),
         s"$region: got $nNoisy true ${truth(region)} noise $noise")
@@ -1760,7 +1763,7 @@ class ExtensionsSpec extends SparkSpec {
       .map { case (f, ts) => f -> ts.map(_._2).sum }
     val edges = trans.toSeq.map { case ((f, t), n) =>
       (f, t, (BigInt(n) * SCALE / fromTot(f)).toLong) }
-    val (vFix, rounds) = ExtensionQueries.markovStationaryIterate(edges)
+    val (vFix, rounds) = Stats.markovStationaryIterate(edges)
     // the early stop fires ONLY at an exact integer fixed point — on
     // this fixture the chain still moves a few 10⁻¹² ulps at round 20
     // (the r14 spec's convergence bound is 0.1%, not exactness), so the
@@ -1786,7 +1789,7 @@ class ExtensionsSpec extends SparkSpec {
     val sinkEdges = Seq(
       ("A", "B", 600000000000L), ("A", "C", 400000000000L),
       ("B", "A", SCALE.toLong))
-    val (v2, r2) = ExtensionQueries.markovStationaryIterate(sinkEdges)
+    val (v2, r2) = Stats.markovStationaryIterate(sinkEdges)
     assert(v2.keySet == Set("A", "B", "C"))
     val tot = v2.values.foldLeft(BigInt(0))(_ + _)
     val lost = BigInt(3) * SCALE - tot

@@ -2,6 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.ext.Graph
+import graft.queries.GQueries
+
 /** The g* graph family. g1–g3 are hash-oracled against DuckDB (exact
   * longs); this spec pins the triangle ALGORITHM — orientation +
   * closure — on fixtures small enough to count by hand, plus a
@@ -14,7 +17,7 @@ class GraphSpec extends SparkSpec {
   private def tri(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     val sess = spark
     import sess.implicits._
-    GraphQueries.triangleCounts(edges.toDF("u", "v"))
+    Graph.triangleCounts(edges.toDF("u", "v"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
   }
 
@@ -59,7 +62,8 @@ class GraphSpec extends SparkSpec {
     // leaf pair (5,6) with its private edge must outrank plain leaves
     val edges = Seq((1L, 2L, 1L), (1L, 3L, 1L), (1L, 4L, 1L),
       (1L, 5L, 1L), (5L, 6L, 1L))
-    val got = GraphQueries.pagerank(edges.toDF("u", "v", "w"))
+    val adj = edges.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
+    val got = Graph.pagerankOnAdj(adj.toDF("u", "v", "w"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(got.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L))
     assert(got(1L) > got(5L) && got(5L) > got(2L),
@@ -67,7 +71,6 @@ class GraphSpec extends SparkSpec {
     assert(got(2L) == got(3L) && got(3L) == got(4L), "symmetric leaves differ")
     // exact integer replay: 3 iterations of the same floor arithmetic
     val SCALE = 1000000000000L
-    val adj = edges.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
     val wout = adj.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
     var r = adj.map(_._1).distinct.map(_ -> SCALE).toMap
     for (_ <- 1 to 3) {
@@ -86,21 +89,22 @@ class GraphSpec extends SparkSpec {
     // single vote never beats two intra-clique votes); the isolated
     // PAIR pins the documented synchronous-LPA 2-cycle artifact — the
     // two nodes swap labels every round, so after the EVEN LpaRounds
-    // each keeps its own (the labelPropagationOf scaladoc's
+    // each keeps its own (the LpaRounds scaladoc's
     // "bipartite-ish regions" caveat, made executable)
     val edges = Seq(
       (1L, 2L, 3L), (1L, 3L, 3L), (2L, 3L, 3L),
       (4L, 5L, 3L), (4L, 6L, 3L), (5L, 6L, 3L),
       (3L, 4L, 1L),
       (10L, 11L, 5L))
-    val got = GraphQueries.labelPropagationOf(edges.toDF("u", "v", "w"))
+    val adj = edges.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
+    val got = Graph.labelPropagationOnAdj(adj.toDF("u", "v", "w"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     val comm = got.map(t => t._1 -> t._2).toMap
     assert(comm.keySet == Set(1L, 2L, 3L, 4L, 5L, 6L, 10L, 11L))
     assert(Set(comm(1L), comm(2L), comm(3L)).size == 1, "clique A one label")
     assert(Set(comm(4L), comm(5L), comm(6L)).size == 1, "clique B one label")
     assert(comm(1L) != comm(4L), "bridge must not merge the cliques")
-    assert(GraphQueries.LpaRounds % 2 == 0 &&
+    assert(Graph.LpaRounds % 2 == 0 &&
       comm(10L) == 10L && comm(11L) == 11L,
       "isolated pair must exhibit the synchronous 2-cycle artifact")
     // sizes are the census of the final labels
@@ -108,9 +112,8 @@ class GraphSpec extends SparkSpec {
     got.foreach { case (_, c, sz) => assert(sz == bySize(c).length.toLong) }
     // exact synchronous replay: LpaRounds rounds of weighted majority
     // with (wt desc, label asc) tie order
-    val adj = edges.flatMap { case (u, v, w) => Seq((u, v, w), (v, u, w)) }
     var lab = adj.map(_._1).distinct.map(n => n -> n).toMap
-    for (_ <- 1 to GraphQueries.LpaRounds) {
+    for (_ <- 1 to Graph.LpaRounds) {
       lab = adj.groupBy(_._1).view.mapValues { es =>
         es.groupBy(e => lab(e._2)).view.mapValues(_.map(_._3).sum)
           .toSeq.maxBy { case (l, wt) => (wt, -l) }._1
@@ -215,7 +218,7 @@ class GraphSpec extends SparkSpec {
     import sess.implicits._
     val li = graft.etl.Tables.table(spark, "/root/testdata/sf0.001", "lineitem")
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val pairs = GraphQueries.edgesOf(li)
+    val pairs = Graph.edgesOf(li)
       .select(col("u").as("id1"), col("v").as("id2"))
     val (labels, rounds) = graft.ext.Clusters.componentsWithRounds(pairs)
     assert(labels.limit(1).count() == 1)
@@ -240,7 +243,7 @@ class GraphSpec extends SparkSpec {
       .filter(substring(md5(col("l_orderkey").cast("string")), 1, 1)
         .isin("0", "1", "2", "3"))
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val e = GraphQueries.edgesOf(li)
+    val e = Graph.edgesOf(li)
     val deg = e.select(col("u").as("n")).unionAll(e.select(col("v").as("n")))
       .groupBy("n").agg(count(lit(1)).as("d"))
     val row = deg.agg(max(col("d")).as("max_deg"),
@@ -267,7 +270,7 @@ class GraphSpec extends SparkSpec {
       .filter(substring(md5(col("l_orderkey").cast("string")), 1, 1)
         .isin("0", "1", "2", "3"))
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val edges = GraphQueries.edgesOf(li).select("u", "v")
+    val edges = Graph.edgesOf(li).select("u", "v")
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     val nbrs = edges.flatMap { case (u, v) => Seq(u -> v, v -> u) }
       .groupBy(_._1).map { case (n, g) => n -> g.map(_._2).toSet }
@@ -389,19 +392,19 @@ class GraphSpec extends SparkSpec {
       while (changed) {
         val deg = edges.toSeq.flatMap(e => Seq(e._1, e._2))
           .groupBy(identity).view.mapValues(_.size).toMap
-        val keep = deg.filter(_._2 >= GraphQueries.KcoreK).keySet
+        val keep = deg.filter(_._2 >= GQueries.KcoreK).keySet
         val next = edges.filter(e => keep(e._1) && keep(e._2))
         changed = next != edges
         edges = next
         rounds += 1
       }
-      assert(rounds <= GraphQueries.KcoreRounds,
-        s"$dir: fixpoint needs $rounds rounds > unrolled ${GraphQueries.KcoreRounds}")
+      assert(rounds <= GQueries.KcoreRounds,
+        s"$dir: fixpoint needs $rounds rounds > unrolled ${GQueries.KcoreRounds}")
       val want = edges.toSeq.flatMap(e => Seq(e._1, e._2))
         .groupBy(identity).view.mapValues(_.size.toLong).toMap
       assert(got == want, dir)
       // the core invariant and the peel's bite
-      assert(got.values.forall(_ >= GraphQueries.KcoreK), dir)
+      assert(got.values.forall(_ >= GQueries.KcoreK), dir)
       val allNodes = li.map(_._2).distinct.length
       assert(got.size < allNodes, s"$dir: peel removed nothing — K vacuous")
     }
@@ -439,7 +442,7 @@ class GraphSpec extends SparkSpec {
     import sess.implicits._
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L), (5L, 6L), (5L, 7L),
       (6L, 7L)).toDF("u", "v")
-    val cc = GraphQueries.clusteringCoeffOf(star)
+    val cc = Graph.clusteringCoeffOf(star)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2),
         r.getLong(3))).toMap
     assert(cc(1L) == ((3L, 0L, 0L)), "star hub must report 0 triangles")

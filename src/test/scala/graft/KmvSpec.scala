@@ -92,7 +92,7 @@ class KmvSpec extends SparkSpec {
 
   test("a35 estimate within 25% of exact distinct at two scales") {
     for (dir <- sweepDirs("/root/testdata/sf0.01")) {
-      val est = AnalyticsQueries.queries("a35_kmv_distinct")(spark, dir)
+      val est = SparkEntry.queries("a35_kmv_distinct")(spark, dir)
         .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2)))
       val exact = Tables.events(spark, dir)
         .groupBy("event_type").agg(countDistinct("user_id").as("d"))
@@ -121,16 +121,16 @@ class KmvSpec extends SparkSpec {
     // to EACH OTHER locally, including the keep-max(rows_seen) final-state
     // selection under whatever micro-batching AvailableNow chose
     val dir = "/root/testdata/sf0.01"
-    val batch = AnalyticsQueries.queries("a35_kmv_distinct")(spark, dir)
+    val batch = SparkEntry.queries("a35_kmv_distinct")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    val stream = StreamQueries.queries("st17_stream_kmv")(spark, dir)
+    val stream = SparkEntry.queries("st17_stream_kmv")(spark, dir)
       .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     assert(stream.sortBy(_._1).toSeq == batch.sortBy(_._1).toSeq)
   }
 
   test("a36 union estimate within 25% and intersection sane, two scales") {
     for (dir <- sweepDirs("/root/testdata/sf0.01")) {
-      val rows = AnalyticsQueries.queries("a36_kmv_retention_overlap")(
+      val rows = SparkEntry.queries("a36_kmv_retention_overlap")(
         spark, dir).collect()
       assert(rows.nonEmpty)
       val m = Tables.table(spark, dir, "orders")

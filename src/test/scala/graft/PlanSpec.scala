@@ -2,28 +2,16 @@ package graft
 
 /** Whole-registry hygiene: every query must at least reach an optimized
   * plan (catches analysis breakage across all 60+ entries in seconds,
-  * without executing them), module maps must not silently shadow keys on
-  * `++`, and every oracle must point at a real query.
+  * without executing them), and the registry must refuse a repeated name.
   */
 class PlanSpec extends SparkSpec {
 
-  private val moduleSizes = Seq(
-    "ReferenceQueries" -> ReferenceQueries.queries.size,
-    "OperatorQueries" -> OperatorQueries.queries.size,
-    "ExtensionQueries" -> ExtensionQueries.queries.size,
-    "SimilarityQueries" -> SimilarityQueries.queries.size,
-    "StreamQueries" -> StreamQueries.queries.size,
-    "AnalyticsQueries" -> AnalyticsQueries.queries.size,
-    "GraphQueries" -> GraphQueries.queries.size)
-
-  test("no query-name collisions across modules") {
-    assert(SparkEntry.queries.size == moduleSizes.map(_._2).sum,
-      s"merged map smaller than module sum — duplicate keys: $moduleSizes")
-  }
-
-  test("every oracle key names an existing query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+  test("registry builder throws on a repeated query name") {
+    val q = Query("z1_once", (s, _) => s.range(1).toDF(), None)
+    val err = intercept[IllegalArgumentException](
+      Query.byName(Seq(q, q.copy(oracle = Some("SELECT 1")))))
+    assert(err.getMessage.contains("z1_once"))
+    assert(Query.byName(Seq(q, q.copy(name = "z2_twice"))).keySet == Set("z1_once", "z2_twice"))
   }
 
   /** Every non-streaming query, CONSTRUCTED ONCE for the whole suite.

@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.ext.{Dedup, DocFixtures, MinHashLSH, SimHash, Similarity}
+import graft.ext.{Dedup, DocFixtures, MinHashLSH, SimHash, Similarity, Vectors}
+import graft.queries.{DQueries, SQueries, TQueries}
 
 /** Semantic coverage for the hash-sketch operators that have no DuckDB
   * oracle (xxhash64-based): recall of injected near-duplicates, estimate
@@ -19,7 +20,7 @@ class SketchSpec extends SparkSpec {
     // replay it locally from the collected leg outputs and demand byte
     // equality (the legs themselves are oracled separately as t23/s1)
     val dir = "/root/testdata/sf0.01"
-    val sparse = ExtensionQueries.bm25Top20(spark, dir)
+    val sparse = TQueries.bm25Top20(spark, dir)
       .collect().map(r => r.getLong(0)).toSeq // already (bm25 desc, id)
     val dense = graft.ext.Similarity.bruteForceTopK(
         graft.etl.Tables.table(spark, dir, "embeddings"), 0L, 20)
@@ -423,7 +424,7 @@ class SketchSpec extends SparkSpec {
         .select("i", "j", "sum_q").collect()
         .map(r => (r.getLong(0).toInt, r.getLong(1).toInt, r.getLong(2)))
       // (1) exact BigInt recurrence replay
-      val (vr, lamR, rounds) = SimilarityQueries.pcaPowerIterate(gRows.toSeq)
+      val (vr, lamR, rounds) = Vectors.pcaPowerIterate(gRows.toSeq)
       assert(vr.map(_.toLong).sameElements(v), s"$dir: recurrence replay")
       assert(lamR.toLong == lambdaE6, s"$dir: λ replay")
       assert(rounds >= 1 && rounds <= 20, dir)
@@ -490,7 +491,7 @@ class SketchSpec extends SparkSpec {
       (1L, Array(1.0f, -2.0f, 0.5f, 4.0f, -0.25f, 3.0f, 0.0f, -1.5f)),
       (2L, Array(-1.0f, 0.5f, 2.0f, -4.0f, 1.25f, 0.5f, 2.0f, 1.0f)),
       (3L, Array(0.25f, 1.0f, -0.5f, 2.0f, -2.25f, 1.5f, -1.0f, 0.75f)))
-    val got = SimilarityQueries.gramInt8Of(rows.toDF("vec_id", "embedding"))
+    val got = Vectors.gramInt8Of(rows.toDF("vec_id", "embedding"))
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
     assert(got.size == 8 * 9 / 2, "triangle must follow the 8-wide input")
     val vecs = rows.map(_._2.map(_.toDouble))
@@ -604,12 +605,12 @@ class SketchSpec extends SparkSpec {
           s"$dir $label: unflagged injected copies ${copyIds -- flagged}")
       }
       val trained = graft.ext.SemanticDedup.flagged(dup, nLists = 16,
-          tau = 0.97, maxCell = SimilarityQueries.D8MaxCell)
+          tau = 0.97, maxCell = DQueries.D8MaxCell)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
       checkFlags(trained, "trained")
       val pinned = graft.ext.SemanticDedup.flaggedPinned(dup,
           graft.ext.IvfCentroids.EmbDup, tau = 0.97,
-          maxCell = SimilarityQueries.D8MaxCell)
+          maxCell = DQueries.D8MaxCell)
         .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2)))
       checkFlags(pinned, "pinned")
       // and the registered query is exactly the pinned kept complement
@@ -632,7 +633,7 @@ class SketchSpec extends SparkSpec {
       df.collect().map(r => r.getLong(0) -> r.getBoolean(2)).toMap
     val unCapped = flagSet(SemanticDedup.flagged(base, 16, 0.97))
     val capped = flagSet(SemanticDedup.flagged(base, 16, 0.97,
-      maxCell = SimilarityQueries.D8MaxCell))
+      maxCell = DQueries.D8MaxCell))
     assert(capped == unCapped,
       "the occupancy cap changed flags on the normal fixture")
     // (2) inject a GEOMETRIC jumbo cell — many DISTINCT near-identical
@@ -817,7 +818,7 @@ class SketchSpec extends SparkSpec {
     val got = SparkEntry.queries("s7_mmr_rerank")(spark, dir)
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-    assert(got.length == SimilarityQueries.MmrK)
+    assert(got.length == SQueries.MmrK)
     // plain-Scala greedy over the same pool with the same tiebreaks
     val emb = graft.etl.Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"),
@@ -832,18 +833,18 @@ class SketchSpec extends SparkSpec {
       (id, dot(v, qv) / (math.sqrt(dot(v, v)) * math.sqrt(dot(qv, qv))))
     }
     val pool = rel.sortBy { case (id, r) => (-r, id) }
-      .take(SimilarityQueries.MmrPool)
+      .take(SQueries.MmrPool)
     val relMap = pool.toMap
     var sel = List(pool.head._1)
     var mmrs = List(pool.head._2)
-    while (sel.length < SimilarityQueries.MmrK) {
+    while (sel.length < SQueries.MmrK) {
       val scored = pool.filterNot(p => sel.contains(p._1)).map { case (id, r) =>
         val ms = sel.map { sid =>
           dot(emb(id), emb(sid)) /
             (math.sqrt(dot(emb(id), emb(id))) *
               math.sqrt(dot(emb(sid), emb(sid))))
         }.max
-        (id, SimilarityQueries.MmrLambda * r - SimilarityQueries.MmrMu * ms)
+        (id, SQueries.MmrLambda * r - SQueries.MmrMu * ms)
       }
       val best = scored.minBy { case (id, m) => (-m, id) }
       sel = sel :+ best._1
@@ -857,7 +858,7 @@ class SketchSpec extends SparkSpec {
       assert(math.abs(r - relMap(id)) < 1e-12)
     }
     // diversity must actually bind: the MMR set differs from pure top-k
-    val topk = pool.take(SimilarityQueries.MmrK).map(_._1).toSet
+    val topk = pool.take(SQueries.MmrK).map(_._1).toSet
     assert(got.map(_._2).toSet != topk,
       "MMR picked exactly the relevance top-k - diversity never engaged")
     // and mmr scores are non-increasing after the seed pick

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Tables
 import graft.ext.{DocFixtures, Multimodal}
+import graft.queries.Common
 import graft.streaming.Streams
 
 /** Streaming replay vs. in-Spark batch equivalents, and the multimodal
@@ -291,7 +292,7 @@ class StreamAndMultimodalSpec extends SparkSpec {
 
   test("st18 streaming Benford: census equals the batch census exactly; ≤9-row state") {
     val dir = "/root/testdata/sf0.01"
-    val got = StreamQueries.queries("st18_stream_benford")(spark, dir)
+    val got = SparkEntry.queries("st18_stream_benford")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))).toMap
     assert(got.nonEmpty && got.size <= 9)
@@ -307,7 +308,7 @@ class StreamAndMultimodalSpec extends SparkSpec {
     got.foreach { case (d, (nObs, shareE6, benfE6, devE6)) =>
       assert(nObs == census(d), s"digit $d stream != batch count")
       assert(shareE6 == (BigInt(1000000) * nObs / n).toLong, s"digit $d share")
-      assert(benfE6 == AnalyticsQueries.BenfordE9(d.toInt - 1) / 1000L,
+      assert(benfE6 == Common.BenfordE9(d.toInt - 1) / 1000L,
         s"digit $d expectation")
       assert(devE6 == math.abs(shareE6 - benfE6), s"digit $d deviation")
     }
