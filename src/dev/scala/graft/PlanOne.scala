@@ -2,10 +2,10 @@ package graft
 
 /** Dev tool (not part of the driver contract): dump `explain("formatted")`
   * for registry queries to `<outDir>/<query>_<suffix>.txt` — the raw
-  * material for PLANS.md's annotated excerpts and the
-  * `plans/<round>/<query>_{before,after}.txt` evidence files. Run:
+  * material for PLANS.md's annotated excerpts and for before/after plan
+  * diffs. Run:
   * `sbt "Test/runMain graft.PlanOne <outDir> <suffix> [query…]"`,
-  * e.g. `sbt "Test/runMain graft.PlanOne plans/r18 before d11b_edit_verify_banded"`.
+  * e.g. `sbt "Test/runMain graft.PlanOne /tmp/plans before d11b_edit_verify_banded"`.
   * With no query names it dumps the [[showcased]] scale-path queries.
   * Uses the Bench session shape (local[cpus], shuffle.partitions=cpus) so
   * the dumped plan is the one the bench actually executes. sfDir via

@@ -84,9 +84,7 @@ object ProfileOne {
     // mirrors Bench's isolation)
     name.split(',').map(_.trim).filter(_.nonEmpty).foreach { q =>
       val fn = SparkEntry.queries(q)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      CacheScope.dropAll(spark)
       (1 to iters).foreach { i =>
         println(s"== $q iter $i ==")
         val t0 = System.nanoTime()

@@ -76,9 +76,7 @@ object ScaleProbe {
       scales: Seq[(Int, String)], emit: String => Unit): Boolean =
     queries.toSeq.sortBy(_._1).flatMap { case (op, fn) =>
       scales.map { case (scale, dir) =>
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = true))
+        CacheScope.dropAll(spark)
         val t0 = System.nanoTime()
         try {
           val n = fn(spark, dir).queryExecution.toRdd.count()

@@ -35,21 +35,17 @@ object Bench {
       catch { case _: Throwable => () }
     }
     // Per-query isolation + median-of-3 (round-8 fix): the registry has
-    // ~50 cache/localCheckpoint sites and the queries never unpersist —
+    // 49 cache/localCheckpoint sites and the queries never unpersist —
     // by design, a caller owns its session's cache lifecycle, not the
     // library. One shared JVM running 106 queries alphabetically let
     // checkpointed blocks accumulate all run long, and block-manager/heap
     // pressure landed on late-alphabet queries (BENCH_r08: t3 9.5×,
     // t7 7.1×, st4 3.3×, d3 monotone across rounds — all with unchanged
     // plans, all reverting when run solo). Dropping every persisted block
-    // between timed runs makes each measurement cold-cache w.r.t. its own
-    // AND its predecessors' state; the median of 3 such runs makes a
-    // per-query delta falsifiable instead of one-shot noise.
-    def dropPersistedState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
-    }
+    // between timed runs (CacheScope.dropAll) makes each measurement
+    // cold-cache w.r.t. its own AND its predecessors' state; the median
+    // of 3 such runs makes a per-query delta falsifiable instead of
+    // one-shot noise.
     // Isolation is BETWEEN queries, not between a query's reps: rep 1 of
     // a sales query rebuilds + re-registers the shared cleaned-fact cache
     // (graft.Shared rebuilds a dropped entry), reps 2–3 measure the
@@ -100,7 +96,7 @@ object Bench {
     def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Seq[(Double, Double)] = {
       calm.await()
-      dropPersistedState()
+      CacheScope.dropAll(spark)
       def rep(): (Double, Double) = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).queryExecution.toRdd.count() }
@@ -175,7 +171,7 @@ object Bench {
       isSuspect(o) && requeuedRuns.get(name).forall(isSuspect)
     }.map(_._1).toSet
     val results = raw.map { case (n, ts) => n -> ts.sorted.apply(ts.size / 2) }
-    dropPersistedState()
+    CacheScope.dropAll(spark)
     // Full-name per-query timings to a file (the stdout line below uses
     // short ids to fit the driver's retention window) — written BEFORE the
     // contract line so nothing trails it on stdout but sbt's own epilogue.

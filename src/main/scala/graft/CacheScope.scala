@@ -4,15 +4,15 @@ import org.apache.spark.sql.SparkSession
 
 /** Scoped lifecycle for the engine's internal caches — the loan pattern
   * complement to the "caller owns the block" contract documented at the
-  * 54 `persist`/`cache`/`localCheckpoint` call sites in `src/main` (the
+  * 49 `persist`/`cache`/`localCheckpoint` call sites in `src/main` (the
   * shingle indexes, k-means assignments, label-propagation frontiers,
   * …). Those sites cannot
   * unpersist eagerly — their blocks back the DataFrames they return —
   * so a caller COMPOSING operators in one session (clean → fuzzy-dedup →
   * survivorship → …) accumulates every intermediate block unless it
-  * drops them itself. `Bench` and the dev timing mains do that with a
-  * blanket sweep between measurements; this helper is the targeted version for
-  * library users and [[graft.etl.Pipeline]]:
+  * drops them itself. `Bench` and the dev timing mains do that with the
+  * blanket sweep [[dropAll]] between measurements; [[scoped]] is the
+  * targeted version for library users and [[graft.etl.Pipeline]]:
   *
   * {{{
   * val result = CacheScope.scoped(spark) {
@@ -42,6 +42,15 @@ import org.apache.spark.sql.SparkSession
   *    assumption as any session-wide resource).
   */
 object CacheScope {
+
+  /** Drop every CacheManager entry and every persisted RDD block, blocking
+    * until the blocks are gone — `localCheckpoint` blocks included, which
+    * no CacheManager entry tracks.
+    */
+  def dropAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+  }
 
   def scoped[T](spark: SparkSession)(body: => T): T = {
     val before = spark.sparkContext.getPersistentRDDs.keySet

@@ -188,8 +188,9 @@ object Load {
     }
   }
 
-  /** K6/K7 — empty guard + count logging without an extra job: use
-    * `df.isEmpty` (reads at most one row) rather than `count()`.
+  /** K6 — empty guard without a full pass: `df.isEmpty` reads at most one
+    * row, where `count()` would scan everything (K7's row count rides the
+    * load itself, see [[Pipeline.run]]).
     */
   def loadIfNonEmpty(df: DataFrame, doLoad: DataFrame => Unit): Boolean =
     if (df.isEmpty) false else { doLoad(df); true }

@@ -388,9 +388,12 @@ object Stats {
         s"(worst-case bucket = category size $maxCatN): lift conc/disc " +
         "accumulation to BigInt")
     // per-category y bounds as a LITERAL map expression — |categories|
-    // entries, no broadcast-join subtree
-    val bMap = map(stats.flatMap(r => Seq(lit(r.getString(0)),
-      struct(lit(r.getLong(1)).as("lo"), lit(r.getLong(2)).as("hi")))): _*)
+    // entries, no broadcast-join subtree; with no categories the empty
+    // `map()` is typed, or `bnd.hi` cannot resolve on its VOID values
+    val bMap =
+      if (stats.isEmpty) map().cast("map<string,struct<lo:bigint,hi:bigint>>")
+      else map(stats.flatMap(r => Seq(lit(r.getString(0)),
+        struct(lit(r.getLong(1)).as("lo"), lit(r.getLong(2)).as("hi")))): _*)
     // floor(frac·P) over doubles is monotone in y and maps equal y to
     // equal b; frac < 1 keeps b < P (least() guards the ~2⁵³ edge)
     val bucketed = ck

@@ -53,8 +53,8 @@ object A1to24Queries {
     // (two consumers read it); 5 MB of longs through one exchange buys
     // 32-way md5 parallelism: counters 4.6 → ~0.4 s.
     // Cache lifecycle: the checkpointed blocks stay until the CALLER
-    // clears them — the library-wide contract (see Bench's
-    // dropPersistedState comment). Bench and the dev timing mains clear
+    // clears them — the library-wide contract (see the CacheScope
+    // scaladoc). Bench and the dev timing mains clear
     // between queries; a bespoke driver looping this
     // call must do the same or the pinned partitions accumulate.
     val keysPar = PartitionOps.repartitionBeforeFanout(keys)

@@ -113,16 +113,19 @@ object JQueries {
         .select(col("customer_id"))
       // the sketch (a few KB) comes back to the driver — the DATA never
       // does — and folds into the scan filter as a constant, exactly how
-      // Spark's own runtime row-group filtering injects blooms
-      val bf = custKeys.stat.bloomFilter("customer_id", 5000L, 0.001)
-      val bos = new java.io.ByteArrayOutputStream()
-      bf.writeTo(bos)
+      // Spark's own runtime row-group filtering injects blooms. It is the
+      // aggregate `stat.bloomFilter` runs, kept serialized: over zero keys
+      // it is NULL, so might_contain is NULL and every row drops
+      import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
       val bridge = org.apache.spark.sql.graft.ColumnBridge
-      val mightContain = bridge.column(
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-          org.apache.spark.sql.catalyst.expressions.Literal(bos.toByteArray,
-            org.apache.spark.sql.types.BinaryType),
-          bridge.expression(col("user_id"))))
+      val sketch = custKeys.select(bridge.column(
+        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
+          bridge.expression(col("customer_id")), Literal(5000L),
+          Literal(org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(5000L, 0.001)))
+          .toAggregateExpression())).head().getAs[Array[Byte]](0)
+      val mightContain = bridge.column(BloomFilterMightContain(
+        Literal(sketch, org.apache.spark.sql.types.BinaryType),
+        bridge.expression(col("user_id"))))
       Tables.events(s, dir)
         .filter(mightContain)
         .join(broadcast(custKeys),

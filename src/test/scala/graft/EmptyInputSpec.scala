@@ -5,8 +5,10 @@ import java.nio.file.Files
 import org.apache.spark.network.util.JavaUtils
 import org.scalatest.BeforeAndAfterAll
 
-/** Ratio queries over schema-identical EMPTY tables: a zero denominator
-  * gives a NULL ratio (try_divide), never an ANSI DIVIDE_BY_ZERO.
+/** Queries over schema-identical EMPTY tables return their real-data
+  * schema: a zero denominator gives a NULL ratio (try_divide), never an
+  * ANSI DIVIDE_BY_ZERO, and an operator that reads driver-side stats
+  * (a46's per-category bounds, j5's bloom sketch) copes with none.
   */
 class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -40,5 +42,13 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
     assert(rows.size == 7)
     assert(rows.forall(_.getAs[Long]("n_rows") == 0L))
     assert(rows.forall(_.isNullAt(rows.head.fieldIndex("violation_rate"))))
+  }
+
+  test("a46_kendall_tau on empty tables: no categories, no rows") {
+    assert(onEmpty("a46_kendall_tau").isEmpty)
+  }
+
+  test("j5_bloom_semijoin on empty tables: a sketch over zero keys keeps no rows") {
+    assert(onEmpty("j5_bloom_semijoin").isEmpty)
   }
 }

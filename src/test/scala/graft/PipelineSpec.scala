@@ -1,8 +1,14 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler._
 import org.apache.spark.sql.CacheEntries
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.etl.Pipeline
 
@@ -11,8 +17,8 @@ import graft.etl.Pipeline
   * exhausted-retry failure) hold. The end-to-end test runs over the
   * reference's own CSV inputs, so it runs only where the reference
   * checkout is present (canceled, naming the missing file, elsewhere).
-  * The JDBC-branch and CacheManager tests run on the spec's own
-  * `writeCsvs` input, so they run everywhere.
+  * The JDBC-branch, parquet-branch and CacheManager tests run on the
+  * spec's own `writeCsvs` input, so they run everywhere.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -76,7 +82,8 @@ class PipelineSpec extends SparkSpec {
 
   /** A small sales.csv (40 distinct orders plus 6 repeated lines for the
     * dedup, over 7 products) and customers.csv (5 customers) in a fresh
-    * directory: the input of the JDBC-branch and CacheManager tests.
+    * directory: the input of the JDBC-branch, parquet-branch and
+    * CacheManager tests.
     */
   private def writeCsvs(dir: java.io.File): Unit = {
     val sales = new java.io.PrintWriter(new java.io.File(dir, "sales.csv"))
@@ -93,27 +100,25 @@ class PipelineSpec extends SparkSpec {
     customers.close()
   }
 
-  /** Shuffle map stages run and shuffle bytes written while `body` runs. */
-  private def shuffleWork(body: => Unit): (Int, Long) = {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-    import org.apache.spark.scheduler._
-    val stages = new AtomicInteger
-    val bytes = new AtomicLong
-    val settle = "pipeline-spec-settle"
+  private val settle = "pipeline-spec-settle"
+
+  private def isSettle(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty("spark.job.description") == settle)
+
+  /** Runs `body` with `l` registered, and returns once `l` has seen every
+    * event of `body`.
+    */
+  private def listening(l: SparkListener)(body: => Unit): Unit = {
     val settleJob = new AtomicInteger(-1)
     val settled = new CountDownLatch(1)
-    val l = new SparkListener {
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        Option(e.stageInfo.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten)
-          .filter(_ > 0).foreach { w => stages.incrementAndGet(); bytes.addAndGet(w) }
+    val marker = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(
-            _.getProperty("spark.job.description") == settle)) settleJob.set(e.jobId)
+        if (isSettle(e)) settleJob.set(e.jobId)
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == settleJob.get) settled.countDown()
     }
     spark.sparkContext.addSparkListener(l)
+    spark.sparkContext.addSparkListener(marker)
     try {
       body
       // one listener queue delivers in order: once the settle job's end
@@ -122,8 +127,49 @@ class PipelineSpec extends SparkSpec {
       try spark.sparkContext.parallelize(Seq(1), 1).count()
       finally spark.sparkContext.setJobDescription(null)
       assert(settled.await(60, TimeUnit.SECONDS), "listener events never settled")
-    } finally spark.sparkContext.removeSparkListener(l)
+    } finally {
+      spark.sparkContext.removeSparkListener(marker)
+      spark.sparkContext.removeSparkListener(l)
+    }
+  }
+
+  /** Shuffle map stages run and shuffle bytes written while `body` runs. */
+  private def shuffleWork(body: => Unit): (Int, Long) = {
+    val stages = new AtomicInteger
+    val bytes = new AtomicLong
+    listening(new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).map(_.shuffleWriteMetrics.bytesWritten)
+          .filter(_ > 0).foreach { w => stages.incrementAndGet(); bytes.addAndGet(w) }
+    })(body)
     (stages.get, bytes.get)
+  }
+
+  /** Jobs `body` runs, and how many of them start after the last job of a
+    * file-writing SQL execution has ended.
+    */
+  private def jobsAfterWrites(body: => Unit): (Int, Int) = {
+    val writeExecutions = ConcurrentHashMap.newKeySet[String]()
+    val writeJobs = ConcurrentHashMap.newKeySet[Int]()
+    // job starts and ends in delivery order: (is a start, job id)
+    val log = new ConcurrentLinkedQueue[(Boolean, Int)]()
+    listening(new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart
+            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
+          writeExecutions.add(s.executionId.toString)
+        case _ =>
+      }
+      override def onJobStart(e: SparkListenerJobStart): Unit = if (!isSettle(e)) {
+        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .exists(writeExecutions.contains)) writeJobs.add(e.jobId)
+        log.add((true, e.jobId))
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = log.add((false, e.jobId))
+    })(body)
+    val events = log.asScala.toSeq
+    val lastWriteEnd = events.lastIndexWhere { case (start, id) => !start && writeJobs.contains(id) }
+    (events.count(_._1), events.drop(lastWriteEnd + 1).count(_._1))
   }
 
   test("Pipeline.run leaves no CacheManager entry; a second run redoes the dedup shuffle") {
@@ -144,6 +190,22 @@ class PipelineSpec extends SparkSpec {
     assert(first._1 > 0)
     assert(second == first,
       s"second run (shuffle stages, bytes) $second vs first $first")
+  }
+
+  test("Pipeline.run counts ride the parquet writes: no job after the last write") {
+    // the counts come from each write's observe() metric, not from a
+    // count() job per output after the writes
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data)
+    val out = Files.createTempDirectory("graft_pipeline_").toString
+    var counts = Map.empty[String, Long]
+    val (jobs, late) = jobsAfterWrites { counts = Pipeline.run(spark, data.getPath, out) }
+    assert(counts.keySet == Set("clean_sales", "clean_customers",
+      "sales_summary", "product_ranking"))
+    counts.foreach { case (table, n) =>
+      assert(spark.read.parquet(s"$out/$table").count() == n, s"$table: rows read back vs reported count")
+    }
+    assert(late == 0, s"$late of the run's $jobs jobs started after the last output write")
   }
 
   test("pipeline jdbc branch loads four tables into an embedded DB") {

@@ -36,8 +36,7 @@ class SharedSpec extends SparkSpec {
       def run() = SparkEntry.queries(q)(spark, sf).collect().map(_.toString).sorted.toSeq
       val before = run()
       names.foreach(n => assert(level(n) != StorageLevel.NONE, s"$q: $n"))
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
+      CacheScope.dropAll(spark)
       names.foreach(n => assert(level(n) == StorageLevel.NONE, s"$q: $n"))
       assert(run() == before, s"$q: rows changed after the rebuild")
       names.foreach(n => assert(level(n) != StorageLevel.NONE, s"$q: $n not cached again"))

@@ -210,9 +210,7 @@ class SortKeySpec extends SparkSpec {
       // the walker builds every registered query, and several checkpoint
       // eagerly at construction — drop those blocks so the suite doesn't
       // carry them across scale dirs (the same leak the bench fixed)
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = true))
+      CacheScope.dropAll(spark)
     }
   }
 

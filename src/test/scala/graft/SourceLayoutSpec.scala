@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-scan lint against dev tooling regrowing inside the library: the
   * only mains in `src/main` are the driver contract's and the reference
   * ETL's, and every session is opened through [[LocalSession]] (the one
-  * shape Bench, Verify, the dev mains and the suite share). Queries are
+  * shape Bench, Verify, the dev mains and the suite share); only
+  * [[CacheScope]] sweeps the persisted RDDs. Queries are
   * declared once each, as a [[Query]] in the family file of their name
   * prefix; only [[SparkEntry]] keys them by name.
   */
@@ -56,6 +57,25 @@ class SourceLayoutSpec extends AnyFunSuite {
       Set("main/scala/graft/LocalSession.scala", "main/scala/graft/etl/Pipeline.scala"),
       callsBuilder)
     assert(found.isEmpty, s"open sessions with LocalSession(cpus): $found")
+  }
+
+  private val persistSweep = ("""getPersistentRDDs(\s*\.\s*\w+\s*(\([^()]*\)|\{[^{}]*\})?)*?""" +
+    """\s*\.\s*foreach\s*[({][^)}]*\bunpersist\b""").r
+
+  private def sweepsPersisted(src: String): Boolean = persistSweep.findFirstIn(src).isDefined
+
+  test("lint: only CacheScope sweeps the persisted RDDs") {
+    // samples are concatenated so this file never matches its own scan
+    val rdds = "getPersistent" + "RDDs"
+    assert(sweepsPersisted(s"spark.sparkContext.$rdds.values\n        .foreach(_.unpersist(blocking = true))"))
+    assert(sweepsPersisted(s"spark.sparkContext.$rdds.values.foreach(_.unpersist(blocking = true))"))
+    assert(sweepsPersisted(
+      s"sc.$rdds\n  .filter { case (id, _) => !before(id) }\n  .values.foreach(_.unpersist(blocking = false))"))
+    assert(!sweepsPersisted(s"val before = spark.sparkContext.$rdds.keySet"))
+    assert(!sweepsPersisted(s"assert(sc.$rdds.contains(kept.id))\n    kept.unpersist(blocking = true)"))
+    val found = offenders(Seq("src/main/scala", "src/dev/scala", "src/test/scala"),
+      Set("main/scala/graft/CacheScope.scala"), sweepsPersisted)
+    assert(found.isEmpty, s"drop persisted state with CacheScope.dropAll(spark): $found")
   }
 
   private val queryMap =
