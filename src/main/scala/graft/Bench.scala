@@ -90,9 +90,8 @@ object Bench {
     // which made a non-terminating first cut time 1.01 s). toRdd keeps
     // every output column demanded, so windows, joins and the final
     // ORDER BY all execute — the bench now measures what a consumer
-    // of the full result pays. Totals are NOT comparable with
-    // pre-r15 count-based records; BASELINE.md carries both protocols'
-    // closing numbers for the bridge.
+    // of the full result pays. Totals are NOT comparable with the
+    // count-based records before it (BENCH_r01–r14).
     def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
         : Seq[(Double, Double)] = {
       calm.await()
@@ -206,15 +205,6 @@ object Bench {
     id
   }
 
-  /** The driver-contract output line. The driver retains only the LAST
-    * 2000 chars of stdout and json.loads the line it finds there — so the
-    * WHOLE line must fit in 2000 chars minus sbt's ~80-char "[success]"
-    * epilogue (r5 evidence: a full-name 92-query line left totals readable
-    * but parsed:null). Short per-query keys (~11 chars/query) keep 92+
-    * queries near 1200 chars; totals still go LAST so even a re-truncation
-    * keeps the headline. Full names are in bench_detail.json and the
-    * BASELINE.md key table. Pinned by a PlanSpec test.
-    */
   /** A query's measurement window is suspect when the MEDIAN is
     * inflated relative to the best rep — at least half the reps
     * degraded together (rep-1 cold rebuilds alone never trip this: the
@@ -239,6 +229,15 @@ object Bench {
   def suspectLoad(loads: Seq[Double], threshold: Double): Boolean =
     loads.nonEmpty && loads.min > threshold
 
+  /** The driver-contract output line. The driver retains only the LAST
+    * 2000 chars of stdout and json.loads the line it finds there — so the
+    * WHOLE line must fit in 2000 chars minus sbt's ~80-char "[success]"
+    * epilogue (r5 evidence: a full-name 92-query line left totals readable
+    * but parsed:null). Short per-query keys (~11 chars/query) keep 92+
+    * queries near 1200 chars; totals still go LAST so even a re-truncation
+    * keeps the headline. Full names are in bench_detail.json. Pinned by a
+    * PlanSpec test.
+    */
   def renderJson(results: Seq[(String, Double)], sfDir: String,
       short: Boolean = true, contendedCount: Int = 0): String = {
     def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)

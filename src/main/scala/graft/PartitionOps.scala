@@ -12,7 +12,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * explicit-count repartition before the generator, sized to the
   * session's shuffle parallelism, which AQE is not allowed to coalesce.
   * At 100 TB the rule reads: size the exchange for the POST-fan-out
-  * cost, not the input bytes (PLANS.md a48 carries the annotated plan).
+  * cost, not the input bytes (PLANS.md a48_bootstrap_diff carries the
+  * annotated plan).
   *
   * PlanSpec's "pre-fan-out sizing lint" enforces the rule registry-wide:
   * any ≥4× literal-array generator must sit above an explicit-count

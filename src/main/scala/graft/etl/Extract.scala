@@ -1,6 +1,9 @@
 package graft.etl
 
+import com.univocity.parsers.csv.CsvParser
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** CSV sources with the reference's schema contracts — SURVEY §2a.
@@ -9,9 +12,10 @@ import org.apache.spark.sql.types._
   * date-parse hints and a presence-only column contract
   * (`etl/extract.py:53-61`). We declare explicit StructTypes instead
   * (deterministic types matter for the oracle harness, SURVEY §1) and
-  * replicate the presence check: required column *names* must exist, extra
-  * columns are tolerated, missing ones raise with the sorted missing list
-  * (reference sorts: `etl/extract.py:54`).
+  * replicate the presence check: required column *names* must exist in the
+  * file's header, extra and reordered columns are tolerated, missing ones
+  * raise with the sorted missing list (reference sorts:
+  * `etl/extract.py:54`), and columns bind by name, as pandas binds them.
   *
   * Scale: `spark.read.csv` is splittable for uncompressed files; the
   * explicit schema avoids the extra inference pass over the data.
@@ -29,9 +33,7 @@ object Extract {
     StructField("order_date", DateType),
     StructField("category", StringType)))
 
-  val salesRequired: Set[String] =
-    Set("order_id", "customer_id", "product_id", "product_name",
-      "quantity", "unit_price", "order_date", "category")
+  val salesRequired: Set[String] = salesSchema.fieldNames.toSet
 
   /** customers.csv contract — reference `etl/extract.py:24-30` + `db.sql:17-25`. */
   val customersSchema: StructType = StructType(Seq(
@@ -41,55 +43,82 @@ object Extract {
     StructField("registration_date", DateType),
     StructField("region", StringType)))
 
-  val customersRequired: Set[String] =
-    Set("customer_id", "customer_name", "email", "registration_date", "region")
+  val customersRequired: Set[String] = customersSchema.fieldNames.toSet
 
   /** S3 required-column validation — reference `etl/extract.py:53-61`.
     * Presence-only: extra columns pass, missing names throw with the sorted
     * list (IllegalArgumentException ≈ the reference's ValueError).
     */
   def requireColumns(df: DataFrame, required: Set[String], what: String): DataFrame = {
-    val missing = (required -- df.columns.toSet).toSeq.sorted
+    requirePresent(df.columns.toSeq, required, what)
+    df
+  }
+
+  private def requirePresent(present: Seq[String], required: Set[String],
+      what: String): Unit = {
+    val missing = (required -- present).toSeq.sorted
     require(missing.isEmpty,
       s"$what: missing required columns: ${missing.mkString(", ")}")
-    df
   }
 
   /** S1 generic CSV scan. `mode=PERMISSIVE` + nullable schema mirrors the
     * reference's lenient parse (malformed cells → null, row kept unless a
     * later cleaning step drops it).
     *
+    * Columns bind by header name, not position: Spark's reader applies a
+    * user schema positionally and ignores the header's names, so the
+    * header is read first and the schema laid over it in the file's own
+    * column order (columns the schema does not name read as strings and
+    * are dropped); the result has `schema`'s columns in `schema`'s order.
+    *
     * Error taxonomy (reference `etl/extract.py:44-52`):
     *  - missing path → AnalysisException at plan time (≈ FileNotFoundError);
     *  - file without even a header line → IllegalStateException
-    *    (≈ pandas EmptyDataError on a zero-byte file) — probed by reading
-    *    at most ONE text line, so the probe stays O(1) at any file size;
-    *    a header-only file passes with 0 rows, as in pandas;
+    *    (≈ pandas EmptyDataError on a zero-byte file) — the header is
+    *    read as at most ONE text line, so the probe stays O(1) at any
+    *    file size; a header-only file passes with 0 rows, as in pandas;
+    *  - a `required` name absent from the header → IllegalArgumentException
+    *    with the sorted missing list;
     *  - malformed rows → null cells, row kept (PERMISSIVE).
     */
   def readCsv(spark: SparkSession, path: String, schema: StructType,
       required: Set[String], what: String): DataFrame = {
-    if (spark.read.text(path).limit(1).isEmpty)
-      throw new IllegalStateException(s"$what: empty file: $path")
-    val df = spark.read
+    val header = spark.read.text(path).head(1).headOption.map(_.getString(0))
+      .getOrElse(throw new IllegalStateException(s"$what: empty file: $path"))
+    val names = headerNames(header)
+    requirePresent(names, required, what)
+    val declared = schema.fields.map(f => f.name -> f).toMap
+    spark.read
       .option("header", "true")
       .option("mode", "PERMISSIVE")
       .option("dateFormat", "yyyy-MM-dd")
-      .schema(schema)
+      .schema(StructType(names.map(n => declared.getOrElse(n, StructField(n, StringType)))))
       .csv(path)
-    requireColumns(df, required, what)
+      .select(schema.fieldNames.toSeq.map(col): _*)
   }
 
-  /** JSON-lines source with explicit schema + the same presence contract —
-    * the interchange format LLM corpora actually arrive in. PERMISSIVE
-    * mode: malformed lines → nulls, row kept (mirrors the CSV policy).
-    * Splittable for uncompressed files like CSV.
+  /** Column names of a CSV header line, split by the same parser settings
+    * Spark's CSV reader uses (quotes, escapes); a leading byte-order mark
+    * is dropped and an empty cell is named `_c<i>`, as Spark names it.
+    */
+  private def headerNames(line: String): Seq[String] = {
+    val settings = new CSVOptions(Map.empty[String, String], false, "UTC").asParserSettings
+    new CsvParser(settings).parseLine(line.stripPrefix("\uFEFF")).toSeq.zipWithIndex
+      .map { case (n, i) => Option(n).getOrElse(s"_c$i") }
+  }
+
+  /** JSON-lines source with explicit schema — the interchange format LLM
+    * corpora actually arrive in. JSON lines carry no header, so a field
+    * absent from the data reads as null; `required` is checked against
+    * `schema` only (a required name the schema does not declare throws).
+    * PERMISSIVE mode: malformed lines → nulls, row kept (mirrors the CSV
+    * policy). Splittable for uncompressed files like CSV.
     */
   def readJsonl(spark: SparkSession, path: String, schema: StructType,
-      required: Set[String], what: String): DataFrame =
-    requireColumns(
-      spark.read.option("mode", "PERMISSIVE").schema(schema).json(path),
-      required, what)
+      required: Set[String], what: String): DataFrame = {
+    requirePresent(schema.fieldNames.toSeq, required, what)
+    spark.read.option("mode", "PERMISSIVE").schema(schema).json(path)
+  }
 
   /** ORC source — same lazy-scan properties as parquet (column pruning,
     * predicate pushdown, vectorized read); schema comes from the footer.

@@ -369,7 +369,7 @@ object GQueries {
     // sf0.01 gate (~4M rows), ~4·10⁸ rows at sf0.1 where the quarter
     // sample is ONE 19,989-node component; the sweep verifies sf0.1 by
     // the cheap component axioms instead (no cross-component edge +
-    // label = min member + full node coverage — BASELINE.md round 12)
+    // label = min member + full node coverage)
     Query("g5_connected_components", ((s, dir) =>
       graft.ext.Clusters.connectedComponents(
         edgesOf(basketItems(s, dir))

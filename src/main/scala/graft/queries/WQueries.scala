@@ -197,7 +197,8 @@ object WQueries {
     // w4's PRODUCTION twin (the c10b precedent: document-then-ship, same
     // semantics, scale-safe plan). w4's exact form sorts each event_type
     // partition globally — 5 partitions means 5 executor-sized sorts at
-    // 100×, BASELINE.md's named worst growth axis. This two-pass shape
+    // 100×: the partition count stays |types| while each partition grows
+    // with the data. This two-pass shape
     // eliminates the giant per-type sort: pass 1 aggregates the COMPACT
     // per-(type, value) histogram (bounded by |types|·|distinct values|,
     // not row count — for 2-decimal event values that is thousands, and

@@ -36,12 +36,6 @@ object Streams {
   val RocksDBProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** State-operator custom metrics of the last completed replay — lets the
-    * suite assert the RocksDB provider is genuinely active (its metrics are
-    * `rocksdb*`-prefixed), not merely configured.
-    */
-  @volatile private[graft] var lastStateMetrics: Set[String] = Set.empty
-
   /** Streaming-tuned child session (shared SparkContext, isolated SQL
     * conf) — every replay runs here so the streaming-specific tuning never
     * mutates the caller's session:
@@ -146,9 +140,6 @@ object Streams {
         writer.outputMode(m).foreachBatch(write).start()
     }
     q.awaitTermination()
-    val stateMetrics = q.recentProgress.flatMap(_.stateOperators)
-      .flatMap(_.customMetrics.keySet.toArray.map(_.toString)).toSet
-    if (stateMetrics.nonEmpty) lastStateMetrics = stateMetrics
     try spark.read.parquet(out)
     catch {
       case _: org.apache.spark.sql.AnalysisException =>

@@ -237,7 +237,7 @@ class GraphSpec extends SparkSpec {
     // split centers with deg > D* into ceil(deg/D*) salt buckets on the
     // big side and aggregate the (id1, id2) pairs two-level, which
     // restores per-task balance at the cost of one extra partial
-    // aggregate (BASELINE.md r19 note).
+    // aggregate.
     val dir = "/root/testdata/sf0.001"
     val li = graft.etl.Tables.table(spark, dir, "lineitem")
       .filter(substring(md5(col("l_orderkey").cast("string")), 1, 1)

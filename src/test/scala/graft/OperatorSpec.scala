@@ -78,6 +78,35 @@ class OperatorSpec extends SparkSpec {
     assert(rows(1).isNullAt(rows(1).fieldIndex("order_date")))
   }
 
+  test("CSV missing a required header column throws and names it") {
+    val dir = Files.createTempDirectory("graft_csv_missing_").toFile
+    val f = new java.io.File(dir, "sales.csv")
+    val w = new java.io.PrintWriter(f)
+    w.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date")
+    w.println("1,C1,P1,Widget,2,9.99,2024-01-15")
+    w.close()
+    val e = intercept[IllegalArgumentException] {
+      Extract.readSalesCsv(spark, f.getAbsolutePath)
+    }
+    assert(e.getMessage.contains("missing required columns: category"))
+  }
+
+  test("CSV columns bind by header name, not position") {
+    val dir = Files.createTempDirectory("graft_csv_swapped_").toFile
+    val f = new java.io.File(dir, "sales.csv")
+    val w = new java.io.PrintWriter(f)
+    w.println("customer_id,order_id,product_id,product_name,quantity,unit_price,order_date,category")
+    w.println("C7,1,P1,Widget,2,9.99,2024-01-15,Tools")
+    w.close()
+    val df = Extract.readSalesCsv(spark, f.getAbsolutePath)
+    assert(df.columns.toSeq == Extract.salesSchema.fieldNames.toSeq)
+    val rows = df.collect()
+    assert(rows.length == 1)
+    val row = rows(0)
+    assert(row.getAs[Long]("order_id") == 1L)
+    assert(row.getAs[String]("customer_id") == "C7")
+  }
+
   test("JSONL source applies schema, contract, and lenient parse") {
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft_jsonl_").toFile

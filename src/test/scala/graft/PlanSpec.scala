@@ -295,9 +295,10 @@ class PlanSpec extends SparkSpec {
       s"quadratic join shape outside the whitelist: $offenders")
   }
 
-  /** Scan-speed queries whose PLANS.md story is "narrow, zero shuffles":
-    * the only Exchange their physical plan may contain is the single
-    * range partitioning of the presentation ORDER BY. Pinning it here
+  /** Scan-speed queries whose plan is "narrow, zero shuffles" (PLANS.md
+    * annotates t13, c4 and c7): the only Exchange their physical plan may
+    * contain is the single range partitioning of the presentation ORDER
+    * BY. Pinning it here
     * turns the claim into a regression test — a future edit that sneaks
     * a join or aggregation into these paths fails the suite, not a
     * review.

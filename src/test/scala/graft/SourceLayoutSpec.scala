@@ -12,7 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * shape Bench, Verify, the dev mains and the suite share); only
   * [[CacheScope]] sweeps the persisted RDDs. Queries are
   * declared once each, as a [[Query]] in the family file of their name
-  * prefix; only [[SparkEntry]] keys them by name.
+  * prefix; only [[SparkEntry]] keys them by name. Every doc a source file,
+  * README.md or ARCHITECTURE.md cites exists, and every PLANS.md entry
+  * cited by id exists.
   */
 class SourceLayoutSpec extends AnyFunSuite {
 
@@ -125,5 +127,55 @@ class SourceLayoutSpec extends AnyFunSuite {
     val names = sources.flatMap { case (_, src) => declared.findAllMatchIn(src).map(_.group(1)) }
     assert(names.sorted == SparkEntry.queries.keySet.toSeq.sorted,
       "every registry query is declared in exactly one family file")
+  }
+
+  private val mdName = """(?<![\w./-])([\w./-]*\w\.md)\b""".r
+  private val plansCite = """PLANS\.md[\s*/`"]+([a-z]+\d+\w*)""".r
+
+  /** `*.md` names `src` cites that `exists` does not find. */
+  private def danglingDocs(src: String, exists: String => Boolean): Seq[String] =
+    mdName.findAllMatchIn(src).map(_.group(1)).filterNot(exists).toSeq
+
+  /** Ids `src` cites as `PLANS.md <id>` that name no PLANS.md heading. */
+  private def danglingPlans(src: String, headings: Set[String]): Seq[String] =
+    plansCite.findAllMatchIn(src).map(_.group(1)).filterNot(headings).toSeq
+
+  private def read(p: Path): String = new String(Files.readAllBytes(p), "UTF-8")
+
+  /** The id of each `## <id> — …` entry of PLANS.md, in file order. */
+  private def plansHeadings(doc: String): Seq[String] =
+    doc.linesIterator.filter(_.startsWith("## "))
+      .map(_.drop(3).trim.takeWhile(!_.isWhitespace)).toSeq
+
+  test("lint: every cited doc and PLANS.md entry exists; PlanOne dumps PLANS.md's entries") {
+    // samples are concatenated so this file never matches its own scan
+    val exists = Set("SURVEY.md", "e2ebench/NOTES.md")
+    assert(danglingDocs("see SURVEY.md §2 and `e2ebench/NOTES.md`.", exists).isEmpty)
+    assert(danglingDocs("(GONE_r18" + ".md, \"Scale\")", exists) == Seq("GONE_r18" + ".md"))
+    assert(danglingDocs("// docs/NOTES" + ".md", exists) == Seq("docs/NOTES" + ".md"))
+    val kept = Set("a48_bootstrap_diff")
+    assert(danglingPlans("(PLANS.md a48_bootstrap_diff carries the plan)", kept).isEmpty)
+    assert(danglingPlans("PLANS.md's excerpts; PLANS.md annotates t13", kept).isEmpty)
+    assert(danglingPlans("(PLANS.md " + "a48 carries the plan)", kept) == Seq("a48"))
+    assert(danglingPlans("see PLANS.md\n  * `d2_ngram_jaccard`", kept) == Seq("d2_ngram_jaccard"))
+    assert(plansHeadings("# PLANS\n\n## c4_domain_mix — zero shuffles\n### c4 detail\n") ==
+      Seq("c4_domain_mix"))
+
+    val cited = (Seq("src", "tools").flatMap(d =>
+        Files.walk(Paths.get(d)).iterator().asScala.filter(Files.isRegularFile(_)).toSeq) ++
+      Seq(Paths.get("README.md"), Paths.get("ARCHITECTURE.md")))
+      .map(p => p.toString.replace('\\', '/') -> read(p))
+    assert(cited.size > 50, "source tree not found")
+    val headings = plansHeadings(read(Paths.get("PLANS.md")))
+    val missingDocs = cited.flatMap { case (f, src) =>
+      danglingDocs(src, n => Files.isRegularFile(Paths.get(n))).map(n => s"$f: $n")
+    }
+    assert(missingDocs.isEmpty, s"citations of missing docs: $missingDocs")
+    val missingPlans = cited.flatMap { case (f, src) =>
+      danglingPlans(src, headings.toSet).map(id => s"$f: PLANS.md $id")
+    }
+    assert(missingPlans.isEmpty, s"citations of missing PLANS.md entries: $missingPlans")
+    assert(PlanOne.showcased == headings,
+      "PlanOne.showcased must list PLANS.md's entries in its heading order")
   }
 }

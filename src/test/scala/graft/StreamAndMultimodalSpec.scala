@@ -1,6 +1,11 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 
 import graft.etl.Tables
 import graft.ext.{DocFixtures, Multimodal}
@@ -169,9 +174,25 @@ class StreamAndMultimodalSpec extends SparkSpec {
   }
 
   test("replay runs on the RocksDB state store provider") {
-    // stateful replay so a state operator reports metrics
-    Streams.watermarkedTumbling(spark, sf).count()
     val ss = Streams.streamingSession(spark)
+    // the state operators' custom metric names, from the replay's own
+    // progress events (one listener queue delivers them before the
+    // query's termination event)
+    val stateMetrics = ConcurrentHashMap.newKeySet[String]()
+    val terminated = new CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        e.progress.stateOperators.foreach(op => stateMetrics.addAll(op.customMetrics.keySet))
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        terminated.countDown()
+    }
+    ss.streams.addListener(listener)
+    // stateful replay so a state operator reports metrics
+    try {
+      Streams.watermarkedTumbling(spark, sf).count()
+      assert(terminated.await(60, TimeUnit.SECONDS), "replay never reported termination")
+    } finally ss.streams.removeListener(listener)
     assert(ss.conf.get("spark.sql.streaming.stateStore.providerClass")
       == Streams.RocksDBProvider)
     assert(ss ne spark, "streaming tuning must live in a child session")
@@ -179,8 +200,8 @@ class StreamAndMultimodalSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.streaming.stateStore.providerClass")
       != Streams.RocksDBProvider)
     // provider genuinely active: RocksDB-specific state metrics reported
-    assert(Streams.lastStateMetrics.exists(_.toLowerCase.contains("rocksdb")),
-      s"state metrics not from RocksDB: ${Streams.lastStateMetrics.take(8)}")
+    assert(stateMetrics.asScala.exists(_.toLowerCase.contains("rocksdb")),
+      s"state metrics not from RocksDB: ${stateMetrics.asScala.take(8)}")
   }
 
   test("replay with no finalized output returns an empty frame with schema") {
