@@ -130,13 +130,7 @@ object Bench {
         else Seq.empty
       base ++ extra
     }
-    // Optional registry subset (comma-separated full names) for synthetic
-    // contention experiments and targeted re-baselines — the driver never
-    // sets it, so the contract run always covers the full registry.
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
-      .map(_.split(',').map(_.trim).toSet)
     val registry = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_(n)) }
     val firstPass = registry.map { case (name, fn) => name -> measure(fn) }
     def isSuspect(o: Seq[(Double, Double)]): Boolean =
       o.size >= 3 && (suspectMedian(o.map(_._1)) ||

@@ -12,7 +12,7 @@ import org.apache.spark.sql.SparkSession
   * survivorship → …) accumulates every intermediate block unless it
   * drops them itself. `Bench` and the dev timing mains do that with the
   * blanket sweep [[dropAll]] between measurements; [[scoped]] is the
-  * targeted version for library users and [[graft.etl.Pipeline]]:
+  * targeted version for library users:
   *
   * {{{
   * val result = CacheScope.scoped(spark) {
@@ -35,8 +35,7 @@ import org.apache.spark.sql.SparkSession
   *    after the sweep an escaped lazy DataFrame cannot recompute and
   *    fails with `SparkException: Checkpoint block ... not found`. So
   *    the contract is materialize-inside, not merely
-  *    prefer-materialize-inside. ([[graft.etl.Pipeline]] complies: it
-  *    returns collected counts, not frames.)
+  *    prefer-materialize-inside.
   *  - The diff is not concurrency-safe (a sibling thread persisting
   *    during the scope gets its blocks swept; same single-writer
   *    assumption as any session-wide resource).

@@ -35,24 +35,19 @@ object Extract {
 
   val salesRequired: Set[String] = salesSchema.fieldNames.toSet
 
-  /** customers.csv contract — reference `etl/extract.py:24-30` + `db.sql:17-25`. */
+  /** customers.csv contract — reference `etl/extract.py:24-30` + `db.sql:17-25`.
+    * The registration date stays text: the lenient coerce-to-null parse
+    * belongs to the Transform stage (`errors="coerce"`, reference
+    * `etl/transform.py:63-69`), so Extract must not pre-parse it.
+    */
   val customersSchema: StructType = StructType(Seq(
     StructField("customer_id", StringType),
     StructField("customer_name", StringType),
     StructField("email", StringType),
-    StructField("registration_date", DateType),
+    StructField("registration_date", StringType),
     StructField("region", StringType)))
 
   val customersRequired: Set[String] = customersSchema.fieldNames.toSet
-
-  /** S3 required-column validation — reference `etl/extract.py:53-61`.
-    * Presence-only: extra columns pass, missing names throw with the sorted
-    * list (IllegalArgumentException ≈ the reference's ValueError).
-    */
-  def requireColumns(df: DataFrame, required: Set[String], what: String): DataFrame = {
-    requirePresent(df.columns.toSeq, required, what)
-    df
-  }
 
   private def requirePresent(present: Seq[String], required: Set[String],
       what: String): Unit = {
@@ -109,16 +104,12 @@ object Extract {
 
   /** JSON-lines source with explicit schema — the interchange format LLM
     * corpora actually arrive in. JSON lines carry no header, so a field
-    * absent from the data reads as null; `required` is checked against
-    * `schema` only (a required name the schema does not declare throws).
-    * PERMISSIVE mode: malformed lines → nulls, row kept (mirrors the CSV
-    * policy). Splittable for uncompressed files like CSV.
+    * absent from the data reads as null. PERMISSIVE mode: malformed lines
+    * → nulls, row kept (mirrors the CSV policy). Splittable for
+    * uncompressed files like CSV.
     */
-  def readJsonl(spark: SparkSession, path: String, schema: StructType,
-      required: Set[String], what: String): DataFrame = {
-    requirePresent(schema.fieldNames.toSeq, required, what)
+  def readJsonl(spark: SparkSession, path: String, schema: StructType): DataFrame =
     spark.read.option("mode", "PERMISSIVE").schema(schema).json(path)
-  }
 
   /** ORC source — same lazy-scan properties as parquet (column pruning,
     * predicate pushdown, vectorized read); schema comes from the footer.
@@ -129,4 +120,12 @@ object Extract {
   /** S4 — reference `read_sales_csv` (`etl/extract.py:67-73`). */
   def readSalesCsv(spark: SparkSession, path: String): DataFrame =
     readCsv(spark, path, salesSchema, salesRequired, "sales")
+
+  /** S5 — reference `read_customers_csv` (`etl/extract.py:76-82`): the
+    * registration date arrives as `registration_raw` text, the column
+    * [[TransformCustomers.clean]] parses.
+    */
+  def readCustomersCsv(spark: SparkSession, path: String): DataFrame =
+    readCsv(spark, path, customersSchema, customersRequired, "customers")
+      .withColumnRenamed("registration_date", "registration_raw")
 }

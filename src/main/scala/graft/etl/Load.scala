@@ -8,9 +8,8 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType,
 
 /** JDBC warehouse sink — reference `etl/load.py` (SURVEY §2i).
   *
-  * K2 DDL, K3 truncate-reload, K4 batch append, K5 upsert, K6 empty guard,
-  * K7 row-count logging. `Verify` writes parquet instead (SURVEY §7 build
-  * plan step 5).
+  * K2 DDL, K3+K4 truncate-reload, K5 upsert, K7 row-count logging. `Verify`
+  * writes parquet instead (SURVEY §7 build plan step 5).
   *
   * Dialect matrix (what runs against a real engine vs. string-level):
   * neither Postgres nor an ON-CONFLICT-parsing embedded engine (H2 pg
@@ -23,15 +22,20 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType,
   * {{{
   * op             Postgres dialect (reference)      executed here (Derby)
   * K2 DDL         multi-statement script            EXECUTED  (LoadSpec)
-  * K3 truncate    truncateSql: multi-table,         truncateTableSql: single
-  *                RESTART IDENTITY — string-tested  table — EXECUTED reload
-  *                                                  cycle (LoadSpec)
-  * K4 append      df.write.jdbc                     EXECUTED  (PipelineSpec)
+  * K3+K4 reload   TRUNCATE … RESTART IDENTITY,      reload: Spark JDBC writer,
+  *                then batch insert                 overwrite + truncate —
+  *                                                  EXECUTED (LoadSpec,
+  *                                                  PipelineSpec)
   * K5 upsert      upsertSql: INSERT … ON CONFLICT   mergeSql: MERGE via
   *                DO UPDATE — string-tested         SYSIBM.SYSDUMMY1 —
   *                                                  EXECUTED, idempotent
   *                                                  (LoadSpec)
   * }}}
+  *
+  * `RESTART IDENTITY` has no counterpart: a table Spark creates has no
+  * SERIAL column to reset (SURVEY §2i K2). The reference's K6 empty guard
+  * (skip the load of an empty frame) needs no code either: after the
+  * truncate, writing zero rows leaves the same empty table.
   *
   * Scale: `df.write.jdbc` parallelizes one connection per partition —
   * `numPartitions`/`batchsize` bound the connection count and round-trips.
@@ -54,18 +58,6 @@ object Load {
     "order_id" -> IntegerType, "quantity" -> IntegerType,
     "unit_price" -> DecimalType(10, 2), "total_price" -> DecimalType(10, 2),
     "order_date" -> DateType, "month" -> StringType)
-
-  /** K3, Postgres dialect — reference `etl/load.py:40-55` (multi-table,
-    * identity reset). String-tested only: see the dialect matrix above.
-    */
-  def truncateSql(tables: Seq[String]): String =
-    s"TRUNCATE TABLE ${tables.mkString(", ")} RESTART IDENTITY"
-
-  /** K3, ANSI/Derby dialect — one table per statement, no identity reset;
-    * the form the EXECUTED truncate-reload cycle runs in `LoadSpec`.
-    */
-  def truncateTableSql(table: String): String =
-    s"TRUNCATE TABLE $table"
 
   /** Script → statements for [[applyDdl]]: split on `;` and strip `--`
     * comments, both ONLY outside single-quoted strings, so a semicolon or
@@ -144,14 +136,18 @@ object Load {
     (sql, (keyCol +: nonKey) ++ cols)
   }
 
-  /** K4 batch append via Spark's JDBC writer. `repartition`, not
-    * `coalesce`: coalesce(n) would collapse the whole upstream stage to n
-    * tasks; a shuffle barrier keeps upstream parallelism and only the
-    * JDBC-writing stage is bounded to numPartitions connections.
+  /** K3+K4 truncate-reload via Spark's JDBC writer: on an existing table
+    * Spark issues `TRUNCATE TABLE` and keeps the table's DDL (Derby's and
+    * Postgres's dialects report a non-cascading truncate, the only case
+    * in which Spark truncates rather than drops); a missing table is
+    * created. `repartition`, not `coalesce`: coalesce(n) would collapse
+    * the whole upstream stage to n tasks; a shuffle barrier keeps upstream
+    * parallelism and only the JDBC-writing stage is bounded to
+    * numPartitions connections.
     */
-  def append(df: DataFrame, url: String, table: String,
+  def reload(df: DataFrame, url: String, table: String,
       props: java.util.Properties, numPartitions: Int = 8): Unit =
-    df.repartition(numPartitions).write.mode("append")
+    df.repartition(numPartitions).write.mode("overwrite").option("truncate", "true")
       .option("batchsize", 5000).jdbc(url, table, props)
 
   /** K5 upsert: per-partition batched statements. Executors open their own
@@ -187,11 +183,4 @@ object Load {
       }
     }
   }
-
-  /** K6 — empty guard without a full pass: `df.isEmpty` reads at most one
-    * row, where `count()` would scan everything (K7's row count rides the
-    * load itself, see [[Pipeline.run]]).
-    */
-  def loadIfNonEmpty(df: DataFrame, doLoad: DataFrame => Unit): Boolean =
-    if (df.isEmpty) false else { doLoad(df); true }
 }

@@ -15,11 +15,9 @@ object Observed {
 
   /** Run `action`, return its result plus all observation-point metrics
     * seen on this session during it. Listener delivery is async, so we
-    * wait (bounded) for the named observations to arrive. `expected` is
-    * read after `action` returns, so an action that decides what it
-    * writes can name the metrics its writes carry.
+    * wait (bounded) for the named observations to arrive.
     */
-  def capture[T](spark: SparkSession, expected: => Set[String],
+  def capture[T](spark: SparkSession, expected: Set[String],
       timeoutMs: Long = 10000)(action: => T): (T, Map[String, Map[String, Any]]) = {
     val acc = TrieMap.empty[String, Map[String, Any]]
     val listener = new QueryExecutionListener {

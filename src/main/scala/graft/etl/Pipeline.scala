@@ -2,7 +2,6 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /** End-to-end pipeline entry — the counterpart of the reference's
   * `main.py:61-93` orchestration: Extract (CSV) → Transform (clean sales +
@@ -68,85 +67,66 @@ object Pipeline {
     out.get
   }
 
-  /** customers.csv with the registration date kept RAW (string): the
-    * lenient coerce-to-null parse belongs to the Transform stage
-    * (`errors="coerce"`, reference `etl/transform.py:63-69`), so Extract
-    * must not pre-parse it.
-    */
-  private def readCustomersRaw(spark: SparkSession, path: String): DataFrame = {
-    val schema = StructType(Extract.customersSchema.map {
-      case StructField("registration_date", _, n, m) =>
-        StructField("registration_date", StringType, n, m)
-      case f => f
-    })
-    Extract.readCsv(spark, path, schema, Extract.customersRequired, "customers")
-      .withColumnRenamed("registration_date", "registration_raw")
-  }
-
   /** Run the full pipeline; returns per-output row counts (K7 logging).
     * The sales dedup tiebreak (pandas `keep="first"` = file order) is
     * pinned with `monotonically_increasing_id()` — monotone in file offset
     * for a splittable CSV scan, so "first occurrence in the file wins"
     * survives a parallel read.
     *
+    * Every output is written one way: an overwrite of its parquet
+    * directory, or on a `jdbc:` outDir a truncate-reload of its table
+    * ([[Load.reload]]), so a re-run replaces what the last run loaded and
+    * an empty output leaves an existing, empty table.
+    *
     * Every logged count rides a job the run makes anyway, through one
     * [[Observed.capture]]: the cleaning steps' `observe()` metrics
     * (null counts — the reference's per-step logging,
     * `etl/transform.py:21-48`) arrive with the avg-check collect, and each
     * output's row count (`rows_<table>`, the reference's per-load logging,
-    * `etl/load.py:153,156`) with its own write. On the JDBC branch the K6
-    * guard reads the un-observed frame, so its one-row probe never reports
-    * a partial count; a table it skips reports 0.
+    * `etl/load.py:153,156`) with its own write.
     *
-    * The whole run executes inside a [[graft.CacheScope]]: the cleaned-
-    * sales cache (and any operator-internal checkpoint blocks) are
-    * dropped when the run returns — a repeatedly-invoked pipeline leaves
-    * no net persisted blocks behind (PipelineSpec pins it). The scope
-    * only unpersists RDDs, so the cleaned-sales entry is also dropped
-    * from the session's CacheManager inside it: a registered entry whose
-    * blocks are gone would be planned into the next run as a stale
-    * cached relation (its dedup shuffle never re-planned).
+    * The cleaned-sales cache is the run's only persisted frame; it is
+    * unpersisted when the run returns, which drops its blocks and its
+    * session CacheManager entry — a registered entry whose blocks are gone
+    * would be planned into the next run as a stale cached relation (its
+    * dedup shuffle never re-planned). PipelineSpec pins both: no net
+    * persisted blocks, no net CacheManager entries.
     */
-  def run(spark: SparkSession, dataDir: String, outDir: String): Map[String, Long] =
-    graft.CacheScope.scoped(spark) {
-      val sales = Extract.readSalesCsv(spark, s"$dataDir/sales.csv")
-        .withColumn("src", lit(0))
-        .withColumn("line_id", monotonically_increasing_id())
-      val cleanSales = TransformSales.clean(sales).cache()
-      try {
-        val cleanCustomers =
-          TransformCustomers.clean(readCustomersRaw(spark, s"$dataDir/customers.csv"))
-        val outputs = Map(
-          "clean_sales" -> Load.castForSink(cleanSales, Load.salesSinkTypes),
-          "clean_customers" -> cleanCustomers,
-          "sales_summary" -> Aggregates.salesSummary(cleanSales),
-          "product_ranking" -> Aggregates.productRanking(cleanSales))
-        val jdbc = outDir.startsWith("jdbc:")
-        if (jdbc) retry()(() => java.sql.DriverManager.getConnection(outDir).close())
-        val props = new java.util.Properties()
-        def counted(table: String, df: DataFrame) =
-          df.observe(s"rows_$table", count(lit(1)).as("rows"))
-        // true if `df` was written
-        def write(table: String, df: DataFrame): Boolean =
-          if (jdbc) Load.loadIfNonEmpty(df, d => Load.append(counted(table, d), outDir, table, props))
-          else { counted(table, df).write.mode("overwrite").parquet(s"$outDir/$table"); true }
+  def run(spark: SparkSession, dataDir: String, outDir: String): Map[String, Long] = {
+    val sales = Extract.readSalesCsv(spark, s"$dataDir/sales.csv")
+      .withColumn("src", lit(0))
+      .withColumn("line_id", monotonically_increasing_id())
+    val cleanSales = TransformSales.clean(sales).cache()
+    try {
+      val cleanCustomers =
+        TransformCustomers.clean(Extract.readCustomersCsv(spark, s"$dataDir/customers.csv"))
+      val outputs = Map(
+        "clean_sales" -> Load.castForSink(cleanSales, Load.salesSinkTypes),
+        "clean_customers" -> cleanCustomers,
+        "sales_summary" -> Aggregates.salesSummary(cleanSales),
+        "product_ranking" -> Aggregates.productRanking(cleanSales))
+      val jdbc = outDir.startsWith("jdbc:")
+      if (jdbc) retry()(() => java.sql.DriverManager.getConnection(outDir).close())
+      val props = new java.util.Properties()
+      def write(table: String, df: DataFrame): Unit = {
+        val counted = df.observe(s"rows_$table", count(lit(1)).as("rows"))
+        if (jdbc) Load.reload(counted, outDir, table, props)
+        else counted.write.mode("overwrite").parquet(s"$outDir/$table")
+      }
 
-        var written = Set.empty[String]
-        val (_, metrics) = Observed.capture(spark,
-          Set("clean_sales_metrics", "clean_customers_metrics") ++ written.map(t => s"rows_$t")) {
-          // the reference logs the avg-check table instead of loading it
-          Aggregates.avgCheckByRegion(cleanSales, cleanCustomers).collect()
-            .foreach(r => System.err.println(s"[pipeline] avg_check: $r"))
-          written = outputs.filter { case (t, df) => write(t, df) }.keySet
-        }
-        metrics.foreach { case (name, m) =>
-          System.err.println(s"[pipeline] $name: $m")
-        }
-        outputs.map { case (t, _) =>
-          t -> (if (written(t)) metrics(s"rows_$t")("rows").asInstanceOf[Long] else 0L)
-        }
-      } finally cleanSales.unpersist(blocking = false)
-    }
+      val (_, metrics) = Observed.capture(spark,
+        Set("clean_sales_metrics", "clean_customers_metrics") ++ outputs.keySet.map(t => s"rows_$t")) {
+        // the reference logs the avg-check table instead of loading it
+        Aggregates.avgCheckByRegion(cleanSales, cleanCustomers).collect()
+          .foreach(r => System.err.println(s"[pipeline] avg_check: $r"))
+        outputs.foreach { case (t, df) => write(t, df) }
+      }
+      metrics.foreach { case (name, m) =>
+        System.err.println(s"[pipeline] $name: $m")
+      }
+      outputs.map { case (t, _) => t -> metrics(s"rows_$t")("rows").asInstanceOf[Long] }
+    } finally cleanSales.unpersist(blocking = false)
+  }
 
   def main(args: Array[String]): Unit = {
     val dataDir = args.lift(0).getOrElse("/root/reference/data")

@@ -82,14 +82,11 @@ class LoadSpec extends SparkSpec {
       } finally conn.close()
     }
     val props = new java.util.Properties()
-    Load.append(df, tUrl, "reload_t", props, numPartitions = 2)
+    Load.reload(df, tUrl, "reload_t", props, numPartitions = 2)
     assert(count() == 3)
-    // K3: truncate then reload — the reference's idempotent full-refresh
-    val conn = DriverManager.getConnection(tUrl)
-    try conn.createStatement().execute(Load.truncateTableSql("reload_t"))
-    finally conn.close()
-    assert(count() == 0)
-    Load.append(df, tUrl, "reload_t", props, numPartitions = 2)
+    // K3: a second load truncates first — the reference's idempotent
+    // full-refresh, not an append that doubles the table
+    Load.reload(df, tUrl, "reload_t", props, numPartitions = 2)
     assert(count() == 3)
   }
 

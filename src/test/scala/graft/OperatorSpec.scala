@@ -12,15 +12,6 @@ class OperatorSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("requireColumns tolerates extras, throws sorted missing list") {
-    val df = Seq((1, "x")).toDF("order_id", "extra_col")
-    assert(Extract.requireColumns(df, Set("order_id"), "t").columns.length == 2)
-    val e = intercept[IllegalArgumentException] {
-      Extract.requireColumns(df, Set("order_id", "b_col", "a_col"), "t")
-    }
-    assert(e.getMessage.contains("a_col, b_col"))
-  }
-
   test("missing CSV path fails at plan time") {
     val e = intercept[org.apache.spark.sql.AnalysisException] {
       Extract.readSalesCsv(spark, "/tmp/graft_definitely_missing.csv")
@@ -82,13 +73,14 @@ class OperatorSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_csv_missing_").toFile
     val f = new java.io.File(dir, "sales.csv")
     val w = new java.io.PrintWriter(f)
-    w.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date")
-    w.println("1,C1,P1,Widget,2,9.99,2024-01-15")
+    w.println("order_id,customer_id,product_id,product_name,quantity,unit_price,extra_col")
+    w.println("1,C1,P1,Widget,2,9.99,x")
     w.close()
     val e = intercept[IllegalArgumentException] {
       Extract.readSalesCsv(spark, f.getAbsolutePath)
     }
-    assert(e.getMessage.contains("missing required columns: category"))
+    // the extra column passes; the missing ones come as a sorted list
+    assert(e.getMessage.contains("missing required columns: category, order_date"))
   }
 
   test("CSV columns bind by header name, not position") {
@@ -117,16 +109,11 @@ class OperatorSpec extends SparkSpec {
     w.close()
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("text", StringType)))
-    val df = Extract.readJsonl(spark, f.getAbsolutePath, schema,
-      Set("doc_id", "text"), "docs")
+    val df = Extract.readJsonl(spark, f.getAbsolutePath, schema)
     val rows = df.orderBy(col("text")).collect()
     assert(rows.length == 2)
     assert(rows(0).getLong(0) == 1L && rows(0).getString(1) == "hello world")
     assert(rows(1).isNullAt(0) && rows(1).getString(1) == "still kept")
-    intercept[IllegalArgumentException] {
-      Extract.readJsonl(spark, f.getAbsolutePath, schema,
-        Set("doc_id", "text", "missing_col"), "docs")
-    }
   }
 
   test("ORC sink/source round-trips the cleaned fact") {
@@ -187,9 +174,7 @@ class OperatorSpec extends SparkSpec {
     assert(viaSql == ref("hello world"))
   }
 
-  test("upsert/truncate SQL strings (K3/K5)") {
-    assert(Load.truncateSql(Seq("a", "b")) ==
-      "TRUNCATE TABLE a, b RESTART IDENTITY")
+  test("upsert SQL string (K5)") {
     val sql = Load.upsertSql("customers", "customer_id",
       Seq("customer_id", "name", "region"))
     assert(sql.contains("ON CONFLICT (customer_id) DO UPDATE SET"))

@@ -10,15 +10,16 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.CacheEntries
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-import graft.etl.Pipeline
+import graft.etl.{Load, Pipeline}
 
 /** One-command pipeline: the four loaded outputs exist with plausible
-  * shapes, and the orchestration behaviors (bounded retry,
-  * exhausted-retry failure) hold. The end-to-end test runs over the
-  * reference's own CSV inputs, so it runs only where the reference
-  * checkout is present (canceled, naming the missing file, elsewhere).
-  * The JDBC-branch, parquet-branch and CacheManager tests run on the
-  * spec's own `writeCsvs` input, so they run everywhere.
+  * shapes, a JDBC re-run truncate-reloads rather than appends, and the
+  * orchestration behaviors (bounded retry, exhausted-retry failure) hold.
+  * The end-to-end test runs over the reference's own CSV inputs, so it
+  * runs only where the reference checkout is present (canceled, naming
+  * the missing file, elsewhere). The JDBC-branch, parquet-branch and
+  * CacheManager tests run on the spec's own `writeCsvs` input, so they
+  * run everywhere.
   */
 class PipelineSpec extends SparkSpec {
 
@@ -33,11 +34,10 @@ class PipelineSpec extends SparkSpec {
     val out = Files.createTempDirectory("graft_pipeline_").toString
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val counts = Pipeline.run(spark, referenceData, out)
-    // the CacheScope contract: a completed run leaves no net persisted
-    // blocks (the cleanSales cache and any operator checkpoints are
-    // dropped with the scope)
+    // a completed run leaves no net persisted blocks (the cleanSales
+    // cache is dropped when the run returns)
     assert(spark.sparkContext.getPersistentRDDs.keySet == blocksBefore,
-      "pipeline run leaked persisted blocks past its CacheScope")
+      "pipeline run leaked persisted blocks")
     assert(counts.keySet == Set("clean_sales", "clean_customers",
       "sales_summary", "product_ranking"))
     assert(counts("clean_sales") > 0 && counts("clean_sales") <= 200,
@@ -83,13 +83,15 @@ class PipelineSpec extends SparkSpec {
   /** A small sales.csv (40 distinct orders plus 6 repeated lines for the
     * dedup, over 7 products) and customers.csv (5 customers) in a fresh
     * directory: the input of the JDBC-branch, parquet-branch and
-    * CacheManager tests.
+    * CacheManager tests. With `noCustomerId` every sales line leaves its
+    * `customer_id` empty, so cleaning drops them all.
     */
-  private def writeCsvs(dir: java.io.File): Unit = {
+  private def writeCsvs(dir: java.io.File, noCustomerId: Boolean = false): Unit = {
     val sales = new java.io.PrintWriter(new java.io.File(dir, "sales.csv"))
     sales.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date,category")
     val lines = (1 to 40).map { i =>
-      f"$i,C${i % 5},P${i % 7},Item${i % 7},${1 + i % 3},${10 + i % 4}.50,2024-01-${1 + i % 28}%02d,Cat${i % 3}"
+      val customer = if (noCustomerId) "" else s"C${i % 5}"
+      f"$i,$customer,P${i % 7},Item${i % 7},${1 + i % 3},${10 + i % 4}.50,2024-01-${1 + i % 28}%02d,Cat${i % 3}"
     }
     (lines ++ lines.take(6)).foreach(sales.println)
     sales.close()
@@ -199,7 +201,10 @@ class PipelineSpec extends SparkSpec {
     writeCsvs(data)
     val out = Files.createTempDirectory("graft_pipeline_").toString
     var counts = Map.empty[String, Long]
+    val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
     val (jobs, late) = jobsAfterWrites { counts = Pipeline.run(spark, data.getPath, out) }
+    assert(spark.sparkContext.getPersistentRDDs.keySet == blocksBefore,
+      "pipeline run leaked persisted blocks")
     assert(counts.keySet == Set("clean_sales", "clean_customers",
       "sales_summary", "product_ranking"))
     counts.foreach { case (table, n) =>
@@ -208,20 +213,60 @@ class PipelineSpec extends SparkSpec {
     assert(late == 0, s"$late of the run's $jobs jobs started after the last output write")
   }
 
+  /** `SELECT COUNT(*) FROM <from>` in the database at `url`. */
+  private def dbCount(url: String, from: String): Long = {
+    val conn = java.sql.DriverManager.getConnection(url)
+    try {
+      val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $from")
+      rs.next()
+      rs.getLong(1)
+    } finally conn.close()
+  }
+
+  private def derbyUrl(): String = s"jdbc:derby:memory:pipedb${System.nanoTime()};create=true"
+
   test("pipeline jdbc branch loads four tables into an embedded DB") {
     val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
     writeCsvs(data)
-    val url = s"jdbc:derby:memory:pipedb${System.nanoTime()};create=true"
+    val url = derbyUrl()
     val counts = Pipeline.run(spark, data.getPath, url)
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      counts.foreach { case (table, n) =>
-        val rs = conn.createStatement().executeQuery(s"SELECT COUNT(*) FROM $table")
-        rs.next()
-        assert(rs.getLong(1) == n, s"$table: db rows vs reported count")
-      }
-    } finally conn.close()
+    counts.foreach { case (table, n) =>
+      assert(dbCount(url, table) == n, s"$table: db rows vs reported count")
+    }
     assert(counts("product_ranking") == 5)
+  }
+
+  test("pipeline jdbc re-run truncate-reloads: counts stable, table DDL kept") {
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data)
+    val url = derbyUrl()
+    // a column Spark would not create: it survives only if the reload
+    // truncates the table instead of dropping and re-creating it
+    Load.applyDdl(url, "", "",
+      """CREATE TABLE product_ranking (product_id VARCHAR(40), product_name VARCHAR(200),
+        |total_sold BIGINT, total_revenue DOUBLE, rank_position BIGINT,
+        |note VARCHAR(10) DEFAULT 'kept')""".stripMargin)
+    val first = Pipeline.run(spark, data.getPath, url)
+    val second = Pipeline.run(spark, data.getPath, url)
+    assert(second == first, s"second run reported $second vs first $first")
+    second.foreach { case (table, n) =>
+      assert(dbCount(url, table) == n, s"$table: db rows after two runs vs reported count")
+    }
+    assert(dbCount(url, "product_ranking WHERE note = 'kept'") == 5,
+      "product_ranking lost its extra column or its default")
+  }
+
+  test("pipeline jdbc branch leaves empty outputs as existing empty tables") {
+    // every sales line lacks customer_id, so cleaning drops them all
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data, noCustomerId = true)
+    val url = derbyUrl()
+    val counts = Pipeline.run(spark, data.getPath, url)
+    assert(counts == Map("clean_sales" -> 0L, "clean_customers" -> 5L,
+      "sales_summary" -> 0L, "product_ranking" -> 0L), s"$counts")
+    counts.foreach { case (table, n) =>
+      assert(dbCount(url, table) == n, s"$table: db rows vs reported count")
+    }
   }
 
   test("retry probe retries to success and fails fast when exhausted") {
