@@ -73,13 +73,36 @@ class OperatorSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft_csv_missing_").toFile
     val f = new java.io.File(dir, "sales.csv")
     val w = new java.io.PrintWriter(f)
-    w.println("order_id,customer_id,product_id,product_name,quantity,unit_price,extra_col")
-    w.println("1,C1,P1,Widget,2,9.99,x")
+    w.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date")
+    w.println("1,C1,P1,Widget,2,9.99,2024-01-15")
     w.close()
     val e = intercept[IllegalArgumentException] {
       Extract.readSalesCsv(spark, f.getAbsolutePath)
     }
-    // the extra column passes; the missing ones come as a sorted list
+    assert(e.getMessage.contains("missing required columns: category"))
+  }
+
+  test("CSV header check tolerates extras, throws sorted missing list") {
+    val dir = Files.createTempDirectory("graft_csv_extras_").toFile
+    val full = new java.io.File(dir, "full.csv")
+    val w1 = new java.io.PrintWriter(full)
+    w1.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date,category,extra_col")
+    w1.println("1,C1,P1,Widget,2,9.99,2024-01-15,Tools,x")
+    w1.close()
+    // an extra column passes the check and is not read
+    val df = Extract.readSalesCsv(spark, full.getAbsolutePath)
+    assert(df.columns.toSeq == Extract.salesSchema.fieldNames.toSeq)
+    assert(df.count() == 1)
+
+    val partial = new java.io.File(dir, "partial.csv")
+    val w2 = new java.io.PrintWriter(partial)
+    w2.println("order_id,customer_id,product_id,product_name,quantity,unit_price,extra_col")
+    w2.println("1,C1,P1,Widget,2,9.99,x")
+    w2.close()
+    val e = intercept[IllegalArgumentException] {
+      Extract.readSalesCsv(spark, partial.getAbsolutePath)
+    }
+    // the missing ones come as a sorted list
     assert(e.getMessage.contains("missing required columns: category, order_date"))
   }
 
