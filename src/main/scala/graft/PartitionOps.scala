@@ -16,9 +16,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   * annotated plan).
   *
   * PlanSpec's "pre-fan-out sizing lint" enforces the rule registry-wide:
-  * any ≥4× literal-array generator must sit above an explicit-count
-  * exchange or a multi-partition pinned layout, so a fourth sighting
-  * fails the suite instead of a bench adjudication.
+  * any ≥4× literal-array generator, in a query's plan or in a plan its
+  * construction executed (an eager checkpoint), must sit above an
+  * explicit-count exchange or a multi-partition pinned layout, so a
+  * fourth sighting fails the suite instead of a bench adjudication.
   */
 object PartitionOps {
 

@@ -1,6 +1,12 @@
 package graft.etl
 
+import java.io.{BufferedReader, InputStreamReader}
+import java.net.URI
+import java.nio.charset.StandardCharsets.UTF_8
+
 import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.io.compress.CompressionCodecFactory
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.csv.CSVOptions
 import org.apache.spark.sql.functions.col
@@ -69,16 +75,22 @@ object Extract {
     * Error taxonomy (reference `etl/extract.py:44-52`):
     *  - missing path → AnalysisException at plan time (≈ FileNotFoundError);
     *  - file without even a header line → IllegalStateException
-    *    (≈ pandas EmptyDataError on a zero-byte file) — the header is
-    *    read as at most ONE text line, so the probe stays O(1) at any
-    *    file size; a header-only file passes with 0 rows, as in pandas;
+    *    (≈ pandas EmptyDataError on a zero-byte file); a header-only file
+    *    passes with 0 rows, as in pandas;
     *  - a `required` name absent from the header → IllegalArgumentException
     *    with the sorted missing list;
     *  - malformed rows → null cells, row kept (PERMISSIVE).
+    *
+    * The header is read on the driver: `spark.read.text` only resolves the
+    * path (listing, no job), and the first line of the first of its sorted
+    * input files is read through Hadoop's FileSystem, decompressed by the
+    * codec its extension names. So the probe is O(1) at any file size and
+    * building the source starts no Spark job.
     */
   def readCsv(spark: SparkSession, path: String, schema: StructType,
       required: Set[String], what: String): DataFrame = {
-    val header = spark.read.text(path).head(1).headOption.map(_.getString(0))
+    val header = spark.read.text(path).inputFiles.sorted.headOption
+      .flatMap(firstLine(spark, _))
       .getOrElse(throw new IllegalStateException(s"$what: empty file: $path"))
     val names = headerNames(header)
     requirePresent(names, required, what)
@@ -90,6 +102,19 @@ object Extract {
       .schema(StructType(names.map(n => declared.getOrElse(n, StructField(n, StringType)))))
       .csv(path)
       .select(schema.fieldNames.toSeq.map(col): _*)
+  }
+
+  /** The first line of `file` (a URI as `inputFiles` gives it), or None
+    * when the file is empty.
+    */
+  private def firstLine(spark: SparkSession, file: String): Option[String] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val p = new Path(new URI(file))
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(p))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    val reader = new BufferedReader(new InputStreamReader(in, UTF_8))
+    try Option(reader.readLine()) finally reader.close()
   }
 
   /** Column names of a CSV header line, split by the same parser settings

@@ -4,6 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.graft.ListenerBusDrain
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Collects `df.observe(...)` metrics — the engine's data-quality
@@ -14,11 +15,19 @@ import org.apache.spark.sql.util.QueryExecutionListener
 object Observed {
 
   /** Run `action`, return its result plus all observation-point metrics
-    * seen on this session during it. Listener delivery is async, so we
-    * wait (bounded) for the named observations to arrive.
+    * seen on this session during it. Throws IllegalStateException naming
+    * any `expected` observation that never arrived.
+    *
+    * Listener delivery is async, so the bus is drained once `action`
+    * returns. A name reported more than once keeps its last-delivered
+    * value: concurrent readers of one cached plan each report that plan's
+    * accumulator, and a reader that ends early may report it before
+    * another reader's task has filled the last partition. The last
+    * delivery comes after every reader has ended, so its value is
+    * complete.
     */
-  def capture[T](spark: SparkSession, expected: Set[String],
-      timeoutMs: Long = 10000)(action: => T): (T, Map[String, Map[String, Any]]) = {
+  def capture[T](spark: SparkSession, expected: Set[String])(
+      action: => T): (T, Map[String, Map[String, Any]]) = {
     val acc = TrieMap.empty[String, Map[String, Any]]
     val listener = new QueryExecutionListener {
       override def onSuccess(funcName: String, qe: QueryExecution,
@@ -32,9 +41,10 @@ object Observed {
     spark.listenerManager.register(listener)
     try {
       val result = action
-      val deadline = System.currentTimeMillis() + timeoutMs
-      while (!expected.subsetOf(acc.keySet) &&
-        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      ListenerBusDrain(spark.sparkContext)
+      val missing = (expected -- acc.keySet).toSeq.sorted
+      if (missing.nonEmpty)
+        throw new IllegalStateException(s"observations never delivered: ${missing.mkString(", ")}")
       (result, acc.toMap)
     } finally spark.listenerManager.unregister(listener)
   }

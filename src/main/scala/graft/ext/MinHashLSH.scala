@@ -92,8 +92,11 @@ object MinHashLSH {
       bands: Int = 8, threshold: Double = 0.5): DataFrame = {
     val rowsPerBand = numPerm / bands
     // 32 longs per doc, referenced by banding AND both estimate joins —
-    // materialize so the shingle+min-agg derivation runs once
-    val sigs = signatures(docs, shingleN, numPerm).localCheckpoint()
+    // materialize so the shingle+min-agg derivation runs once; spread
+    // first with an explicit count, since the ×bands explode reads this
+    // layout and AQE would size the aggregate's output from its bytes
+    val sigs = graft.PartitionOps.repartitionBeforeFanout(
+      signatures(docs, shingleN, numPerm), col("doc_id")).localCheckpoint()
     val est = aggregate(
       zip_with(col("s1"), col("s2"),
         (x, y) => when(x === y, 1.0).otherwise(0.0)),

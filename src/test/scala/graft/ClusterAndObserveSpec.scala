@@ -1,5 +1,11 @@
 package graft
 
+import scala.concurrent.{Await, Future}
+import scala.concurrent.ExecutionContext.Implicits.global
+import scala.concurrent.duration.Duration
+
+import org.apache.spark.sql.functions.{col, count, sum, when}
+
 import graft.etl.{Observed, Pipelines, Tables, TransformSales}
 import graft.ext.Clusters
 
@@ -35,6 +41,32 @@ class ClusterAndObserveSpec extends SparkSpec {
     val m = metrics("clean_sales_metrics")
     assert(m("null_category").asInstanceOf[Long] == expectedNullCat)
     assert(m("null_customer_id").asInstanceOf[Long] > 0)
+  }
+
+  test("observe() metrics of one cache read by four concurrent actions are complete") {
+    // every reader of the cache reports its plan's accumulator; a reader
+    // that ends early may report it before another reader's task filled
+    // the last partition, so only the last delivery is complete
+    val dirty = Tables.dirtySales(spark, sf)
+    val nulls = Seq("order_date", "customer_id", "category")
+    val direct = dirty.agg(count(when(col(nulls.head).isNull, 1)),
+      nulls.tail.map(c => count(when(col(c).isNull, 1))): _*).head()
+    val expected = nulls.zipWithIndex.map { case (c, i) => s"null_$c" -> direct.getLong(i) }.toMap
+    assert(expected.values.forall(_ > 0), s"fixture has no dirt: $expected")
+    for (rep <- 1 to 5) {
+      val clean = TransformSales.clean(dirty).cache()
+      try {
+        val readers: Seq[() => Any] = Seq(
+          () => clean.count(),
+          () => clean.groupBy("category").count().collect(),
+          () => clean.agg(sum("total_price")).collect(),
+          () => clean.select("customer_id").distinct().collect())
+        val (_, metrics) = Observed.capture(spark, Set("clean_sales_metrics")) {
+          Await.result(Future.traverse(readers)(r => Future(r())), Duration.Inf)
+        }
+        assert(metrics("clean_sales_metrics") == expected, s"rep $rep")
+      } finally clean.unpersist(blocking = true)
+    }
   }
 
   test("cached pipeline returns consistent results across consumers") {

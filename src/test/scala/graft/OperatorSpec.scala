@@ -122,6 +122,54 @@ class OperatorSpec extends SparkSpec {
     assert(row.getAs[String]("customer_id") == "C7")
   }
 
+  test("gzip'd CSV: the header is read through the codec and columns bind by name") {
+    val dir = Files.createTempDirectory("graft_csv_gz_").toFile
+    val f = new java.io.File(dir, "sales.csv.gz")
+    val w = new java.io.PrintWriter(new java.io.OutputStreamWriter(
+      new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f)), "UTF-8"))
+    w.println("category,customer_id,order_id,product_id,product_name,quantity,unit_price,order_date")
+    w.println("Tools,C7,1,P1,Widget,2,9.99,2024-01-15")
+    w.close()
+    val rows = Extract.readSalesCsv(spark, f.getAbsolutePath).collect()
+    assert(rows.length == 1)
+    assert(rows(0).getAs[Long]("order_id") == 1L)
+    assert(rows(0).getAs[String]("customer_id") == "C7")
+    assert(rows(0).getAs[String]("category") == "Tools")
+  }
+
+  test("building a CSV source starts no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val dir = Files.createTempDirectory("graft_csv_jobs_").toFile
+    val f = new java.io.File(dir, "sales.csv")
+    val w = new java.io.PrintWriter(f)
+    w.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date,category")
+    w.println("1,C1,P1,Widget,2,9.99,2024-01-15,Tools")
+    w.close()
+    // only jobs started from this thread count: the marker is a local
+    // property, which every job started here carries
+    val sc = spark.sparkContext
+    val marker = "graft.operator-spec.no-job"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty(marker) != null)) jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(marker, "1")
+    try {
+      val df = Extract.readSalesCsv(spark, f.getAbsolutePath)
+      org.apache.spark.sql.graft.ListenerBusDrain(sc)
+      assert(jobs.get == 0, s"${jobs.get} jobs while building the source")
+      // the marker does reach jobs: the same frame's first action counts
+      assert(df.count() == 1)
+      org.apache.spark.sql.graft.ListenerBusDrain(sc)
+      assert(jobs.get > 0)
+    } finally {
+      sc.setLocalProperty(marker, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   test("JSONL source applies schema, contract, and lenient parse") {
     import org.apache.spark.sql.types._
     val dir = Files.createTempDirectory("graft_jsonl_").toFile

@@ -1,14 +1,16 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler._
+import org.apache.spark.SparkException
 import org.apache.spark.sql.CacheEntries
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graft.ListenerBusDrain
 
 import graft.etl.{Load, Pipeline}
 
@@ -102,37 +104,15 @@ class PipelineSpec extends SparkSpec {
     customers.close()
   }
 
-  private val settle = "pipeline-spec-settle"
-
-  private def isSettle(e: SparkListenerJobStart): Boolean =
-    Option(e.properties).exists(_.getProperty("spark.job.description") == settle)
-
   /** Runs `body` with `l` registered, and returns once `l` has seen every
     * event of `body`.
     */
   private def listening(l: SparkListener)(body: => Unit): Unit = {
-    val settleJob = new AtomicInteger(-1)
-    val settled = new CountDownLatch(1)
-    val marker = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (isSettle(e)) settleJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == settleJob.get) settled.countDown()
-    }
     spark.sparkContext.addSparkListener(l)
-    spark.sparkContext.addSparkListener(marker)
     try {
       body
-      // one listener queue delivers in order: once the settle job's end
-      // arrives, every event of `body` has arrived
-      spark.sparkContext.setJobDescription(settle)
-      try spark.sparkContext.parallelize(Seq(1), 1).count()
-      finally spark.sparkContext.setJobDescription(null)
-      assert(settled.await(60, TimeUnit.SECONDS), "listener events never settled")
-    } finally {
-      spark.sparkContext.removeSparkListener(marker)
-      spark.sparkContext.removeSparkListener(l)
-    }
+      ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   /** Shuffle map stages run and shuffle bytes written while `body` runs. */
@@ -147,31 +127,37 @@ class PipelineSpec extends SparkSpec {
     (stages.get, bytes.get)
   }
 
-  /** Jobs `body` runs, and how many of them start after the last job of a
-    * file-writing SQL execution has ended.
+  /** A root SQL execution: its call-site description, whether it writes
+    * files, its start and end times (ms) and the jobs it ran.
     */
-  private def jobsAfterWrites(body: => Unit): (Int, Int) = {
-    val writeExecutions = ConcurrentHashMap.newKeySet[String]()
-    val writeJobs = ConcurrentHashMap.newKeySet[Int]()
-    // job starts and ends in delivery order: (is a start, job id)
-    val log = new ConcurrentLinkedQueue[(Boolean, Int)]()
+  private case class Execution(description: String, writes: Boolean,
+      start: Long, end: Long, jobs: Int)
+
+  /** The root SQL executions that ran the jobs of `body`, and how many of
+    * its jobs ran outside any SQL execution.
+    */
+  private def rootExecutions(body: => Unit): (Seq[Execution], Int) = {
+    val starts = new ConcurrentHashMap[Long, SparkListenerSQLExecutionStart]()
+    val ends = new ConcurrentHashMap[Long, Long]()
+    val jobExecutions = new ConcurrentLinkedQueue[Option[Long]]()
     listening(new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart
-            if s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand") =>
-          writeExecutions.add(s.executionId.toString)
+        case s: SparkListenerSQLExecutionStart => starts.put(s.executionId, s)
+        case s: SparkListenerSQLExecutionEnd => ends.put(s.executionId, s.time)
         case _ =>
       }
-      override def onJobStart(e: SparkListenerJobStart): Unit = if (!isSettle(e)) {
-        if (Option(e.properties).flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .exists(writeExecutions.contains)) writeJobs.add(e.jobId)
-        log.add((true, e.jobId))
-      }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit = log.add((false, e.jobId))
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobExecutions.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).map(_.toLong))
     })(body)
-    val events = log.asScala.toSeq
-    val lastWriteEnd = events.lastIndexWhere { case (start, id) => !start && writeJobs.contains(id) }
-    (events.count(_._1), events.drop(lastWriteEnd + 1).count(_._1))
+    val jobs = jobExecutions.asScala.toSeq
+    val roots = jobs.flatten.map(id => starts.get(id).rootExecutionId.getOrElse(id))
+    val executions = roots.groupBy(identity).toSeq.sortBy(_._1).map { case (id, js) =>
+      val s = starts.get(id)
+      Execution(s.description, s.physicalPlanDescription.contains("InsertIntoHadoopFsRelationCommand"),
+        s.time, ends.get(id), js.size)
+    }
+    (executions, jobs.count(_.isEmpty))
   }
 
   test("Pipeline.run leaves no CacheManager entry; a second run redoes the dedup shuffle") {
@@ -194,15 +180,17 @@ class PipelineSpec extends SparkSpec {
       s"second run (shuffle stages, bytes) $second vs first $first")
   }
 
-  test("Pipeline.run counts ride the parquet writes: no job after the last write") {
+  test("Pipeline.run counts ride the output actions: every job belongs to the five outputs") {
     // the counts come from each write's observe() metric, not from a
-    // count() job per output after the writes
+    // count() job per output, and building the sources runs no header
+    // probe: every job of the run belongs to one of the five output
+    // actions' root SQL executions
     val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
     writeCsvs(data)
     val out = Files.createTempDirectory("graft_pipeline_").toString
     var counts = Map.empty[String, Long]
     val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val (jobs, late) = jobsAfterWrites { counts = Pipeline.run(spark, data.getPath, out) }
+    val (executions, orphanJobs) = rootExecutions { counts = Pipeline.run(spark, data.getPath, out) }
     assert(spark.sparkContext.getPersistentRDDs.keySet == blocksBefore,
       "pipeline run leaked persisted blocks")
     assert(counts.keySet == Set("clean_sales", "clean_customers",
@@ -210,7 +198,22 @@ class PipelineSpec extends SparkSpec {
     counts.foreach { case (table, n) =>
       assert(spark.read.parquet(s"$out/$table").count() == n, s"$table: rows read back vs reported count")
     }
-    assert(late == 0, s"$late of the run's $jobs jobs started after the last output write")
+    assert(orphanJobs == 0, s"$orphanJobs jobs ran outside any SQL execution")
+    val (writes, others) = executions.partition(_.writes)
+    assert(writes.size == 4 && others.size == 1 && others.head.description.startsWith("collect at"),
+      s"the run's jobs belong to: ${executions.mkString("; ")}")
+  }
+
+  test("Pipeline.run output executions overlap") {
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data)
+    val out = Files.createTempDirectory("graft_pipeline_").toString
+    val (executions, _) = rootExecutions { Pipeline.run(spark, data.getPath, out) }
+    assert(executions.size == 5, s"${executions.mkString("; ")}")
+    val overlapping = executions.combinations(2).exists { case Seq(a, b) =>
+      a.start < b.end && b.start < a.end
+    }
+    assert(overlapping, s"no two output executions were in flight at once: ${executions.mkString("; ")}")
   }
 
   /** `SELECT COUNT(*) FROM <from>` in the database at `url`. */
@@ -267,6 +270,28 @@ class PipelineSpec extends SparkSpec {
     counts.foreach { case (table, n) =>
       assert(dbCount(url, table) == n, s"$table: db rows vs reported count")
     }
+  }
+
+  test("a failing output fails the run with its own exception; no thread or cache outlives it") {
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data)
+    val url = derbyUrl()
+    // the reload truncates and keeps this DDL, so every insert misses the
+    // NOT NULL column: the product_ranking write fails
+    Load.applyDdl(url, "", "",
+      """CREATE TABLE product_ranking (product_id VARCHAR(40), product_name VARCHAR(200),
+        |total_sold BIGINT, total_revenue DOUBLE, rank_position BIGINT,
+        |note VARCHAR(10) NOT NULL)""".stripMargin)
+    val blocksBefore = spark.sparkContext.getPersistentRDDs.keySet
+    val entries = CacheEntries.count(spark)
+    val e = intercept[SparkException](Pipeline.run(spark, data.getPath, url))
+    assert(e.getMessage.contains("NOTE"), e.getMessage)
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-pipeline-"))
+    assert(alive.isEmpty, s"threads outlived the run: ${alive.map(_.getName)}")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == blocksBefore,
+      "failed run leaked persisted blocks")
+    assert(CacheEntries.count(spark) == entries, "a CacheManager entry outlived the failed run")
   }
 
   test("retry probe retries to success and fails fast when exhausted") {

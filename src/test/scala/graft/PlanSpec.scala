@@ -22,8 +22,15 @@ class PlanSpec extends SparkSpec {
     * the physical-join sweep, and the zero-shuffle pin instead of three
     * full rebuilds (streaming queries stay excluded: building them IS
     * running them; their own oracle checks cover them).
+    *
+    * Beside each query: the optimized plans of the SQL executions it ran
+    * while being built (eager checkpoints, collects), by query name —
+    * each build runs in a job group named after its query. A plan that
+    * ends in a localCheckpoint is gone from the built frame's plan, which
+    * scans only the checkpoint's RDD.
     */
-  private lazy val built: Map[String, scala.util.Try[org.apache.spark.sql.DataFrame]] = {
+  private lazy val builtAndConstruction: (Map[String, scala.util.Try[org.apache.spark.sql.DataFrame]],
+      Map[String, Seq[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]]) = {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -32,13 +39,25 @@ class PlanSpec extends SparkSpec {
     // on this instance share one monitor, and the futures touching `spark`
     // while this initializer holds it for `built` is a self-deadlock.
     val (s, dir) = (spark, sf)
-    // parallel build, same argument as SortKeySpec's sweep: independent
-    // driver-side construction; graft.Shared's concurrent registry
-    // tolerates the race (worst case a duplicate cache registration)
-    Await.result(Future.traverse((SparkEntry.queries -- skip).toSeq) {
-      case (name, fn) => Future(name -> scala.util.Try(fn(s, dir)))
-    }, Duration.Inf).toMap
+    val executed = new org.apache.spark.sql.ExecutedPlans
+    s.sparkContext.addSparkListener(executed)
+    try {
+      // parallel build, same argument as SortKeySpec's sweep: independent
+      // driver-side construction; graft.Shared's concurrent registry
+      // tolerates the race (worst case a duplicate cache registration)
+      val built = Await.result(Future.traverse((SparkEntry.queries -- skip).toSeq) {
+        case (name, fn) => Future {
+          s.sparkContext.setJobGroup(name, name)
+          try name -> scala.util.Try(fn(s, dir))
+          finally s.sparkContext.clearJobGroup()
+        }
+      }, Duration.Inf).toMap
+      org.apache.spark.sql.graft.ListenerBusDrain(s.sparkContext)
+      (built, executed.byGroup)
+    } finally s.sparkContext.removeSparkListener(executed)
   }
+
+  private def built = builtAndConstruction._1
 
   /** No registry query may EMIT a DecimalType column. Decimals are fine
     * internally (exact-cents arithmetic everywhere), but the driver's
@@ -400,17 +419,19 @@ class PlanSpec extends SparkSpec {
         m.cachedPlan.outputPartitioning.numPartitions > 1
       case _ => false
     }
+    // the built frame's plan plus the plans its construction executed:
+    // a generator that runs inside a localCheckpoint shows only there
+    val construction = builtAndConstruction._2
     val offenders = (built -- preFanoutWhitelist.keys).toSeq.sortBy(_._1)
       .flatMap { case (name, t) =>
-        t.toOption.toSeq.flatMap { df =>
-          df.queryExecution.optimizedPlan.collect {
+        (t.toOption.map(_.queryExecution.optimizedPlan).toSeq ++
+          construction.getOrElse(name, Nil)).flatMap(_.collect {
             case g: logical.Generate
                 if fanOut(g.generator) >= 4 && !fed(g.child) =>
               s"$name (x${fanOut(g.generator)} generator over a " +
                 "1-partition-capable source)"
-          }
-        }
-      }
+          })
+      }.distinct
     assert(offenders.isEmpty,
       "pre-fan-out trap (the a48/a31/a14 class): route the generator " +
         "input through PartitionOps.repartitionBeforeFanout or pin a " +
