@@ -180,11 +180,13 @@ class PipelineSpec extends SparkSpec {
       s"second run (shuffle stages, bytes) $second vs first $first")
   }
 
-  test("Pipeline.run counts ride the output actions: every job belongs to the five outputs") {
+  test("Pipeline.run counts ride the parquet writes: no job after the last write") {
     // the counts come from each write's observe() metric, not from a
-    // count() job per output, and building the sources runs no header
-    // probe: every job of the run belongs to one of the five output
-    // actions' root SQL executions
+    // count() job per output after the writes, and building the sources
+    // runs no header probe. The avg-check collect runs beside the writes
+    // and may end after them, so "no job after the last write" is checked
+    // as membership: every job of the run belongs to one of the five
+    // output actions' root SQL executions
     val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
     writeCsvs(data)
     val out = Files.createTempDirectory("graft_pipeline_").toString
