@@ -30,6 +30,11 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType,
   *                DO UPDATE — string-tested         SYSIBM.SYSDUMMY1 —
   *                                                  EXECUTED, idempotent
   *                                                  (LoadSpec)
+  * concurrency    one connection, tables in turn    four reloads at once,
+  *                                                  ≤ 4 × numPartitions
+  *                                                  connections — EXECUTED
+  *                                                  on Derby only
+  *                                                  (PipelineSpec)
   * }}}
   *
   * `RESTART IDENTITY` has no counterpart: a table Spark creates has no
@@ -38,7 +43,11 @@ import org.apache.spark.sql.types.{DataType, DateType, DecimalType, IntegerType,
   * truncate, writing zero rows leaves the same empty table.
   *
   * Scale: `df.write.jdbc` parallelizes one connection per partition —
-  * `numPartitions`/`batchsize` bound the connection count and round-trips.
+  * `numPartitions`/`batchsize` bound one write's connection count and
+  * round-trips. [[Pipeline.run]] reloads its four tables at once, so a run
+  * opens up to 4 × `numPartitions` connections (32 at the default 8).
+  * That concurrency is executed only against in-memory Derby
+  * (PipelineSpec), never against a server with a connection limit.
   * The upsert (no native Spark JDBC merge, SURVEY §7.8) runs per-partition
   * batched `INSERT ... ON CONFLICT DO UPDATE`, which is idempotent, so a
   * retried task re-applies the same rows harmlessly (exactly the property
@@ -143,7 +152,8 @@ object Load {
     * created. `repartition`, not `coalesce`: coalesce(n) would collapse
     * the whole upstream stage to n tasks; a shuffle barrier keeps upstream
     * parallelism and only the JDBC-writing stage is bounded to
-    * numPartitions connections.
+    * numPartitions connections per call ([[Pipeline.run]] makes four
+    * calls at once).
     */
   def reload(df: DataFrame, url: String, table: String,
       props: java.util.Properties, numPartitions: Int = 8): Unit =

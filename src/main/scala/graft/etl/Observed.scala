@@ -24,7 +24,13 @@ object Observed {
     * accumulator, and a reader that ends early may report it before
     * another reader's task has filled the last partition. The last
     * delivery comes after every reader has ended, so its value is
-    * complete.
+    * complete: the listener reads the accumulators when the bus delivers
+    * the event, not when the action posted it (Spark 4.1's
+    * `QueryExecution.observedMetrics` is a `def` that re-evaluates
+    * `CollectMetricsExec.collect(executedPlan)` on each call, and
+    * `ExecutionListenerBus.doPostEvent` calls `onSuccess` on delivery of
+    * the `SparkListenerSQLExecutionEnd`). PipelineSpec checks a concurrent
+    * `Pipeline.run`'s values against direct counts.
     */
   def capture[T](spark: SparkSession, expected: Set[String])(
       action: => T): (T, Map[String, Map[String, Any]]) = {

@@ -25,7 +25,10 @@ import org.apache.spark.sql.functions._
   * eager materialization, SURVEY §3). The reference computes and loads one
   * table after another over its one connection (`main.py:71-87`); here
   * the five actions (the avg-check collect and the four writes) do not
-  * depend on each other, so they run at once.
+  * depend on each other, so they run at once. On a `jdbc:` outDir that
+  * means the four table reloads run together, each over up to
+  * `Load.reload`'s `numPartitions` (8) connections: one run opens up to
+  * 4 × 8 = 32 warehouse connections at once, not the reference's one.
   */
 object Pipeline {
 
@@ -106,7 +109,14 @@ object Pipeline {
     * dedup shuffle never re-planned). PipelineSpec pins both: no net
     * persisted blocks, no net CacheManager entries.
     */
-  def run(spark: SparkSession, dataDir: String, outDir: String): Map[String, Long] = {
+  def run(spark: SparkSession, dataDir: String, outDir: String): Map[String, Long] =
+    runObserved(spark, dataDir, outDir)._1
+
+  /** [[run]], also returning every observed metric the run logged, by
+    * observation name.
+    */
+  private[graft] def runObserved(spark: SparkSession, dataDir: String,
+      outDir: String): (Map[String, Long], Map[String, Map[String, Any]]) = {
     val sales = Extract.readSalesCsv(spark, s"$dataDir/sales.csv")
       .withColumn("src", lit(0))
       .withColumn("line_id", monotonically_increasing_id())
@@ -140,7 +150,7 @@ object Pipeline {
       metrics.foreach { case (name, m) =>
         System.err.println(s"[pipeline] $name: $m")
       }
-      outputs.map { case (t, _) => t -> metrics(s"rows_$t")("rows").asInstanceOf[Long] }
+      (outputs.map { case (t, _) => t -> metrics(s"rows_$t")("rows").asInstanceOf[Long] }, metrics)
     } finally cleanSales.unpersist(blocking = false)
   }
 

@@ -10,9 +10,10 @@ import org.apache.spark.scheduler._
 import org.apache.spark.SparkException
 import org.apache.spark.sql.CacheEntries
 import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.functions.{col, count, when}
 import org.apache.spark.sql.graft.ListenerBusDrain
 
-import graft.etl.{Load, Pipeline}
+import graft.etl.{Extract, Load, Pipeline}
 
 /** One-command pipeline: the four loaded outputs exist with plausible
   * shapes, a JDBC re-run truncate-reloads rather than appends, and the
@@ -86,21 +87,26 @@ class PipelineSpec extends SparkSpec {
     * dedup, over 7 products) and customers.csv (5 customers) in a fresh
     * directory: the input of the JDBC-branch, parquet-branch and
     * CacheManager tests. With `noCustomerId` every sales line leaves its
-    * `customer_id` empty, so cleaning drops them all.
+    * `customer_id` empty, so cleaning drops them all. With `dirt` some
+    * sales lines leave `customer_id`, `order_date` or `category` empty and
+    * one customer its `region`.
     */
-  private def writeCsvs(dir: java.io.File, noCustomerId: Boolean = false): Unit = {
+  private def writeCsvs(dir: java.io.File, noCustomerId: Boolean = false,
+      dirt: Boolean = false): Unit = {
+    def blank(i: Int, every: Int, v: String) = if (dirt && i % every == 0) "" else v
     val sales = new java.io.PrintWriter(new java.io.File(dir, "sales.csv"))
     sales.println("order_id,customer_id,product_id,product_name,quantity,unit_price,order_date,category")
     val lines = (1 to 40).map { i =>
-      val customer = if (noCustomerId) "" else s"C${i % 5}"
-      f"$i,$customer,P${i % 7},Item${i % 7},${1 + i % 3},${10 + i % 4}.50,2024-01-${1 + i % 28}%02d,Cat${i % 3}"
+      val customer = if (noCustomerId) "" else blank(i, 9, s"C${i % 5}")
+      val date = blank(i, 6, f"2024-01-${1 + i % 28}%02d")
+      f"$i,$customer,P${i % 7},Item${i % 7},${1 + i % 3},${10 + i % 4}.50,$date,${blank(i, 4, s"Cat${i % 3}")}"
     }
     (lines ++ lines.take(6)).foreach(sales.println)
     sales.close()
     val customers = new java.io.PrintWriter(new java.io.File(dir, "customers.csv"))
     customers.println("customer_id,customer_name,email,registration_date,region")
     (0 until 5).foreach(c =>
-      customers.println(s"C$c,Name $c,c$c@example.com,2023-0${1 + c}-15,R${c % 2}"))
+      customers.println(s"C$c,Name $c,c$c@example.com,2023-0${1 + c}-15,${blank(c + 1, 5, s"R${c % 2}")}"))
     customers.close()
   }
 
@@ -216,6 +222,31 @@ class PipelineSpec extends SparkSpec {
       a.start < b.end && b.start < a.end
     }
     assert(overlapping, s"no two output executions were in flight at once: ${executions.mkString("; ")}")
+  }
+
+  test("Pipeline.run's observed null counts equal the input's, with its five actions concurrent") {
+    // four actions read the cleaned-sales cache and two the customers
+    // branch; each reports its plan's observe() metrics, and the run
+    // keeps the last-delivered value
+    val data = Files.createTempDirectory("graft_pipeline_csv_").toFile
+    writeCsvs(data, dirt = true)
+    def nulls(df: org.apache.spark.sql.DataFrame, cols: String*): Map[String, Any] = {
+      val row = df.agg(count(when(col(cols.head).isNull, 1)),
+        cols.tail.map(c => count(when(col(c).isNull, 1))): _*).head()
+      cols.zipWithIndex.map { case (c, i) => s"null_$c" -> row.getLong(i) }.toMap
+    }
+    val expected = Map(
+      "clean_sales_metrics" -> nulls(Extract.readSalesCsv(spark, s"$data/sales.csv"),
+        "order_date", "customer_id", "category"),
+      "clean_customers_metrics" -> nulls(Extract.readCustomersCsv(spark, s"$data/customers.csv"),
+        "customer_id", "region"))
+    assert(expected("clean_sales_metrics").values.forall(_ != 0L) &&
+      expected("clean_customers_metrics")("null_region") != 0L, s"fixture has no dirt: $expected")
+    for (rep <- 1 to 3) {
+      val out = Files.createTempDirectory("graft_pipeline_").toString
+      val (_, metrics) = Pipeline.runObserved(spark, data.getPath, out)
+      assert(metrics.filter { case (k, _) => expected.contains(k) } == expected, s"rep $rep")
+    }
   }
 
   /** `SELECT COUNT(*) FROM <from>` in the database at `url`. */
