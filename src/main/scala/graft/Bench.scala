@@ -18,11 +18,11 @@ object Bench {
     SparkEntry.queries.keys.toSeq.sorted
       .foldLeft(Set.empty[String])((taken, n) => taken + shortId(n, taken))
     // Untimed warmup: prime JIT, codegen caches, the parquet reader, the
-    // streaming machinery (events staging + state-store engine init), AND
-    // the Spark ML stack (KMeans pulls in breeze/BLAS one-time init —
-    // measured at ~8.5 s of pure class-loading that otherwise lands inside
-    // s4's measurement; BENCH_r05 s4=13.4 s vs 1.8 s warm) on
-    // representative query shapes before the measured pass.
+    // streaming machinery (events staging + state-store engine init) and
+    // the IVF probe path on representative query shapes before the
+    // measured pass. s4 reads the pinned IvfCentroids.Default through
+    // IVFIndex.fromCentroids and loads no Spark ML; only IVFIndex.build
+    // (IvfPinGen and the specs) reaches KMeans and its breeze/BLAS init.
     // t18 primes the interpreted-HOF paths (transform/filter/aggregate
     // lambda codegen + the add-1 smoothing join shape) that none of the
     // other warmups touch — its shape cold-starts at ~9.5 s vs ~1.4 s

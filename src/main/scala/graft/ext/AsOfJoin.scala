@@ -22,7 +22,12 @@ import org.apache.spark.sql.functions._
   */
 object AsOfJoin {
 
-  def asofJoin(left: DataFrame, right: DataFrame, key: String, ts: String): DataFrame = {
+  /** The tagged union both joins sort: right rows (`_side` 0) carry their
+    * non-key columns as one `_payload` struct, left rows (`_side` 1) a
+    * null one. Returns the payload's column names and the union.
+    */
+  private def tagged(left: DataFrame, right: DataFrame, key: String,
+      ts: String): (Array[String], DataFrame) = {
     val payloadCols = right.columns.filterNot(_ == key)
     val payload = struct(payloadCols.map(col): _*)
     val r = right.select(Seq(col(key), col(ts)) :+ payload.as("_payload"): _*)
@@ -30,8 +35,12 @@ object AsOfJoin {
     val l = left
       .withColumn("_payload", lit(null).cast(r.schema("_payload").dataType))
       .withColumn("_side", lit(1))
-    val unioned = l.unionByName(r.select(col(key), col(ts).as(ts),
-      col("_payload"), col("_side")), allowMissingColumns = true)
+    (payloadCols, l.unionByName(r.select(col(key), col(ts).as(ts),
+      col("_payload"), col("_side")), allowMissingColumns = true))
+  }
+
+  def asofJoin(left: DataFrame, right: DataFrame, key: String, ts: String): DataFrame = {
+    val (payloadCols, unioned) = tagged(left, right, key, ts)
     // _payload as final sort key: a deterministic winner if two right rows
     // tie exactly on (key, ts)
     val w = Window.partitionBy(key)
@@ -61,15 +70,7 @@ object AsOfJoin {
     */
   def asofNearest(left: DataFrame, right: DataFrame, key: String,
       ts: String, tolUs: Long): DataFrame = {
-    val payloadCols = right.columns.filterNot(_ == key)
-    val payload = struct(payloadCols.map(col): _*)
-    val r = right.select(Seq(col(key), col(ts)) :+ payload.as("_payload"): _*)
-      .withColumn("_side", lit(0))
-    val l = left
-      .withColumn("_payload", lit(null).cast(r.schema("_payload").dataType))
-      .withColumn("_side", lit(1))
-    val unioned = l.unionByName(r.select(col(key), col(ts).as(ts),
-      col("_payload"), col("_side")), allowMissingColumns = true)
+    val (payloadCols, unioned) = tagged(left, right, key, ts)
     val order = Seq(col(ts), col("_side"), col("_payload"))
     val wBack = Window.partitionBy(key).orderBy(order: _*)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)

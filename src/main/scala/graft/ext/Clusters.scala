@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   *
   * Algorithm: iterative min-label propagation to a fixpoint — each round
   * every node adopts the smallest label among itself and its neighbors.
-  * Rounds needed = graph diameter; dup clusters are near-cliques, so this
-  * converges in 2-3 rounds in practice. Lineage is truncated per round
-  * with `localCheckpoint` (on a cluster, prefer `checkpoint` to HDFS so a
+  * Rounds needed = graph diameter (+1 for the fixpoint check); dup
+  * clusters are near-cliques, so the count stays small — the
+  * `north_star` workload records 5 (`ext.Clusters.rounds`,
+  * e2ebench/NOTES.md). Lineage is truncated per round with
+  * `localCheckpoint` (on a cluster, prefer `checkpoint` to HDFS so a
   * lost executor doesn't recompute the whole loop); the fixpoint test
   * piggybacks on the same pass.
   *

@@ -100,10 +100,7 @@ object Corpus {
 
   private[graft] def hotSplitCore(d: DataFrame,
       withThr: DataFrame => DataFrame): DataFrame = {
-    val bg = d
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"),
-        explode(Dedup.shingles(col("toks"), 2)).as("bigram"))
+    val bg = docBigrams(d)
     // lazy checkpoint: lineage still truncates at first ACTION, but
     // construction fires no job (eager was the default — it made every
     // plan-only consumer of the registry pay a count)
@@ -114,14 +111,25 @@ object Corpus {
       "bigram")
     val cold = bg.join(
       cf.filter(col("cf") < col("thr")).select("bigram", "cf"), "bigram")
-    hot.unionAll(cold)
-      .groupBy("doc_id")
+    commonnessOf(hot.unionAll(cold))
+  }
+
+  /** t16's bigram occurrences: one (doc_id, bigram) row per position. */
+  private[graft] def docBigrams(d: DataFrame): DataFrame =
+    d.select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
+      .select(col("doc_id"),
+        explode(Dedup.shingles(col("toks"), 2)).as("bigram"))
+
+  /** t16's score over (doc_id, bigram, cf) occurrence rows: per doc the
+    * bigram count, the corpus-frequency sum and their ratio.
+    */
+  private[graft] def commonnessOf(occ: DataFrame): DataFrame =
+    occ.groupBy("doc_id")
       .agg(count(lit(1)).cast("long").as("n_bigrams"),
         sum("cf").cast("long").as("cf_sum"))
       .select(col("doc_id"), col("n_bigrams"), col("cf_sum"),
         (col("cf_sum").cast("double") / col("n_bigrams")).as("commonness"))
       .orderBy("doc_id")
-  }
 
   private[graft] val LnCap = 1024
 

@@ -1,6 +1,6 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -130,15 +130,48 @@ object ProductQuantizer {
     * the [[IVFIndex.assignCells]] pattern per subspace.
     */
   def encode(emb: DataFrame, pq: PQ): DataFrame = {
-    val v = VectorOps.toDouble(col("embedding"))
-    val codes = pq.codebooks.zipWithIndex.map { case (book, i) =>
+    emb.select(col("vec_id"),
+      codeArray(VectorOps.toDouble(col("embedding")), pq).as("codes"))
+  }
+
+  /** The code array of the double vector `v`: per subspace, the argmin
+    * centroid index as a `least(struct(d, code))` over its literals.
+    */
+  private def codeArray(v: Column, pq: PQ): Column =
+    array(pq.codebooks.zipWithIndex.map { case (book, i) =>
       val sv = slice(v, i * pq.subDim + 1, pq.subDim)
       least(book.map { case (j, c) =>
         struct(VectorOps.l2sq(sv, typedlit(c.toSeq)).as("d"),
           lit(j).as("code"))
       }.toIndexedSeq: _*).getField("code").cast("long")
+    }.toIndexedSeq: _*)
+
+  /** Stages 1 and 2 of the serving path over `candidates` (rows with
+    * `vec_id`, `codes` and the query vector `qv`): the ADC score, a
+    * `shortlist`-row cut, then the exact L2² re-rank to `k` rows against
+    * the raw vectors of `emb`.
+    */
+  private def shortlistReRank(candidates: DataFrame, emb: DataFrame,
+      qRow: DataFrame, pq: PQ, k: Int, shortlist: Int): DataFrame = {
+    val subScores = pq.codebooks.zipWithIndex.map { case (book, i) =>
+      val qSub = slice(col("qv"), i * pq.subDim + 1, pq.subDim)
+      book.foldLeft(lit(0.0)) { case (acc, (j, c)) =>
+        when(col("codes").getItem(i) === j.toLong,
+          VectorOps.l2sq(qSub, typedlit(c.toSeq))).otherwise(acc)
+      }
     }
-    emb.select(col("vec_id"), array(codes.toIndexedSeq: _*).as("codes"))
+    candidates
+      .select(col("vec_id"),
+        subScores.toIndexedSeq.reduce(_ + _).as("adc_dist"))
+      .orderBy(col("adc_dist"), col("vec_id"))
+      .limit(shortlist)
+      .join(emb.select(col("vec_id"),
+        VectorOps.toDouble(col("embedding")).as("v")), "vec_id")
+      .crossJoin(broadcast(qRow))
+      .select(col("vec_id"), col("adc_dist"),
+        VectorOps.l2sq(col("v"), col("qv")).as("l2_dist"))
+      .orderBy(col("l2_dist"), col("vec_id"))
+      .limit(k)
   }
 
   /** Driver-side decode (test/debug aid): concatenate each code's
@@ -168,27 +201,8 @@ object ProductQuantizer {
     val codes = encode(emb, pq)
     val qRow = emb.filter(col("vec_id") === queryId)
       .select(VectorOps.toDouble(col("embedding")).as("qv"))
-    val subScores = pq.codebooks.zipWithIndex.map { case (book, i) =>
-      val qSub = slice(col("qv"), i * pq.subDim + 1, pq.subDim)
-      book.foldLeft(lit(0.0)) { case (acc, (j, c)) =>
-        when(col("codes").getItem(i) === j.toLong,
-          VectorOps.l2sq(qSub, typedlit(c.toSeq))).otherwise(acc)
-      }
-    }
-    val shortlisted = codes.filter(col("vec_id") =!= queryId)
-      .crossJoin(broadcast(qRow))
-      .select(col("vec_id"),
-        subScores.toIndexedSeq.reduce(_ + _).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(shortlist)
-    shortlisted
-      .join(emb.select(col("vec_id"),
-        VectorOps.toDouble(col("embedding")).as("v")), "vec_id")
-      .crossJoin(broadcast(qRow))
-      .select(col("vec_id"), col("adc_dist"),
-        VectorOps.l2sq(col("v"), col("qv")).as("l2_dist"))
-      .orderBy(col("l2_dist"), col("vec_id"))
-      .limit(k)
+    shortlistReRank(codes.filter(col("vec_id") =!= queryId)
+      .crossJoin(broadcast(qRow)), emb, qRow, pq, k, shortlist)
   }
 
   /** IVFADC — the composed faiss serving shape (Jégou et al. TPAMI'11
@@ -210,16 +224,8 @@ object ProductQuantizer {
       VectorOps.toDouble(col("embedding")).as("v"))
     // ONE pass derives cell + codes (the serving table's schema); both
     // argmins are broadcast-literal when/least chains at scan speed
-    val codeCols = pq.codebooks.zipWithIndex.map { case (book, i) =>
-      val sv = slice(col("v"), i * pq.subDim + 1, pq.subDim)
-      least(book.map { case (j, c) =>
-        struct(VectorOps.l2sq(sv, typedlit(c.toSeq)).as("d"),
-          lit(j).as("code"))
-      }.toIndexedSeq: _*).getField("code").cast("long")
-    }
     val table = IVFIndex.assignCells(vecs, centroids)
-      .select(col("vec_id"), col("cell"),
-        array(codeCols.toIndexedSeq: _*).as("codes"))
+      .select(col("vec_id"), col("cell"), codeArray(col("v"), pq).as("codes"))
     val qRow = emb.filter(col("vec_id") === queryId)
       .select(VectorOps.toDouble(col("embedding")).as("qv"))
     val cellTab = emb.sparkSession.createDataFrame(
@@ -232,26 +238,7 @@ object ProductQuantizer {
         VectorOps.l2sq(col("qv"), col("centroid")).as("cd"))
       .orderBy("cd", "cell").limit(nProbe)
       .select(col("qv"), col("cell"))
-    val subScores = pq.codebooks.zipWithIndex.map { case (book, i) =>
-      val qSub = slice(col("qv"), i * pq.subDim + 1, pq.subDim)
-      book.foldLeft(lit(0.0)) { case (acc, (j, c)) =>
-        when(col("codes").getItem(i) === j.toLong,
-          VectorOps.l2sq(qSub, typedlit(c.toSeq))).otherwise(acc)
-      }
-    }
-    val shortlisted = table.filter(col("vec_id") =!= queryId)
-      .join(broadcast(probeCells), "cell")
-      .select(col("vec_id"),
-        subScores.toIndexedSeq.reduce(_ + _).as("adc_dist"))
-      .orderBy(col("adc_dist"), col("vec_id"))
-      .limit(shortlist)
-    shortlisted
-      .join(emb.select(col("vec_id"),
-        VectorOps.toDouble(col("embedding")).as("v")), "vec_id")
-      .crossJoin(broadcast(qRow))
-      .select(col("vec_id"), col("adc_dist"),
-        VectorOps.l2sq(col("v"), col("qv")).as("l2_dist"))
-      .orderBy(col("l2_dist"), col("vec_id"))
-      .limit(k)
+    shortlistReRank(table.filter(col("vec_id") =!= queryId)
+      .join(broadcast(probeCells), "cell"), emb, qRow, pq, k, shortlist)
   }
 }

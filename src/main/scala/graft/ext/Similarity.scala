@@ -102,9 +102,17 @@ object Similarity {
         col("nrm").as("na")),
       col("id1"))
     val b = v.select(col("vec_id").as("id2"), col("v").as("vb"), col("nrm").as("nb"))
+    topKByCosine(a.join(broadcast(b), col("id1") =!= col("id2")), k)
+  }
+
+  /** The scoring and rank both kNN joins share: over candidate pairs
+    * carrying each side's vector (`va`, `vb`) and norm (`na`, `nb`), the
+    * cosine, then the `k` best `id2` per `id1` by (cosine desc, id2).
+    */
+  private def topKByCosine(pairs: DataFrame, k: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("id1").orderBy(col("cosine").desc, col("id2"))
-    a.join(broadcast(b), col("id1") =!= col("id2"))
+    pairs
       .select(col("id1"), col("id2"),
         (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
       .withColumn("rn", row_number().over(w))
@@ -156,14 +164,8 @@ object Similarity {
           col("v").as("vb"), col("nrm").as("nb")),
         col("probe") === col("bucket") && col("id1") =!= col("id2"))
       .select(col("id1"), col("id2"), col("vb"), col("nb"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("id1").orderBy(col("cosine").desc, col("id2"))
-    cands.join(bucketed.select(col("vec_id").as("id1"), col("v").as("va"),
-        col("nrm").as("na")), "id1")
-      .select(col("id1"), col("id2"),
-        (VectorOps.dot(col("va"), col("vb")) / (col("na") * col("nb"))).as("cosine"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
+    topKByCosine(cands.join(bucketed.select(col("vec_id").as("id1"),
+      col("v").as("va"), col("nrm").as("na")), "id1"), k)
   }
 
   /** Embedding-space near-duplicate pairs (cosine ≥ threshold), restricted

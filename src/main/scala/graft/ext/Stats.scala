@@ -99,6 +99,14 @@ object Stats {
       .orderBy("month")
   }
 
+  /** Per-type exact long sums of an (event_type, x) frame: the count
+    * `n`, Σx `sx` and Σx² `sxx` (a15, a33, a34).
+    */
+  def longSums(ev: DataFrame): DataFrame =
+    ev.groupBy("event_type")
+      .agg(count(lit(1)).as("n"), sum("x").as("sx"),
+        sum(col("x") * col("x")).as("sxx"))
+
   /** a15's moments shape over exact integer cents — one partial-agg
     * shuffle building (n, Σx, Σx²), then the textbook identity
     * var = (n·Σx² − (Σx)²) / (n(n−1)) evaluated exactly and divided as
@@ -107,9 +115,7 @@ object Stats {
     * margin, AnalyticsSpec); [[decimalMoments]] is the 100 TB twin.
     */
   def longMoments(ev: DataFrame): DataFrame =
-    ev.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("x").as("sx"),
-        sum(col("x") * col("x")).as("sxx"))
+    longSums(ev)
       .select(col("event_type"), col("n"),
         (col("sx").cast("double") / col("n").cast("double") / lit(100.0))
           .as("mean"),
@@ -231,6 +237,29 @@ object Stats {
       .otherwise(c.cast("long"))
   }
 
+  /** The value-grain frame a32 and a39 share: every non-`base` type ×
+    * every distinct `cents` value of `ev`, with that type's count `n_t`
+    * and the base's count `n_b` left-joined in (0 when absent), rows
+    * where both are 0 dropped.
+    */
+  private[graft] def valueGrain(ev: DataFrame, base: String): DataFrame = {
+    val grain = ev.groupBy("event_type", "cents")
+      .agg(count(lit(1)).as("cnt1"))
+    val baseG = grain.filter(col("event_type") === base)
+      .select(col("cents"), col("cnt1").as("n_b"))
+    val tst = grain.filter(col("event_type") =!= base)
+      .select(col("event_type"), col("cents"), col("cnt1").as("n_t"))
+    val vals = ev.select("cents").distinct()
+    val types = tst.select("event_type").distinct()
+    types.crossJoin(vals)
+      .join(tst, Seq("event_type", "cents"), "left")
+      .join(broadcast(baseG), Seq("cents"), "left")
+      .select(col("event_type"), col("cents"),
+        coalesce(col("n_t"), lit(0L)).as("n_t"),
+        coalesce(col("n_b"), lit(0L)).as("n_b"))
+      .filter(col("n_t") + col("n_b") > 0)
+  }
+
   /** a32 core over an arbitrary (event_type, cents) frame, ranking each
     * non-base type against `base`, with the exact quadratic/cubic rank
     * statistics (`two_u`, `tie_t`) left on DECIMAL(38,0) — full 10³⁸
@@ -242,23 +271,9 @@ object Stats {
   private[graft] def mannWhitneyCore(ev: DataFrame,
       base: String = "view"): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val grain = ev.groupBy("event_type", "cents")
-      .agg(count(lit(1)).as("cnt1"))
-    val baseG = grain.filter(col("event_type") === base)
-      .select(col("cents"), col("cnt1").as("n_b"))
-    val tst = grain.filter(col("event_type") =!= base)
-      .select(col("event_type"), col("cents"), col("cnt1").as("n_t"))
-    val vals = ev.select("cents").distinct()
-    val types = tst.select("event_type").distinct()
     val w = Window.partitionBy("event_type").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val ranked = types.crossJoin(vals)
-      .join(tst, Seq("event_type", "cents"), "left")
-      .join(broadcast(baseG), Seq("cents"), "left")
-      .select(col("event_type"), col("cents"),
-        coalesce(col("n_t"), lit(0L)).as("n_t"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-      .filter(col("n_t") + col("n_b") > 0)
+    val ranked = valueGrain(ev, base)
       .withColumn("cnt", col("n_t") + col("n_b"))
       .withColumn("cum_before", coalesce(sum("cnt").over(w), lit(0L)))
     ranked.groupBy("event_type")

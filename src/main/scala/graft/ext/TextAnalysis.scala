@@ -236,6 +236,17 @@ object TextAnalysis {
         acc => acc.getField("best")))
   }
 
+  /** The (doc_id, segs) frame both boilerplate strips read: each doc's
+    * aligned `segTokens`-token segments, spread over the session's
+    * partitions first and checkpointed (both strips read it more than
+    * once).
+    */
+  private def segmentedDocs(docs: DataFrame, segTokens: Int): DataFrame =
+    graft.PartitionOps.repartitionBeforeFanout(docs, col("doc_id"))
+      .select(col("doc_id"), tokens(col("text")).as("w"))
+      .select(col("doc_id"), segments(col("w"), segTokens).as("segs"))
+      .localCheckpoint()
+
   /** C4-style boilerplate stripping ("line dedup"; the corpus is
     * single-line, so the line unit is the aligned `segTokens`-token
     * segment): segments appearing in >= `minDf` DISTINCT documents are
@@ -258,17 +269,13 @@ object TextAnalysis {
     // exchange the whole pass (and the strip+rebuild projection, which
     // re-derives it) runs serially on the scan's partition count
     // (profiled: two ~1.2 s single-task stages at sf0.1).
-    val spread = graft.PartitionOps.repartitionBeforeFanout(
-      docs, col("doc_id"))
     // localCheckpoint (r19): perDoc feeds BOTH the df aggregate and the
     // strip+rebuild projection, and exchange reuse does not fire across
     // the two consumers (profiled: the corpus scan + tokenize+segments
     // pass ran twice per execution). One materialization — (doc_id,
     // segs), ~corpus bytes — makes the dominant per-row cost a
     // one-pass derivation; the d10/c25 checkpoint discipline.
-    val perDoc = spread.select(col("doc_id"), tokens(col("text")).as("w"))
-      .select(col("doc_id"), segments(col("w"), segTokens).as("segs"))
-      .localCheckpoint()
+    val perDoc = segmentedDocs(docs, segTokens)
     val boiler = perDoc
       .select(col("doc_id"), explode(col("segs")).as("seg"))
       .groupBy("seg").agg(countDistinct("doc_id").as("df"))
@@ -304,15 +311,11 @@ object TextAnalysis {
     // same pre-fan-out exchange as [[boilerplateStrip]] — this form pays
     // the tokenize+segments pass twice (pos side + the n_segs rebuild),
     // both previously serial on the 1-partition corpus scan
-    val spread = graft.PartitionOps.repartitionBeforeFanout(
-      docs, col("doc_id"))
     // localCheckpoint (r19): perDoc has THREE consumers here (pos's two —
     // the df aggregate and the anti-join probe — plus the n_segs rebuild
     // side), each previously re-running the scan + tokenize+segments
     // chain. One materialization, three cheap readers.
-    val perDoc = spread.select(col("doc_id"), tokens(col("text")).as("w"))
-      .select(col("doc_id"), segments(col("w"), segTokens).as("segs"))
-      .localCheckpoint()
+    val perDoc = segmentedDocs(docs, segTokens)
     val pos = perDoc.select(col("doc_id"),
       posexplode(col("segs")).as(Seq("seg_no", "seg")))
     val boiler = pos.groupBy("seg")

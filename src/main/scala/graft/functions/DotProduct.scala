@@ -16,20 +16,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * DuckDB oracle's `list_reduce`, so results stay bit-identical.
   */
 case class DotProduct(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends DoubleArrayKernel {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"dot_product requires array<double> inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = DoubleType
+  protected def sqlName: String = "dot_product"
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorKernels.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -41,6 +30,27 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProduct =
     copy(left = newLeft, right = newRight)
+}
+
+/** What [[DotProduct]] and [[L2Sq]] share: two `array<double>` children
+  * in, one double out; `sqlName` names the kernel in the type-check error.
+  */
+trait DoubleArrayKernel extends BinaryExpression {
+
+  protected def sqlName: String
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
+    val ok = Seq(left, right).forall(_.dataType match {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    })
+    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"$sqlName requires array<double> inputs, got " +
+        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
+  }
+
+  override def dataType: DataType = DoubleType
 }
 
 object VectorKernels {

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Native squared-L2 distance over two `array<double>` columns — the
   * [[DotProduct]] treatment for the OTHER hot vector kernel: the PQ
@@ -14,20 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * HOF fold it replaces — bit-identical results.
   */
 case class L2Sq(left: Expression, right: Expression)
-  extends BinaryExpression {
+  extends DoubleArrayKernel {
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(DoubleType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"l2sq requires array<double> inputs, got " +
-        s"${left.dataType.simpleString} / ${right.dataType.simpleString}")
-  }
-
-  override def dataType: DataType = DoubleType
+  protected def sqlName: String = "l2sq"
 
   override protected def nullSafeEval(a: Any, b: Any): Any =
     VectorKernels.l2sq(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])

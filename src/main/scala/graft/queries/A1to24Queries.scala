@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.etl.{Pipelines, Tables}
 import graft.etl.Pipelines.cleanSales
 import graft.ext.Stats.{decimalMoments, longMoments}
+import graft.queries.Common.{eventCents, mergedKmvEstimate, monthKmv}
 
 /** a*: aggregates — group sums, rollups, cubes, percentiles, sketches and
   * robust outlier rules. Each query's body and its DuckDB oracle sit
@@ -88,6 +89,26 @@ object A1to24Queries {
       .orderBy(col("est_n").desc, col("key"))
       .limit(topK)
   }
+
+  /** a15/a15b oracle: mean, sample variance and stddev per type from the
+    * exact sums `sx` (Σx) and `sxx` (Σx²), the two differing in the
+    * integer width those sums are taken in.
+    */
+  private def momentsSql(sx: String, sxx: String): String =
+    s"""SELECT event_type, n,
+       |       CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 AS mean,
+       |       CAST(n * sxx - sx * sx AS DOUBLE)
+       |         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 10000.0 AS var_samp,
+       |       sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+       |         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 10000.0) AS stddev
+       |FROM (SELECT event_type, COUNT(*) AS n,
+       |             $sx AS sx,
+       |             $sxx AS sxx
+       |      FROM (SELECT event_type,
+       |                   CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
+       |            FROM events)
+       |      GROUP BY event_type)
+       |ORDER BY event_type""".stripMargin
 
   /** a8b's Greenwald-Khanna accuracy (1/ε): rank error ≤ n/PctAccuracy,
     * shared with the AnalyticsSpec bound test. 10 000 → ≤ 2 ranks at the
@@ -325,24 +346,9 @@ object A1to24Queries {
     //   DECIMAL(38) flip (same partial-agg shape).
     //   One partial-agg shuffle; sqrt (correctly-rounded) not log. —
     Query("a15_group_stats", ((s, dir) => {
-      val cents = (col("value").cast(Tables.Money) * 100).cast("long")
-      longMoments(Tables.events(s, dir)
-        .select(col("event_type"), cents.as("x")))
-    }), Some(Oracle.sql(
-      """SELECT event_type, n,
-        |       CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 AS mean,
-        |       CAST(n * sxx - sx * sx AS DOUBLE)
-        |         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 10000.0 AS var_samp,
-        |       sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-        |         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 10000.0) AS stddev
-        |FROM (SELECT event_type, COUNT(*) AS n,
-        |             CAST(SUM(x) AS BIGINT) AS sx,
-        |             CAST(SUM(x * x) AS BIGINT) AS sxx
-        |      FROM (SELECT event_type,
-        |                   CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
-        |            FROM events)
-        |      GROUP BY event_type)
-        |ORDER BY event_type""".stripMargin))),
+      longMoments(eventCents(s, dir))
+    }), Some(Oracle.sql(momentsSql("CAST(SUM(x) AS BIGINT)",
+      "CAST(SUM(x * x) AS BIGINT)")))),
     // a15's 100 TB twin: identical semantics, sums in DECIMAL(38,0) so
     // the exact identity survives the scales where n·Σx² overflows 2^63
     // — see [[decimalMoments]]; the overflow is proven by a synthetic
@@ -352,24 +358,9 @@ object A1to24Queries {
     // DECIMAL(38)) sums — values coincide with a15 wherever both are
     // exact, which is the point
     Query("a15b_group_stats_decimal", ((s, dir) => {
-      val cents = (col("value").cast(Tables.Money) * 100).cast("long")
-      decimalMoments(Tables.events(s, dir)
-        .select(col("event_type"), cents.as("x")))
-    }), Some(Oracle.sql(
-      """SELECT event_type, n,
-        |       CAST(sx AS DOUBLE) / CAST(n AS DOUBLE) / 100.0 AS mean,
-        |       CAST(n * sxx - sx * sx AS DOUBLE)
-        |         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 10000.0 AS var_samp,
-        |       sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-        |         / (CAST(n AS DOUBLE) * CAST(n - 1 AS DOUBLE)) / 10000.0) AS stddev
-        |FROM (SELECT event_type, COUNT(*) AS n,
-        |             SUM(CAST(x AS HUGEINT)) AS sx,
-        |             SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT)) AS sxx
-        |      FROM (SELECT event_type,
-        |                   CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT) AS x
-        |            FROM events)
-        |      GROUP BY event_type)
-        |ORDER BY event_type""".stripMargin))),
+      decimalMoments(eventCents(s, dir))
+    }), Some(Oracle.sql(momentsSql("SUM(CAST(x AS HUGEINT))",
+      "SUM(CAST(x AS HUGEINT) * CAST(x AS HUGEINT))")))),
     // Per-group 3-sigma outliers with the a15 exact-arithmetic
     // discipline taken one step further: the flag |x−μ| > 3σ is
     // evaluated as (n·x−Σx)²·(n−1) > 9·n·(n·Σx²−(Σx)²) on exact integer
@@ -507,31 +498,12 @@ object A1to24Queries {
     // ∪ top-k(B)), so the replay is the a35 recipe per month — k
     // smallest distinct pinned hashes, the same shared-literal estimate.
     Query("a19_incremental_distinct", ((s, dir) => {
-      val sess = s
-      import sess.implicits._
       val k = 64
       val cutoff = lit("1997-06-15").cast("timestamp")
-      def sketch(rows: DataFrame): DataFrame = rows
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-          graft.functions.KmvSketch.hash60(col("o_custkey")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .agg(new graft.functions.KmvAggregator(k).toColumn.name("kmin"))
-        .toDF("month", "kmin")
       val orders = Tables.table(s, dir, "orders")
-      val standing = sketch(orders.filter(col("o_orderdate") < cutoff))
-      val delta = sketch(orders.filter(col("o_orderdate") >= cutoff))
-      standing.unionAll(delta)
-        .select(col("month"), explode(col("kmin")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .agg(new graft.functions.KmvAggregator(k).toColumn.name("kmin"))
-        .toDF("month", "kmin")
-        .select(col("month"),
-          size(col("kmin")).cast("long").as("n_kept"),
-          graft.functions.KmvSketch.estimate(col("kmin"), k)
-            .as("n_customers_est"))
-        .orderBy("month")
+      val standing = monthKmv(orders.filter(col("o_orderdate") < cutoff), k)
+      val delta = monthKmv(orders.filter(col("o_orderdate") >= cutoff), k)
+      mergedKmvEstimate(standing.unionAll(delta), k, "n_customers_est")
     }), Some(Oracle.sqlWith(
       """oh19 AS (SELECT DISTINCT strftime(o_orderdate, '%Y-%m') AS month,
         |                CAST(('0x' || substring(md5(CAST(o_custkey AS VARCHAR)),
@@ -677,16 +649,8 @@ object A1to24Queries {
     // re-truncated to k — identical to the Spark contribute-forward
     // sketch merge — then the a35 shared-literal estimate.
     Query("a22_sliding_distinct", ((s, dir) => {
-      val sess = s
-      import sess.implicits._
       val k = 64
-      val perMonth = Tables.table(s, dir, "orders")
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-          graft.functions.KmvSketch.hash60(col("o_custkey")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .agg(new graft.functions.KmvAggregator(k).toColumn.name("kmin"))
-        .toDF("month", "kmin")
+      val perMonth = monthKmv(Tables.table(s, dir, "orders"), k)
         .withColumn("idx",
           substring(col("month"), 1, 4).cast("long") * 12 +
             substring(col("month"), 6, 2).cast("long"))
@@ -694,20 +658,10 @@ object A1to24Queries {
         // fact is sketched twice (the a36 shared-lineage device)
         .localCheckpoint()
       val present = perMonth.select(col("idx").as("tgt"), col("month"))
-      perMonth
+      mergedKmvEstimate(perMonth
         .select(explode(array(col("idx"), col("idx") + 1, col("idx") + 2))
           .as("tgt"), col("kmin"))
-        .join(broadcast(present), Seq("tgt"))
-        .select(col("month"), explode(col("kmin")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .agg(new graft.functions.KmvAggregator(k).toColumn.name("kmin"))
-        .toDF("month", "kmin")
-        .select(col("month"),
-          size(col("kmin")).cast("long").as("n_kept"),
-          graft.functions.KmvSketch.estimate(col("kmin"), k)
-            .as("n_customers_3mo"))
-        .orderBy("month")
+        .join(broadcast(present), Seq("tgt")), k, "n_customers_3mo")
     }), Some(Oracle.sqlWith(
       """oh22 AS (SELECT DISTINCT strftime(o_orderdate, '%Y-%m') AS month,
         |                CAST(('0x' || substring(md5(CAST(o_custkey AS VARCHAR)),

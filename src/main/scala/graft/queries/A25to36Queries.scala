@@ -1,13 +1,14 @@
 package graft
 package queries
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Pipelines, Tables}
-import graft.ext.Stats.mannWhitneyOf
-import graft.queries.Common.{BootB, PoissonCdf60, a35OracleSql}
+import graft.ext.Stats.{longSums, mannWhitneyOf}
+import graft.queries.Common.{BootB, PoissonCdf60, a35OracleSql, eventCents, fullMeans,
+  monthKmv, percentileCi, poissonRepMeans, rankSumCtes, typeMomentsSql}
 
 /** a*: aggregates — regression and correlation moments, Gini, Pareto,
   * weighted medians, bootstrap, rank tests and KMV distinct counts. Each query's body and its DuckDB oracle sit
@@ -140,7 +141,6 @@ object A25to36Queries {
     * the derivation.
     */
   private[graft] def poissonBootstrapOf(cs0: DataFrame): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // The narrow (category, cents, rk) base feeds TWO plan branches (the
     // full-data moments and the 64-replicate explode) that later join —
     // uncheckpointed, a cold run computes the upstream clean-sales
@@ -152,47 +152,54 @@ object A25to36Queries {
     // exploded ×B frame — at 100 TB the replicate fan-out still happens
     // in-scan past the checkpoint, never materialized.
     val cs = cs0.localCheckpoint()
-    val full = cs.groupBy("category")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("cents").cast(d38)).as("s_cents"))
-      .select(col("category"), col("n_rows").cast("long").as("n_rows"),
-        expr("(1000000 * s_cents) div cast(n_rows as decimal(38,0))")
-          .cast("long").as("mean_e6"))
-    val wCol = PoissonCdf60.map(t =>
-      when(col("u") >= lit(t), 1L).otherwise(lit(0L))).reduce(_ + _)
-    val reps = cs
-      .select(col("category"), col("cents"), col("rk"),
-        explode(array((0 until BootB).map(lit): _*)).as("rep"))
-      .withColumn("u",
-        conv(substring(md5(concat_ws(":", col("rk"), col("rep"))), 1, 15),
-          16, 10).cast("long"))
-      .withColumn("w", wCol)
-      .groupBy("category", "rep")
-      .agg(sum("w").as("n_eff"),
-        sum(col("w").cast(d38) * col("cents").cast(d38)).as("s_eff"))
-      .filter(col("n_eff") > 0)
-      .select(col("category"), col("rep"),
-        expr("(1000000 * s_eff) div cast(n_eff as decimal(38,0))")
-          .cast("long").as("rep_mean_e6"))
-    val wq = Window.partitionBy("category").orderBy("rep_mean_e6", "rep")
-    val ci = reps
-      .withColumn("rn", row_number().over(wq).cast("long"))
-      .withColumn("b",
-        count(lit(1)).over(Window.partitionBy("category")).cast("long"))
-      .withColumn("lo_rank", expr("(5 * b + 199) div 200"))
-      .withColumn("hi_rank", expr("(195 * b + 199) div 200"))
-      .filter(col("rn") === col("lo_rank") || col("rn") === col("hi_rank"))
-      .groupBy("category")
-      .agg(max("b").as("b_reps"),
-        min(when(col("rn") === col("lo_rank"), col("rep_mean_e6")))
-          .as("ci_lo_e6"),
-        min(when(col("rn") === col("hi_rank"), col("rep_mean_e6")))
-          .as("ci_hi_e6"))
+    val full = fullMeans(cs, "category")
+    val ci = percentileCi(poissonRepMeans(cs, "category"), "category",
+      "rep_mean_e6")
     full.join(ci, Seq("category"))
       .select(col("category"), col("n_rows"), col("mean_e6"),
         col("b_reps"), col("ci_lo_e6"), col("ci_hi_e6"))
       .orderBy("category")
   }
+
+  /** a25/a26 input: clean sales rolled up per (category, day index `x`),
+    * with `y` the aggregate `y` of the day's exact cents `c`.
+    */
+  private def dailyRevenue(s: org.apache.spark.sql.SparkSession, dir: String,
+      y: Column): DataFrame = {
+    val cents = (col("total_price").cast(Tables.Money) * 100).cast("long")
+    Pipelines.cleanSales(s, dir)
+      .select(col("category"),
+        datediff(col("order_date"), lit("1992-01-01")).cast("long").as("x"),
+        cents.as("c"))
+      .groupBy("category", "x")
+      .agg(y.as("y"))
+  }
+
+  /** a25/a26 moment sums per category of a (category, x, y) frame, on
+    * DECIMAL(38,0): `n`, Σx, Σy, Σxy and Σx², then `extra`.
+    */
+  private def momentSums(daily: DataFrame, extra: Column*): DataFrame = {
+    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    daily.groupBy("category")
+      .agg(count(lit(1)).as("n"), Seq(
+        sum(col("x").cast(d38)).as("sx"),
+        sum(col("y").cast(d38)).as("sy"),
+        sum(col("x").cast(d38) * col("y").cast(d38)).as("sxy"),
+        sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx")) ++ extra: _*)
+  }
+
+  /** The a25/a26 exact-to-double funnel. The exact moment terms pass
+    * through LONG before DOUBLE: an int64→double cast is a single
+    * correctly-rounded hardware conversion on BOTH engines, where
+    * DuckDB's direct HUGEINT→DOUBLE is two-step (upper·2^64 + lower, two
+    * roundings) and drifts 1 ulp from Spark's BigDecimal conversion —
+    * measured on a25's fit. The funnel narrows the exactness envelope
+    * from 10^38 to 2^63 on the COMBINED terms (n·Σxy in a25 —
+    * day-index²-weighted cents, ~10^17 at gate, rescale y to whole
+    * dollars past ~$10^16 of indexed daily volume); the decimal
+    * partials themselves stay 10^38-exact.
+    */
+  private def dbl(c: Column): Column = c.cast("long").cast("double")
 
   val all: Seq[Query] = Seq(
     // Per-group OLS trend (a25): slope/intercept of daily sales against
@@ -212,31 +219,7 @@ object A25to36Queries {
     // derived from that same double, mirroring Spark's expression order
     Query("a25_group_ols", ((s, dir) => {
       val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val cents = (col("total_price").cast(Tables.Money) * 100).cast("long")
-      val daily = Pipelines.cleanSales(s, dir)
-        .select(col("category"),
-          datediff(col("order_date"), lit("1992-01-01")).cast("long").as("x"),
-          cents.as("c"))
-        .groupBy("category", "x")
-        .agg(sum("c").as("y"))
-      // The exact moment terms funnel through LONG before DOUBLE: an
-      // int64→double cast is a single correctly-rounded hardware
-      // conversion on BOTH engines, where DuckDB's direct
-      // HUGEINT→DOUBLE is two-step (upper·2^64 + lower, two roundings)
-      // and drifts 1 ulp from Spark's BigDecimal conversion — measured
-      // on this very fit. The funnel narrows the exactness envelope
-      // from 10^38 to 2^63 on the COMBINED terms (n·Σxy here —
-      // day-index²-weighted cents, ~10^17 at gate, rescale y to whole
-      // dollars past ~$10^16 of indexed daily volume); the decimal
-      // partials themselves stay 10^38-exact.
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast("long").cast("double")
-      daily.groupBy("category")
-        .agg(count(lit(1)).as("n"),
-          sum(col("x").cast(d38)).as("sx"),
-          sum(col("y").cast(d38)).as("sy"),
-          sum(col("x").cast(d38) * col("y").cast(d38)).as("sxy"),
-          sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx"))
+      momentSums(dailyRevenue(s, dir, sum("c")))
         .select(col("category"), col("n"), col("sx"), col("sy"),
           (dbl(col("n").cast(d38) * col("sxy") - col("sx") * col("sy"))
             / dbl(col("n").cast(d38) * col("sxx") - col("sx") * col("sx")))
@@ -288,21 +271,7 @@ object A25to36Queries {
     // sqrt correctly rounded on both engines
     Query("a26_group_corr", ((s, dir) => {
       val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-      val cents = (col("total_price").cast(Tables.Money) * 100).cast("long")
-      val daily = Pipelines.cleanSales(s, dir)
-        .select(col("category"),
-          datediff(col("order_date"), lit("1992-01-01")).cast("long").as("x"),
-          cents.as("c"))
-        .groupBy("category", "x")
-        .agg(expr("sum(c) div 10000").as("y"))
-      def dbl(c: org.apache.spark.sql.Column) =
-        c.cast("long").cast("double")
-      daily.groupBy("category")
-        .agg(count(lit(1)).as("n"),
-          sum(col("x").cast(d38)).as("sx"),
-          sum(col("y").cast(d38)).as("sy"),
-          sum(col("x").cast(d38) * col("y").cast(d38)).as("sxy"),
-          sum(col("x").cast(d38) * col("x").cast(d38)).as("sxx"),
+      momentSums(dailyRevenue(s, dir, expr("sum(c) div 10000")),
           sum(col("y").cast(d38) * col("y").cast(d38)).as("syy"))
         .select(col("category"), col("n").cast("long").as("n_days"),
           (dbl(col("n").cast(d38) * col("sxy") - col("sx") * col("sy"))
@@ -605,45 +574,9 @@ object A25to36Queries {
     // doubled midranks, exact tie term, the same long→double funnel
     // for z.
     Query("a32_mann_whitney", ((s, dir) => {
-      val dec = org.apache.spark.sql.types.DecimalType(12, 2)
-      mannWhitneyOf(Tables.events(s, dir)
-        .select(col("event_type"),
-          (col("value").cast(dec) * 100).cast("long").as("cents")))
+      mannWhitneyOf(eventCents(s, dir, "cents"))
     }), Some(Oracle.sqlWith(
-      """ev32 AS (SELECT event_type,
-        |                CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |                  AS cents
-        |         FROM events),
-        |gr32 AS (SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS cnt1
-        |         FROM ev32 GROUP BY 1, 2),
-        |base32 AS (SELECT cents, cnt1 AS n_b FROM gr32
-        |           WHERE event_type = 'view'),
-        |tst32 AS (SELECT event_type, cents, cnt1 AS n_t FROM gr32
-        |          WHERE event_type <> 'view'),
-        |keys32 AS (SELECT t.event_type, v.cents
-        |           FROM (SELECT DISTINCT event_type FROM tst32) t,
-        |                (SELECT DISTINCT cents FROM ev32) v),
-        |rk32 AS (SELECT k.event_type, k.cents,
-        |                COALESCE(t.n_t, 0) AS n_t,
-        |                COALESCE(b.n_b, 0) AS n_b,
-        |                COALESCE(t.n_t, 0) + COALESCE(b.n_b, 0) AS cnt
-        |         FROM keys32 k
-        |         LEFT JOIN tst32 t ON k.event_type = t.event_type
-        |                          AND k.cents = t.cents
-        |         LEFT JOIN base32 b ON k.cents = b.cents
-        |         WHERE COALESCE(t.n_t, 0) + COALESCE(b.n_b, 0) > 0),
-        |cb32 AS (SELECT event_type, cents, n_t, n_b, cnt,
-        |                COALESCE(SUM(cnt) OVER (PARTITION BY event_type
-        |                  ORDER BY cents
-        |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |                  0) AS cum_before
-        |         FROM rk32),
-        |ag32 AS (SELECT event_type,
-        |                CAST(SUM(n_t) AS BIGINT) AS n1,
-        |                CAST(SUM(n_b) AS BIGINT) AS n2,
-        |                CAST(SUM(CAST(n_t AS HUGEINT)
-        |                  * (2 * cum_before + cnt + 1)) AS HUGEINT)
-        |                  AS two_r1,
+      rankSumCtes("32") + """,
         |                CAST(SUM(CAST(cnt AS HUGEINT) * cnt * cnt - cnt)
         |                  AS HUGEINT) AS tie_t
         |         FROM cb32 GROUP BY event_type),
@@ -677,13 +610,7 @@ object A25to36Queries {
     // pinned expression trees for t and the Welch–Satterthwaite df —
     // longs funnel to doubles the same way on both engines.
     Query("a33_welch_ttest", ((s, dir) => {
-      val dec = org.apache.spark.sql.types.DecimalType(12, 2)
-      val m = Tables.events(s, dir)
-        .select(col("event_type"),
-          (col("value").cast(dec) * 100).cast("long").as("x"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"),
-          sum(col("x") * col("x")).as("sxx"))
+      val m = longSums(eventCents(s, dir))
       val base = m.filter(col("event_type") === "view")
         .select(col("n").as("n2"), col("sx").as("sx2"),
           col("sxx").as("sxx2"))
@@ -712,14 +639,7 @@ object A25to36Queries {
                       / cast(n2 - 1 as double))""").as("df"))
         .orderBy("event_type")
     }), Some(Oracle.sqlWith(
-      """mo33 AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |                CAST(SUM(x) AS BIGINT) AS sx,
-        |                CAST(SUM(x * x) AS BIGINT) AS sxx
-        |         FROM (SELECT event_type,
-        |                      CAST(CAST(value AS DECIMAL(12,2)) * 100
-        |                        AS BIGINT) AS x
-        |               FROM events)
-        |         GROUP BY event_type),
+      typeMomentsSql("mo33") + """,
         |bs33 AS (SELECT n AS n2, sx AS sx2, sxx AS sxx2 FROM mo33
         |         WHERE event_type = 'view'),
         |tv33 AS (SELECT m.event_type, m.n, m.sx, m.sxx, b.n2, b.sx2, b.sxx2,
@@ -761,14 +681,8 @@ object A25to36Queries {
     // a34 oracle: same moments, same pivot-to-columns, same fixed-order
     // expression trees for SSB/SSW/F
     Query("a34_anova_f", ((s, dir) => {
-      val dec = org.apache.spark.sql.types.DecimalType(12, 2)
       val types = Seq("click", "error", "purchase", "signup", "view")
-      val m = Tables.events(s, dir)
-        .select(col("event_type"),
-          (col("value").cast(dec) * 100).cast("long").as("x"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"),
-          sum(col("x") * col("x")).as("sxx"))
+      val m = longSums(eventCents(s, dir))
       val aggCols =
         types.map(t => max(when(col("event_type") === t, col("n")))
           .as(s"n_$t")) ++
@@ -803,14 +717,7 @@ object A25to36Queries {
           ((col("ssb") / (col("k") - 1L).cast("double")) /
             (col("ssw") / (col("n") - col("k")).cast("double"))).as("f"))
     }), Some(Oracle.sqlWith(
-      """mo34 AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
-        |                CAST(SUM(x) AS BIGINT) AS sx,
-        |                CAST(SUM(x * x) AS BIGINT) AS sxx
-        |         FROM (SELECT event_type,
-        |                      CAST(CAST(value AS DECIMAL(12,2)) * 100
-        |                        AS BIGINT) AS x
-        |               FROM events)
-        |         GROUP BY event_type),
+      typeMomentsSql("mo34") + """,
         |pv34 AS (SELECT
         |           MAX(CASE WHEN event_type = 'click' THEN n END) AS n_click,
         |           MAX(CASE WHEN event_type = 'error' THEN n END) AS n_error,
@@ -915,16 +822,8 @@ object A25to36Queries {
     // the a35 shared literals and the (ρ/m)·D̂ product in the same
     // left-to-right IEEE order as the Spark select.
     Query("a36_kmv_retention_overlap", ((s, dir) => {
-      val sess = s
-      import sess.implicits._
       val k = 64
-      val sk = Tables.table(s, dir, "orders")
-        .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
-          graft.functions.KmvSketch.hash60(col("o_custkey")).as("h"))
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .agg(new graft.functions.KmvAggregator(k).toColumn.name("kmin"))
-        .toDF("month", "k1")
+      val sk = monthKmv(Tables.table(s, dir, "orders"), k, "k1")
         // both join sides read this |months|-row table; without the
         // truncation Spark derives the sketch TWICE from the fact scan —
         // the dominant cost at scale (the s7/b13 shared-lineage device)

@@ -6,8 +6,10 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.etl.{Pipelines, Tables}
-import graft.ext.Stats.{kendallTauOf, loudLong, mannWhitneyCore}
-import graft.queries.Common.{BenfordE9, BootB, PoissonCdf60, monthlyNationCents}
+import graft.ext.Stats.{kendallTauOf, loudLong, mannWhitneyCore, valueGrain}
+import graft.queries.Common.{BenfordE9, BootB, PoissonCdf60, eventCents, fullMeans,
+  monthlyNationCents, monthlyNationCentsSql, percentileCi, poissonRepMeans, rankSumCtes,
+  valueGrainCtes}
 
 /** a*: aggregates — goodness-of-fit and rank statistics (KS, Benford,
   * Theil–Sen, contingency, runs, Spearman, Kendall, Cliff, bootstrap
@@ -105,7 +107,6 @@ object A37to48Queries {
     */
   private[graft] def bootstrapDiffOf(ev0: DataFrame,
       base: String = "view"): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
     // the narrow frame feeds the full-means and replicate branches —
     // the a31 checkpoint device — and is REPARTITIONED first with an
     // EXPLICIT partition count: the events parquet is one file → one
@@ -119,28 +120,8 @@ object A37to48Queries {
     // cleaned-fact cache.
     val ev = PartitionOps.repartitionBeforeFanout(ev0, col("rk"))
       .localCheckpoint()
-    val full = ev.groupBy("event_type")
-      .agg(count(lit(1)).as("n_rows"),
-        sum(col("cents").cast(d38)).as("s_cents"))
-      .select(col("event_type"), col("n_rows").cast("long").as("n_rows"),
-        expr("(1000000 * s_cents) div cast(n_rows as decimal(38,0))")
-          .cast("long").as("mean_e6"))
-    val wCol = PoissonCdf60.map(t =>
-      when(col("u") >= lit(t), 1L).otherwise(lit(0L))).reduce(_ + _)
-    val reps = ev
-      .select(col("event_type"), col("cents"), col("rk"),
-        explode(array((0 until BootB).map(lit): _*)).as("rep"))
-      .withColumn("u",
-        conv(substring(md5(concat_ws(":", col("rk"), col("rep"))), 1, 15),
-          16, 10).cast("long"))
-      .withColumn("w", wCol)
-      .groupBy("event_type", "rep")
-      .agg(sum("w").as("n_eff"),
-        sum(col("w").cast(d38) * col("cents").cast(d38)).as("s_eff"))
-      .filter(col("n_eff") > 0)
-      .select(col("event_type"), col("rep"),
-        expr("(1000000 * s_eff) div cast(n_eff as decimal(38,0))")
-          .cast("long").as("rep_mean_e6"))
+    val full = fullMeans(ev, "event_type")
+    val reps = poissonRepMeans(ev, "event_type")
       // the |types|·B rollup feeds BOTH diff sides — without this
       // checkpoint the ×B md5 explode (the only corpus-sized branch)
       // runs twice (measured 2× the operator)
@@ -151,18 +132,7 @@ object A37to48Queries {
       .join(broadcast(baseReps), Seq("rep"))
       .select(col("event_type"), col("rep"),
         (col("rep_mean_e6") - col("base_rep_mean")).as("d_e6"))
-    val wq = Window.partitionBy("event_type").orderBy("d_e6", "rep")
-    val ci = diffs
-      .withColumn("rn", row_number().over(wq).cast("long"))
-      .withColumn("b",
-        count(lit(1)).over(Window.partitionBy("event_type")).cast("long"))
-      .withColumn("lo_rank", expr("(5 * b + 199) div 200"))
-      .withColumn("hi_rank", expr("(195 * b + 199) div 200"))
-      .filter(col("rn") === col("lo_rank") || col("rn") === col("hi_rank"))
-      .groupBy("event_type")
-      .agg(max("b").as("b_reps"),
-        min(when(col("rn") === col("lo_rank"), col("d_e6"))).as("ci_lo_e6"),
-        min(when(col("rn") === col("hi_rank"), col("d_e6"))).as("ci_hi_e6"))
+    val ci = percentileCi(diffs, "event_type", "d_e6")
     val baseFull = full.filter(col("event_type") === base)
       .select(col("mean_e6").as("base_mean_e6"))
     full.filter(col("event_type") =!= base)
@@ -252,32 +222,18 @@ object A37to48Queries {
   }
 
   /** a39 core over an arbitrary (event_type, cents) frame, testing each
-    * non-base type's empirical CDF against `base`'s. Shares a32's
-    * value-grain frame (types × distinct values, counts left-joined in)
-    * so the two tests stay structurally comparable. See the a39
+    * non-base type's empirical CDF against `base`'s. Reads a32's
+    * value-grain frame ([[Stats.valueGrain]]: types × distinct values,
+    * counts left-joined in) so the two tests stay structurally comparable. See the a39
     * registry comment.
     */
   private[graft] def ksTestOf(ev: DataFrame,
       base: String = "view"): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val grain = ev.groupBy("event_type", "cents")
-      .agg(count(lit(1)).as("cnt1"))
-    val baseG = grain.filter(col("event_type") === base)
-      .select(col("cents"), col("cnt1").as("n_b"))
-    val tst = grain.filter(col("event_type") =!= base)
-      .select(col("event_type"), col("cents"), col("cnt1").as("n_t"))
-    val vals = ev.select("cents").distinct()
-    val types = tst.select("event_type").distinct()
     val wCum = Window.partitionBy("event_type").orderBy("cents")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("event_type")
-    val frame = types.crossJoin(vals)
-      .join(tst, Seq("event_type", "cents"), "left")
-      .join(broadcast(baseG), Seq("cents"), "left")
-      .select(col("event_type"), col("cents"),
-        coalesce(col("n_t"), lit(0L)).as("n_t"),
-        coalesce(col("n_b"), lit(0L)).as("n_b"))
-      .filter(col("n_t") + col("n_b") > 0)
+    val frame = valueGrain(ev, base)
       .withColumn("cum_t", sum("n_t").over(wCum))
       .withColumn("cum_b", sum("n_b").over(wCum))
       .withColumn("nn1", sum("n_t").over(wAll))
@@ -307,6 +263,33 @@ object A37to48Queries {
           .as("ks"))
       .orderBy("event_type")
   }
+
+  /** a42/a43 oracle CTEs, each name suffixed `sfx`: the segment ×
+    * priority cell counts `cc`, the row, column and grand totals, and the
+    * full grid `gr` with each cell's expected count.
+    */
+  private def contingencyCtes(sfx: String): String =
+    s"""cc$sfx AS (SELECT c.c_mktsegment AS segment,
+       |                o.o_orderpriority AS priority,
+       |                CAST(COUNT(*) AS BIGINT) AS n_obs
+       |         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
+       |         GROUP BY 1, 2),
+       |rt$sfx AS (SELECT segment, CAST(SUM(n_obs) AS BIGINT) AS row_tot
+       |         FROM cc$sfx GROUP BY 1),
+       |ct$sfx AS (SELECT priority, CAST(SUM(n_obs) AS BIGINT) AS col_tot
+       |         FROM cc$sfx GROUP BY 1),
+       |tt$sfx AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_total,
+       |                CAST(COUNT(DISTINCT segment) AS BIGINT) AS r_levels,
+       |                CAST(COUNT(DISTINCT priority) AS BIGINT) AS c_levels
+       |         FROM cc$sfx),
+       |gr$sfx AS (SELECT segment, priority,
+       |                CAST(COALESCE(n_obs, 0) AS BIGINT) AS n_obs,
+       |                row_tot, col_tot, n_total, r_levels, c_levels,
+       |                CAST(row_tot AS DOUBLE) * CAST(col_tot AS DOUBLE)
+       |                  / CAST(n_total AS DOUBLE) AS expected
+       |         FROM rt$sfx CROSS JOIN ct$sfx
+       |         LEFT JOIN cc$sfx USING (segment, priority)
+       |         CROSS JOIN tt$sfx)""".stripMargin
 
   val all: Seq[Query] = Seq(
     // — MAD robust outliers (a37): per-category outlier census via the
@@ -458,24 +441,9 @@ object A37to48Queries {
     // windows, the DECIMAL-lifted cleared-denominator max, and the
     // identical pinned double funnel for the scaled statistic
     Query("a39_ks_test", ((s, dir) => {
-      val dec = org.apache.spark.sql.types.DecimalType(12, 2)
-      ksTestOf(Tables.events(s, dir)
-        .select(col("event_type"),
-          (col("value").cast(dec) * 100).cast("long").as("cents")))
+      ksTestOf(eventCents(s, dir, "cents"))
     }), Some(Oracle.sqlWith(
-      """ev39 AS (SELECT event_type,
-        |                CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |                  AS cents
-        |         FROM events),
-        |gr39 AS (SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS cnt1
-        |         FROM ev39 GROUP BY 1, 2),
-        |base39 AS (SELECT cents, cnt1 AS n_b FROM gr39
-        |           WHERE event_type = 'view'),
-        |tst39 AS (SELECT event_type, cents, cnt1 AS n_t FROM gr39
-        |          WHERE event_type <> 'view'),
-        |keys39 AS (SELECT t.event_type, v.cents
-        |           FROM (SELECT DISTINCT event_type FROM tst39) t,
-        |                (SELECT DISTINCT cents FROM ev39) v),
+      valueGrainCtes("39") + """,
         |fr39 AS (SELECT k.event_type, k.cents,
         |                COALESCE(t.n_t, 0) AS n_t,
         |                COALESCE(b.n_b, 0) AS n_b
@@ -649,27 +617,7 @@ object A37to48Queries {
             sqrt(col("expected"))).as("pearson_resid"))
         .orderBy("segment", "priority")
     }), Some(Oracle.sqlWith(
-      """cc42 AS (SELECT c.c_mktsegment AS segment,
-        |                o.o_orderpriority AS priority,
-        |                CAST(COUNT(*) AS BIGINT) AS n_obs
-        |         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |         GROUP BY 1, 2),
-        |rt42 AS (SELECT segment, CAST(SUM(n_obs) AS BIGINT) AS row_tot
-        |         FROM cc42 GROUP BY 1),
-        |ct42 AS (SELECT priority, CAST(SUM(n_obs) AS BIGINT) AS col_tot
-        |         FROM cc42 GROUP BY 1),
-        |tt42 AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_total,
-        |                CAST(COUNT(DISTINCT segment) AS BIGINT) AS r_levels,
-        |                CAST(COUNT(DISTINCT priority) AS BIGINT) AS c_levels
-        |         FROM cc42),
-        |gr42 AS (SELECT segment, priority,
-        |                CAST(COALESCE(n_obs, 0) AS BIGINT) AS n_obs,
-        |                row_tot, col_tot, n_total, r_levels, c_levels,
-        |                CAST(row_tot AS DOUBLE) * CAST(col_tot AS DOUBLE)
-        |                  / CAST(n_total AS DOUBLE) AS expected
-        |         FROM rt42 CROSS JOIN ct42
-        |         LEFT JOIN cc42 USING (segment, priority)
-        |         CROSS JOIN tt42)""".stripMargin,
+      contingencyCtes("42"),
       """SELECT segment, priority, n_obs, row_tot, col_tot, n_total,
         |       expected,
         |       (CAST(n_obs AS DOUBLE) - expected) / sqrt(expected)
@@ -715,27 +663,7 @@ object A37to48Queries {
               least(col("r_levels") - 1L, col("c_levels") - 1L)
                 .cast("double"))).as("cramers_v"))
     }), Some(Oracle.sqlWith(
-      """cc43 AS (SELECT c.c_mktsegment AS segment,
-        |                o.o_orderpriority AS priority,
-        |                CAST(COUNT(*) AS BIGINT) AS n_obs
-        |         FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
-        |         GROUP BY 1, 2),
-        |rt43 AS (SELECT segment, CAST(SUM(n_obs) AS BIGINT) AS row_tot
-        |         FROM cc43 GROUP BY 1),
-        |ct43 AS (SELECT priority, CAST(SUM(n_obs) AS BIGINT) AS col_tot
-        |         FROM cc43 GROUP BY 1),
-        |tt43 AS (SELECT CAST(SUM(n_obs) AS BIGINT) AS n_total,
-        |                CAST(COUNT(DISTINCT segment) AS BIGINT) AS r_levels,
-        |                CAST(COUNT(DISTINCT priority) AS BIGINT) AS c_levels
-        |         FROM cc43),
-        |gr43 AS (SELECT segment, priority,
-        |                CAST(COALESCE(n_obs, 0) AS BIGINT) AS n_obs,
-        |                row_tot, col_tot, n_total, r_levels, c_levels,
-        |                CAST(row_tot AS DOUBLE) * CAST(col_tot AS DOUBLE)
-        |                  / CAST(n_total AS DOUBLE) AS expected
-        |         FROM rt43 CROSS JOIN ct43
-        |         LEFT JOIN cc43 USING (segment, priority)
-        |         CROSS JOIN tt43),
+      contingencyCtes("43") + """,
         |ch43 AS (SELECT MAX(n_total) AS n_total,
         |                MAX(r_levels) AS r_levels,
         |                MAX(c_levels) AS c_levels,
@@ -808,14 +736,7 @@ object A37to48Queries {
           ((col("runs").cast("double") - mu) / sigma).as("z"))
         .orderBy("nation")
     }), Some(Oracle.sqlWith(
-      """sp44 AS (SELECT n.n_name AS nation,
-        |                strftime(o.o_orderdate, '%Y-%m') AS month,
-        |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
-        |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
-        |         FROM orders o
-        |         JOIN customer c ON o.o_custkey = c.c_custkey
-        |         JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |         GROUP BY 1, 2),
+      monthlyNationCentsSql("sp44") + """,
         |ym44 AS (SELECT nation,
         |                CAST(substring(month, 1, 4) AS BIGINT) * 12
         |                  + CAST(substring(month, 6, 2) AS BIGINT) AS ym,
@@ -1046,45 +967,9 @@ object A37to48Queries {
     // margin/delta/effect projection — δ as one HUGEINT→DOUBLE
     // division, effect class by integer cross-multiplication
     Query("a47_cliffs_delta", ((s, dir) => {
-      val dec = org.apache.spark.sql.types.DecimalType(12, 2)
-      cliffsDeltaOf(Tables.events(s, dir)
-        .select(col("event_type"),
-          (col("value").cast(dec) * 100).cast("long").as("cents")))
+      cliffsDeltaOf(eventCents(s, dir, "cents"))
     }), Some(Oracle.sqlWith(
-      """ev47 AS (SELECT event_type,
-        |                CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
-        |                  AS cents
-        |         FROM events),
-        |gr47 AS (SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS cnt1
-        |         FROM ev47 GROUP BY 1, 2),
-        |base47 AS (SELECT cents, cnt1 AS n_b FROM gr47
-        |           WHERE event_type = 'view'),
-        |tst47 AS (SELECT event_type, cents, cnt1 AS n_t FROM gr47
-        |          WHERE event_type <> 'view'),
-        |keys47 AS (SELECT t.event_type, v.cents
-        |           FROM (SELECT DISTINCT event_type FROM tst47) t,
-        |                (SELECT DISTINCT cents FROM ev47) v),
-        |rk47 AS (SELECT k.event_type, k.cents,
-        |                COALESCE(t.n_t, 0) AS n_t,
-        |                COALESCE(b.n_b, 0) AS n_b,
-        |                COALESCE(t.n_t, 0) + COALESCE(b.n_b, 0) AS cnt
-        |         FROM keys47 k
-        |         LEFT JOIN tst47 t ON k.event_type = t.event_type
-        |                          AND k.cents = t.cents
-        |         LEFT JOIN base47 b ON k.cents = b.cents
-        |         WHERE COALESCE(t.n_t, 0) + COALESCE(b.n_b, 0) > 0),
-        |cb47 AS (SELECT event_type, cents, n_t, n_b, cnt,
-        |                COALESCE(SUM(cnt) OVER (PARTITION BY event_type
-        |                  ORDER BY cents
-        |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
-        |                  0) AS cum_before
-        |         FROM rk47),
-        |ag47 AS (SELECT event_type,
-        |                CAST(SUM(n_t) AS BIGINT) AS n1,
-        |                CAST(SUM(n_b) AS BIGINT) AS n2,
-        |                CAST(SUM(CAST(n_t AS HUGEINT)
-        |                  * (2 * cum_before + cnt + 1)) AS HUGEINT)
-        |                  AS two_r1
+      rankSumCtes("47") + """
         |         FROM cb47 GROUP BY event_type),
         |st47 AS (SELECT event_type, n1, n2,
         |                (two_r1 - CAST(n1 AS HUGEINT) * (n1 + 1))

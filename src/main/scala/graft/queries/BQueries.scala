@@ -134,32 +134,44 @@ object BQueries {
       .orderBy("dur_day")
   }
 
+  /** b1's gap-islands rule: `ev` with a per-user `sess_id` that steps
+    * when more than 30 minutes pass between consecutive events (b1, b9).
+    */
+  private def sessionized(ev: DataFrame): DataFrame = {
+    val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    val us = unix_micros(col("ts"))
+    val newSess = when(lag(us, 1).over(byUser).isNull ||
+      us - lag(us, 1).over(byUser) > 1800L * 1000000L, 1).otherwise(0)
+    ev.withColumn("sess_id", sum(newSess)
+      .over(byUser.rowsBetween(Window.unboundedPreceding, 0)).cast("long"))
+  }
+
+  /** b1/b1b oracle: gap-islands sessions, a new session when the gap
+    * compares `gapCmp` (`>` for b1, `>=` for b1b's native rule) to 30 min.
+    */
+  private def sessionsSql(gapCmp: String): String =
+    s"""SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id, COUNT(*) AS n_events,
+       |       MIN(ts) AS session_start, MAX(ts) AS session_end
+       |FROM (SELECT user_id, ts,
+       |             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
+       |                                 ROWS UNBOUNDED PRECEDING) AS sess_id
+       |      FROM (SELECT user_id, ts, event_id,
+       |                   CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
+       |                          OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) $gapCmp 1800000000
+       |                        THEN 1 ELSE 0 END AS new_sess
+       |            FROM events))
+       |GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin
+
   val all: Seq[Query] = Seq(
     // — sessionization (batch islands; streaming variant in st*) —
     Query("b1_sessionize", ((s, dir) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val us = unix_micros(col("ts"))
-      val newSess = when(lag(us, 1).over(byUser).isNull ||
-        us - lag(us, 1).over(byUser) > 1800L * 1000000L, 1).otherwise(0)
-      Tables.events(s, dir)
-        .withColumn("sess_id", sum(newSess)
-          .over(byUser.rowsBetween(Window.unboundedPreceding, 0)).cast("long"))
+      sessionized(Tables.events(s, dir))
         .groupBy("user_id", "sess_id")
         .agg(count(lit(1)).as("n_events"),
           min("ts").as("session_start"), max("ts").as("session_end"))
         .orderBy("user_id", "sess_id")
     }), Some(Oracle.sql(
-      """SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id, COUNT(*) AS n_events,
-        |       MIN(ts) AS session_start, MAX(ts) AS session_end
-        |FROM (SELECT user_id, ts,
-        |             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                 ROWS UNBOUNDED PRECEDING) AS sess_id
-        |      FROM (SELECT user_id, ts, event_id,
-        |                   CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                          OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) > 1800000000
-        |                        THEN 1 ELSE 0 END AS new_sess
-        |            FROM events))
-        |GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin))),
+      sessionsSql(">")))),
     // — b1's NATIVE twin: batch sessionization via Spark's built-in
     //   session_window (the same operator st4 uses on the stream) —
     //   one groupBy, no lag/running-sum window chain; Catalyst plans
@@ -189,17 +201,7 @@ object BQueries {
           col("session_start"), col("session_end"))
         .orderBy("user_id", "sess_id")
     }), Some(Oracle.sql(
-      """SELECT user_id, CAST(sess_id AS BIGINT) AS sess_id, COUNT(*) AS n_events,
-        |       MIN(ts) AS session_start, MAX(ts) AS session_end
-        |FROM (SELECT user_id, ts,
-        |             SUM(new_sess) OVER (PARTITION BY user_id ORDER BY ts, event_id
-        |                                 ROWS UNBOUNDED PRECEDING) AS sess_id
-        |      FROM (SELECT user_id, ts, event_id,
-        |                   CASE WHEN LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
-        |                          OR epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) >= 1800000000
-        |                        THEN 1 ELSE 0 END AS new_sess
-        |            FROM events))
-        |GROUP BY user_id, sess_id ORDER BY user_id, sess_id""".stripMargin))),
+      sessionsSql(">=")))),
     // — ordered funnel (signup → click → purchase): the canonical
     //   conversion query, with STRICT ordering — each stage's first
     //   qualifying event must be at or after the previous stage's (a
@@ -526,13 +528,7 @@ object BQueries {
     //   up to the path rollup. —
     // b9 oracle: b1's session statement + ordered string_agg + global top-20
     Query("b9_top_paths", ((s, dir) => {
-      val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-      val us = unix_micros(col("ts"))
-      val newSess = when(lag(us, 1).over(byUser).isNull ||
-        us - lag(us, 1).over(byUser) > 1800L * 1000000L, 1).otherwise(0)
-      Tables.events(s, dir)
-        .withColumn("sess_id", sum(newSess)
-          .over(byUser.rowsBetween(Window.unboundedPreceding, 0)).cast("long"))
+      sessionized(Tables.events(s, dir))
         .groupBy("user_id", "sess_id")
         .agg(array_join(transform(
           array_sort(collect_list(struct(unix_micros(col("ts")).as("us"),

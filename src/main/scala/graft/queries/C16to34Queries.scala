@@ -11,7 +11,7 @@ import graft.ext.Corpus.{LnCap, lnE12}
 import graft.ext.DocFixtures.{docs, docsDup}
 import graft.queries.Common.{decontamIndex, decontamSplit, docsDupSql, docsGopher,
   docsGopherSql, docsNearC, gopherLines, gopherLinesSql, jaccardCtes,
-  lnValuesSql, nearCands, nearCands05, scoreSql, shingleSqlOver,
+  lnValuesSql, nearCands, nearCands05, qualityBin, scoreSql, shingleSqlOver, splitShingleCtes,
   tokensSql}
 
 /** c*: corpus curation — mixing weights, dedup survivors, boilerplate
@@ -64,12 +64,12 @@ object C16to34Queries {
       .orderBy("doc_id")
   }
 
-  /** c20 core: per-source total-variation
-    * distance from the corpus token distribution — see the registry
-    * entry's comment for the exact-arithmetic derivation.
+  /** The token counts c20 and c27 share: one row per (source, tok)
+    * with its count `a`, the token's corpus count `b`, the source's
+    * token total `n_s` and the corpus total `n_tot`; and the per-token
+    * corpus frame (`tok`, `b`, `n_tot`).
     */
-  private[graft] def domainShift(docsWithSource: DataFrame): DataFrame = {
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+  private def tokenCounts(docsWithSource: DataFrame): (DataFrame, DataFrame) = {
     val srcCounts = docsWithSource
       .select(col("source"),
         explode(TextAnalysis.tokens(col("text"))).as("tok"))
@@ -77,9 +77,34 @@ object C16to34Queries {
     val corpusCounts = srcCounts.groupBy("tok").agg(sum("a").as("b"))
     val nSrc = srcCounts.groupBy("source").agg(sum("a").as("n_s"))
     val nTot = nSrc.agg(sum("n_s").as("n_tot"))
-    srcCounts.join(corpusCounts, "tok")
+    (srcCounts.join(corpusCounts, "tok")
       .join(broadcast(nSrc), "source")
-      .crossJoin(broadcast(nTot))
+      .crossJoin(broadcast(nTot)),
+      corpusCounts.crossJoin(broadcast(nTot)))
+  }
+
+  /** c20/c27 oracle CTEs, each name suffixed `sfx`: the per-(source,
+    * tok) counts `sc`, the corpus count `cc` of each token, the source
+    * totals `ns` and the corpus total `nt` ([[tokenCounts]] in SQL).
+    */
+  private def tokenCountCtes(sfx: String): String =
+    s"""sc$sfx AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS a
+       |         FROM (SELECT source, unnest($tokensSql) AS tok
+       |               FROM documents)
+       |         GROUP BY source, tok),
+       |cc$sfx AS (SELECT tok, CAST(SUM(a) AS BIGINT) AS b
+       |         FROM sc$sfx GROUP BY tok),
+       |ns$sfx AS (SELECT source, CAST(SUM(a) AS BIGINT) AS n_s
+       |         FROM sc$sfx GROUP BY source),
+       |nt$sfx AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_tot FROM ns$sfx)""".stripMargin
+
+  /** c20 core: per-source total-variation
+    * distance from the corpus token distribution — see the registry
+    * entry's comment for the exact-arithmetic derivation.
+    */
+  private[graft] def domainShift(docsWithSource: DataFrame): DataFrame = {
+    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    tokenCounts(docsWithSource)._1
       .groupBy(col("source"), col("n_s"), col("n_tot"))
       .agg(sum(abs(col("a").cast(d38) * col("n_tot").cast(d38)
           - col("b").cast(d38) * col("n_s").cast(d38))).as("num_present"),
@@ -136,19 +161,11 @@ object C16to34Queries {
     */
   private[graft] def chi2Drift(docsWithSource: DataFrame): DataFrame = {
     val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    val srcCounts = docsWithSource
-      .select(col("source"),
-        explode(TextAnalysis.tokens(col("text"))).as("tok"))
-      .groupBy("source", "tok").agg(count(lit(1)).as("a"))
-    val corpusCounts = srcCounts.groupBy("tok").agg(sum("a").as("b"))
-    val nSrc = srcCounts.groupBy("source").agg(sum("a").as("n_s"))
-    val nTot = nSrc.agg(sum("n_s").as("n_tot"))
-    val rTot = corpusCounts.crossJoin(broadcast(nTot))
+    val (counts, corpus) = tokenCounts(docsWithSource)
+    val rTot = corpus
       .agg(sum(expr("""(1000000000 * cast(b as decimal(38,0)))
                        div cast(n_tot as decimal(38,0))""")).as("r_tot"))
-    srcCounts.join(corpusCounts, "tok")
-      .join(broadcast(nSrc), "source")
-      .crossJoin(broadcast(nTot))
+    counts
       .select(col("source"), col("n_s"),
         expr("""(1000000000 * cast(a as decimal(38,0)))
                 div cast(n_s as decimal(38,0))""").as("ro"),
@@ -418,15 +435,7 @@ object C16to34Queries {
     // + the absent-token remainder, the same pinned division chain
     Query("c20_domain_shift", ((s, dir) =>
       domainShift(docs(s, dir).select("source", "text")).orderBy("source")), Some(Oracle.sqlWith(
-      s"""sc20 AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS a
-         |         FROM (SELECT source, unnest($tokensSql) AS tok
-         |               FROM documents)
-         |         GROUP BY source, tok),
-         |cc20 AS (SELECT tok, CAST(SUM(a) AS BIGINT) AS b
-         |         FROM sc20 GROUP BY tok),
-         |ns20 AS (SELECT source, CAST(SUM(a) AS BIGINT) AS n_s
-         |         FROM sc20 GROUP BY source),
-         |nt20 AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_tot FROM ns20),
+      tokenCountCtes("20") + """,
          |pr20 AS (SELECT s.source, n.n_s, t.n_tot,
          |           SUM(abs(CAST(s.a AS HUGEINT) * CAST(t.n_tot AS HUGEINT)
          |               - CAST(c.b AS HUGEINT) * CAST(n.n_s AS HUGEINT)))
@@ -473,11 +482,7 @@ object C16to34Queries {
         expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY quality_score)")
           .as("c25"))
       scored.crossJoin(broadcast(cuts))
-        .withColumn("bin",
-          when(col("quality_score") >= col("c75"), 1L)
-            .when(col("quality_score") >= col("c50"), 2L)
-            .when(col("quality_score") >= col("c25"), 3L)
-            .otherwise(4L))
+        .withColumn("bin", qualityBin)
         .groupBy("bin")
         .agg(count(lit(1)).as("n_docs"), sum("is_dup").as("n_dup"))
         .select(col("bin"), col("n_docs"), col("n_dup"),
@@ -534,18 +539,7 @@ object C16to34Queries {
         .select("doc_id")
         .orderBy("doc_id")
     }), Some(Oracle.sqlWith(
-      s"""$docsDupSql,
-         |split23 AS (SELECT doc_id,
-         |             CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '28' THEN 'train'
-         |                  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '3c' THEN 'valid'
-         |                  ELSE 'test' END AS split
-         |           FROM docs_dup),
-         |shing23 AS (SELECT DISTINCT doc_id, sh FROM (
-         |  SELECT doc_id, unnest(CASE WHEN len(w) >= 7
-         |    THEN list_transform(range(len(w) - 6),
-         |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7])
-         |    ELSE [array_to_string(w, ' ')] END) AS sh
-         |  FROM (SELECT doc_id, $tokensSql AS w FROM docs_dup))),
+      splitShingleCtes("23") + """,
          |ev23 AS (SELECT DISTINCT s.sh FROM shing23 s
          |         JOIN split23 p ON s.doc_id = p.doc_id
          |         WHERE p.split <> 'train'),
@@ -736,15 +730,7 @@ object C16to34Queries {
     // absent-mass identity — HUGEINT mirrors DECIMAL(38,0)
     Query("c27_chi2_drift", ((s, dir) =>
       chi2Drift(docs(s, dir).select("source", "text")).orderBy("source")), Some(Oracle.sqlWith(
-      s"""sc27 AS (SELECT source, tok, CAST(COUNT(*) AS BIGINT) AS a
-         |         FROM (SELECT source, unnest($tokensSql) AS tok
-         |               FROM documents)
-         |         GROUP BY source, tok),
-         |cc27 AS (SELECT tok, CAST(SUM(a) AS BIGINT) AS b
-         |         FROM sc27 GROUP BY tok),
-         |ns27 AS (SELECT source, CAST(SUM(a) AS BIGINT) AS n_s
-         |         FROM sc27 GROUP BY source),
-         |nt27 AS (SELECT CAST(SUM(n_s) AS BIGINT) AS n_tot FROM ns27),
+      tokenCountCtes("27") + """,
          |rt27 AS (SELECT SUM((1000000000 * CAST(b AS HUGEINT)) // n_tot)
          |                  AS r_tot
          |         FROM cc27, nt27),

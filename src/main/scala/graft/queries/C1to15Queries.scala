@@ -1,6 +1,7 @@
 package graft
 package queries
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -8,7 +9,7 @@ import graft.etl.Tables
 import graft.ext.{Dedup, HashCoeffs, TextAnalysis}
 import graft.ext.DocFixtures.{docs, docsDup}
 import graft.queries.Common.{bpeEncodeCtes, decontamIndex, docsDupSql, docsNearC, docsNearSql,
-  learnedMerges, scoreSql, shingleSql, stopsIn, tokensSql}
+  learnedMerges, qualityBin, scoreSql, shingleSql, splitShingleCtes, stopsIn, tokensSql}
 
 /** c*: corpus curation — the LLM-training-data pipeline stages over the
   * documents table: splits, decontamination, token budgets, sequence
@@ -29,6 +30,41 @@ object C1to15Queries {
 
   private val mixRateSql =
     "CASE WHEN lang = 'en' THEN 1000 WHEN lang = 'zh' THEN 250 ELSE 500 END"
+
+  /** c6/c6b's two sides of the dup-injected corpus: the test split's
+    * (doc_id, sh) shingle rows and the distinct train-split shingles.
+    */
+  private def decontamSides(s: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val sided = decontamIndex(docsDup(s, dir))
+    (sided.filter(col("split") === "test"),
+      sided.filter(col("split") === "train").select("sh").distinct())
+  }
+
+  /** c6/c6b oracle CTEs: the split and shingle CTEs and the train
+    * split's shingle set.
+    */
+  private def decontamCtes: String =
+    splitShingleCtes("6") + """,
+      |tr6 AS (SELECT DISTINCT s.sh FROM shing6 s
+      |        JOIN split6 p ON s.doc_id = p.doc_id WHERE p.split = 'train')""".stripMargin
+
+  /** c11/c11b's sampling rank key: a seeded universal hash of doc_id. */
+  private def sampleHash: Column = {
+    val (a, b) = HashCoeffs.coeffs(1, SampleSeed).head
+    (lit(a) * col("doc_id") + lit(b)) % lit(HashCoeffs.P)
+  }
+
+  /** c11/c11b oracle: the first 20 docs per language by [[sampleHash]]. */
+  private def sampleSql: String = {
+    val (a, b) = HashCoeffs.coeffs(1, SampleSeed).head
+    s"""SELECT doc_id, lang, source, rn
+       |FROM (SELECT doc_id, lang, source,
+       |        CAST(ROW_NUMBER() OVER (PARTITION BY lang
+       |          ORDER BY ($a * doc_id + $b) % ${HashCoeffs.P}, doc_id) AS BIGINT) AS rn
+       |      FROM documents)
+       |WHERE rn <= 20 ORDER BY lang, rn""".stripMargin
+  }
 
   val all: Seq[Query] = Seq(
     // — end-to-end corpus cleaning: score → filter → exact-dedup, the
@@ -206,30 +242,13 @@ object C1to15Queries {
     //   dup-injected corpus, where copies straddling the hash split ARE
     //   the leak this operator exists to catch. —
     Query("c6_decontaminate", ((s, dir) => {
-      val d = docsDup(s, dir)
-      val sided = decontamIndex(d)
-      val trainSh = sided.filter(col("split") === "train")
-        .select("sh").distinct()
-      sided.filter(col("split") === "test")
-        .join(trainSh, "sh")
+      val (test, trainSh) = decontamSides(s, dir)
+      test.join(trainSh, "sh")
         .groupBy("doc_id")
         .agg(count(lit(1)).as("n_shared_shingles"))
         .orderBy("doc_id")
     }), Some(Oracle.sqlWith(
-      s"""$docsDupSql,
-         |split6 AS (SELECT doc_id,
-         |             CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '28' THEN 'train'
-         |                  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '3c' THEN 'valid'
-         |                  ELSE 'test' END AS split
-         |           FROM docs_dup),
-         |shing6 AS (SELECT DISTINCT doc_id, sh FROM (
-         |  SELECT doc_id, unnest(CASE WHEN len(w) >= 7
-         |    THEN list_transform(range(len(w) - 6),
-         |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7])
-         |    ELSE [array_to_string(w, ' ')] END) AS sh
-         |  FROM (SELECT doc_id, $tokensSql AS w FROM docs_dup))),
-         |tr6 AS (SELECT DISTINCT s.sh FROM shing6 s
-         |        JOIN split6 p ON s.doc_id = p.doc_id WHERE p.split = 'train')""".stripMargin,
+      decontamCtes,
       """SELECT s.doc_id AS doc_id, COUNT(*) AS n_shared_shingles
         |FROM shing6 s
         |JOIN split6 p ON s.doc_id = p.doc_id
@@ -244,12 +263,8 @@ object C1to15Queries {
     //   semi-join widened to a left join + counted hit flag; ratios are
     //   exact-count division. —
     Query("c6b_contamination_rate", ((s, dir) => {
-      val d = docsDup(s, dir)
-      val sided = decontamIndex(d)
-      val trainSh = sided.filter(col("split") === "train")
-        .select("sh").distinct().withColumn("hit", lit(1L))
-      sided.filter(col("split") === "test")
-        .join(trainSh, Seq("sh"), "left")
+      val (test, trainSh) = decontamSides(s, dir)
+      test.join(trainSh.withColumn("hit", lit(1L)), Seq("sh"), "left")
         .groupBy("doc_id")
         .agg(count(lit(1)).cast("long").as("n_shingles"),
           sum(coalesce(col("hit"), lit(0L))).cast("long").as("n_shared"))
@@ -258,20 +273,7 @@ object C1to15Queries {
             .as("contamination"))
         .orderBy("doc_id")
     }), Some(Oracle.sqlWith(
-      s"""$docsDupSql,
-         |split6 AS (SELECT doc_id,
-         |             CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '28' THEN 'train'
-         |                  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '3c' THEN 'valid'
-         |                  ELSE 'test' END AS split
-         |           FROM docs_dup),
-         |shing6 AS (SELECT DISTINCT doc_id, sh FROM (
-         |  SELECT doc_id, unnest(CASE WHEN len(w) >= 7
-         |    THEN list_transform(range(len(w) - 6),
-         |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7])
-         |    ELSE [array_to_string(w, ' ')] END) AS sh
-         |  FROM (SELECT doc_id, $tokensSql AS w FROM docs_dup))),
-         |tr6 AS (SELECT DISTINCT s.sh FROM shing6 s
-         |        JOIN split6 p ON s.doc_id = p.doc_id WHERE p.split = 'train')""".stripMargin,
+      decontamCtes,
       """SELECT s.doc_id AS doc_id,
         |       CAST(COUNT(*) AS BIGINT) AS n_shingles,
         |       CAST(SUM(CASE WHEN t.sh IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_shared,
@@ -504,11 +506,7 @@ object C1to15Queries {
         expr("percentile_disc(0.5) WITHIN GROUP (ORDER BY quality_score)").as("c50"),
         expr("percentile_disc(0.25) WITHIN GROUP (ORDER BY quality_score)").as("c25"))
       scored.join(broadcast(cuts), "lang")
-        .withColumn("bin",
-          when(col("quality_score") >= col("c75"), 1L)
-            .when(col("quality_score") >= col("c50"), 2L)
-            .when(col("quality_score") >= col("c25"), 3L)
-            .otherwise(4L))
+        .withColumn("bin", qualityBin)
         .select("doc_id", "lang", "n_tokens", "quality_score", "bin")
         .orderBy("lang", "bin", "doc_id")
     }), Some(Oracle.sqlWith(
@@ -539,23 +537,12 @@ object C1to15Queries {
     //   sort) or c4-style rate gating when ±√k error is acceptable. —
     Query("c11_stratified_sample", ((s, dir) => {
       val k = 20
-      val (a, b) = HashCoeffs.coeffs(1, SampleSeed).head
-      val h = (lit(a) * col("doc_id") + lit(b)) % lit(HashCoeffs.P)
-      val w = Window.partitionBy("lang").orderBy(h, col("doc_id"))
+      val w = Window.partitionBy("lang").orderBy(sampleHash, col("doc_id"))
       docs(s, dir).select(col("doc_id"), col("lang"), col("source"))
         .withColumn("rn", row_number().over(w).cast("long"))
         .filter(col("rn") <= k)
         .orderBy("lang", "rn")
-    }), Some({
-      val (a, b) = HashCoeffs.coeffs(1, SampleSeed).head
-      Oracle.sql(
-        s"""SELECT doc_id, lang, source, rn
-           |FROM (SELECT doc_id, lang, source,
-           |        CAST(ROW_NUMBER() OVER (PARTITION BY lang
-           |          ORDER BY ($a * doc_id + $b) % ${HashCoeffs.P}, doc_id) AS BIGINT) AS rn
-           |      FROM documents)
-           |WHERE rn <= 20 ORDER BY lang, rn""".stripMargin)
-    })),
+    }), Some(Oracle.sql(sampleSql))),
     // — c11's PRODUCTION path (the c10/c10b pattern): same exact selection
     //   — k smallest (hash, doc_id) per language — computed by a k-bounded
     //   typed Aggregator instead of a per-stratum rank window. Each
@@ -579,10 +566,8 @@ object C1to15Queries {
       val sess = s
       import sess.implicits._
       val k = 20
-      val (a, b) = HashCoeffs.coeffs(1, SampleSeed).head
-      val h = (lit(a) * col("doc_id") + lit(b)) % lit(HashCoeffs.P)
       docs(s, dir)
-        .select(col("lang"), h.as("h"), col("doc_id"), col("source"))
+        .select(col("lang"), sampleHash.as("h"), col("doc_id"), col("source"))
         .as[(String, Long, Long, String)]
         .groupByKey(_._1)
         .agg(new graft.functions.BottomKAggregator(k).toColumn.name("picks"))
@@ -593,16 +578,7 @@ object C1to15Queries {
         }
         .toDF("doc_id", "lang", "source", "rn")
         .orderBy("lang", "rn")
-    }), Some({
-      val (a, b) = HashCoeffs.coeffs(1, SampleSeed).head
-      Oracle.sql(
-        s"""SELECT doc_id, lang, source, rn
-           |FROM (SELECT doc_id, lang, source,
-           |        CAST(ROW_NUMBER() OVER (PARTITION BY lang
-           |          ORDER BY ($a * doc_id + $b) % ${HashCoeffs.P}, doc_id) AS BIGINT) AS rn
-           |      FROM documents)
-           |WHERE rn <= 20 ORDER BY lang, rn""".stripMargin)
-    })),
+    }), Some(Oracle.sql(sampleSql))),
     // Key-skew diagnostics: the top-20 heaviest join/group keys with
     // their share and cumulative share of all rows — the profile that
     // decides WHICH keys need salting (j3) and how many, before a 100 TB

@@ -476,6 +476,209 @@ object Common {
       .agg(sum((col("o_totalprice").cast(Tables.Money) * 100)
         .cast("long")).as("x_cents"))
 
+  /** [[monthlyNationCents]] as the oracle CTE `name`: one (nation,
+    * month key, x_cents) row per nation-month, the key given by the
+    * select item `month`.
+    */
+  private[graft] def monthlyNationCentsSql(name: String,
+      month: String = "strftime(o.o_orderdate, '%Y-%m') AS month"): String =
+    s"""$name AS (SELECT n.n_name AS nation,
+       |                $month,
+       |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
+       |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
+       |         FROM orders o
+       |         JOIN customer c ON o.o_custkey = c.c_custkey
+       |         JOIN nation n ON c.c_nationkey = n.n_nationkey
+       |         GROUP BY 1, 2)""".stripMargin
+
+  /** Each event's type and exact value in cents, named `x` (a15, a32,
+    * a33, a34, a39, a47).
+    */
+  private[graft] def eventCents(s: SparkSession, dir: String,
+      x: String = "x"): DataFrame =
+    Tables.events(s, dir).select(col("event_type"),
+      (col("value").cast(Tables.Money) * 100).cast("long").as(x))
+
+  /** a33/a34 oracle CTE `name`: per event type the count `n` and the
+    * exact long sums `sx` and `sxx` of its value cents.
+    */
+  private[graft] def typeMomentsSql(name: String): String =
+    s"""$name AS (SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n,
+       |                CAST(SUM(x) AS BIGINT) AS sx,
+       |                CAST(SUM(x * x) AS BIGINT) AS sxx
+       |         FROM (SELECT event_type,
+       |                      CAST(CAST(value AS DECIMAL(12,2)) * 100
+       |                        AS BIGINT) AS x
+       |               FROM events)
+       |         GROUP BY event_type)""".stripMargin
+
+  /** The a31/a48 bootstrap's full-data side over a (`key`, cents, rk)
+    * frame: per key the row count and the ×10⁶ fixed-point mean.
+    */
+  private[graft] def fullMeans(cs: DataFrame, key: String): DataFrame = {
+    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    cs.groupBy(key)
+      .agg(count(lit(1)).as("n_rows"),
+        sum(col("cents").cast(d38)).as("s_cents"))
+      .select(col(key), col("n_rows").cast("long").as("n_rows"),
+        expr("(1000000 * s_cents) div cast(n_rows as decimal(38,0))")
+          .cast("long").as("mean_e6"))
+  }
+
+  /** The a31/a48 replicates over a (`key`, cents, rk) frame: each row
+    * drawn into [[BootB]] replicates with an RNG-free Poisson(1) weight
+    * (md5 of `rk:rep` against [[PoissonCdf60]]), then per (key, rep)
+    * the ×10⁶ fixed-point weighted mean `rep_mean_e6`; replicates with
+    * no weight drop.
+    */
+  private[graft] def poissonRepMeans(cs: DataFrame, key: String): DataFrame = {
+    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
+    val wCol = PoissonCdf60.map(t =>
+      when(col("u") >= lit(t), 1L).otherwise(lit(0L))).reduce(_ + _)
+    cs.select(col(key), col("cents"), col("rk"),
+        explode(array((0 until BootB).map(lit): _*)).as("rep"))
+      .withColumn("u",
+        conv(substring(md5(concat_ws(":", col("rk"), col("rep"))), 1, 15),
+          16, 10).cast("long"))
+      .withColumn("w", wCol)
+      .groupBy(key, "rep")
+      .agg(sum("w").as("n_eff"),
+        sum(col("w").cast(d38) * col("cents").cast(d38)).as("s_eff"))
+      .filter(col("n_eff") > 0)
+      .select(col(key), col("rep"),
+        expr("(1000000 * s_eff) div cast(n_eff as decimal(38,0))")
+          .cast("long").as("rep_mean_e6"))
+  }
+
+  /** The a31/a48 95% percentile interval of `value` over the replicates
+    * of each `key`: the replicate count `b_reps` and the values at the
+    * pinned ranks ceil(0.025·b) and ceil(0.975·b) of the (value, rep)
+    * order, as `ci_lo_e6` and `ci_hi_e6`.
+    */
+  private[graft] def percentileCi(reps: DataFrame, key: String,
+      value: String): DataFrame = {
+    val wq = Window.partitionBy(key).orderBy(value, "rep")
+    reps
+      .withColumn("rn", row_number().over(wq).cast("long"))
+      .withColumn("b",
+        count(lit(1)).over(Window.partitionBy(key)).cast("long"))
+      .withColumn("lo_rank", expr("(5 * b + 199) div 200"))
+      .withColumn("hi_rank", expr("(195 * b + 199) div 200"))
+      .filter(col("rn") === col("lo_rank") || col("rn") === col("hi_rank"))
+      .groupBy(key)
+      .agg(max("b").as("b_reps"),
+        min(when(col("rn") === col("lo_rank"), col(value))).as("ci_lo_e6"),
+        min(when(col("rn") === col("hi_rank"), col(value))).as("ci_hi_e6"))
+  }
+
+  /** c10b/c22's quality quartile bin: 1 at or above the `c75` cutoff
+    * down to 4 below `c25`.
+    */
+  private[graft] def qualityBin: Column =
+    when(col("quality_score") >= col("c75"), 1L)
+      .when(col("quality_score") >= col("c50"), 2L)
+      .when(col("quality_score") >= col("c25"), 3L)
+      .otherwise(4L)
+
+  /** The decontamination oracles' (c6, c6b, c23) CTEs after
+    * [[docsDupSql]]: `split<sfx>`, the md5 train/valid/test split of
+    * docs_dup, and `shing<sfx>`, each doc's distinct 7-gram shingles.
+    */
+  private[graft] def splitShingleCtes(sfx: String): String =
+    s"""$docsDupSql,
+       |split$sfx AS (SELECT doc_id,
+       |             CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '28' THEN 'train'
+       |                  WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 2) <= '3c' THEN 'valid'
+       |                  ELSE 'test' END AS split
+       |           FROM docs_dup),
+       |shing$sfx AS (SELECT DISTINCT doc_id, sh FROM (
+       |  SELECT doc_id, unnest(CASE WHEN len(w) >= 7
+       |    THEN list_transform(range(len(w) - 6),
+       |           i -> w[i+1] || ' ' || w[i+2] || ' ' || w[i+3] || ' ' || w[i+4] || ' ' || w[i+5] || ' ' || w[i+6] || ' ' || w[i+7])
+       |    ELSE [array_to_string(w, ' ')] END) AS sh
+       |  FROM (SELECT doc_id, $tokensSql AS w FROM docs_dup)))""".stripMargin
+
+  /** The value-grain CTEs of the a32, a39 and a47 oracles (the SQL form
+    * of [[graft.ext.Stats.valueGrain]]), each name suffixed `sfx`: the
+    * exact cents `ev`, the per-(type, cents) counts `gr`, the base and
+    * tested sides and the type × value `keys`.
+    */
+  private[graft] def valueGrainCtes(sfx: String): String =
+    s"""ev$sfx AS (SELECT event_type,
+       |                CAST(CAST(value AS DECIMAL(12,2)) * 100 AS BIGINT)
+       |                  AS cents
+       |         FROM events),
+       |gr$sfx AS (SELECT event_type, cents, CAST(COUNT(*) AS BIGINT) AS cnt1
+       |         FROM ev$sfx GROUP BY 1, 2),
+       |base$sfx AS (SELECT cents, cnt1 AS n_b FROM gr$sfx
+       |           WHERE event_type = 'view'),
+       |tst$sfx AS (SELECT event_type, cents, cnt1 AS n_t FROM gr$sfx
+       |          WHERE event_type <> 'view'),
+       |keys$sfx AS (SELECT t.event_type, v.cents
+       |           FROM (SELECT DISTINCT event_type FROM tst$sfx) t,
+       |                (SELECT DISTINCT cents FROM ev$sfx) v)""".stripMargin
+
+  /** a32/a47: [[valueGrainCtes]], then the doubled-midrank sums — the
+    * ranked frame `rk`, its running counts `cb` and the `ag` aggregate,
+    * left open after `two_r1` for each query's own columns.
+    */
+  private[graft] def rankSumCtes(sfx: String): String =
+    valueGrainCtes(sfx) + s""",
+       |rk$sfx AS (SELECT k.event_type, k.cents,
+       |                COALESCE(t.n_t, 0) AS n_t,
+       |                COALESCE(b.n_b, 0) AS n_b,
+       |                COALESCE(t.n_t, 0) + COALESCE(b.n_b, 0) AS cnt
+       |         FROM keys$sfx k
+       |         LEFT JOIN tst$sfx t ON k.event_type = t.event_type
+       |                          AND k.cents = t.cents
+       |         LEFT JOIN base$sfx b ON k.cents = b.cents
+       |         WHERE COALESCE(t.n_t, 0) + COALESCE(b.n_b, 0) > 0),
+       |cb$sfx AS (SELECT event_type, cents, n_t, n_b, cnt,
+       |                COALESCE(SUM(cnt) OVER (PARTITION BY event_type
+       |                  ORDER BY cents
+       |                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+       |                  0) AS cum_before
+       |         FROM rk$sfx),
+       |ag$sfx AS (SELECT event_type,
+       |                CAST(SUM(n_t) AS BIGINT) AS n1,
+       |                CAST(SUM(n_b) AS BIGINT) AS n2,
+       |                CAST(SUM(CAST(n_t AS HUGEINT)
+       |                  * (2 * cum_before + cnt + 1)) AS HUGEINT)
+       |                  AS two_r1""".stripMargin
+
+  /** Per-month KMV sketches of `orders`' pinned customer hashes: one
+    * `(month, <kmin>)` row per month holding its `k` smallest hashes —
+    * the sketch a19, a22 and a36 build.
+    */
+  private[graft] def monthKmv(orders: DataFrame, k: Int,
+      kmin: String = "kmin"): DataFrame =
+    kmvByMonth(orders
+      .select(date_format(col("o_orderdate"), "yyyy-MM").as("month"),
+        graft.functions.KmvSketch.hash60(col("o_custkey")).as("h")), k, kmin)
+
+  /** `(month, h)` rows folded to one k-min array per month. */
+  private def kmvByMonth(rows: DataFrame, k: Int, kmin: String): DataFrame = {
+    val sess = rows.sparkSession
+    import sess.implicits._
+    rows.as[(String, Long)]
+      .groupByKey(_._1)
+      .agg(new graft.functions.KmvAggregator(k).toColumn.name("kmin"))
+      .toDF("month", kmin)
+  }
+
+  /** The merge a19 and a22 end with: the `kmin` members of `sketches`
+    * re-sketched per month, then the kept count and the a35
+    * shared-literal estimate, named `est`, ordered by month.
+    */
+  private[graft] def mergedKmvEstimate(sketches: DataFrame, k: Int,
+      est: String): DataFrame =
+    kmvByMonth(sketches.select(col("month"), explode(col("kmin")).as("h")),
+        k, "kmin")
+      .select(col("month"),
+        size(col("kmin")).cast("long").as("n_kept"),
+        graft.functions.KmvSketch.estimate(col("kmin"), k).as(est))
+      .orderBy("month")
+
   /** a35's oracle, which st17 shares: one statement, two execution
     * models (the stream ≡ batch contract as a hash equality).
     */

@@ -135,6 +135,17 @@ object DQueries {
         |WHERE hamming <= 3 ORDER BY id1, id2""".stripMargin)
   }
 
+  /** d11/d11b's verify gate over (id1, id2, jaccard, lev, maxlen) pairs:
+    * edit similarity 1 − lev/maxlen, pairs at ≥ 0.8 kept.
+    */
+  private def editSimKept(scored: DataFrame): DataFrame =
+    scored
+      .select(col("id1"), col("id2"), col("jaccard"), col("lev"),
+        (lit(1.0) - col("lev").cast("double") / col("maxlen"))
+          .as("edit_sim"))
+      .filter(col("edit_sim") >= 0.8)
+      .orderBy("id1", "id2")
+
   val all: Seq[Query] = Seq(
     // — dedup —
     Query("d1_dedup_exact", ((s, dir) =>
@@ -379,7 +390,7 @@ object DQueries {
       // and ONE touch of the text relation for both pair sides
       // (Dedup.attachPairTexts — r17 task 4: the two per-side joins each
       // built their own single-task text broadcast, reuse never fired)
-      nearPairTexts(s, dir)
+      editSimKept(nearPairTexts(s, dir)
         // ONE Wagner–Fischer DP per pair: lev lands in its own project
         // and edit_sim derives from the column (CollapseProject keeps a
         // non-cheap, multiply-referenced expression un-inlined — the
@@ -387,12 +398,7 @@ object DQueries {
         .select(col("id1"), col("id2"), col("jaccard"),
           levenshtein(col("t1"), col("t2")).cast("long").as("lev"),
           greatest(length(col("t1")), length(col("t2"))).cast("double")
-            .as("maxlen"))
-        .select(col("id1"), col("id2"), col("jaccard"), col("lev"),
-          (lit(1.0) - col("lev").cast("double") / col("maxlen"))
-            .as("edit_sim"))
-        .filter(col("edit_sim") >= 0.8)
-        .orderBy("id1", "id2")
+            .as("maxlen")))
     }), Some(Oracle.sqlWith(
       s"""${jaccardCtes(0.0)},
          |lev11 AS (SELECT p.id1, p.id2, p.jaccard,
@@ -434,7 +440,7 @@ object DQueries {
     // per-pair band (floor(0.2·maxlen)+1 threshold + exact-distance
     // survivors) is semantics-preserving
     Query("d11b_edit_verify_banded", ((s, dir) => {
-      nearPairTexts(s, dir)
+      editSimKept(nearPairTexts(s, dir)
         .select(col("id1"), col("id2"), col("jaccard"), col("t1"), col("t2"),
           greatest(length(col("t1")), length(col("t2"))).as("maxlen_i"))
         .withColumn("kband",
@@ -444,12 +450,7 @@ object DQueries {
         // exact distance for band survivors only (few at any scale)
         .select(col("id1"), col("id2"), col("jaccard"),
           levenshtein(col("t1"), col("t2")).cast("long").as("lev"),
-          col("maxlen_i").cast("double").as("maxlen"))
-        .select(col("id1"), col("id2"), col("jaccard"), col("lev"),
-          (lit(1.0) - col("lev").cast("double") / col("maxlen"))
-            .as("edit_sim"))
-        .filter(col("edit_sim") >= 0.8)
-        .orderBy("id1", "id2")
+          col("maxlen_i").cast("double").as("maxlen")))
     }), Some(Oracle.sqlWith(
       s"""${jaccardCtes(0.0)},
          |lev11b AS (SELECT p.id1, p.id2, p.jaccard,

@@ -103,6 +103,30 @@ object GQueries {
       |          FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
       |          GROUP BY a.pk, b.pk)""".stripMargin
 
+  /** g2/g12's oracle CTEs: the edges, a degree table and the oriented
+    * Suri–Vassilvitskii closure `tris`, one row per triangle.
+    */
+  private def triangleCtes: String =
+    s"""$edgesSql,
+       |deg AS (SELECT node, COUNT(*) AS degree
+       |        FROM (SELECT u AS node FROM edges
+       |              UNION ALL SELECT v AS node FROM edges)
+       |        GROUP BY node),
+       |oriented AS (SELECT CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
+       |                         THEN e.u ELSE e.v END AS s,
+       |                    CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
+       |                         THEN e.v ELSE e.u END AS t,
+       |                    CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
+       |                         THEN dv.degree ELSE du.degree END AS dt
+       |             FROM edges e
+       |             JOIN deg du ON e.u = du.node
+       |             JOIN deg dv ON e.v = dv.node),
+       |tris AS (SELECT a.s AS x, a.t AS y, b.t AS z
+       |         FROM oriented a
+       |         JOIN oriented b ON a.s = b.s
+       |           AND (a.dt, a.t) < (b.dt, b.t)
+       |         JOIN oriented c ON c.s = a.t AND c.t = b.t)""".stripMargin
+
   /** Per-node degree table CTE (both endpoints of every edge). */
   private val degSql =
     """deg AS (SELECT node, COUNT(*) AS degree, SUM(w) AS strength
@@ -263,25 +287,7 @@ object GQueries {
     // per-node triangle table; the closure enumeration runs once per
     // corpus (rep 1), the report is a sort over its output
     Query("g2_triangle_count", ((s, dir) => tri(s, dir).orderBy("part_id")), Some(Oracle.sqlWith(
-      s"""$edgesSql,
-         |deg AS (SELECT node, COUNT(*) AS degree
-         |        FROM (SELECT u AS node FROM edges
-         |              UNION ALL SELECT v AS node FROM edges)
-         |        GROUP BY node),
-         |oriented AS (SELECT CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
-         |                         THEN e.u ELSE e.v END AS s,
-         |                    CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
-         |                         THEN e.v ELSE e.u END AS t,
-         |                    CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
-         |                         THEN dv.degree ELSE du.degree END AS dt
-         |             FROM edges e
-         |             JOIN deg du ON e.u = du.node
-         |             JOIN deg dv ON e.v = dv.node),
-         |tris AS (SELECT a.s AS x, a.t AS y, b.t AS z
-         |         FROM oriented a
-         |         JOIN oriented b ON a.s = b.s
-         |           AND (a.dt, a.t) < (b.dt, b.t)
-         |         JOIN oriented c ON c.s = a.t AND c.t = b.t)""".stripMargin,
+      triangleCtes,
       """SELECT part_id, COUNT(*) AS n_triangles
         |FROM (SELECT x AS part_id FROM tris
         |      UNION ALL SELECT y FROM tris
@@ -360,9 +366,9 @@ object GQueries {
     //   Oracled by a recursive reachability CTE (the d6 device): the
     //   oracle states WHAT a component is, min over reachable ids,
     //   independent of how the propagation computes it. —
-    // raw lineage like g10: connectedComponents localCheckpoints the
-    // (doubled) edge list as its first step — the shared cache is pure
-    // double-materialization here (+0.9 s/rep, r13 bench)
+    // reads the family's shared edge list, like every g* query: the
+    // basket self-join is built once per session (connectedComponents
+    // then checkpoints its doubled copy as its first step)
     // g5 oracle: component = MIN reachable id, stated as recursive reachability
     // (the d6 oracle device) — algorithm-independent of the propagation.
     // Replay cost note: the reach CTE is O(n·|component|) — fine at the
@@ -372,8 +378,7 @@ object GQueries {
     // label = min member + full node coverage)
     Query("g5_connected_components", ((s, dir) =>
       graft.ext.Clusters.connectedComponents(
-        edgesOf(basketItems(s, dir))
-          .select(col("u").as("id1"), col("v").as("id2")))
+        edges(s, dir).select(col("u").as("id1"), col("v").as("id2")))
         .select(col("id").as("part_id"), col("cluster").as("component"))
         .orderBy("part_id")), Some(Oracle.sqlRecursive(
       s"""$edgesSql,
@@ -706,30 +711,12 @@ object GQueries {
     // join (no-triangle nodes report 0), same ×10⁶ HUGEINT floor
     Query("g12_clustering_coeff", ((s, dir) =>
       clusteringCoeffOnTri(edges(s, dir).select("u", "v"), tri(s, dir))), Some(Oracle.sqlWith(
-      s"""$edgesSql,
-         |deg AS (SELECT node, COUNT(*) AS degree
-         |        FROM (SELECT u AS node FROM edges
-         |              UNION ALL SELECT v AS node FROM edges)
-         |        GROUP BY node),
-         |oriented AS (SELECT CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
-         |                         THEN e.u ELSE e.v END AS s,
-         |                    CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
-         |                         THEN e.v ELSE e.u END AS t,
-         |                    CASE WHEN (du.degree, e.u) < (dv.degree, e.v)
-         |                         THEN dv.degree ELSE du.degree END AS dt
-         |             FROM edges e
-         |             JOIN deg du ON e.u = du.node
-         |             JOIN deg dv ON e.v = dv.node),
-         |tris AS (SELECT a.s AS x, a.t AS y, b.t AS z
-         |         FROM oriented a
-         |         JOIN oriented b ON a.s = b.s
-         |           AND (a.dt, a.t) < (b.dt, b.t)
-         |         JOIN oriented c ON c.s = a.t AND c.t = b.t),
-         |tc12 AS (SELECT part_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
-         |         FROM (SELECT x AS part_id FROM tris
-         |               UNION ALL SELECT y FROM tris
-         |               UNION ALL SELECT z FROM tris)
-         |         GROUP BY part_id)""".stripMargin,
+      triangleCtes + """,
+        |tc12 AS (SELECT part_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
+        |         FROM (SELECT x AS part_id FROM tris
+        |               UNION ALL SELECT y FROM tris
+        |               UNION ALL SELECT z FROM tris)
+        |         GROUP BY part_id)""".stripMargin,
       """SELECT d.node AS part_id, CAST(d.degree AS BIGINT) AS degree,
         |       COALESCE(t.n_triangles, 0) AS n_triangles,
         |       CAST((2000000 * CAST(COALESCE(t.n_triangles, 0) AS HUGEINT))

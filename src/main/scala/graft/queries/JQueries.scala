@@ -39,6 +39,24 @@ object JQueries {
       .orderBy("name_a", "name_b")
   }
 
+  /** j4/j13's two as-of sides: the purchase and the signup events, each
+    * as (user_id, ts, event_id).
+    */
+  private def purchasesAndSignups(s: org.apache.spark.sql.SparkSession,
+      dir: String): (DataFrame, DataFrame) = {
+    val ev = Tables.events(s, dir)
+    (ev.filter(col("event_type") === "purchase")
+      .select("user_id", "ts", "event_id"),
+      ev.filter(col("event_type") === "signup")
+        .select(col("user_id"), col("ts"), col("event_id")))
+  }
+
+  /** j2/j3 oracle: every sales line with its customer's region. */
+  private val salesRegionSql =
+    """SELECT s.order_id, s.line_id, c.region
+      |FROM sales s LEFT JOIN customers c ON s.customer_id = c.customer_id
+      |ORDER BY s.order_id, s.line_id""".stripMargin
+
   val all: Seq[Query] = Seq(
     // — joins (§2d) —
     Query("j1_left_join_composite", ((s, dir) => {
@@ -62,10 +80,7 @@ object JQueries {
         .join(broadcast(Tables.customers(s, dir).select("customer_id", "region")),
           Seq("customer_id"), "left")
         .select("order_id", "line_id", "region")
-        .orderBy("order_id", "line_id")), Some(Oracle.sql(
-      """SELECT s.order_id, s.line_id, c.region
-        |FROM sales s LEFT JOIN customers c ON s.customer_id = c.customer_id
-        |ORDER BY s.order_id, s.line_id""".stripMargin))),
+        .orderBy("order_id", "line_id")), Some(Oracle.sql(salesRegionSql))),
     Query("j3_salted_join", ((s, dir) =>
       // row-identical to j2, executed through the skew-salting machinery
       graft.etl.Skew.saltedEquiJoin(
@@ -75,19 +90,12 @@ object JQueries {
         saltSource = col("order_id") * 8 + col("line_id"),
         nSalts = 8, joinType = "left")
         .select("order_id", "line_id", "region")
-        .orderBy("order_id", "line_id")), Some(Oracle.sql(
-      """SELECT s.order_id, s.line_id, c.region
-        |FROM sales s LEFT JOIN customers c ON s.customer_id = c.customer_id
-        |ORDER BY s.order_id, s.line_id""".stripMargin))),
+        .orderBy("order_id", "line_id")), Some(Oracle.sql(salesRegionSql))),
     // As-of join: latest signup at-or-before each purchase per user,
     // via the tagged-union + last-non-null window idiom (one shuffle).
     // DuckDB's native ASOF JOIN is the oracle.
     Query("j4_asof_join", ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("event_id"))
+      val (purchases, signups) = purchasesAndSignups(s, dir)
       graft.ext.AsOfJoin.asofJoin(purchases, signups, key = "user_id", ts = "ts")
         .select(col("user_id"), col("event_id").as("purchase_id"),
           col("ts").as("purchase_ts"), col("right_event_id").as("signup_id"),
@@ -360,11 +368,7 @@ object JQueries {
     // device's pick order: prior = latest prior (max id on equal ts),
     // next = earliest next (min id on equal ts), prior wins delta ties.
     Query("j13_asof_nearest", ((s, dir) => {
-      val ev = Tables.events(s, dir)
-      val purchases = ev.filter(col("event_type") === "purchase")
-        .select("user_id", "ts", "event_id")
-      val signups = ev.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts"), col("event_id"))
+      val (purchases, signups) = purchasesAndSignups(s, dir)
       graft.ext.AsOfJoin.asofNearest(purchases, signups, key = "user_id",
           ts = "ts", tolUs = 172800000000L)
         .select(col("user_id"), col("event_id").as("purchase_id"),

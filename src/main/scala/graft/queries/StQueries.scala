@@ -21,6 +21,17 @@ object StQueries {
       |       CAST(SUM(CAST(value AS DECIMAL(12,2))) AS DOUBLE) AS total_value
       |FROM events GROUP BY 1, 2""".stripMargin
 
+  /** st6/st11 oracle: the batch interval join of each signup with the
+    * same user's purchases in [signup, signup + 1h].
+    */
+  private val signupPurchaseSql =
+    """SELECT s.user_id, s.event_id AS signup_id, p.event_id AS purchase_id,
+      |       s.ts AS signup_ts, p.ts AS purchase_ts
+      |FROM events s JOIN events p
+      |  ON s.event_type = 'signup' AND p.event_type = 'purchase'
+      | AND p.user_id = s.user_id
+      | AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL '1 hour'""".stripMargin
+
   val all: Seq[Query] = Seq(
     Query("st1_stream_tumbling", ((s, dir) =>
       Streams.tumblingByType(s, dir)
@@ -74,12 +85,7 @@ object StQueries {
     Query("st6_stream_join", ((s, dir) =>
       Streams.signupPurchaseJoin(s, dir)
         .orderBy("user_id", "signup_id", "purchase_id")), Some(Oracle.sql(
-      """SELECT s.user_id, s.event_id AS signup_id, p.event_id AS purchase_id,
-        |       s.ts AS signup_ts, p.ts AS purchase_ts
-        |FROM events s JOIN events p
-        |  ON s.event_type = 'signup' AND p.event_type = 'purchase'
-        | AND p.user_id = s.user_id
-        | AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL '1 hour'
+      signupPurchaseSql + """
         |ORDER BY s.user_id, signup_id, purchase_id""".stripMargin))),
     Query("st7_stream_dedup", ((s, dir) =>
       Streams.dedupKeys(s, dir)
@@ -145,12 +151,7 @@ object StQueries {
         |  (SELECT epoch_ms(max(ts)) FROM events WHERE event_type = 'signup'),
         |  (SELECT epoch_ms(max(ts)) FROM events WHERE event_type = 'purchase'))
         |  - 7200000 AS wm_ms)""".stripMargin,
-      """SELECT s.user_id, s.event_id AS signup_id, p.event_id AS purchase_id,
-        |       s.ts AS signup_ts, p.ts AS purchase_ts
-        |FROM events s JOIN events p
-        |  ON s.event_type = 'signup' AND p.event_type = 'purchase'
-        | AND p.user_id = s.user_id
-        | AND p.ts >= s.ts AND p.ts <= s.ts + INTERVAL '1 hour'
+      signupPurchaseSql + """
         |UNION ALL
         |SELECT s.user_id, s.event_id, CAST(NULL AS BIGINT),
         |       s.ts, CAST(NULL AS TIMESTAMP)

@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.Tables
 import graft.ext.{Dedup, DocFixtures, TextAnalysis}
-import graft.ext.Corpus.{bigramCommonnessHotSplitAuto, tokenEntropyOf}
+import graft.ext.Corpus.{bigramCommonnessHotSplitAuto, commonnessOf, docBigrams,
+  tokenEntropyOf}
 import graft.ext.DocFixtures.docs
 import graft.queries.Common.{bm25Top20Of, bpeEncodeCtes, docsGopher, docsGopherSql, gopherLines,
   gopherLinesSql, learnedMerges, lnValuesSql, scoreSql, shortDocsSql,
@@ -484,18 +485,9 @@ object TQueries {
     //   broadcast the hot slice (disjoint union preserves the result), or
     //   salt the key exactly as j3 does. —
     Query("t16_bigram_commonness", ((s, dir) => {
-      val bg = docs(s, dir)
-        .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-        .select(col("doc_id"),
-          explode(Dedup.shingles(col("toks"), 2)).as("bigram"))
-      val cf = bg.groupBy("bigram").agg(count(lit(1)).as("cf"))
-      bg.join(cf, "bigram")
-        .groupBy("doc_id")
-        .agg(count(lit(1)).cast("long").as("n_bigrams"),
-          sum("cf").cast("long").as("cf_sum"))
-        .select(col("doc_id"), col("n_bigrams"), col("cf_sum"),
-          (col("cf_sum").cast("double") / col("n_bigrams")).as("commonness"))
-        .orderBy("doc_id")
+      val bg = docBigrams(docs(s, dir))
+      commonnessOf(bg.join(bg.groupBy("bigram").agg(count(lit(1)).as("cf")),
+        "bigram"))
     }), Some(t16OracleSql)),
     // — t16's production twin for the stop-bigram hot keys its own
     //   comment prices: frequency-split the count table, broadcast the

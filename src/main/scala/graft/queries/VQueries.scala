@@ -102,6 +102,22 @@ object VQueries {
       .limit(10)
   }
 
+  /** v3/v8: `cut` of each double embedding, L2-normalized by its own
+    * fold norm and exploded to (vec_id, pos, value) rows; zero vectors
+    * give NULL values.
+    */
+  private def unitRows(e: DataFrame,
+      cut: org.apache.spark.sql.Column => org.apache.spark.sql.Column): DataFrame =
+    e.select(col("vec_id"),
+        cut(graft.functions.VectorOps.toDouble(col("embedding"))).as("v"))
+      .withColumn("norm", graft.functions.VectorOps.norm(col("v")))
+      .select(col("vec_id"), col("norm"),
+        posexplode(col("v")).as(Seq("pos", "x")))
+      .select(col("vec_id"), col("pos").cast("long").as("pos"),
+        when(col("norm") === 0.0, lit(null).cast("double"))
+          .otherwise(col("x") / col("norm")).as("value"))
+      .orderBy("vec_id", "pos")
+
   val all: Seq[Query] = Seq(
     // — vector aggregation: per-label centroid as exploded (label, pos,
     //   value) rows. Plain avg() over doubles is partition-order dependent;
@@ -185,16 +201,7 @@ object VQueries {
     //   Zero vectors normalize to NULL (both engines), not NaN — NaN
     //   hashes engine-dependently. —
     Query("v3_l2_normalize", ((s, dir) => {
-      val e = Tables.table(s, dir, "embeddings")
-      e.select(col("vec_id"),
-          graft.functions.VectorOps.toDouble(col("embedding")).as("v"))
-        .withColumn("norm", graft.functions.VectorOps.norm(col("v")))
-        .select(col("vec_id"), col("norm"),
-          posexplode(col("v")).as(Seq("pos", "x")))
-        .select(col("vec_id"), col("pos").cast("long").as("pos"),
-          when(col("norm") === 0.0, lit(null).cast("double"))
-            .otherwise(col("x") / col("norm")).as("value"))
-        .orderBy("vec_id", "pos")
+      unitRows(Tables.table(s, dir, "embeddings"), identity)
     }), Some(Oracle.sql(
       s"""SELECT vec_id, CAST(pos AS BIGINT) AS pos,
          |       CAST(embedding[CAST(pos AS INTEGER) + 1] AS DOUBLE)
@@ -372,17 +379,7 @@ object VQueries {
     //   per the v3/v4 row-output convention. —
     // v8 oracle: v3's statement over the 16-dim prefix slice
     Query("v8_matryoshka_truncate", ((s, dir) => {
-      val e = Tables.table(s, dir, "embeddings")
-      e.select(col("vec_id"),
-          slice(graft.functions.VectorOps.toDouble(col("embedding")),
-            1, 16).as("v"))
-        .withColumn("norm", graft.functions.VectorOps.norm(col("v")))
-        .select(col("vec_id"), col("norm"),
-          posexplode(col("v")).as(Seq("pos", "x")))
-        .select(col("vec_id"), col("pos").cast("long").as("pos"),
-          when(col("norm") === 0.0, lit(null).cast("double"))
-            .otherwise(col("x") / col("norm")).as("value"))
-        .orderBy("vec_id", "pos")
+      unitRows(Tables.table(s, dir, "embeddings"), slice(_, 1, 16))
     }), Some(Oracle.sql(
       s"""SELECT vec_id, CAST(pos AS BIGINT) AS pos,
          |       CAST(t[CAST(pos AS INTEGER) + 1] AS DOUBLE)

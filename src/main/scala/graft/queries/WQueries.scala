@@ -7,8 +7,8 @@ import org.apache.spark.sql.functions._
 
 import graft.etl.{Pipelines, Tables}
 import graft.ext.Stats.bucketedPositions
-import graft.queries.Common.{eventsThin, eventsThinSql, monthlyNationCents, productAgg,
-  productAggSql}
+import graft.queries.Common.{eventsThin, eventsThinSql, monthlyNationCents,
+  monthlyNationCentsSql, productAgg, productAggSql}
 
 /** w*: windows and time series — ranks, lags, moving averages, NTILE
   * and bucketed positions, range frames, EWMA/Holt folds, rolling
@@ -102,6 +102,32 @@ object WQueries {
       .orderBy("nation")
   }
 
+  /** w8/w12 input: each user's thinned events as one `es` list of
+    * (us, event_id, value) structs.
+    */
+  private def userEvents(s: org.apache.spark.sql.SparkSession,
+      dir: String): DataFrame =
+    eventsThin(s, dir)
+      .select(col("user_id"),
+        struct(unix_micros(col("ts")).as("us"), col("event_id"),
+          col("value")).as("e"))
+      .groupBy("user_id")
+      .agg(collect_list("e").as("es"))
+
+  /** w8/w12: the `es` values in the pinned (us, event_id) order. */
+  private def sortedValues: org.apache.spark.sql.Column =
+    transform(array_sort(col("es")), e => e.getField("value"))
+
+  /** w4/w4b oracle: ntile, percent_rank and cume_dist per event type. */
+  private val positionsSql =
+    """SELECT event_type, event_id, value,
+      |       CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
+      |       percent_rank() OVER w AS pct_rank,
+      |       cume_dist() OVER w AS cume
+      |FROM events
+      |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
+      |ORDER BY event_type, value, event_id""".stripMargin
+
   val all: Seq[Query] = Seq(
     // — window / sort / limit (§2f, §2g) —
     Query("w1_rank_window", ((s, dir) =>
@@ -187,13 +213,7 @@ object WQueries {
         .withColumn("cume", cume_dist().over(w))
         .orderBy("event_type", "value", "event_id")
     }), Some(Oracle.sql(
-      """SELECT event_type, event_id, value,
-        |       CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-        |       percent_rank() OVER w AS pct_rank,
-        |       cume_dist() OVER w AS cume
-        |FROM events
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-        |ORDER BY event_type, value, event_id""".stripMargin))),
+      positionsSql))),
     // w4's PRODUCTION twin (the c10b precedent: document-then-ship, same
     // semantics, scale-safe plan). w4's exact form sorts each event_type
     // partition globally — 5 partitions means 5 executor-sized sorts at
@@ -255,13 +275,7 @@ object WQueries {
           col("quartile"), col("pct_rank"), col("cume"))
         .orderBy("event_type", "value", "event_id")
     }), Some(Oracle.sql(
-      """SELECT event_type, event_id, value,
-        |       CAST(NTILE(4) OVER w AS BIGINT) AS quartile,
-        |       percent_rank() OVER w AS pct_rank,
-        |       cume_dist() OVER w AS cume
-        |FROM events
-        |WINDOW w AS (PARTITION BY event_type ORDER BY value, event_id)
-        |ORDER BY event_type, value, event_id""".stripMargin))),
+      positionsSql))),
     // w4b for UNBOUNDED value domains — see [[bucketedPositions]]. events'
     // value column is the right fixture: at sf0.01 it is already ~66%
     // distinct, so w4b's raw-value histogram grows with the data while
@@ -425,13 +439,8 @@ object WQueries {
     // w8 oracle: list_reduce over the identically-pinned value order —
     // the same seed-with-first fold, the same exact binary coefficients
     Query("w8_ewma", ((s, dir) => {
-      val vs = transform(array_sort(col("es")), e => e.getField("value"))
-      eventsThin(s, dir)
-        .select(col("user_id"),
-          struct(unix_micros(col("ts")).as("us"), col("event_id"),
-            col("value")).as("e"))
-        .groupBy("user_id")
-        .agg(collect_list("e").as("es"))
+      val vs = sortedValues
+      userEvents(s, dir)
         .select(col("user_id"),
           size(col("es")).cast("long").as("n_events"),
           aggregate(slice(vs, lit(2), greatest(size(vs) - 1, lit(0))),
@@ -594,17 +603,12 @@ object WQueries {
     // recomputes it
     Query("w12_holt", ((s, dir) => {
       val wrap = (v: org.apache.spark.sql.Column) => array(v, lit(0.0))
-      val vs = transform(array_sort(col("es")), e => e.getField("value"))
+      val vs = sortedValues
       val newL = (acc: org.apache.spark.sql.Column,
           x: org.apache.spark.sql.Column) =>
         (lit(0.5) * element_at(x, 1)) +
           (lit(0.5) * (element_at(acc, 1) + element_at(acc, 2)))
-      eventsThin(s, dir)
-        .select(col("user_id"),
-          struct(unix_micros(col("ts")).as("us"), col("event_id"),
-            col("value")).as("e"))
-        .groupBy("user_id")
-        .agg(collect_list("e").as("es"))
+      userEvents(s, dir)
         .select(col("user_id"),
           size(col("es")).cast("long").as("n_events"),
           aggregate(
@@ -780,14 +784,7 @@ object WQueries {
             .cast("long").as("mase_e6"))
         .orderBy("nation")
     }), Some(Oracle.sqlWith(
-      """sp15 AS (SELECT n.n_name AS nation,
-        |                strftime(o.o_orderdate, '%Y-%m') AS month,
-        |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
-        |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
-        |         FROM orders o
-        |         JOIN customer c ON o.o_custkey = c.c_custkey
-        |         JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |         GROUP BY 1, 2),
+      monthlyNationCentsSql("sp15") + """,
         |lg15 AS (SELECT nation,
         |                abs(x_cents - LAG(x_cents, 12) OVER w) AS e_season,
         |                abs(x_cents - LAG(x_cents, 1) OVER w) AS e_naive
@@ -837,14 +834,7 @@ object WQueries {
             col("prev_year_cents").cast("double")).as("growth"))
         .orderBy("nation", "month")
     }), Some(Oracle.sqlWith(
-      """sp16 AS (SELECT n.n_name AS nation,
-        |                strftime(o.o_orderdate, '%Y-%m') AS month,
-        |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
-        |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
-        |         FROM orders o
-        |         JOIN customer c ON o.o_custkey = c.c_custkey
-        |         JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |         GROUP BY 1, 2),
+      monthlyNationCentsSql("sp16") + """,
         |lg16 AS (SELECT nation, month, x_cents,
         |                SUM(x_cents) OVER (PARTITION BY nation
         |                  ORDER BY CAST(substring(month, 1, 4) AS BIGINT) * 12
@@ -913,17 +903,11 @@ object WQueries {
           col("z.n_pairs").as("n_pairs"), col("z.acf").as("acf"))
         .orderBy("nation", "lag")
     }), Some(Oracle.sqlWith(
-      s"""sp17 AS (SELECT n.n_name AS nation,
-         |                CAST(substring(strftime(o.o_orderdate, '%Y-%m'),
-         |                               1, 4) AS BIGINT) * 12
-         |                + CAST(substring(strftime(o.o_orderdate, '%Y-%m'),
-         |                                 6, 2) AS BIGINT) AS ym,
-         |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
-         |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
-         |         FROM orders o
-         |         JOIN customer c ON o.o_custkey = c.c_custkey
-         |         JOIN nation n ON c.c_nationkey = n.n_nationkey
-         |         GROUP BY 1, 2),
+      monthlyNationCentsSql("sp17",
+        """CAST(substring(strftime(o.o_orderdate, '%Y-%m'),
+          |                               1, 4) AS BIGINT) * 12
+          |                + CAST(substring(strftime(o.o_orderdate, '%Y-%m'),
+          |                                 6, 2) AS BIGINT) AS ym""".stripMargin) + s""",
          |mu17 AS (SELECT nation, CAST(SUM(x_cents) AS BIGINT) AS s_cents,
          |                CAST(COUNT(*) AS BIGINT) AS n_m
          |         FROM sp17 GROUP BY 1),
@@ -982,14 +966,7 @@ object WQueries {
           substring(col("month"), 1, 4).cast("long") * 12 +
             substring(col("month"), 6, 2).cast("long"))
         .select("nation", "ym", "x_cents"))), Some(Oracle.sqlWith(
-      """sp18 AS (SELECT n.n_name AS nation,
-        |                strftime(o.o_orderdate, '%Y-%m') AS month,
-        |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
-        |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
-        |         FROM orders o
-        |         JOIN customer c ON o.o_custkey = c.c_custkey
-        |         JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |         GROUP BY 1, 2),
+      monthlyNationCentsSql("sp18") + """,
         |ym18 AS (SELECT nation,
         |                CAST(substring(month, 1, 4) AS BIGINT) * 12
         |                  + CAST(substring(month, 6, 2) AS BIGINT) AS ym,
@@ -1076,14 +1053,7 @@ object WQueries {
             (col("n_obs") * 24L).cast("double")).as("seasonal_cents"))
         .orderBy("nation", "moy")
     }), Some(Oracle.sqlWith(
-      """sp19 AS (SELECT n.n_name AS nation,
-        |                strftime(o.o_orderdate, '%Y-%m') AS month,
-        |                CAST(SUM(CAST(CAST(o.o_totalprice AS DECIMAL(12,2))
-        |                     * 100 AS BIGINT)) AS BIGINT) AS x_cents
-        |         FROM orders o
-        |         JOIN customer c ON o.o_custkey = c.c_custkey
-        |         JOIN nation n ON c.c_nationkey = n.n_nationkey
-        |         GROUP BY 1, 2),
+      monthlyNationCentsSql("sp19") + """,
         |ym19 AS (SELECT nation,
         |                CAST(substring(month, 1, 4) AS BIGINT) * 12
         |                  + CAST(substring(month, 6, 2) AS BIGINT) AS ym,

@@ -466,22 +466,7 @@ object Streams {
     * AvailableNow batch sees everything, so output equals the batch join.
     */
   def signupPurchaseJoin(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { src =>
-      val signups = src.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("signup_ts"),
-          col("event_id").as("signup_id"))
-        .withWatermark("signup_ts", "2 hours")
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-          col("event_id").as("purchase_id"))
-        .withWatermark("purchase_ts", "2 hours")
-      signups.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("purchase_ts") >= col("signup_ts") &&
-          col("purchase_ts") <= col("signup_ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("user_id"), col("signup_id"), col("purchase_id"),
-          col("signup_ts"), col("purchase_ts"))
-    }
+    replay(spark, dir, "append")(signupPurchases(_, "inner"))
 
   /** Stream-stream LEFT OUTER interval join — st6's semantics plus the
     * null-extended rows a streaming engine can only emit ONCE THE
@@ -501,23 +486,29 @@ object Streams {
     * provider as everywhere.
     */
   def signupPurchaseOuterJoin(spark: SparkSession, dir: String): DataFrame =
-    replay(spark, dir, "append") { src =>
-      val signups = src.filter(col("event_type") === "signup")
-        .select(col("user_id"), col("ts").as("signup_ts"),
-          col("event_id").as("signup_id"))
-        .withWatermark("signup_ts", "2 hours")
-      val purchases = src.filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-          col("event_id").as("purchase_id"))
-        .withWatermark("purchase_ts", "2 hours")
-      signups.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("purchase_ts") >= col("signup_ts") &&
-          col("purchase_ts") <= col("signup_ts") + expr("INTERVAL 1 HOUR"),
-        "left_outer")
-        .select(col("user_id"), col("signup_id"), col("purchase_id"),
-          col("signup_ts"), col("purchase_ts"))
-    }
+    replay(spark, dir, "append")(signupPurchases(_, "left_outer"))
+
+  /** st6/st11's join over the replayed event stream `src`: each signup
+    * with the same user's purchases in [signup, signup + 1h], both sides
+    * watermarked at 2 hours, as a `joinType` join.
+    */
+  private def signupPurchases(src: DataFrame, joinType: String): DataFrame = {
+    val signups = src.filter(col("event_type") === "signup")
+      .select(col("user_id"), col("ts").as("signup_ts"),
+        col("event_id").as("signup_id"))
+      .withWatermark("signup_ts", "2 hours")
+    val purchases = src.filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
+        col("event_id").as("purchase_id"))
+      .withWatermark("purchase_ts", "2 hours")
+    signups.join(purchases,
+      col("user_id") === col("p_user") &&
+        col("purchase_ts") >= col("signup_ts") &&
+        col("purchase_ts") <= col("signup_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
+      .select(col("user_id"), col("signup_id"), col("purchase_id"),
+        col("signup_ts"), col("purchase_ts"))
+  }
 
   /** Streaming exact dedup — the ingest-time half of batch d1: first
     * arrival per key wins, later duplicates are suppressed.

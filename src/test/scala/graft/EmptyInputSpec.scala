@@ -51,4 +51,30 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
   test("j5_bloom_semijoin on empty tables: a sketch over zero keys keeps no rows") {
     assert(onEmpty("j5_bloom_semijoin").isEmpty)
   }
+
+  /** Every query that reads one of the shared query and operator cores
+    * (Common's KMV, bootstrap and moment helpers, the family helpers,
+    * Stats.valueGrain, the AsOfJoin, ProductQuantizer, Similarity,
+    * TextAnalysis, Corpus and Streams cores): each must plan and run
+    * over no rows with its real-data schema.
+    */
+  private val sharedCoreQueries = Seq(
+    "a15_group_stats", "a15b_group_stats_decimal", "a19_incremental_distinct",
+    "a22_sliding_distinct", "a25_group_ols", "a26_group_corr",
+    "a31_poisson_bootstrap", "a32_mann_whitney", "a33_welch_ttest", "a34_anova_f",
+    "a36_kmv_retention_overlap", "a39_ks_test", "a47_cliffs_delta",
+    "a48_bootstrap_diff", "b1_sessionize", "b9_top_paths", "c6_decontaminate",
+    "c6b_contamination_rate", "c10b_quality_bins_cutoffs", "c11_stratified_sample",
+    "c11b_stratified_sample_topk", "c18_boilerplate_strip",
+    "c18b_boilerplate_strip_antijoin", "c20_domain_shift",
+    "c22_quality_dup_calibration", "c27_chi2_drift", "d11_edit_verify",
+    "d11b_edit_verify_banded", "g5_connected_components", "j4_asof_join",
+    "j13_asof_nearest", "s3_knn_join", "s5_knn_bucketed", "s6_pq_adc_topk",
+    "s8_ivfpq_topk", "st6_stream_join", "st11_stream_outer_join",
+    "t16_bigram_commonness", "t16b_bigram_hotsplit", "v3_l2_normalize",
+    "v5_pq_codes", "v8_matryoshka_truncate", "w8_ewma", "w12_holt")
+
+  for (q <- sharedCoreQueries) test(s"$q on empty tables: its real-data schema") {
+    onEmpty(q)
+  }
 }

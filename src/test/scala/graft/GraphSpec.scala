@@ -145,6 +145,36 @@ class GraphSpec extends SparkSpec {
       7L -> 7L, 8L -> 7L, 10L -> 10L, 11L -> 10L, 12L -> 10L))
   }
 
+  test("g5 reads the family's cached edge list: no second lineitem self-join") {
+    // drop the cached edge list any earlier query left, so g5 builds cold
+    Shared.get(spark, "edges", sf)
+      .foreach(_.asInstanceOf[org.apache.spark.sql.DataFrame].unpersist(blocking = true))
+    val executed = new org.apache.spark.sql.ExecutedPlans
+    spark.sparkContext.addSparkListener(executed)
+    try {
+      spark.sparkContext.setJobGroup("g5", "g5")
+      try SparkEntry.queries("g5_connected_components")(spark, sf)
+      finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.graft.ListenerBusDrain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(executed)
+    // the executions g5 ran while being built (its eager checkpoints):
+    // the first checkpoints the doubled edge list
+    val plans = executed.byGroup.getOrElse("g5", Nil)
+    assert(plans.nonEmpty, "g5 ran no construction job")
+    val leaves = plans.flatMap(_.collectLeaves())
+    assert(leaves.exists(_.isInstanceOf[
+      org.apache.spark.sql.execution.columnar.InMemoryRelation]),
+      "g5 does not read the cached edge relation")
+    val lineitemScans = leaves.collect {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation
+          if h.location.rootPaths.exists(_.getName.startsWith("lineitem")) => h
+    }
+    assert(lineitemScans.isEmpty,
+      s"g5 rebuilds the basket self-join: ${lineitemScans.size} lineitem scans")
+  }
+
   test("g6: jaccard is exact fixed-point of g3's counts and g1's degrees") {
     val dir = "/root/testdata/sf0.001"
     val got = SparkEntry.queries("g6_jaccard_neighbors")(spark, dir).collect()

@@ -100,14 +100,16 @@ class NearDupIndexSpec extends SparkSpec {
 
   test("fingerprint index: the near-dup call persists at most 1/4 of the string index's bytes") {
     val docs = DocFixtures.docsNear(spark, gate)
-    // in-memory bytes of the RDD blocks persisted while `body` runs
+    // in-memory bytes of the RDD blocks persisted while `body` runs;
+    // every block is dropped afterwards (`docs` is plain lineage, so the
+    // second measurement recomputes it)
     def persistedBytes(body: => Unit): Long = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      CacheScope.scoped(spark) {
+      try {
         body
         spark.sparkContext.getRDDStorageInfo
           .filter(i => !before(i.id)).map(_.memSize).sum
-      }
+      } finally CacheScope.dropAll(spark)
     }
     // the string index as the pair pipeline used to materialize it
     val stringIndex = persistedBytes(Dedup.shingleIndex(

@@ -59,30 +59,6 @@ class PipelineSpec extends SparkSpec {
       == Seq(1L, 2L, 3L, 4L, 5L))
   }
 
-  test("CacheScope: composed checkpointing operators leave no net blocks; caller blocks survive") {
-    // the r9 lifecycle gap: c3 (shingle-index checkpoints) then c17
-    // (survivorship) composed in ONE session used to accumulate every
-    // intermediate block — the scope must drop exactly those
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    CacheScope.scoped(spark) {
-      SparkEntry.queries("c3_fuzzy_corpus")(spark, sf).count()
-      SparkEntry.queries("c17_dedup_survivor")(spark, sf).count()
-      assert(spark.sparkContext.getPersistentRDDs.keySet.size > before.size,
-        "fixture queries no longer persist anything — pick other ops")
-    }
-    assert(spark.sparkContext.getPersistentRDDs.keySet == before,
-      "composed queries leaked blocks past the scope")
-    // blocks persisted BEFORE the scope are the caller's — they survive
-    val kept = spark.sparkContext.parallelize(1 to 10).persist()
-    kept.count()
-    CacheScope.scoped(spark) {
-      SparkEntry.queries("c3_fuzzy_corpus")(spark, sf).count()
-    }
-    assert(spark.sparkContext.getPersistentRDDs.contains(kept.id),
-      "the scope swept a pre-existing caller block")
-    kept.unpersist(blocking = true)
-  }
-
   /** A small sales.csv (40 distinct orders plus 6 repeated lines for the
     * dedup, over 7 products) and customers.csv (5 customers) in a fresh
     * directory: the input of the JDBC-branch, parquet-branch and

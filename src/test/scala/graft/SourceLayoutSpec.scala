@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * only mains in `src/main` are the driver contract's and the reference
   * ETL's, and every session is opened through [[LocalSession]] (the one
   * shape Bench, Verify, the dev mains and the suite share); only
-  * [[CacheScope]] sweeps the persisted RDDs. Queries are
+  * [[CacheScope.dropAll]] sweeps the persisted RDDs. Queries are
   * declared once each, as a [[Query]] in the family file of their name
   * prefix; only [[SparkEntry]] keys them by name. Every doc a source file,
   * README.md or ARCHITECTURE.md cites exists, and every PLANS.md entry
@@ -127,6 +127,66 @@ class SourceLayoutSpec extends AnyFunSuite {
     val names = sources.flatMap { case (_, src) => declared.findAllMatchIn(src).map(_.group(1)) }
     assert(names.sorted == SparkEntry.queries.keySet.toSeq.sorted,
       "every registry query is declared in exactly one family file")
+  }
+
+  /** `src`'s lines as the clone lint compares them, with their 1-based
+    * line numbers: trimmed, with blank lines, comments and imports
+    * dropped (oracle SQL `|` lines count like code).
+    */
+  private def normalized(src: String): Seq[(Int, String)] = {
+    var inComment = false
+    src.linesIterator.zipWithIndex.flatMap { case (raw, i) =>
+      val t = raw.trim
+      if (inComment) { inComment = !t.contains("*/"); None }
+      else if (t.startsWith("/*")) { inComment = !t.contains("*/"); None }
+      else if (t.isEmpty || t.startsWith("//") || t.startsWith("import ")) None
+      else Some((i + 1, t))
+    }.toSeq
+  }
+
+  /** Each run of at least `min` identical normalized lines that appears
+    * twice across `files` (name → source), once per run, as
+    * "a.scala:12 = b.scala:40". Overlapping windows of one file do not
+    * count.
+    */
+  private def clones(files: Seq[(String, String)], min: Int): Seq[String] = {
+    val norm = files.map { case (f, src) => f -> normalized(src).toIndexedSeq }
+    // window start → the start of its first copy
+    val first = scala.collection.mutable.HashMap.empty[Seq[String], (String, Int)]
+    val hits = scala.collection.mutable.LinkedHashMap.empty[(String, Int), (String, Int)]
+    for ((f, lines) <- norm; k <- 0 to lines.size - min) {
+      val window = lines.slice(k, k + min).map(_._2)
+      first.get(window) match {
+        case Some((g, j)) if g != f || k - j >= min => hits((f, k)) = (g, j)
+        case Some(_) =>
+        case None => first(window) = (f, k)
+      }
+    }
+    val lineOf = norm.toMap
+    hits.toSeq.collect {
+      // one report per run: a window extending the previous hit is skipped
+      case ((f, k), (g, j)) if !hits.get((f, k - 1)).contains((g, j - 1)) =>
+        s"$g:${lineOf(g)(j)._1} = $f:${lineOf(f)(k)._1}"
+    }
+  }
+
+  test("lint: no run of 8 identical lines appears twice in src/main") {
+    // samples are generated so this file never matches its own scan
+    val block = (1 to 8).map(i => "val v" + i + " = f(" + i + ")")
+    val planted = Seq(
+      "A.scala" -> ("object A {\n" + block.mkString("\n") + "\n}"),
+      "B.scala" -> ("object B {\n  // moved\n\n" +
+        block.map("  " + _).mkString("\n  import x.y\n") + "\n}"))
+    assert(clones(planted, 8) == Seq("A.scala:2 = B.scala:4"))
+    assert(clones(Seq("C.scala" -> (block ++ block).mkString("\n")), 8) ==
+      Seq("C.scala:1 = C.scala:9"))
+    val nearMiss = Seq("A.scala" -> block.mkString("\n"),
+      "B.scala" -> (block.init :+ "val v8 = g(8)").mkString("\n"))
+    assert(clones(nearMiss, 8).isEmpty)
+    val sources = scalaFiles("src/main/scala").map(f => rel(f) -> read(f))
+    assert(sources.size > 50, "source tree not found")
+    val found = clones(sources, 8)
+    assert(found.isEmpty, s"fold each repeated block into one shared helper: $found")
   }
 
   private val mdName = """(?<![\w./-])([\w./-]*\w\.md)\b""".r
