@@ -218,8 +218,8 @@ object BpeTrainer {
         val merged = l + r
         learned += ((rank, l, r, merged, w))
         // greedy left-to-right application as a per-word fold; lineage
-        // truncated per round (Clusters' device — on a real cluster
-        // prefer checkpoint() so a lost executor doesn't replay rounds)
+        // truncated per round (on a real cluster prefer checkpoint() so
+        // a lost executor doesn't replay rounds)
         words = words.withColumn("syms", mergeFold(col("syms"), l, r, merged))
           .localCheckpoint()
         rank += 1

@@ -1,9 +1,10 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-import graft.PartitionOps
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 /** Graph operator cores the g* queries build on and GraphSpec calls
   * directly: the co-purchase edge list, oriented triangle counts,
@@ -108,50 +109,56 @@ object Graph {
       .orderBy("part_id")
   }
 
-  /** g4 core over an ALREADY-undirected (u, v, w) adjacency — the
-    * registry passes the family's cached u-keyed adjacency (r19). A
-    * checkpointed adjW would serve the three iterations one
-    * materialization but erase its partitioning (Scan ExistingRDD =
-    * UnknownPartitioning), so every iteration's rank join re-exchanged
-    * the full |E|-row table — profiled at sf0.1 as three ~600 KB
-    * adjacency shuffles per run. Here adjW derives from the cache
-    * in-plan: the wout aggregate and its join are both keyed by u over
-    * hashpartitioning(u) InMemoryTableScans (zero exchanges), each
-    * iteration's join sees co-partitioned inputs (ranks carry
-    * hashpartitioning(node) from their own aggregate), and the only
-    * per-iteration exchange left is the contribution sum — the one
-    * shuffle the algorithm actually requires.
+  /** g4 core over an undirected (u, v, w) adjacency (both directions of
+    * every edge; the registry passes the family's cached adjacency):
+    * three [[Supersteps]] rounds of integer PageRank as one lazy chain.
+    * The adjacency is read by source in the SQL engine's own
+    * hashpartitioning(u) layout, which the cached adjacency already has,
+    * so it is never shuffled; the out-weight sums come from each
+    * partition's own edges. A round is one shuffle of `(node, contrib)`
+    * longs, summed map-side. Arithmetic is the registry's: contrib =
+    * (pr·w) div wout, pr' = 15%·SCALE + (85·Σcontrib) div 100, overflow
+    * failing loudly as ANSI SQL would.
     */
-  private[graft] def pagerankOnAdj(adj: DataFrame): DataFrame =
-    pagerankIter(adj.join(adj.groupBy("u").agg(sum("w").as("wout")), "u"))
-
-  private[graft] def pagerankIter(adjW: DataFrame): DataFrame = {
+  private[graft] def pagerankOnAdj(adj: DataFrame): DataFrame = {
     val SCALE = 1000000000000L
-    var ranks = adjW.select(col("u").as("node")).distinct()
-      .withColumn("pr", lit(SCALE))
+    val part = Supersteps.partitioner(adj)
+    val edges = weightedEdges(adj, part)
+    val wout = edges.mapPartitions({ es =>
+      val sums = mutable.LongMap.empty[Long]
+      es.foreach { case (u, (_, w)) => sums(u) = Math.addExact(sums.getOrElse(u, 0L), w) }
+      sums.iterator
+    }, preservesPartitioning = true)
+    // (node, (pr, wout)), wout 0 for a node with no out-edge
+    var ranks = wout.mapValues(w => (SCALE, w))
     for (_ <- 1 to 3) {
-      val contrib = adjW
-        .join(ranks, adjW("u") === ranks("node"))
-        .select(col("v").as("node"),
-          expr("(pr * w) div wout").as("c"))
-      ranks = contrib.groupBy("node")
-        .agg(sum("c").as("cs"))
-        .select(col("node"),
-          (lit(15L * (SCALE / 100L)) + expr("(85 * cs) div 100"))
-            .as("pr"))
+      val sums = Supersteps.messages(ranks, edges) { (r: (Long, Long), e: (Long, Long)) =>
+        Some((e._1, Math.multiplyExact(r._1, e._2) / r._2))
+      }.reduceByKey(part, Math.addExact(_: Long, _: Long))
+      ranks = Supersteps.leftJoin(sums, wout) { (cs: Long, w: Option[Long]) =>
+        (Math.addExact(15L * (SCALE / 100L), Math.multiplyExact(85L, cs) / 100L),
+          w.getOrElse(0L))
+      }
     }
-    ranks.select(col("node").as("part_id"), col("pr"))
+    Supersteps.frame(adj.sparkSession,
+      ranks.map { case (v, (pr, _)) => Row(v, pr) },
+      adj.schema("v").copy(name = "part_id"), StructField("pr", LongType))
       .orderBy("part_id")
   }
+
+  /** An adjacency's (u, v, w) rows as (u, (v, w)) edge records of longs,
+    * laid out by source.
+    */
+  private def weightedEdges(adj: DataFrame, part: Supersteps.VertexHash) =
+    Supersteps.bySource(adj.select(col("u").cast("long"), col("v").cast("long"),
+      col("w").cast("long")), part)(r => (r.getLong(1), r.getLong(2)))
 
   /** g13 core: synchronous weighted label propagation, [[LpaRounds]]
     * unrolled rounds — labels init to node ids, each round every node
     * adopts the label with the max total edge weight among its
-    * neighbors, ties to the SMALLEST label (argmax via max(struct(wt,
-    * −label)) — one hash aggregate, no per-node window). Deterministic
-    * by construction: synchronous updates + total tie order, so the
-    * oracle's identical unrolled rounds replay it bit-for-bit. Per
-    * round the cost is one |E|-sized join + the vote aggregates — the
+    * neighbors, ties to the SMALLEST label. Deterministic by
+    * construction: synchronous updates + total tie order, so the
+    * oracle's identical unrolled rounds replay it bit-for-bit. The
     * canonical communities-at-scale shape (Raghavan et al. 2007).
     * Fixed rounds rather than convergence: synchronous LPA can
     * 2-cycle on bipartite-ish regions, so a fixpoint test would not
@@ -161,57 +168,42 @@ object Graph {
     */
   val LpaRounds = 4
 
-  /** g13 rounds over an ALREADY-undirected (u, v, w) adjacency. The
-    * r19 shape change: rounds join the neighbor LABEL on the adjacency's
-    * `u` side and aggregate votes by `v` — for a doubled adjacency this
-    * is the same multiset of (node, neighbor-label, w) votes as the old
-    * join-on-v/group-by-u form (every directed copy (u,v) contributes
-    * u's label to v exactly once either way), but it lets the join ride
-    * hashpartitioning(u) when the caller passes the family's cached
-    * adjacency (GQueries): before, the repartition(v)+checkpoint lost its
-    * partitioning and EVERY round re-exchanged the full 605 k-row
-    * adjacency (profiled at sf0.1: 4 × ~600 KB shuffles). Now the
-    * adjacency side is exchange-free in all rounds, the labels side
-    * arrives hashpartitioning(node) from its own aggregate (round 1
-    * from the distinct), and the per-round cost is the two vote
-    * aggregates the algorithm actually requires.
+  /** g13 rounds over an undirected (u, v, w) adjacency (every target is
+    * also a source; the registry passes the family's cached adjacency),
+    * as [[Supersteps]] rounds in one lazy chain. The adjacency is read
+    * by source in the cached layout, as g4 reads it; round 1's labels are
+    * the sources themselves. A round sends every edge's vote
+    * (target, [source label, w]) through one shuffle, and each target's
+    * partition tallies its votes and takes the argmax. The census is one
+    * more shuffle of (label, node), counted where each label lands.
     */
   private[graft] def labelPropagationOnAdj(adj: DataFrame): DataFrame = {
-    var labels = adj.select(col("v").as("node")).distinct()
-      .withColumn("label", col("node"))
-    // the rounds FUSE into one DAG (no per-round materialization — the
-    // g4 lesson: checkpointing each iterate serializes the chain into
-    // R jobs and re-pays scheduling per round)
+    val part = Supersteps.partitioner(adj)
+    val edges = weightedEdges(adj, part)
+    var labels = edges.mapPartitions(es => es.map(_._1).distinct.map(u => (u, u)),
+      preservesPartitioning = true)
     for (_ <- 1 to LpaRounds) {
-      // ONE exchange per round (r19): the explicit v-keyed exchange
-      // below satisfies BOTH aggregates' clustering ([v, label] and
-      // [v] — hashpartitioning(v) is a subset key of each), so the
-      // per-(v,label) sum and the argmax run exchange-free above it.
-      // The default plan paid two: hashpartitioning(v, label) for the
-      // vote sum, then hashpartitioning(v) for the argmax — and the
-      // map-side partial agg ahead of the first bought almost nothing
-      // (profiled at sf0.1: 605 k join rows → 599 k partial rows in
-      // round 2+; the (v, label) grain is near-distinct per partition),
-      // so moving the raw votes once is fewer rows than the old two
-      // exchanges combined.
-      labels = PartitionOps.repartitionBeforeFanout(
-          adj.join(labels, adj("u") === labels("node"))
-            .select(col("v"), col("label"), col("w")),
-          col("v"))
-        .groupBy(col("v"), col("label"))
-        .agg(sum("w").as("wt"))
-        .groupBy("v")
-        .agg(max(struct(col("wt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("v").as("node"), (-col("m.nl")).as("label"))
+      labels = Supersteps.messages(labels, edges) { (l: Long, e: (Long, Long)) =>
+        Some((e._1, Array(l, e._2)))
+      }.partitionBy(part).mapPartitions({ votes =>
+        val tally = mutable.LongMap.empty[mutable.LongMap[Long]]
+        votes.foreach { case (v, Array(l, w)) =>
+          val t = tally.getOrElseUpdate(v, mutable.LongMap.empty[Long])
+          t(l) = Math.addExact(t.getOrElse(l, 0L), w)
+        }
+        tally.iterator.map { case (v, t) =>
+          (v, t.maxBy { case (l, wt) => (wt, -l) }._1)
+        }
+      }, preservesPartitioning = true)
     }
-    // final labels feed TWO consumers (census + output join) — one
-    // checkpoint stops the whole 4-round chain re-running
-    val fin = labels.localCheckpoint()
-    val sizes = fin.groupBy("label")
-      .agg(count(lit(1)).as("comm_size"))
-    fin.join(sizes, Seq("label"))
-      .select(col("node").as("part_id"), col("label").as("community"),
-        col("comm_size"))
+    val members = labels.map(_.swap).partitionBy(part).mapPartitions { it =>
+      val byLabel = mutable.LongMap.empty[mutable.ArrayBuffer[Long]]
+      it.foreach { case (l, v) => byLabel.getOrElseUpdate(l, mutable.ArrayBuffer.empty) += v }
+      byLabel.iterator.flatMap { case (l, vs) => vs.iterator.map(v => Row(v, l, vs.size.toLong)) }
+    }
+    val v = adj.schema("v")
+    Supersteps.frame(adj.sparkSession, members, v.copy(name = "part_id"),
+      StructField("community", v.dataType), StructField("comm_size", LongType, nullable = false))
       .orderBy("part_id")
   }
 }

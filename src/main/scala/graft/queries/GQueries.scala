@@ -330,10 +330,10 @@ object GQueries {
     //   ≤ deg ulps per node per iteration — ~10⁻¹⁰ relative, far below
     //   any ranking use. Overflow headroom: r ≤ ~SCALE·deg after an
     //   iteration never exceeds 2⁶³ with 10¹²·10⁴ ≪ 9.2·10¹⁸ margins
-    //   at any realistic degree. Per iteration: one broadcast-able
-    //   rank join + one partial-agg'able sum on the in-neighbor key —
-    //   3 fixed rounds, no driver loop, the whole thing ONE plan
-    //   (d6's iterate-in-plan shape without the convergence test). —
+    //   at any realistic degree. Per iteration: one shuffle of
+    //   (node, contrib) longs summed map-side, over the cached
+    //   adjacency read in its own layout (ext.Supersteps) — 3 fixed
+    //   rounds, no driver loop, one lazy chain. —
     // g4 oracle: the same three unrolled integer iterations — floor division
     // of positive longs (DuckDB //, Spark div) is engine-exact where
     // float PageRank never hashes the same twice
@@ -357,9 +357,9 @@ object GQueries {
     // — general connected components (d6's operator promoted to a
     //   first-class graph query, on a graph that is NOT near-clique
     //   shaped): component id = min part id reachable. Reuses the d6
-    //   min-label propagation loop — per round one equi-join on the
-    //   node key + one partial-agg'able min, lineage truncated per
-    //   round; rounds = diameter, and the co-purchase graph is dense
+    //   min-label propagation loop — per round one message shuffle from
+    //   the nodes the last round changed, min-reduced, one job;
+    //   rounds = diameter, and the co-purchase graph is dense
     //   (short diameter — the probe tracks the round count exactly as
     //   it does for d6, with the Kiveris large-star/small-star swap as
     //   the documented escape hatch if a sparser graph lengthens it).
@@ -368,7 +368,7 @@ object GQueries {
     //   independent of how the propagation computes it. —
     // reads the family's shared edge list, like every g* query: the
     // basket self-join is built once per session (connectedComponents
-    // then checkpoints its doubled copy as its first step)
+    // then shuffles both directions of it by source in its first round)
     // g5 oracle: component = MIN reachable id, stated as recursive reachability
     // (the d6 oracle device) — algorithm-independent of the propagation.
     // Replay cost note: the reach CTE is O(n·|component|) — fine at the
@@ -732,7 +732,7 @@ object GQueries {
     //   or parameter. Everything integer (labels are node ids, votes
     //   are edge-weight sums, ties to min label), synchronous and
     //   round-bounded — see LpaRounds for determinism and
-    //   the per-round one-shuffle scale shape. Output: every node's
+    //   labelPropagationOnAdj for the per-round one-shuffle shape. Output: every node's
     //   community plus its size (the dup-cluster-style census). —
     // g13 oracle: the same 4 synchronous rounds unrolled — weighted majority
     // as a (u, label) aggregate + ROW_NUMBER argmax with the identical

@@ -32,6 +32,22 @@ class ClusterAndObserveSpec extends SparkSpec {
     assert(rounds == 1)
   }
 
+  test("connected components: a pair with a null end is dropped, not read as node 0") {
+    val pairs = Seq((Some(2L), Some(1L)), (None, Some(3L)), (Some(3L), Some(4L)))
+      .toDF("id1", "id2")
+    val got = Clusters.connectedComponents(pairs)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+  }
+
+  test("connected components: labels still changing at the round cap fail loudly") {
+    // a 25-node path needs 24 changing rounds and a 25th to see none
+    val path = (1L until 25L).map(i => (i, i + 1)).toDF("id1", "id2")
+    val e = intercept[IllegalStateException](Clusters.componentsWithRounds(path))
+    assert(e.getMessage.contains("maxIters = 20"), e.getMessage)
+    assert(Clusters.componentsWithRounds(path, maxIters = 25)._2 == 25)
+  }
+
   test("observe() metrics ride the cleaning job") {
     val dirty = Tables.dirtySales(spark, sf)
     val expectedNullCat = dirty.filter($"category".isNull).count()

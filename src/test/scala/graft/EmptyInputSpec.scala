@@ -74,6 +74,18 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
     "t16_bigram_commonness", "t16b_bigram_hotsplit", "v3_l2_normalize",
     "v5_pq_codes", "v8_matryoshka_truncate", "w8_ewma", "w12_holt")
 
+  /** The round-loop queries (connected components, PageRank, label
+    * propagation): a loop over no edges ends with an empty frame of the
+    * real-data schema, nullability included.
+    */
+  private val roundLoopQueries = Seq(
+    "d6_dedup_clusters", "d14_dup_census", "c3_fuzzy_corpus", "c17_dedup_survivor",
+    "c30_group_split", "g4_pagerank", "g13_label_propagation")
+
+  for (q <- roundLoopQueries) test(s"$q on empty tables: its real-data schema") {
+    onEmpty(q)
+  }
+
   for (q <- sharedCoreQueries) test(s"$q on empty tables: its real-data schema") {
     onEmpty(q)
   }
