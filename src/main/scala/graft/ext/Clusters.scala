@@ -79,8 +79,10 @@ object Clusters {
       if (rounds == maxIters)
         throw new IllegalStateException(s"connected components: labels still " +
           s"changing after maxIters = $maxIters rounds ($changed nodes in the last)")
-      val lower = Supersteps.messages(labels, edges) { (s: Label, dst: Long) =>
-        if (s.changed) Some((dst, s.label)) else None
+      // only changed nodes send, so only they are the messages' state: a
+      // partition with none of them skips its edges
+      val lower = Supersteps.messages(labels.filter(_._2.changed), edges) {
+        (s: Label, dst: Long) => Some((dst, s.label))
       }.reduceByKey(part, math.min(_, _))
       val next = Supersteps.leftJoin(labels, lower) { (s: Label, m: Option[Long]) =>
         m.filter(_ < s.label).fold(Label(s.label, changed = false))(Label(_, changed = true))

@@ -38,11 +38,13 @@ object Dedup {
     * while DuckDB `range(k)` would be empty).
     *
     * Takes the tokens as a bound column, not the tokenizer expression:
-    * higher-order functions run interpreted (no whole-stage codegen), so an
-    * expression argument would be RE-EVALUATED on every lambda access —
-    * measured 75× slower when `split()` was inlined here. Callers must
-    * project the token array first (CollapseProject keeps the split
-    * un-inlined because it is non-cheap and multiply referenced).
+    * `transform` is a higher-order function and runs interpreted (no
+    * whole-stage codegen), so an expression argument would be
+    * RE-EVALUATED on every lambda access — measured 75× slower when
+    * `split()` was inlined here. Callers must project the token array
+    * first. The fingerprint index does not use this spelling: its
+    * hashed form is the native [[graft.functions.ShingleHashes]], asserted
+    * equal to `xxhash64` over these shingles by `TextKernelSpec`.
     */
   def shingles(tokens: Column, n: Int): Column =
     when(size(tokens) >= n,
@@ -65,9 +67,11 @@ object Dedup {
   /** Per-document shingle fingerprint index: (doc_id, hs) where `hs` is
     * the set of distinct `xxhash64` fingerprints of the document's word
     * n-gram shingles ([[shingles]]), spread by doc_id before the
-    * (interpreted, HOF-based) tokenize+shingle pass and materialized once.
-    * Consumers read (doc_id, sh: bigint) rows from [[fingerprints]], a
-    * narrow explode; set sizes are `size(hs)`.
+    * tokenize+hash pass and materialized once. Both steps are native
+    * codegen'd kernels ([[graft.functions.Tokens]],
+    * [[graft.functions.ShingleHashes]]): no regex, no lambda, no shingle
+    * string. Consumers read (doc_id, sh: bigint) rows from
+    * [[fingerprints]], a narrow explode; set sizes are `size(hs)`.
     *
     * Why the materialized index has this shape: the string index
     * ([[shingleIndex]]) is one JVM row per (doc, shingle) — ~120 bytes
@@ -92,9 +96,8 @@ object Dedup {
     */
   private[graft] def fingerprintIndex(docs: DataFrame, n: Int): DataFrame =
     graft.PartitionOps.repartitionBeforeFanout(docs, col("doc_id"))
-      .select(col("doc_id"), TextAnalysis.tokens(col("text")).as("toks"))
-      .select(col("doc_id"), array_distinct(transform(shingles(col("toks"), n),
-        s => when(s.isNotNull, xxhash64(s)))).as("hs"))
+      .select(col("doc_id"), graft.functions.ShingleHashes
+        .shingle_hashes(TextAnalysis.tokens(col("text")), n).as("hs"))
       .localCheckpoint()
 
   /** (doc_id, sh: bigint) edge list of a [[fingerprintIndex]]. */

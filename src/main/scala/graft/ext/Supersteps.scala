@@ -85,10 +85,13 @@ private[graft] object Supersteps {
       }
     }
 
-  /** One round's messages: each partition of `state` (one record per
-    * vertex) becomes a hash map, and every edge whose source it holds
+  /** One round's messages: each partition of `state` (at most one record
+    * per vertex) becomes a hash map, and every edge whose source it holds
     * passes that source's state and the edge to `send`, which returns
-    * the message keyed by its DESTINATION, or None. The result keeps no
+    * the message keyed by its DESTINATION, or None. A partition whose
+    * state is empty sends nothing and does not read its edges, so a
+    * caller passes only the vertices that can send. A partition with a
+    * few senders still streams all its edges. The result keeps no
     * partitioner: the records are re-keyed, so the next shuffle must run.
     * Claiming the state's partitioning here would let a reduce under the
     * same partitioner skip its shuffle and return each destination once
@@ -98,7 +101,8 @@ private[graft] object Supersteps {
       send: (S, E) => Option[(Long, M)]): RDD[(Long, M)] =
     state.zipPartitions(edges, preservesPartitioning = false) { (vs, es) =>
       val byId = mutable.LongMap.from(vs)
-      es.flatMap { case (src, e) => byId.get(src).flatMap(send(_, e)) }
+      if (byId.isEmpty) Iterator.empty
+      else es.flatMap { case (src, e) => byId.get(src).flatMap(send(_, e)) }
     }
 
   /** A left join of `rdd` with `lookup`, both laid out by the same

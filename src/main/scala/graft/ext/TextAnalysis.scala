@@ -7,13 +7,19 @@ import org.apache.spark.sql.functions._
   * `documents` table: token counting, quality scoring, language-ID
   * heuristic, document fingerprinting. All are narrow, codegen'd column
   * expressions — zero shuffles, zero UDFs — so they stream through a 100 TB
-  * corpus at scan speed. Regex character classes are spelled explicitly so
-  * Java regex (Spark) and RE2 (DuckDB oracle) agree.
+  * corpus at scan speed. The tokenizer every operator reads is the native
+  * one-pass [[graft.functions.Tokens]], not a lower + regex-split chain.
+  * Regex character classes are spelled explicitly so Java regex (Spark)
+  * and RE2 (DuckDB oracle) agree.
   */
 object TextAnalysis {
 
-  /** Whitespace tokens of lower-cased trimmed text. */
-  def tokens(text: Column): Column = split(lower(trim(text)), "\\s+")
+  /** Whitespace tokens of lower-cased trimmed text, i.e.
+    * `split(lower(trim(text)), "\\s+")` (the oracle's spelling), computed
+    * by the native [[graft.functions.Tokens]] in one byte pass: no regex,
+    * and Spark's ICU case table only for text that is not all ASCII.
+    */
+  def tokens(text: Column): Column = graft.functions.Tokens.tokens(text)
 
   /** Reference-free "BPE-ish" subword proxy: letter runs + single digits +
     * individual punctuation, the shape byte-pair pretokenizers produce.
@@ -138,8 +144,11 @@ object TextAnalysis {
     docs.select(col("doc_id"),
       md5(normalized(col("text"))).as("fingerprint"))
 
-  def normalized(text: Column): Column =
-    regexp_replace(lower(trim(text)), "\\s+", " ")
+  /** `regexp_replace(lower(trim(text)), "\\s+", " ")` (the oracle's
+    * spelling) as the tokens joined by single spaces: the same string for
+    * every input, null included, without the regex or the ICU table.
+    */
+  def normalized(text: Column): Column = array_join(tokens(text), " ")
 
   /** PII masking patterns — explicit character classes so Java regex
     * (Spark) and RE2 (DuckDB oracle) agree on every match. Application

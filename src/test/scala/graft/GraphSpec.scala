@@ -244,15 +244,21 @@ class GraphSpec extends SparkSpec {
     jobs.get
   }
 
-  test("graph round loops cost a job per round, not a plan and several jobs") {
-    // load-independent counters: a round loop that goes back to planning
-    // a DataFrame per round fails here, not only in the benchmark
-    val li = graft.etl.Tables.table(spark, sf, "lineitem")
+  /** The (id1, id2) pairs g5 runs on: the co-purchase graph of the md5
+    * quarter sample of `lineitem`.
+    */
+  private def g5Pairs(dir: String) = {
+    val li = graft.etl.Tables.table(spark, dir, "lineitem")
       .filter(substring(md5(col("l_orderkey").cast("string")), 1, 1)
         .isin("0", "1", "2", "3"))
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val rounds = graft.ext.Clusters.componentsWithRounds(
-      Graph.edgesOf(li).select(col("u").as("id1"), col("v").as("id2")))._2
+    Graph.edgesOf(li).select(col("u").as("id1"), col("v").as("id2"))
+  }
+
+  test("graph round loops cost a job per round, not a plan and several jobs") {
+    // load-independent counters: a round loop that goes back to planning
+    // a DataFrame per round fails here, not only in the benchmark
+    val rounds = graft.ext.Clusters.componentsWithRounds(g5Pairs(sf))._2
     // warm the family's cached edge list and adjacency: counted below is
     // the round loop, not the cache builds
     for (q <- Seq("g4_pagerank", "g5_connected_components", "g13_label_propagation"))
@@ -334,13 +340,7 @@ class GraphSpec extends SparkSpec {
     // rounds = diameter + 1 fixpoint check — the co-purchase graph is
     // dense/short-diameter; a rising bound here is the d6 early-warning
     // signal that the large-star/small-star swap is due
-    val sess = spark
-    import sess.implicits._
-    val li = graft.etl.Tables.table(spark, "/root/testdata/sf0.001", "lineitem")
-      .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-    val pairs = Graph.edgesOf(li)
-      .select(col("u").as("id1"), col("v").as("id2"))
-    val (labels, rounds) = graft.ext.Clusters.componentsWithRounds(pairs)
+    val (labels, rounds) = graft.ext.Clusters.componentsWithRounds(g5Pairs(sf))
     assert(labels.limit(1).count() == 1)
     assert(rounds <= 8, s"min-label propagation took $rounds rounds")
   }
