@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -32,10 +32,10 @@ object Bench {
         "c5_source_profile", "st5_stream_stateful", "s4_ann_ivf",
         "t18_bigram_fluency").foreach { q =>
       try { SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case _: Throwable => () }
+      catch { case e: Throwable => System.err.println(s"[bench] warmup $q failed: $e") }
     }
     // Per-query isolation + median-of-3 (round-8 fix): the registry has
-    // 49 cache/localCheckpoint sites and the queries never unpersist —
+    // 42 cache/localCheckpoint sites and the queries never unpersist —
     // by design, a caller owns its session's cache lifecycle, not the
     // library. One shared JVM running 106 queries alphabetically let
     // checkpointed blocks accumulate all run long, and block-manager/heap
@@ -75,6 +75,45 @@ object Bench {
         sys.env.getOrElse("SPARK_GRAFT_CALM_WAIT", "60").toInt,
       totalBudgetSec =
         sys.env.getOrElse("SPARK_GRAFT_CALM_BUDGET", "900").toInt)
+    val t = timeQueries(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1), reps, calm)
+    val results = t.raw.map { case (n, ts) => n -> ts.sorted.apply(ts.size / 2) }
+    // Full-name per-query timings to a file (the stdout line below uses
+    // short ids to fit the driver's retention window) — written BEFORE the
+    // contract line so nothing trails it on stdout but sbt's own epilogue.
+    // A detail-write failure must never suppress the driver-contract line.
+    // The detail carries every rep IN RUN ORDER next to the median: a real
+    // plan regression degrades all reps; ambient contention (the r10
+    // driver-window 14× t18 phantom) shows scattered or uniformly inflated
+    // reps a reader can adjudicate without a manual re-run.
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
+        renderDetailJson(t.raw, sfDir, loadStart, loadAvg(), t.loads,
+          s"local[$cpus]", Runtime.getRuntime.availableProcessors, t.contended,
+          t.requeued, t.firstMedians, calm.waitedTotalSec, calm.threshold, t.errors)
+          .getBytes("UTF-8"))
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"bench_detail.json write failed: $e")
+    }
+    println(renderJson(results, sfDir, contendedCount = t.contended.size))
+    spark.stop()
+  }
+
+  /** The timed pass: per query its reps in run order and their loadavg
+    * stamps, or the error it threw (a failed query has no times).
+    */
+  final case class Timings(raw: Seq[(String, Seq[Double])],
+      loads: Map[String, Seq[Double]], contended: Set[String],
+      requeued: Set[String], firstMedians: Map[String, Double],
+      errors: Seq[(String, String)])
+
+  /** Time each query of `registry` in order, `reps` reps each, behind the
+    * calm gate and with persisted state dropped between queries.
+    */
+  def timeQueries(spark: SparkSession, sfDir: String,
+      registry: Seq[(String, (SparkSession, String) => DataFrame)], reps: Int,
+      calm: CalmGate): Timings = {
+    val fnByName = registry.toMap
     // each rep carries the 1-min loadavg sampled at ITS end (not just the
     // whole-run start/end brackets): three rounds of driver-window
     // contention (r11–r13) each cost the judge a re-adjudication because
@@ -92,14 +131,12 @@ object Bench {
     // ORDER BY all execute — the bench now measures what a consumer
     // of the full result pays. Totals are NOT comparable with the
     // count-based records before it (BENCH_r01–r14).
-    def measure(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame)
-        : Seq[(Double, Double)] = {
+    def measure(fn: (SparkSession, String) => DataFrame): Seq[(Double, Double)] = {
       calm.await()
       CacheScope.dropAll(spark)
       def rep(): (Double, Double) = {
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).queryExecution.toRdd.count() }
-        catch { case _: Throwable => -1L }
+        fn(spark, sfDir).queryExecution.toRdd.count()
         ((System.nanoTime() - t0) / 1e9, loadAvg())
       }
       val base = (1 to reps).map(_ => rep())
@@ -130,8 +167,16 @@ object Bench {
         else Seq.empty
       base ++ extra
     }
-    val registry = SparkEntry.queries.toSeq.sortBy(_._1)
-    val firstPass = registry.map { case (name, fn) => name -> measure(fn) }
+    // A rep that throws ends its query's measurement: the query records
+    // the error instead of a time.
+    def attempt(name: String): Either[String, Seq[(Double, Double)]] =
+      try Right(measure(fnByName(name))) catch { case e: Throwable =>
+        System.err.println(s"[bench] $name failed: $e")
+        Left(e.toString)
+      }
+    val measured = registry.map { case (name, _) => name -> attempt(name) }
+    val errors = measured.collect { case (name, Left(e)) => name -> e }
+    val firstPass = measured.collect { case (name, Right(o)) => name -> o }
     def isSuspect(o: Seq[(Double, Double)]): Boolean =
       o.size >= 3 && (suspectMedian(o.map(_._1)) ||
         suspectLoad(o.map(_._2), calm.threshold))
@@ -145,11 +190,10 @@ object Bench {
     // Keep the better (smaller-median) measurement; a query stays flagged
     // only when BOTH measurements look contended.
     val firstSuspect = firstPass.filter { case (_, o) => isSuspect(o) }
-    val fnByName = registry.toMap
-    val requeuedRuns = firstSuspect.map { case (name, _) =>
-      name -> measure(fnByName(name))
+    val requeued = firstSuspect.map(_._1).toSet
+    val requeuedRuns = firstSuspect.flatMap { case (name, _) =>
+      attempt(name).toOption.map(name -> _)
     }.toMap
-    val requeued = requeuedRuns.keySet
     val observed = firstPass.map { case (name, first) =>
       requeuedRuns.get(name) match {
         case Some(second) if medianOf(second) < medianOf(first) =>
@@ -163,28 +207,8 @@ object Bench {
     val contended = observed.filter { case (name, o) =>
       isSuspect(o) && requeuedRuns.get(name).forall(isSuspect)
     }.map(_._1).toSet
-    val results = raw.map { case (n, ts) => n -> ts.sorted.apply(ts.size / 2) }
     CacheScope.dropAll(spark)
-    // Full-name per-query timings to a file (the stdout line below uses
-    // short ids to fit the driver's retention window) — written BEFORE the
-    // contract line so nothing trails it on stdout but sbt's own epilogue.
-    // A detail-write failure must never suppress the driver-contract line.
-    // The detail carries every rep IN RUN ORDER next to the median: a real
-    // plan regression degrades all reps; ambient contention (the r10
-    // driver-window 14× t18 phantom) shows scattered or uniformly inflated
-    // reps a reader can adjudicate without a manual re-run.
-    try {
-      java.nio.file.Files.write(java.nio.file.Paths.get("bench_detail.json"),
-        renderDetailJson(raw, sfDir, loadStart, loadAvg(), loads,
-          s"local[$cpus]", Runtime.getRuntime.availableProcessors, contended,
-          requeued, firstMedians, calm.waitedTotalSec, calm.threshold)
-          .getBytes("UTF-8"))
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"bench_detail.json write failed: $e")
-    }
-    println(renderJson(results, sfDir, contendedCount = contended.size))
-    spark.stop()
+    Timings(raw, loads, contended, requeued, firstMedians, errors)
   }
 
   /** Short id for the stdout line: the registry prefix before the first
@@ -272,15 +296,6 @@ object Bench {
     s"""{"queries":$qs,$cut"contended":$contendedCount,"sf":"$sfStr","metric":"total","unit":"sec","n_queries":${results.size},"value":${f(total)}}"""
   }
 
-  /** The self-diagnosing detail artifact: full query names, and EVERY rep
-    * in run order next to the derived median. The shape exists so a
-    * reader can separate a real plan regression (all reps degraded,
-    * every run) from ambient contention (scattered or uniformly inflated
-    * reps in one window — the r10 driver bench showed a 14× t18 phantom
-    * whose warm re-run matched the committed number) without a manual
-    * re-run. File-only, so no stdout retention-window pressure: full
-    * precision, full names.
-    */
   /** 1-minute load average at call time, or -1 if unreadable — stamped
     * into the detail file at start and end so an inflated run carries
     * its own contention evidence (the r13 adjudications — a solo probe
@@ -306,6 +321,16 @@ object Bench {
   def resolvedCpus: String =
     sys.env.getOrElse("SPARK_GRAFT_CPUS", DefaultCpus)
 
+  /** The self-diagnosing detail artifact: full query names, and EVERY rep
+    * in run order next to the derived median. The shape exists so a
+    * reader can separate a real plan regression (all reps degraded,
+    * every run) from ambient contention (scattered or uniformly inflated
+    * reps in one window — the r10 driver bench showed a 14× t18 phantom
+    * whose warm re-run matched the committed number) without a manual
+    * re-run. A failed query carries the error it threw in place of its
+    * reps and adds nothing to the total. File-only, so no stdout
+    * retention-window pressure: full precision, full names.
+    */
   def renderDetailJson(raw: Seq[(String, Seq[Double])], sfDir: String,
       loadStart: Double = -1.0, loadEnd: Double = -1.0,
       loads: Map[String, Seq[Double]] = Map.empty,
@@ -313,7 +338,8 @@ object Bench {
       contended: Set[String] = Set.empty,
       requeued: Set[String] = Set.empty,
       firstMedians: Map[String, Double] = Map.empty,
-      calmWaitedSec: Double = 0.0, calmThreshold: Double = -1.0): String = {
+      calmWaitedSec: Double = 0.0, calmThreshold: Double = -1.0,
+      errors: Seq[(String, String)] = Seq.empty): String = {
     def f(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
     val qs = raw.map { case (name, ts) =>
@@ -340,13 +366,16 @@ object Bench {
         else ""
       "\"" + name + "\":{\"median\":" + f(median) + ",\"reps\":" + reps +
         ld + ct + rq + "}"
-    }.mkString("{", ",", "}")
+    } ++ errors.map { case (name, e) =>
+      "\"" + name + "\":{\"error\":" + Verify.jsonString(e) + "}"
+    }
+    val qsJson = qs.mkString("{", ",", "}")
     val total = raw.map { case (_, ts) => ts.sorted.apply(ts.size / 2) }.sum
     val calmStr =
       if (calmThreshold >= 0)
         s""","calm_threshold":${f2(calmThreshold)},"calm_waited_sec":${f(calmWaitedSec)},"n_requeued":${requeued.size}"""
       else ""
-    s"""{"queries":$qs,"sf":"$sfDir","metric":"total","unit":"sec","n_queries":${raw.size},"value":${f(total)},"n_contended":${contended.size},"loadavg_start":${f(loadStart)},"loadavg_end":${f(loadEnd)},"master":"$master","box_cores":$boxCores$calmStr}"""
+    s"""{"queries":$qsJson,"sf":"$sfDir","metric":"total","unit":"sec","n_queries":${raw.size},"value":${f(total)},"n_failed":${errors.size},"n_contended":${contended.size},"loadavg_start":${f(loadStart)},"loadavg_end":${f(loadEnd)},"master":"$master","box_cores":$boxCores$calmStr}"""
   }
 
   /** Bounded wait for an externally-calm measurement window. The

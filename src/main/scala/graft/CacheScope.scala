@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Lifecycle for the engine's internal caches — the complement to the
-  * "caller owns the block" contract documented at the 49
+  * "caller owns the block" contract documented at the 42
   * `persist`/`cache`/`localCheckpoint` call sites in `src/main` (the
   * shingle indexes, k-means assignments, label-propagation frontiers,
   * …). Those sites cannot unpersist eagerly — their blocks back the

@@ -61,10 +61,7 @@ object Clusters {
     // its own adjacency
     val (edges, first, changed1) = Supersteps.reading(
         pairs.select(col("id1").cast("long"), col("id2").cast("long"))) { rows =>
-      val edges = rows.flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
-        else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
-      }.partitionBy(part)
+      val edges = Supersteps.bothWays(rows, part)
       val first = edges.mapPartitions({ es =>
         val min = mutable.LongMap.empty[Long]
         es.foreach { case (a, b) => min(a) = math.min(min.getOrElse(a, a), b) }

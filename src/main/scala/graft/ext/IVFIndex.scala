@@ -65,25 +65,33 @@ object IVFIndex {
     * the cache ([[Index.unpersist]]).
     */
   def build(emb: DataFrame, nLists: Int = -1, seed: Long = 42L,
-      maxTrain: Int = 100000): Index = {
+      maxTrain: Int = MaxTrain): Index = {
     val spark = emb.sparkSession
     val vecs = emb.select(col("vec_id"), VectorOps.toDouble(col("embedding")).as("v"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Deterministic, layout-independent training sample: keep ids whose
-    // hash clears a rate sized for ~maxTrain rows. limit() would train on
-    // whichever partitions answered first — a different quantizer per file
-    // layout; the hash filter picks the same rows on any cluster.
-    val n = vecs.count()
+    val (n, sample) = trainingSample(vecs, maxTrain)
     val k = if (nLists > 0) nLists else defaultNLists(n)
-    val keepEvery = math.max(1L, n / maxTrain)
-    val train = vecs
-      .filter(pmod(xxhash64(col("vec_id")), lit(keepEvery)) === 0)
-      .select(array_to_vector(col("v")).as("features"))
+    val train = sample.select(array_to_vector(col("v")).as("features"))
     val model = new KMeans().setK(k).setSeed(seed).setMaxIter(10).fit(train)
     val centroids: Array[(Int, Array[Double])] =
       model.clusterCenters.zipWithIndex.map { case (c: Vector, i) => (i, c.toArray) }
     val assigned = assignCells(vecs, centroids)
     Index(assigned, centroids, () => { vecs.unpersist(); () })
+  }
+
+  /** The default cap on a trainer's sample (IVF, PQ, SemanticDedup's re-split). */
+  private[ext] val MaxTrain = 100000
+
+  /** The row count of `vecs` and its training sample: the rows whose
+    * `xxhash64(vec_id)` clears a rate sized for ~`maxTrain` of them.
+    * limit() would train on whichever partitions answered first — a
+    * different quantizer per file layout; the hash filter picks the same
+    * rows on any cluster.
+    */
+  private[ext] def trainingSample(vecs: DataFrame, maxTrain: Int): (Long, DataFrame) = {
+    val n = vecs.count()
+    val keepEvery = math.max(1L, n / maxTrain)
+    (n, vecs.filter(pmod(xxhash64(col("vec_id")), lit(keepEvery)) === 0))
   }
 
   /** The index over PINNED centroids (no training pass): assignment is

@@ -41,13 +41,10 @@ object ProductQuantizer {
     * at the 100k default that is ≤ ~50 MB of doubles on the driver.
     */
   def train(emb: DataFrame, m: Int, k: Int, seed: Long = 42L,
-      maxTrain: Int = 100000): PQ = {
+      maxTrain: Int = IVFIndex.MaxTrain): PQ = {
     val vecs = emb.select(col("vec_id"),
       VectorOps.toDouble(col("embedding")).as("v"))
-    val n = vecs.count()
-    val keepEvery = math.max(1L, n / maxTrain)
-    val sample = vecs
-      .filter(pmod(xxhash64(col("vec_id")), lit(keepEvery)) === 0)
+    val sample = IVFIndex.trainingSample(vecs, maxTrain)._2
       .orderBy("vec_id")
       .collect()
       .map(_.getSeq[Double](1).toArray)
@@ -74,7 +71,7 @@ object ProductQuantizer {
     * duplicates-heavy samples still yield k valid entries); a sample
     * smaller than k pads the codebook by cycling the points.
     */
-  private def lloyd(points: Array[Array[Double]], k: Int,
+  private[ext] def lloyd(points: Array[Array[Double]], k: Int,
       seed: Long, iters: Int = 10): Array[Array[Double]] = {
     val rnd = new java.util.Random(seed)
     val centers = scala.collection.mutable.ArrayBuffer(

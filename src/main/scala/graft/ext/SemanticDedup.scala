@@ -93,8 +93,8 @@ object SemanticDedup {
         .otherwise(col("vec_id")))
     val groups = lk.groupBy("cell", "v", "sk").agg(min("vec_id").as("rep_id"))
     val reps0 = groups.select(col("rep_id").as("vec_id"), col("cell"), col("v"))
-    // pin the representative set: refine's census/per-cell driver loop and
-    // the pair join's BOTH sides re-derive it otherwise (the groups
+    // pin the representative set: refine's census and sample and the
+    // pair join's BOTH sides re-derive it otherwise (the groups
     // shuffle per scan). Block ownership follows the existing
     // caller-owns contract (CacheScope / the bench sweep)
     val reps = refine(reps0, maxCell, seed, maxDepth)
@@ -132,36 +132,21 @@ object SemanticDedup {
       .filter(!col("is_dup"))
       .select("vec_id")
 
-  /** Lloyd iterations for the batched sub-quantizer ([[refine]]). */
-  private val RefineIters = 10
-
-  /** Fixed-point scale for the exact centroid-mean aggregation: embedding
-    * coordinates are O(1) doubles, so ×10¹² keeps ~12 significant
-    * decimals and the per-(sub, pos) DECIMAL(38,0) sum has ~10¹³ rows of
-    * headroom before precision-38 saturates.
-    */
-  private val FixedPointScale = 1e12
-
   /** Recursively re-split cells whose representative occupancy exceeds
-    * `maxCell` — ALL oversized cells in one batched, seeded Lloyd's
-    * k-means, not a driver loop of per-cell fits (the r12 scaling wart:
-    * one KMeans.fit + assignment pass PER oversized cell serialized a
-    * few hundred hot cells into a few hundred sequential Spark jobs at
-    * skew; this version runs O(1) jobs per depth regardless of how many
-    * cells overflow).
+    * `maxCell` — ALL oversized cells per depth in a constant number of
+    * jobs, not one KMeans.fit + assignment pass per cell (a few hundred
+    * hot cells were a few hundred sequential Spark jobs at skew).
     *
-    * The batch trick: every oversized cell's sub-problem shares each
-    * pass — init ranks reps per cell by xxhash64(vec_id, cell + seed)
-    * (per-cell seeding preserved: the ordering is a function of the
-    * cell id and the seed) and takes the k_c hash-smallest as initial
-    * centroids; each Lloyd iteration is one broadcast join of the
-    * Σk_c-row centroid table on the cell key (a rep only ever competes
-    * against its OWN cell's centroids) + an argmin via min(struct(d,
-    * sub)), then one partial-agg recompute of centroid means. Means
-    * aggregate in fixed-point DECIMAL(38,0) (×10¹²), not doubles —
-    * exact integer sums are aggregation-order-free, so the refined
-    * assignment is deterministic on any partition layout, which the
-    * double-sum a distributed KMeans.fit does cannot promise.
+    * Each oversized cell c gets k_c centroids from [[ProductQuantizer]]'s
+    * seeded in-process Lloyd (seed + c): SemDeDup uses the re-split only
+    * as a finer blocking key, so a bounded fit is enough. One job
+    * collects every cell's sample, its hash-smallest reps under
+    * xxhash64(vec_id, cell + seed) in id order, the quotas summing to at
+    * most [[IVFIndex.MaxTrain]]; sample and fit depend on ids and values
+    * only, so the split is the same on any partition layout. One
+    * broadcast join of the Σk_c-row centroid table on the cell key (a rep
+    * competes only against its OWN cell's centroids) and an argmin via
+    * min(struct(d, sub)) assign the reps.
     *
     * Sub-cell ids block-allocate past the current max (cell c's block is
     * [base_c, base_c + k_c)), so ids stay dense ints across depths.
@@ -172,10 +157,10 @@ object SemanticDedup {
   private def refine(reps: DataFrame, maxCell: Int, seed: Long,
       depth: Int): DataFrame = {
     if (maxCell == Int.MaxValue || depth <= 0) return reps
-    // pin this level before the census: the iteration passes below
-    // re-scan `reps` once per Lloyd step — uncached, each scan replays
-    // the full upstream lineage (the groups shuffle plus any prior
-    // refine unions). Caller-owns-block contract
+    // pin this level before the census: the census, the sample and the
+    // assignment pass each scan `reps`, which uncached replays the full
+    // upstream lineage (the groups shuffle plus any prior refine
+    // unions). Caller-owns-block contract
     val pinned = reps.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val sizes = pinned.groupBy("cell").agg(count(lit(1)).as("n"))
       .collect().map(r => r.getInt(0) -> r.getLong(1))
@@ -191,49 +176,27 @@ object SemanticDedup {
       val base = nextId; nextId += k
       (c, k, base)
     }.toSeq
-    val planDf = broadcast(plan.toDF("cell", "k_c", "base"))
     val untouched = pinned.filter(!col("cell").isInCollection(over.toSeq))
     val overdf = pinned.filter(col("cell").isInCollection(over.toSeq))
-    // seeded init: the k_c hash-smallest reps of each cell, their values
-    // taken as the initial centroids (one job for ALL cells)
+    val quota = math.max(1, IVFIndex.MaxTrain / over.length)
     val hw = Window.partitionBy("cell")
       .orderBy(xxhash64(col("vec_id"), col("cell") + lit(seed)), col("vec_id"))
-    var cent: Array[(Int, Int, Seq[Double])] = overdf.join(planDf, "cell")
-      .withColumn("rn", row_number().over(hw))
-      .filter(col("rn") <= col("k_c"))
-      .select(col("cell"), (col("base") + col("rn") - 1).as("sub"), col("v"))
+    val samples = overdf.withColumn("rn", row_number().over(hw))
+      .filter(col("rn") <= quota)
+      .select(col("cell"), col("vec_id"), col("v"))
       .collect()
-      .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-    val d38 = org.apache.spark.sql.types.DecimalType(38, 0)
-    def assigned(cs: Array[(Int, Int, Seq[Double])]): DataFrame = {
-      val centDf = broadcast(cs.toSeq.toDF("cell", "sub", "cv"))
-      overdf.join(centDf, "cell")
-        .groupBy(col("vec_id"), col("cell"), col("v"))
-        .agg(min(struct(VectorOps.l2sq(col("v"), col("cv")).as("d"),
-          col("sub").as("sub"))).as("m"))
-        .select(col("vec_id"), col("m.sub").as("sub"), col("v"))
+      .groupBy(_.getInt(0))
+    val cent = plan.flatMap { case (c, k, base) =>
+      val pts = samples(c).sortBy(_.getLong(1)).map(_.getSeq[Double](2).toArray)
+      ProductQuantizer.lloyd(pts, k, seed + c).zipWithIndex.map { case (cv, j) =>
+        (c, base + j, cv.toSeq)
+      }
     }
-    for (_ <- 1 to RefineIters) {
-      val subCell = cent.map(t => t._2 -> t._1).toMap
-      cent = assigned(cent)
-        .select(col("sub"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy("sub", "pos")
-        .agg(sum((col("x") * FixedPointScale).cast(d38)).as("sx"),
-          count(lit(1)).as("n"))
-        .select(col("sub"), col("pos"),
-          ((col("sx") / col("n")).cast("double") / FixedPointScale).as("m"))
-        .collect()
-        .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-        .groupBy(_._1).toArray
-        .map { case (sub, xs) =>
-          (subCell(sub), sub, xs.sortBy(_._2).map(_._3).toSeq)
-        }
-        .sortBy(_._2)
-      // subs that lost every rep drop out of the table (standard Lloyd's
-      // empty-cluster shrink; the id block just stays sparse)
-    }
-    val splits = assigned(cent)
-      .select(col("vec_id"), col("sub").as("cell"), col("v"))
+    val splits = overdf.join(broadcast(cent.toDF("cell", "sub", "cv")), "cell")
+      .groupBy(col("vec_id"), col("cell"), col("v"))
+      .agg(min(struct(VectorOps.l2sq(col("v"), col("cv")).as("d"),
+        col("sub").as("sub"))).as("m"))
+      .select(col("vec_id"), col("m.sub").as("cell"), col("v"))
     refine(untouched.unionAll(splits), maxCell, seed, depth - 1)
   }
 }

@@ -14,7 +14,8 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Vertex-centric rounds over co-partitioned RDDs, the message-passing
   * shape of Pregel (Malewicz et al., SIGMOD 2010) and GraphX, which
-  * [[Clusters]] and the g4/g13 cores in [[Graph]] run on.
+  * [[Clusters]], the g4/g13 cores in [[Graph]] and g10's k-core peel
+  * (`GQueries.kcoreOf`) run on.
   *
   *  - Edges: one record per directed edge, keyed by its source and laid
   *    out by [[VertexHash]]. No per-vertex adjacency arrays, so a hub
@@ -84,6 +85,16 @@ private[graft] object Supersteps {
         }
       }
     }
+
+  /** Both directions of every row of `rows` (two LONG columns, an
+    * undirected edge list) as edge records laid out by `part`; a row with
+    * a null end is dropped.
+    */
+  def bothWays(rows: RDD[InternalRow], part: VertexHash): RDD[(Long, Long)] =
+    rows.flatMap { r =>
+      if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+      else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
+    }.partitionBy(part)
 
   /** One round's messages: each partition of `state` (at most one record
     * per vertex) becomes a hash map, and every edge whose source it holds

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
@@ -55,9 +55,4 @@ object RollingHash {
   def rolling_hash(c: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       RollingHash(org.apache.spark.sql.graft.ColumnBridge.expression(c)))
-
-  /** Register as a SQL-callable function: `SELECT rolling_hash(text)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "built-in")
 }

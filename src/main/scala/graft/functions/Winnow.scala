@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
@@ -91,12 +91,4 @@ object WinnowFingerprints {
   def winnow_fingerprints(c: Column, k: Int, w: Int): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       WinnowFingerprints(org.apache.spark.sql.graft.ColumnBridge.expression(c), k, w))
-
-  /** Register as SQL: `SELECT winnow_fingerprints(text, 8, 8)`. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "winnow_fingerprints",
-      exprs => WinnowFingerprints(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
 }

@@ -352,7 +352,7 @@ object C1to15Queries {
         .select("doc_id", "lang", "quality_score")
       val d = docs(s, dir)
       val bpe = graft.ext.BpeTrainer
-        .encodeTokenCounts(d.select("doc_id", "text"), learnedMerges(d))
+        .encodeTokenCounts(d.select("doc_id", "text"), learnedMerges)
         .select("doc_id", "n_bpe_tokens")
       val w = Window.partitionBy("lang")
         .orderBy(col("quality_score").desc, col("doc_id"))
@@ -434,7 +434,7 @@ object C1to15Queries {
       val seqLen = 1024L
       val d = docs(s, dir)
       val counted = graft.ext.BpeTrainer
-        .encodeTokenCounts(d.select("doc_id", "text"), learnedMerges(d))
+        .encodeTokenCounts(d.select("doc_id", "text"), learnedMerges)
         .select(col("doc_id"), (col("doc_id") % lit(8L)).as("pack_group"),
           col("n_bpe_tokens"))
       val w = Window.partitionBy("pack_group").orderBy("doc_id")

@@ -63,12 +63,6 @@ object Common {
         col("valid_to").isNull.as("is_current"))
   }
 
-  /** The t21/c8b/c9b shared tokenizer-learning step: 20 merges trained
-    * over the corpus word-count table, projected to encode-ready rules.
-    * ONE definition so the rule count and tuple shape cannot drift
-    * between the encode query and its two curation consumers (BpeSpec's
-    * exact replays assume they move in lockstep).
-    */
   /** The t21/c8b/c9b merge table: the PINNED artifact
     * (ext/BpeMerges.scala — BpeTrainer's exact output on the sf0.01
     * documents, regenerable via BpePinGen), the shipped-tokenizer
@@ -80,7 +74,7 @@ object Common {
     * library path (t20 IS the trainer, and BpeSpec cross-checks both
     * trainers at two scales).
     */
-  private[graft] def learnedMerges(d: DataFrame) = graft.ext.BpeMerges.Default
+  private[graft] def learnedMerges = graft.ext.BpeMerges.Default
 
   /** c6/c6b/c23's split of a corpus document: c2's md5 bucketing of
     * doc_id.

@@ -1,13 +1,18 @@
 package graft
 package queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.etl.Tables
 import graft.ext.Graph.{LpaRounds, clusteringCoeffOnTri, degrees, edgesOf,
   labelPropagationOnAdj, pagerankOnAdj, triangleCountsRaw}
+import graft.ext.Supersteps
 
 /** Graph analytics over the part co-occurrence graph (g*) — the graph
   * family a curation/analytics engine needs beyond d6's connected
@@ -209,51 +214,33 @@ object GQueries {
 
   val KcoreRounds = 6
 
-  /** g10 core over an arbitrary undirected (u < v) edge list — shared
-    * with GraphSpec's fixpoint replay. Each peel round is one degree agg
-    * + two semi-joins; the edge frame is localCheckpoint'd per round so
-    * the 6-round lineage stays LINEAR (each round's frame is referenced
-    * twice — by the degree agg and the restriction join — and an
-    * uncheckpointed chain would re-evaluate the base 2⁶ times; the g2/g4
-    * checkpoint discipline). Production iterates until the per-round
-    * node delta is zero (the d6/g5 loop shape) instead of a fixed unroll.
+  /** g10 core over an undirected (u < v) edge list as [[Supersteps]]
+    * rounds in one lazy chain, the edges read both ways and laid out by
+    * source. Round 1 counts each source's degree in its own partition;
+    * later rounds send a 1 from each kept node to each neighbour and keep
+    * the counts `>= KcoreK` (a dropped node's count only falls, so it is
+    * never re-admitted). One more round gives the survivors' degrees in
+    * the core; a survivor with none drops out, as in the oracle.
     */
   private[graft] def kcoreOf(e0raw: DataFrame): DataFrame = {
-    // r19 shape: iterate the NODE keep-set, not the edge list. The old
-    // loop checkpointed the restricted EDGE frame every round and used
-    // the un-materialized keep set in two differently-projected
-    // broadcasts, so each round paid the degree aggregate TWICE (the
-    // two broadcast builds could not ReuseExchange across the u/v
-    // projections) plus a full edge materialization. The subgraph
-    // induced by keep_r IS e_r (induction on "drop deg<K nodes"), so
-    // checkpointing keep — |V| rows, the small side at every scale —
-    // preserves the exact peel while the edge frame stays the ONE
-    // materialization below (or the caller's cached edge list), and
-    // each round is a single degree aggregate over two broadcast
-    // semi-joins.
-    // The keyless-column repartition is an AQE-COALESCIBLE exchange
-    // (REPARTITION_BY_COL, unlike _BY_NUM): the working copy's partition
-    // count derives from its byte size, not from the caller's layout —
-    // the shared edge cache pins 32 partitions (AQE cannot re-coalesce
-    // cached plans), and checkpointing that layout made every round's
-    // union a 64-map-task stage whose shuffle-file opens dominated the
-    // profile (~7 s CPU/round of DiskBlockObjectWriter traffic at
-    // sf0.1). Sized by bytes the same code is 1 partition here and
-    // thousands at 100 TB.
-    val e0 = e0raw.select("u", "v").repartition(col("u")).localCheckpoint()
-    def restrict(kp: DataFrame): DataFrame =
-      e0.join(broadcast(kp.select(col("node").as("u"))), Seq("u"), "left_semi")
-        .join(broadcast(kp.select(col("node").as("v"))), Seq("v"), "left_semi")
-    def degOf(e: DataFrame): DataFrame =
-      e.select(col("u").as("node")).unionAll(e.select(col("v").as("node")))
-        .groupBy("node").agg(count(lit(1)).as("d"))
-    var keep = degOf(e0).filter(col("d") >= KcoreK).select("node")
-      .localCheckpoint()
-    for (_ <- 2 to KcoreRounds)
-      keep = degOf(restrict(keep)).filter(col("d") >= KcoreK).select("node")
-        .localCheckpoint()
-    degOf(restrict(keep))
-      .select(col("node").as("part_id"), col("d").as("core_deg"))
+    val part = Supersteps.partitioner(e0raw)
+    val edges = Supersteps.reading(e0raw.select(col("u").cast("long"),
+      col("v").cast("long")))(Supersteps.bothWays(_, part))
+    def keptDegrees(keep: RDD[(Long, Long)]): RDD[(Long, Long)] =
+      Supersteps.messages(keep, edges)((_: Long, dst: Long) => Some((dst, 1L)))
+        .reduceByKey(part, _ + _)
+    var keep = edges.mapPartitions({ es =>
+      val deg = mutable.LongMap.empty[Long]
+      es.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
+      deg.iterator
+    }, preservesPartitioning = true).filter(_._2 >= KcoreK)
+    for (_ <- 2 to KcoreRounds) keep = keptDegrees(keep).filter(_._2 >= KcoreK)
+    val core = Supersteps.leftJoin(keep, keptDegrees(keep)) { (_: Long, d: Option[Long]) =>
+      d.getOrElse(0L)
+    }.filter(_._2 > 0)
+    Supersteps.frame(e0raw.sparkSession, core.map { case (v, d) => Row(v, d) },
+      e0raw.schema("u").copy(name = "part_id"),
+      StructField("core_deg", LongType, nullable = false))
       .orderBy("part_id")
   }
 
@@ -567,26 +554,20 @@ object GQueries {
     // — k-core decomposition (g10): the dense-subgraph extraction every
     //   graph pipeline wants before community/embedding passes — peel
     //   nodes with degree < K until the survivors all have ≥ K neighbors
-    //   WITHIN the survivor set. Each round is one partial-agg degree
-    //   shuffle + two semi-joins (the keep set broadcasts once it
-    //   shrinks); rounds are unrolled to the measured fixpoint depth
-    //   with the true-core equality spec-pinned (see [[kcoreOf]]) — the
-    //   g4 bounded-unroll discipline applied to a monotone shrinking
-    //   process, so a plain chained SQL statement can state it and the
-    //   oracle hashes it. —
-    // rides the shared edge cache since r19: the r13 "+0.4 s/rep"
-    // against riding it was measured when every round ALSO checkpointed
-    // the edge frame (cache + checkpoint = double materialization); the
-    // keep-set peel checkpoints only |V|-row node sets, so the cache is
-    // now the edge list's one materialization and warm reps skip the
-    // basket self-join entirely
+    //   WITHIN the survivor set. Each round is one message shuffle of
+    //   the kept nodes' edges (ext.Supersteps); rounds are unrolled to
+    //   the measured fixpoint depth with the true-core equality
+    //   spec-pinned (see [[kcoreOf]]) — the g4 bounded-unroll discipline
+    //   applied to a monotone shrinking process, so a plain chained SQL
+    //   statement can state it and the oracle hashes it. Reads the shared
+    //   edge cache, so warm reps skip the basket self-join. —
     // g10 oracle: the same KcoreRounds unrolled peels — per round a degree agg
     // and the two-sided restriction, stated as chained CTEs. MATERIALIZED
     // is load-bearing: each round references its predecessor three times,
     // and DuckDB's default CTE inlining would expand the chain to 3⁶
-    // scans of the base parquet (measured: "too many open files") — the
-    // same exponential-lineage hazard the Spark side's per-round
-    // localCheckpoint guards against.
+    // scans of the base parquet (measured: "too many open files"). The
+    // Spark side never re-plans a round: each round's input is the
+    // previous round's shuffle output.
     Query("g10_kcore", ((s, dir) => kcoreOf(edges(s, dir))), Some({
       val rounds = (1 to KcoreRounds).map { r =>
         s"""kd$r AS MATERIALIZED (SELECT node, COUNT(*) AS d

@@ -728,7 +728,7 @@ object TQueries {
     Query("t21_bpe_encode", ((s, dir) => {
       val d = docs(s, dir)
       graft.ext.BpeTrainer.encodeTokenCounts(d.select("doc_id", "text"),
-        learnedMerges(d))
+        learnedMerges)
     }), Some(Oracle.sqlWith(bpeEncodeCtes,
       """SELECT doc_id, n_tokens, n_bpe_tokens FROM bpe_counts
         |ORDER BY doc_id""".stripMargin))),

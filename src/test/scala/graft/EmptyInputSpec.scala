@@ -54,8 +54,8 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
 
   /** Every query that reads one of the shared query and operator cores
     * (Common's KMV, bootstrap and moment helpers, the family helpers,
-    * Stats.valueGrain, the AsOfJoin, ProductQuantizer, Similarity,
-    * TextAnalysis, Corpus and Streams cores): each must plan and run
+    * Stats.valueGrain, the AsOfJoin, ProductQuantizer, SemanticDedup,
+    * Similarity, TextAnalysis, Corpus and Streams cores): each must plan and run
     * over no rows with its real-data schema.
     */
   private val sharedCoreQueries = Seq(
@@ -67,7 +67,7 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
     "c6b_contamination_rate", "c10b_quality_bins_cutoffs", "c11_stratified_sample",
     "c11b_stratified_sample_topk", "c18_boilerplate_strip",
     "c18b_boilerplate_strip_antijoin", "c20_domain_shift",
-    "c22_quality_dup_calibration", "c27_chi2_drift", "d11_edit_verify",
+    "c22_quality_dup_calibration", "c27_chi2_drift", "d8_semantic_dedup", "d11_edit_verify",
     "d11b_edit_verify_banded", "g5_connected_components", "j4_asof_join",
     "j13_asof_nearest", "s3_knn_join", "s5_knn_bucketed", "s6_pq_adc_topk",
     "s8_ivfpq_topk", "st6_stream_join", "st11_stream_outer_join",
@@ -75,12 +75,12 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
     "v5_pq_codes", "v8_matryoshka_truncate", "w8_ewma", "w12_holt")
 
   /** The round-loop queries (connected components, PageRank, label
-    * propagation): a loop over no edges ends with an empty frame of the
+    * propagation, the k-core peel): a loop over no edges ends with an empty frame of the
     * real-data schema, nullability included.
     */
   private val roundLoopQueries = Seq(
     "d6_dedup_clusters", "d14_dup_census", "c3_fuzzy_corpus", "c17_dedup_survivor",
-    "c30_group_split", "g4_pagerank", "g13_label_propagation")
+    "c30_group_split", "g4_pagerank", "g10_kcore", "g13_label_propagation")
 
   for (q <- roundLoopQueries) test(s"$q on empty tables: its real-data schema") {
     onEmpty(q)

@@ -271,6 +271,14 @@ class GraphSpec extends SparkSpec {
     assert(jobsOf(SparkEntry.queries("g13_label_propagation")(spark, sf).collect()) == 3)
   }
 
+  test("g10 k-core builds lazily: no job to build, at most three to collect") {
+    assert(jobsOf(SparkEntry.queries("g10_kcore")(spark, sf)) == 0)
+    // warm the family's cached edge list: counted below is the peel
+    SparkEntry.queries("g10_kcore")(spark, sf).collect()
+    val collected = jobsOf(SparkEntry.queries("g10_kcore")(spark, sf).collect())
+    assert(collected <= 3, s"collecting g10 ran $collected jobs")
+  }
+
   test("g6: jaccard is exact fixed-point of g3's counts and g1's degrees") {
     val dir = "/root/testdata/sf0.001"
     val got = SparkEntry.queries("g6_jaccard_neighbors")(spark, dir).collect()

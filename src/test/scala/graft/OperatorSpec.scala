@@ -239,8 +239,7 @@ class OperatorSpec extends SparkSpec {
       .select(RollingHash.rolling_hash(col("t")).as("h"))
       .collect().map(_.getLong(0))
     assert(got.toSeq == inputs.map(ref))
-    // SQL registration path
-    RollingHash.register(spark)
+    // SQL path: GraftExtensions installs rolling_hash in every session
     val viaSql = spark.sql("SELECT rolling_hash('hello world')").head().getLong(0)
     assert(viaSql == ref("hello world"))
   }

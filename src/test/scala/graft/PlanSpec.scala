@@ -302,6 +302,44 @@ class PlanSpec extends SparkSpec {
       Bench.DefaultCpus))
   }
 
+  /** A registry of one working query and one that throws when it runs. */
+  private def withPlantedFailure: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+      org.apache.spark.sql.DataFrame)] = Seq(
+    "ok_range" -> ((s, _) => s.range(3).toDF("id")),
+    "throws_planted" -> ((s, _) =>
+      s.range(3).selectExpr("CAST(raise_error('planted failure') AS BIGINT) AS id")))
+
+  test("bench: a throwing query records its error and adds no time to the total") {
+    val sess = spark
+    import sess.implicits._
+    val calm = new Bench.CalmGate(1, 0.0, maxWaitPerQuerySec = 0, totalBudgetSec = 0)
+    val t = Bench.timeQueries(spark, sf, withPlantedFailure, reps = 1, calm)
+    assert(t.raw.map(_._1) == Seq("ok_range"))
+    assert(t.errors.map(_._1) == Seq("throws_planted"))
+    assert(t.errors.head._2.contains("planted failure"), t.errors)
+    val row = spark.read.json(Seq(Bench.renderDetailJson(t.raw, sf,
+      errors = t.errors)).toDS).head()
+    assert(math.abs(row.getAs[Double]("value") - t.raw.head._2.head) < 1e-3)
+    assert(row.getAs[Long]("n_queries") == 1 && row.getAs[Long]("n_failed") == 1)
+    val qs = row.getAs[org.apache.spark.sql.Row]("queries")
+    assert(qs.getAs[org.apache.spark.sql.Row]("throws_planted")
+      .getAs[String]("error").contains("planted failure"))
+  }
+
+  test("verify: a throwing query is listed in the failure manifest; a clean run leaves none") {
+    val out = java.nio.file.Files.createTempDirectory("graft_verify_")
+    try {
+      val manifest = out.resolve(Verify.FailureManifest)
+      val failed = Verify.dump(spark, sf, out.toString, withPlantedFailure)
+      assert(failed.map(_._1) == Seq("throws_planted"))
+      val listed = spark.read.option("multiLine", "true").json(manifest.toString).head()
+      assert(listed.getAs[String]("throws_planted").contains("planted failure"))
+      assert(spark.read.parquet(out.resolve("ok_range").toString).count() == 3)
+      assert(Verify.dump(spark, sf, out.toString, withPlantedFailure.take(1)).isEmpty)
+      assert(!java.nio.file.Files.exists(manifest))
+    } finally org.apache.spark.network.util.JavaUtils.deleteRecursively(out.toFile)
+  }
+
   test("anti-quadratic invariant: equi-joins only outside the whitelist") {
     val offenders = (built -- nestedLoopWhitelist.keys)
       .flatMap { case (name, t) =>

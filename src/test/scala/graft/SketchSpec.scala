@@ -690,10 +690,11 @@ class SketchSpec extends SparkSpec {
     // The r12 scaling wart was one KMeans.fit + assignment pass PER
     // oversized cell, serialized on the driver — a skewed 100 TB corpus
     // with a few hundred hot cells became a few hundred sequential jobs.
-    // The batched refine runs a CONSTANT number of jobs per depth
-    // (census + seeded init + RefineIters centroid recomputes), so the
-    // job count for a 1-jumbo corpus and a 3-jumbo corpus must be ~equal
-    // — measured with a listener, not asserted from the code's shape.
+    // The batched refine runs a CONSTANT number of jobs per depth (the
+    // census and one sample collect for every oversized cell; the fits
+    // run in-process on the driver), so the job count for a 1-jumbo
+    // corpus and a 3-jumbo corpus must be ~equal — measured with a
+    // listener, not asserted from the code's shape.
     import graft.ext.SemanticDedup
     val dir = "/root/testdata/sf0.01"
     val base = graft.ext.DocFixtures.embDup(spark, dir)
@@ -745,6 +746,37 @@ class SketchSpec extends SparkSpec {
     // ≥ 4 extra for 2 extra cells — which this bound rejects
     assert(jobs3 <= jobs1 + 3,
       s"refine job count grew with oversized-cell count: $jobs1 -> $jobs3")
+  }
+
+  test("d8 refine: the same (vec_id, cell, is_dup) rows under 1 and 8 shuffle partitions") {
+    // the re-split's sample and fit depend on ids and values only, so the
+    // refined cells and the flags must not move with the layout
+    import graft.ext.SemanticDedup
+    val base = graft.ext.DocFixtures.embDup(spark, "/root/testdata/sf0.01")
+    val one = base.filter(col("vec_id") === 0L)
+      .select("embedding").head().getSeq[Float](0).toArray
+    val sess = spark
+    import sess.implicits._
+    val jumbo = (0 until 300).map { i =>
+      val v = one.clone()
+      v(i % 6) = v(i % 6) + 0.15f + 0.0001f * (i / 6)
+      (200000L + i, v.toSeq)
+    }.toDF("vec_id", "embedding")
+    val mixed = base.unionAll(jumbo)
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    def rows(parts: Int) = {
+      spark.conf.set(key, parts.toString)
+      SemanticDedup.flagged(mixed, 16, 0.97, maxCell = 100)
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).sortBy(_._1).toSeq
+    }
+    try {
+      val at1 = rows(1)
+      assert(at1.count(_._1 >= 200000L) == 300)
+      assert(at1.filter(_._1 >= 200000L).map(_._2).distinct.size > 1,
+        "the jumbo cell was never split")
+      assert(rows(8) == at1)
+    } finally spark.conf.set(key, before)
   }
 
   test("d8 zero-norm vectors: never flagged (cosine undefined), collapse stays flag-preserving") {

@@ -6,7 +6,8 @@ shipped library is pure Scala/Spark). Usage:
 
 Runs graft.Verify via sbt, then replays each oracle_sql.json entry in DuckDB
 over the same parquet tables and diffs against the Spark parquet output:
-columns sorted by name, rows sorted, exact value compare.
+columns sorted by name, rows sorted, exact value compare. Every query listed
+in Verify's failure manifest (verify_failures.json) fails.
 """
 import json, math, subprocess, sys
 from pathlib import Path
@@ -95,8 +96,17 @@ def main():
 
     oracle = json.loads(Path(f"{outdir}/oracle_sql.json").read_text())
     n_pass = n_fail = 0
-    for name in sorted(oracle):
+    # graft.Verify lists every query that threw in this manifest; such a
+    # query may still have a stale output dir from an earlier run
+    manifest = Path(outdir) / "verify_failures.json"
+    failed = json.loads(manifest.read_text()) if manifest.exists() else {}
+    for name in sorted(failed):
         if only and name not in only:
+            continue
+        print(f"FAIL {name}: Verify threw: {failed[name]}")
+        n_fail += 1
+    for name in sorted(oracle):
+        if (only and name not in only) or name in failed:
             continue
         spark_dir = Path(outdir) / name
         if not spark_dir.exists():
