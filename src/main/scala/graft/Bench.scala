@@ -35,8 +35,9 @@ object Bench {
       catch { case e: Throwable => System.err.println(s"[bench] warmup $q failed: $e") }
     }
     // Per-query isolation + median-of-3 (round-8 fix): the registry has
-    // 42 cache/localCheckpoint sites and the queries never unpersist —
-    // by design, a caller owns its session's cache lifecycle, not the
+    // dozens of cache/localCheckpoint sites (SourceLayoutSpec's ratchet
+    // counts them) and the queries never unpersist — by design, a
+    // caller owns its session's cache lifecycle, not the
     // library. One shared JVM running 106 queries alphabetically let
     // checkpointed blocks accumulate all run long, and block-manager/heap
     // pressure landed on late-alphabet queries (BENCH_r08: t3 9.5×,

@@ -3,10 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Lifecycle for the engine's internal caches — the complement to the
-  * "caller owns the block" contract documented at the 42
+  * "caller owns the block" contract documented at the
   * `persist`/`cache`/`localCheckpoint` call sites in `src/main` (the
-  * shingle indexes, k-means assignments, label-propagation frontiers,
-  * …). Those sites cannot unpersist eagerly — their blocks back the
+  * shingle indexes, k-means assignments, component-round labels, …;
+  * `SourceLayoutSpec`'s ratchet counts them and fails if they grow).
+  * Those sites cannot unpersist eagerly — their blocks back the
   * DataFrames they return — so a caller COMPOSING operators in one
   * session (clean → fuzzy-dedup → survivorship → …) accumulates every
   * intermediate block unless it drops them itself. `Bench` and the dev

@@ -43,42 +43,60 @@ object Graph {
     * algorithm and so could share a bug).
     */
   private[graft] def triangleCounts(e: DataFrame): DataFrame =
-    triangleCountsRaw(e).orderBy("part_id")
+    triangleCountsOnAdj(undirected(e.select("u", "v"))).orderBy("part_id")
 
-  /** [[triangleCounts]] without the presentation sort — the shape the
-    * shared `tri` cache (GQueries) stores (consumers order or join as they need;
-    * caching a range-partitioned frame would force every joining
-    * consumer to re-exchange it anyway).
+  /** g2 core over an undirected adjacency's (u, v) columns (both
+    * directions of every edge; the registry passes the family's cached
+    * adjacency): the degree-ordered closure (Suri & Vassilvitskii, WWW'11) as
+    * [[Supersteps]] rounds in one lazy chain, read by source in the
+    * cached layout as g4 reads it. Round 1 counts each source's degree
+    * in its own partition. One message shuffle gives each node its
+    * neighbours' degrees (and its own, the number of messages); it keeps
+    * its out-edges toward (degree, id)-larger neighbours, sorted by
+    * (degree, id), so out-degree is O(√|E|) whatever the skew (a hub's
+    * edges point INTO it). One wedge shuffle sends each source's wedges
+    * (s; y < z, ...) to y's partition, where a wedge closes when y → z is
+    * one of y's out-edges: the orientation is a total order, so that edge
+    * can only point y → z and every triangle is found once, at its lowest
+    * corner. One reduce credits s, y and z once per closed triangle.
+    * Output: per-node triangle counts, unordered (the shared `tri` entry
+    * in GQueries stores this shape; consumers order or join as they need).
     */
-  private[graft] def triangleCountsRaw(e: DataFrame): DataFrame = {
-    val d = degrees(e.withColumn("w", lit(1L))).select("node", "degree")
-    // oriented edges carrying the target's orientation key
-    val oriented = e
-      .join(d.select(col("node").as("u"), col("degree").as("du")), "u")
-      .join(d.select(col("node").as("v"), col("degree").as("dv")), "v")
-      .select(
-        when(col("du") < col("dv") ||
-            (col("du") === col("dv") && col("u") < col("v")),
-          struct(col("u").as("s"), col("v").as("t"),
-            col("dv").as("dt")))
-          .otherwise(struct(col("v").as("s"), col("u").as("t"),
-            col("du").as("dt"))).as("e"))
-      .select(col("e.s").as("s"), col("e.t").as("t"), col("e.dt").as("dt"))
-      // referenced THREE times below (wedge sides a/b + the closure
-      // probe): truncate once — without this the
-      // edge self-join + degree joins replan per reference
-      .localCheckpoint()
-    val a = oriented.as("a")
-    val b = oriented.as("b")
-    val wedges = a.join(b, col("a.s") === col("b.s") &&
-      (col("a.dt") < col("b.dt") ||
-        (col("a.dt") === col("b.dt") && col("a.t") < col("b.t"))))
-      .select(col("a.s").as("x"), col("a.t").as("y"), col("b.t").as("z"))
-    val tris = wedges.join(oriented.select(col("s").as("y"), col("t").as("z")),
-      Seq("y", "z"))
-    tris.select(explode(array(col("x"), col("y"), col("z"))).as("part_id"))
-      .groupBy("part_id")
-      .agg(count(lit(1)).as("n_triangles"))
+  private[graft] def triangleCountsOnAdj(adj: DataFrame): DataFrame = {
+    val part = Supersteps.partitioner(adj)
+    val edges = Supersteps.bySource(adj.select(col("u").cast("long"),
+      col("v").cast("long")), part)(_.getLong(1))
+    // (node, [node, degree]): a message names its sender
+    val degrees = Supersteps.degrees(edges).mapPartitions(
+      _.map { case (u, d) => (u, Array(u, d)) }, preservesPartitioning = true)
+    // (node, out-neighbours sorted by (degree, id))
+    val out = Supersteps.messages(degrees, edges) { (ud: Array[Long], v: Long) =>
+      Some((v, ud))
+    }.partitionBy(part).mapPartitions({ ms =>
+      val nbrs = mutable.LongMap.empty[mutable.ArrayBuffer[(Long, Long)]]
+      ms.foreach { case (v, Array(u, du)) =>
+        nbrs.getOrElseUpdate(v, mutable.ArrayBuffer.empty) += ((du, u))
+      }
+      nbrs.iterator.map { case (v, ns) =>
+        val self = (ns.size.toLong, v)
+        (v, ns.filter(n => Ordering[(Long, Long)].gt(n, self)).sorted.map(_._2).toArray)
+      }
+    }, preservesPartitioning = true)
+    // (y, [s, z...]): every z after y in s's out-list closes a wedge at y
+    val wedges = out.flatMap { case (s, o) =>
+      (0 until o.length - 1).iterator.map(i => (o(i), s +: o.drop(i + 1)))
+    }.partitionBy(part)
+    val byId = out.mapValues(_.sorted)
+    val counts = Supersteps.leftJoin(wedges, byId) { (szs: Array[Long], yOut: Option[Array[Long]]) =>
+      val o = yOut.getOrElse(Array.emptyLongArray)
+      (szs(0), szs.drop(1).filter(z => java.util.Arrays.binarySearch(o, z) >= 0))
+    }.flatMap { case (y, (s, zs)) =>
+      if (zs.isEmpty) Iterator.empty
+      else Iterator((s, zs.length.toLong), (y, zs.length.toLong)) ++ zs.iterator.map((_, 1L))
+    }.reduceByKey(part, _ + _)
+    Supersteps.frame(adj.sparkSession, counts.map { case (v, n) => Row(v, n) },
+      adj.schema("v").copy(name = "part_id"),
+      StructField("n_triangles", LongType, nullable = false))
   }
 
   /** g12 core on an arbitrary undirected (u < v) edge list — split out
@@ -87,7 +105,7 @@ object Graph {
     * there closes a triangle).
     */
   private[graft] def clusteringCoeffOf(e: DataFrame): DataFrame =
-    clusteringCoeffOnTri(e, triangleCountsRaw(e))
+    clusteringCoeffOnTri(e, triangleCountsOnAdj(undirected(e.select("u", "v"))))
 
   /** [[clusteringCoeffOf]] body over a PRE-COMPUTED per-node triangle
     * table — the registry passes the shared `tri` cache (GQueries) so g12's warm

@@ -112,18 +112,19 @@ object Stats {
     * var = (n·Σx² − (Σx)²) / (n(n−1)) evaluated exactly and divided as
     * doubles in a pinned order. `ev` must carry (event_type, x: long
     * cents). The long path holds while n·Σx² < 2^63 (gate scales with ×8
-    * margin, AnalyticsSpec); [[decimalMoments]] is the 100 TB twin.
+    * margin, AnalyticsSpec); [[decimalMoments]] is the 100 TB twin. A
+    * one-row group's variance and stddev are NULL (n(n−1) = 0, try_divide).
     */
   def longMoments(ev: DataFrame): DataFrame =
     longSums(ev)
       .select(col("event_type"), col("n"),
         (col("sx").cast("double") / col("n").cast("double") / lit(100.0))
           .as("mean"),
-        ((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))
+        (try_divide((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"),
+          col("n").cast("double") * (col("n") - 1).cast("double"))
           / lit(10000.0)).as("var_samp"),
-        sqrt((col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))
+        sqrt(try_divide((col("n") * col("sxx") - col("sx") * col("sx")).cast("double"),
+          col("n").cast("double") * (col("n") - 1).cast("double"))
           / lit(10000.0)).as("stddev"))
       .orderBy("event_type")
 
@@ -153,13 +154,13 @@ object Stats {
       .select(col("event_type"), col("n"),
         (col("sx").cast("double") / col("n").cast("double") / lit(100.0))
           .as("mean"),
-        ((col("n").cast(d38) * col("sxx") - col("sx") * col("sx"))
-          .cast("double")
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))
+        (try_divide((col("n").cast(d38) * col("sxx") - col("sx") * col("sx"))
+          .cast("double"),
+          col("n").cast("double") * (col("n") - 1).cast("double"))
           / lit(10000.0)).as("var_samp"),
-        sqrt((col("n").cast(d38) * col("sxx") - col("sx") * col("sx"))
-          .cast("double")
-          / (col("n").cast("double") * (col("n") - 1).cast("double"))
+        sqrt(try_divide((col("n").cast(d38) * col("sxx") - col("sx") * col("sx"))
+          .cast("double"),
+          col("n").cast("double") * (col("n") - 1).cast("double"))
           / lit(10000.0)).as("stddev"))
       .orderBy("event_type")
   }
@@ -265,8 +266,9 @@ object Stats {
     * statistics (`two_u`, `tie_t`) left on DECIMAL(38,0) — full 10³⁸
     * headroom (n ≈ 4.6·10¹² rows per type-pair). Consumers needing the
     * full range (a47's margin/delta) read THIS frame; the registry
-    * output narrows through [[loudLong]] in [[mannWhitneyOf]]. See the
-    * a32 registry comment.
+    * output narrows through [[loudLong]] in [[mannWhitneyOf]]. `z` is
+    * NULL where its denominator is zero (one row in all, or no `base`
+    * rows). See the a32 registry comment.
     */
   private[graft] def mannWhitneyCore(ev: DataFrame,
       base: String = "view"): DataFrame = {
@@ -293,9 +295,9 @@ object Stats {
       .withColumn("den", lit(3L) * col("n").cast(d38) * (col("n") - 1L))
       .select(col("event_type"), col("n1"), col("n2"),
         col("two_u"), col("tie_t"),
-        (col("num").cast("double") /
+        try_divide(col("num").cast("double"),
           sqrt((col("n1").cast(d38) * col("n2")).cast("double") *
-            (col("b1").cast("double") / col("den").cast("double"))))
+            try_divide(col("b1").cast("double"), col("den").cast("double"))))
           .as("z"))
       .orderBy("event_type")
   }

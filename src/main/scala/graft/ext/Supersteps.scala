@@ -14,7 +14,7 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** Vertex-centric rounds over co-partitioned RDDs, the message-passing
   * shape of Pregel (Malewicz et al., SIGMOD 2010) and GraphX, which
-  * [[Clusters]], the g4/g13 cores in [[Graph]] and g10's k-core peel
+  * [[Clusters]], the g2/g4/g13 cores in [[Graph]] and g10's k-core peel
   * (`GQueries.kcoreOf`) run on.
   *
   *  - Edges: one record per directed edge, keyed by its source and laid
@@ -95,6 +95,16 @@ private[graft] object Supersteps {
       if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
       else Iterator((r.getLong(0), r.getLong(1)), (r.getLong(1), r.getLong(0)))
     }.partitionBy(part)
+
+  /** Each source's edge count, counted in its own partition: no shuffle,
+    * and the result keeps the edges' layout.
+    */
+  def degrees[E](edges: RDD[(Long, E)]): RDD[(Long, Long)] =
+    edges.mapPartitions({ es =>
+      val deg = mutable.LongMap.empty[Long]
+      es.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
+      deg.iterator
+    }, preservesPartitioning = true)
 
   /** One round's messages: each partition of `state` (at most one record
     * per vertex) becomes a hash map, and every edge whose source it holds

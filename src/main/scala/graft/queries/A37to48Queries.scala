@@ -249,8 +249,9 @@ object A37to48Queries {
         max("dnum").as("d_num"))
       .select(col("event_type"),
         col("n1").cast("long").as("n1"), col("n2").cast("long").as("n2"),
+        // d_e6 and ks are NULL for a type with no base rows (n₂ = 0)
         expr("""(1000000 * d_num) div
-                (cast(n1 as decimal(38,0)) * n2)""")
+                nullif(cast(n1 as decimal(38,0)) * n2, 0)""")
           .cast("long").as("d_e6"),
         // scaled statistic √(n₁n₂/(n₁+n₂))·D — ONE pinned expression
         // tree over exact→double funnels (decimal→double and
@@ -258,8 +259,8 @@ object A37to48Queries {
         // ×, / are correctly rounded — the a25/a32 discipline)
         (sqrt(col("n1").cast("double") * col("n2").cast("double") /
             (col("n1") + col("n2")).cast("double")) *
-          (col("d_num").cast("double") /
-            (col("n1").cast("double") * col("n2").cast("double"))))
+          try_divide(col("d_num").cast("double"),
+            col("n1").cast("double") * col("n2").cast("double")))
           .as("ks"))
       .orderBy("event_type")
   }

@@ -1,8 +1,6 @@
 package graft
 package queries
 
-import scala.collection.mutable
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -11,7 +9,7 @@ import org.apache.spark.sql.types.{LongType, StructField}
 
 import graft.etl.Tables
 import graft.ext.Graph.{LpaRounds, clusteringCoeffOnTri, degrees, edgesOf,
-  labelPropagationOnAdj, pagerankOnAdj, triangleCountsRaw}
+  labelPropagationOnAdj, pagerankOnAdj, triangleCountsOnAdj}
 import graft.ext.Supersteps
 
 /** Graph analytics over the part co-occurrence graph (g*) — the graph
@@ -70,11 +68,12 @@ object GQueries {
   /** g2/g12's shared per-node triangle table (r19): the oriented
     * Suri–Vassilvitskii closure is the family's single most expensive
     * enumeration after the wedge space, and TWO queries consume its
-    * exact output — g2 reports it, g12 joins degree onto it.
+    * exact output — g2 reports it, g12 joins degree onto it. Built as
+    * [[graft.ext.Supersteps]] rounds over the cached [[adjacency]], read
+    * in its own layout as g4 and g13 read it.
     */
   private def tri(s: SparkSession, dir: String): DataFrame =
-    Shared.frame(s, "tri", dir)(
-      triangleCountsRaw(edges(s, dir).select("u", "v")))
+    Shared.frame(s, "tri", dir)(triangleCountsOnAdj(adjacency(s, dir)))
 
   /** The undirected adjacency, cached ALREADY HASH-PARTITIONED by `u`
     * (r18): InMemoryRelation preserves its child's output partitioning,
@@ -229,11 +228,7 @@ object GQueries {
     def keptDegrees(keep: RDD[(Long, Long)]): RDD[(Long, Long)] =
       Supersteps.messages(keep, edges)((_: Long, dst: Long) => Some((dst, 1L)))
         .reduceByKey(part, _ + _)
-    var keep = edges.mapPartitions({ es =>
-      val deg = mutable.LongMap.empty[Long]
-      es.foreach { case (u, _) => deg(u) = deg.getOrElse(u, 0L) + 1L }
-      deg.iterator
-    }, preservesPartitioning = true).filter(_._2 >= KcoreK)
+    var keep = Supersteps.degrees(edges).filter(_._2 >= KcoreK)
     for (_ <- 2 to KcoreRounds) keep = keptDegrees(keep).filter(_._2 >= KcoreK)
     val core = Supersteps.leftJoin(keep, keptDegrees(keep)) { (_: Long, d: Option[Long]) =>
       d.getOrElse(0L)
@@ -267,9 +262,10 @@ object GQueries {
     //   O(√|E|)-bounded whatever the degree skew (a hub's edges point
     //   INTO it), which is what keeps Σ out-deg² — the wedge count, the
     //   only super-linear term — polynomially smaller than the naive
-    //   Σ deg² on a skewed graph. The closure probe is an equi-join on
-    //   the composite (s, t) key; the 3-way explode back to nodes is
-    //   narrow. —
+    //   Σ deg² on a skewed graph. The closure runs as message rounds
+    //   over the cached adjacency (see triangleCountsOnAdj): each wedge
+    //   is checked in its middle node's partition against that node's
+    //   out-edges, and each closed triangle credits its three corners. —
     // rides the shared [[tri]] cache (r19): g2 and g12 consume the same
     // per-node triangle table; the closure enumeration runs once per
     // corpus (rep 1), the report is a sort over its output
@@ -680,14 +676,14 @@ object GQueries {
     //   sit in tight near-cliques (bundles, co-bought sets) versus
     //   hub-and-spoke stars (generic connectors a recommender should
     //   discount)? T_i comes from the shared Suri–Vassilvitskii
-    //   oriented closure (g2's triangleCounts — every triangle charged
-    //   once, each corner credited by the explode), degree from the
-    //   distinct undirected adjacency. Nodes in NO triangle still
-    //   report (left join, 0 — they are the statistic's point); deg<2
-    //   is filtered (coefficient undefined). ×10⁶ floor on
-    //   DECIMAL(38)/HUGEINT — 2·10⁶·T wraps a long once T > 4.6·10¹²,
-    //   and hub nodes on a 100 TB co-citation graph genuinely get
-    //   there. All corpus-sized work is g2's probed machinery. —
+    //   oriented closure (g2's [[tri]] entry — every triangle found
+    //   once, each corner credited once), degree from the distinct
+    //   undirected adjacency. Nodes in NO triangle still report (left
+    //   join, 0 — they are the statistic's point); deg<2 is filtered
+    //   (coefficient undefined). ×10⁶ floor on DECIMAL(38)/HUGEINT —
+    //   2·10⁶·T wraps a long once T > 4.6·10¹², and hub nodes on a
+    //   100 TB co-citation graph genuinely get there. The closure
+    //   itself is g2's; g12 adds a degree aggregate and one join. —
     // g12 oracle: g2's exact oriented-closure CTEs + the degree table, left
     // join (no-triangle nodes report 0), same ×10⁶ HUGEINT floor
     Query("g12_clustering_coeff", ((s, dir) =>

@@ -114,9 +114,10 @@ object Streams {
     * The query executes on [[streamingSession]] (RocksDB state store,
     * bounded state partitions); the read-back frame is bound to the
     * caller's session. A query whose every batch is empty (e.g. append
-    * mode with no finalized window) leaves no data files — fall back to an
-    * empty frame with the transform's schema instead of failing schema
-    * inference.
+    * mode with no finalized window) leaves no data files: the sink is then
+    * read with the transform's schema instead of an inferred one, so the
+    * empty frame has the read-back's nullability (every column nullable,
+    * as on a run that wrote rows).
     */
   def replay(spark: SparkSession, dir: String, outputMode: String)(
       transform: DataFrame => DataFrame): DataFrame = {
@@ -143,8 +144,7 @@ object Streams {
     try spark.read.parquet(out)
     catch {
       case _: org.apache.spark.sql.AnalysisException =>
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          transformed.schema)
+        spark.read.schema(transformed.schema).parquet(out)
     }
   }
 

@@ -5,30 +5,36 @@ import java.nio.file.Files
 import org.apache.spark.network.util.JavaUtils
 import org.scalatest.BeforeAndAfterAll
 
-/** Queries over schema-identical EMPTY tables return their real-data
-  * schema: a zero denominator gives a NULL ratio (try_divide), never an
-  * ANSI DIVIDE_BY_ZERO, and an operator that reads driver-side stats
-  * (a46's per-category bounds, j5's bloom sketch) copes with none.
+/** Queries over schema-identical EMPTY or ONE-ROW tables return their
+  * real-data schema: a zero denominator gives a NULL ratio (try_divide),
+  * never an ANSI DIVIDE_BY_ZERO, and an operator that reads driver-side
+  * stats (a46's per-category bounds, j5's bloom sketch) copes with none.
   */
 class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
 
-  private lazy val emptyDir = {
-    val d = Files.createTempDirectory("graft_empty_")
+  /** `limit(rows)` of every table of `sf`, in a fresh temp dir. */
+  private def truncated(rows: Int) = {
+    val d = Files.createTempDirectory(s"graft_${rows}_rows_")
     new java.io.File(sf).listFiles().filter(_.getName.endsWith(".parquet"))
-      .foreach(f => spark.read.parquet(f.getPath).limit(0)
+      .foreach(f => spark.read.parquet(f.getPath).limit(rows)
         .write.parquet(s"$d/${f.getName}"))
     d.toString
   }
 
+  private lazy val emptyDir = truncated(0)
+  private lazy val oneRowDir = truncated(1)
+
   override def afterAll(): Unit =
-    try JavaUtils.deleteRecursively(new java.io.File(emptyDir))
+    try Seq(emptyDir, oneRowDir).foreach(d => JavaUtils.deleteRecursively(new java.io.File(d)))
     finally super.afterAll()
 
-  private def onEmpty(q: String) = {
-    val df = SparkEntry.queries(q)(spark, emptyDir)
+  private def onTables(q: String, dir: String) = {
+    val df = SparkEntry.queries(q)(spark, dir)
     assert(df.schema == SparkEntry.queries(q)(spark, sf).schema, q)
     df.collect().toSeq
   }
+
+  private def onEmpty(q: String) = onTables(q, emptyDir)
 
   for (q <- Seq("b2_funnel", "b2b_funnel_window")) test(s"$q on empty tables: zero users, NULL shares") {
     val rows = onEmpty(q)
@@ -80,7 +86,32 @@ class EmptyInputSpec extends SparkSpec with BeforeAndAfterAll {
     */
   private val roundLoopQueries = Seq(
     "d6_dedup_clusters", "d14_dup_census", "c3_fuzzy_corpus", "c17_dedup_survivor",
-    "c30_group_split", "g4_pagerank", "g10_kcore", "g13_label_propagation")
+    "c30_group_split", "g2_triangle_count", "g4_pagerank", "g10_kcore",
+    "g12_clustering_coeff", "g13_label_propagation")
+
+  /** Stream replays whose every batch is empty: the sink holds no data
+    * files, and the fallback frame has the read-back's nullability.
+    */
+  private val emptyStreamQueries = Seq("st1_stream_tumbling", "st12_stream_new_users")
+
+  for (q <- emptyStreamQueries) test(s"$q on empty tables: its real-data schema") {
+    assert(onEmpty(q).isEmpty)
+  }
+
+  /** One row in every table: a statistic over one value, or a test
+    * with no base rows, divides by zero; those statistics are NULL.
+    */
+  private val oneRowStats = Seq(
+    "a15_group_stats" -> Seq("var_samp", "stddev"),
+    "a15b_group_stats_decimal" -> Seq("var_samp", "stddev"),
+    "a32_mann_whitney" -> Seq("z"),
+    "a39_ks_test" -> Seq("d_e6", "ks"))
+
+  for ((q, stats) <- oneRowStats) test(s"$q on one-row tables: NULL ${stats.mkString(", ")}") {
+    val rows = onTables(q, oneRowDir)
+    assert(rows.nonEmpty, s"$q: the one-row tables reach no statistic")
+    for (r <- rows; c <- stats) assert(r.isNullAt(r.fieldIndex(c)), s"$q: $c on $r")
+  }
 
   for (q <- roundLoopQueries) test(s"$q on empty tables: its real-data schema") {
     onEmpty(q)

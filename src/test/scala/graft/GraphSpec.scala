@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ext.Graph
@@ -7,15 +8,17 @@ import graft.queries.GQueries
 
 /** The g* graph family. g1–g3 are hash-oracled against DuckDB (exact
   * longs); this spec pins the triangle ALGORITHM — orientation +
-  * closure — on fixtures small enough to count by hand, plus a
-  * brute-force cross-check on a seeded random graph, because the
-  * oracle replays the same degree-ordered algorithm and could share a
-  * bug with it.
+  * closure, run as `ext.Supersteps` rounds — on fixtures small enough
+  * to count by hand, plus a brute-force cross-check on a seeded random
+  * graph (also over 8 shuffle partitions, where a record read in a
+  * partition that does not own it fails), because the oracle replays
+  * the same degree-ordered algorithm and could share a bug with it.
+  * The round-loop cores (g2/g12, g4, g5, g10, g13) have their job
+  * counts pinned: each builds lazily, with no job until it is read.
   */
 class GraphSpec extends SparkSpec {
 
-  private def tri(edges: Seq[(Long, Long)]): Map[Long, Long] = {
-    val sess = spark
+  private def tri(edges: Seq[(Long, Long)], sess: SparkSession = spark): Map[Long, Long] = {
     import sess.implicits._
     Graph.triangleCounts(edges.toDF("u", "v"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -53,6 +56,12 @@ class GraphSpec extends SparkSpec {
     } { brute(i) += 1; brute(j) += 1; brute(k) += 1 }
     assert(brute.nonEmpty, "fixture degenerated — no triangles to check")
     assert(tri(edges) == brute.toMap)
+    // over 8 shuffle partitions every round's records are spread out: a
+    // message read in a partition that does not own its node fails the
+    // task or misses a closing edge
+    val s8 = spark.newSession()
+    s8.conf.set("spark.sql.shuffle.partitions", "8")
+    assert(tri(edges, s8) == brute.toMap)
   }
 
   test("g4: integer PageRank orders hub above leaves and replays in plain Scala") {
@@ -277,6 +286,22 @@ class GraphSpec extends SparkSpec {
     SparkEntry.queries("g10_kcore")(spark, sf).collect()
     val collected = jobsOf(SparkEntry.queries("g10_kcore")(spark, sf).collect())
     assert(collected <= 3, s"collecting g10 ran $collected jobs")
+  }
+
+  test("g2 builds lazily: no job to build g2 or g12 over the warm adjacency") {
+    // a session of its own, with a shuffle-partition count no other test
+    // uses, so no cached plan of another test matches: the collect below
+    // runs the closure rounds, not a read of a warm triangle table
+    val s = spark.newSession()
+    s.conf.set("spark.sql.shuffle.partitions", "5")
+    // warm the family's cached edge list and adjacency (g4 reads both)
+    SparkEntry.queries("g4_pagerank")(s, sf).collect()
+    assert(jobsOf(SparkEntry.queries("g2_triangle_count")(s, sf)) == 0)
+    assert(jobsOf(SparkEntry.queries("g12_clustering_coeff")(s, sf)) == 0)
+    // the triangle table's cache stage (every round rides it), the
+    // range-partition sample, the sort's map stage and the result
+    val collected = jobsOf(SparkEntry.queries("g2_triangle_count")(s, sf).collect())
+    assert(collected == 4, s"collecting g2 ran $collected jobs")
   }
 
   test("g6: jaccard is exact fixed-point of g3's counts and g1's degrees") {

@@ -238,4 +238,70 @@ class SourceLayoutSpec extends AnyFunSuite {
     assert(PlanOne.showcased == headings,
       "PlanOne.showcased must list PLANS.md's entries in its heading order")
   }
+
+  /** `src` with its comments and string and character literals blanked
+    * out (nested block comments included); newlines are kept, so line
+    * numbers still hold.
+    */
+  private def codeOf(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(t: String) = src.startsWith(t, i)
+    def upTo(end: Int) = if (end < 0) src.length else end
+    // the index just past the comment or literal that starts at i, or i
+    def skip(): Int =
+      if (at("//")) upTo(src.indexOf('\n', i))
+      else if (at("/*")) {
+        var (depth, j) = (0, i)
+        do {
+          if (src.startsWith("/*", j)) { depth += 1; j += 2 }
+          else if (src.startsWith("*/", j)) { depth -= 1; j += 2 }
+          else j += 1
+        } while (depth > 0 && j < src.length)
+        j
+      } else if (at("\"\"\"")) upTo(src.indexOf("\"\"\"", i + 3)) + 3
+      else if (at("\"")) {
+        var j = i + 1
+        while (j < src.length && src(j) != '"') j += (if (src(j) == '\\') 2 else 1)
+        j + 1
+      } else if (at("'\\")) upTo(src.indexOf('\'', i + 3)) + 1
+      else if (at("'") && src.startsWith("'", i + 2)) i + 3
+      else i
+    while (i < src.length) {
+      val end = math.min(skip(), src.length)
+      if (end == i) { out += src(i); i += 1 }
+      else { out ++= " " + src.substring(i, end).filter(_ == '\n'); i = end }
+    }
+    out.toString
+  }
+
+  private val materialization = """\.\s*(cache|persist|localCheckpoint)\s*\(""".r
+
+  /** `src`'s `.cache(`/`.persist(`/`.localCheckpoint(` call sites, with
+    * their line numbers; comments do not count.
+    */
+  private def materializations(src: String): Seq[Int] = {
+    val code = codeOf(src)
+    materialization.findAllMatchIn(code).map(m => code.take(m.start).count(_ == '\n') + 1).toSeq
+  }
+
+  /** The number of materialization call sites in `src/main` today. Each
+    * one is a block a caller must own (CacheScope); lower the pin when a
+    * site goes, never raise it to let one in.
+    */
+  private val MaterializationSites = 41
+
+  test("ratchet: src/main's cache/persist/localCheckpoint call sites do not grow") {
+    assert(materializations("val a = b.localCheckpoint()\nval c = d\n  .cache()") == Seq(1, 3))
+    assert(materializations("// b.cache()\n/* x /* b.cache() */ d.persist() */ e").isEmpty)
+    assert(materializations("val s = \"// no comment\"; val t = u.cache()") == Seq(1))
+    assert(materializations("val s = \"/* no comment\"; val t = u.cache()") == Seq(1))
+    assert(materializations("val s = \"\"\"/*\"\"\"; val c = '\"'; val t = u.cache()") == Seq(1))
+    assert(materializations("val s = \"x.persist(y)\"; val t = \"a\\\"b.cache()\"").isEmpty)
+    val sites = scalaFiles("src/main/scala").sorted.flatMap { f =>
+      materializations(read(f)).map(line => s"${rel(f)}:$line")
+    }
+    assert(sites.size <= MaterializationSites,
+      s"${sites.size} materialization sites, pinned at $MaterializationSites: ${sites.mkString(", ")}")
+  }
 }
